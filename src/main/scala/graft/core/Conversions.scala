@@ -66,13 +66,31 @@ object Conversions {
   private val TrueTokens  = Seq("TRUE", "1", "YES", "T", "Y")
   private val FalseTokens = Seq("FALSE", "0", "NO", "F", "N")
 
+  /** Whole-string, case-insensitive match of one token list. `(?iu)`
+    * folds case per code point, which on these tokens accepts exactly
+    * the strings whose `upper()` is a token: the one non-ASCII code
+    * point that upper-cases to a token letter is `ſ` (U+017F → S), and
+    * `(?iu)` matches it to `S` too; the multi-letter upper-casings
+    * (`ß` → SS, the `ﬀ`/`ﬁ`/`ﬂ`/`ﬅ` ligatures) spell no token part.
+    * `\z`, not `$`, so a trailing newline is not accepted. */
+  private def tokenPattern(tokens: Seq[String]): String =
+    tokens.mkString("(?iu)\\A(?:", "|", ")\\z")
+  private val TruePattern = tokenPattern(TrueTokens)
+  private val FalsePattern = tokenPattern(FalseTokens)
+
   /** C5: permissive boolean parse — TRUE/1/YES/T/Y → true,
     * FALSE/0/NO/F/N → false, anything else → NULL
-    * (csv_to_mssqldb.py:299-319). */
+    * (csv_to_mssqldb.py:299-319).
+    *
+    * Bit-identical to `upper(trim(c)).isin(tokens)` (pinned against it
+    * in `ConversionsSpec`), without `upper()`: Spark's `upper` goes
+    * through ICU case mapping, and its first use in a JVM builds a
+    * table over every code point — the largest single cost of a cold
+    * CSV seed. */
   def parseBoolean(c: Column): Column = {
-    val u = upper(trim(c))
-    when(u.isin(TrueTokens: _*), lit(true))
-      .when(u.isin(FalseTokens: _*), lit(false))
+    val t = trim(c)
+    when(t.rlike(TruePattern), lit(true))
+      .when(t.rlike(FalsePattern), lit(false))
       .otherwise(lit(null).cast(BooleanType))
   }
 

@@ -108,6 +108,32 @@ object JdbcSources {
     } finally conn.close()
   }
 
+  /** Per-date count-back (S11 for a backfill window): rows of `table`
+    * in [start, endExclusive) grouped by the calendar date of `tsCol`,
+    * as one statement on a driver-side connection —
+    * `SELECT d, COUNT(*) FROM (SELECT CAST(ts AS DATE) AS d FROM t
+    * WHERE <bounds>) x GROUP BY d`, with [[rangeSlice]]'s `{ts}` bounds.
+    * Dates without rows are absent from the result. */
+  def countByDate(
+      cfg: JdbcConfig,
+      table: String,
+      tsCol: String,
+      start: String,
+      endExclusive: String): Map[String, Long] = {
+    val conn = JdbcWrite.connect(cfg)
+    try {
+      val st = conn.createStatement()
+      try {
+        val rs = st.executeQuery(
+          s"SELECT d, COUNT(*) FROM (SELECT CAST($tsCol AS DATE) AS d " +
+            s"FROM $table WHERE $tsCol >= {ts '$start 00:00:00'} AND " +
+            s"$tsCol < {ts '$endExclusive 00:00:00'}) x GROUP BY d")
+        Iterator.continually(rs).takeWhile(_.next())
+          .map(r => r.getDate(1).toLocalDate.toString -> r.getLong(2)).toMap
+      } finally st.close()
+    } finally conn.close()
+  }
+
   /** Whole-table read (used by tests and the seed path's read-back). */
   def readTable(
       spark: SparkSession,

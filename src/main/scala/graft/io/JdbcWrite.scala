@@ -96,28 +96,30 @@ object JdbcWrite {
   }
 
   /** Execute `sql` once per row of the partition, batched, in one
-    * transaction. Returns nothing; errors roll back and rethrow so
-    * Spark fails (and may retry) the task. */
+    * transaction. Returns the rows written (committed); errors roll
+    * back and rethrow so Spark fails (and may retry) the task. */
   def writePartition(
       cfg: JdbcConfig,
       sql: String,
       schema: StructType,
-      rows: Iterator[Row]): Unit = {
-    if (rows.isEmpty) return
+      rows: Iterator[Row]): Long = {
+    if (rows.isEmpty) return 0L
     val conn = connect(cfg)
     try {
       conn.setAutoCommit(false)
       val ps = conn.prepareStatement(sql)
       try {
+        var n = 0L
         var pending = 0
         rows.foreach { row =>
           bind(ps, schema, row)
           ps.addBatch()
-          pending += 1
+          pending += 1; n += 1
           if (pending >= cfg.batchSize) { ps.executeBatch(); pending = 0 }
         }
         if (pending > 0) ps.executeBatch()
         conn.commit()
+        n
       } catch {
         case e: Throwable =>
           try conn.rollback()
@@ -128,12 +130,18 @@ object JdbcWrite {
   }
 
   /** Distributed write: every partition runs [[writePartition]] with
-    * the same statement text. */
-  def run(df: DataFrame, cfg: JdbcConfig, sql: String): Unit = {
+    * the same statement text. Returns the number of rows written, counted
+    * inside this one pass: each partition adds its committed count to an
+    * accumulator, and Spark applies an action's accumulator update once
+    * per successful task, so a retried task's failed attempt is not
+    * counted. No separate `count()` scan of `df` is needed. */
+  def run(df: DataFrame, cfg: JdbcConfig, sql: String): Long = {
     val schema = df.schema
+    val written = df.sparkSession.sparkContext.longAccumulator
     df.foreachPartition { rows: Iterator[Row] =>
-      writePartition(cfg, sql, schema, rows)
+      written.add(writePartition(cfg, sql, schema, rows))
     }
+    written.sum
   }
 
   /** True if `name` exists in `schema` per JDBC metadata. */

@@ -6,7 +6,9 @@ import graft.operators.Upsert
 
 /** The reference's three write paths as Spark sinks (SURVEY.md §2.5,
   * §7.3 — "the only genuinely custom component"; Spark's built-in JDBC
-  * writer has only append/overwrite, no upsert).
+  * writer has only append/overwrite, no upsert). Each `write` returns
+  * the rows it handed to the database, counted in the writing pass
+  * ([[JdbcWrite.run]]).
   */
 
 /** Row-streamed upsert: every executor partition issues batched
@@ -31,7 +33,7 @@ object UpsertSink {
       table: String,
       tableName: String,
       keys: Seq[String],
-      mode: Upsert.Mode = Upsert.Unconditional): Unit = {
+      mode: Upsert.Mode = Upsert.Unconditional): Long = {
     val sql = SqlGen.upsert(
       dialect, table, tableName, df.columns.toSeq, keys, mode)
     JdbcWrite.run(df, cfg, sql)
@@ -64,12 +66,13 @@ object MergeSink {
       staging: String,
       keys: Seq[String],
       mode: Upsert.Mode = Upsert.Unconditional,
-      withByTarget: Boolean = true): Unit = {
+      withByTarget: Boolean = true): Long = {
     val cols = df.columns.toSeq
     JdbcWrite.execute(cfg, SqlGen.truncate(dialect, staging))
-    JdbcWrite.run(df, cfg, SqlGen.insert(dialect, staging, cols))
+    val staged = JdbcWrite.run(df, cfg, SqlGen.insert(dialect, staging, cols))
     JdbcWrite.execute(
       cfg, SqlGen.merge(dialect, target, staging, cols, keys, mode, withByTarget))
+    staged
   }
 }
 
@@ -83,7 +86,7 @@ object RefreshSink {
       df: DataFrame,
       cfg: JdbcConfig,
       dialect: SqlDialect,
-      table: String): Unit = {
+      table: String): Long = {
     JdbcWrite.execute(cfg, SqlGen.truncate(dialect, table))
     JdbcWrite.run(df, cfg, SqlGen.insert(dialect, table, df.columns.toSeq))
   }

@@ -68,38 +68,22 @@ object CsvSeed {
     case other             => c.try_cast(other)
   }
 
-  /** Raw string frame → typed frame per `schema`, plus the per-column
-    * coercion-loss audit (A3): one long per typed column. */
-  def coerceWithAudit(
-      raw: DataFrame,
-      schema: StructType): (DataFrame, Map[String, Long]) = {
-    val typed = raw.select(schema.fields.map(f =>
-      coerce(col(f.name), f.dataType).as(f.name)).toIndexedSeq: _*)
-    val auditCols = schema.fields.filter(_.dataType != StringType).map { f =>
-      Conversions.coercionLossCount(col(f.name),
-        coerce(col(f.name), f.dataType)).as(f.name)
-    }
-    val audit =
-      if (auditCols.isEmpty) Map.empty[String, Long]
-      else {
-        val row = raw.agg(auditCols.head, auditCols.tail.toIndexedSeq: _*)
-          .collect()(0)
-        schema.fields.filter(_.dataType != StringType).zipWithIndex.map {
-          case (f, i) => f.name -> row.getLong(i)
-        }.toMap
-      }
-    (typed, audit)
-  }
-
   /** The full read-and-transform stage (csv_to_mssqldb.py:183-370),
-    * returned with its audit so tests can pin the fixture behavior.
+    * returned with its audit so tests can pin the fixture behavior:
+    * (typed rows to load, per-column coercion losses, rows dropped for
+    * a NULL key).
     *
     * `runDate` (F7): keep only rows whose parsed `dateCol` falls on
     * that logical date — the per-logical-date CSV filter of
     * deneme_3_case.pyc ("Filtering data for CreatedDateUtc =="),
     * applied AFTER coercion so the filter sees typed timestamps, in
     * the sargable half-open form. NULL timestamps drop out of a dated
-    * run, like the reference's equality filter. */
+    * run, like the reference's equality filter.
+    *
+    * The audit is eager and costs ONE parse of the CSV: the per-column
+    * coercion-loss counts (A3) and the NULL-key drop count (F3) are
+    * one aggregate over the aligned string frame. The returned frame
+    * stays lazy; its one parse is the sink's write. */
   def readAndTransform(
       spark: SparkSession,
       path: String,
@@ -120,14 +104,35 @@ object CsvSeed {
       .schema(rawSchema)
       .csv(path)
     val aligned = Conversions.alignToSchema(raw, rawSchema)
-    val (typed, audit) = coerceWithAudit(aligned, schema)
-    val sliced = runDate match {
-      case Some(d) => typed.filter(Pipeline.daySlice(col(dateCol), d))
-      case None => typed
-    }
-    val kept = sliced.na.drop("any", keys)
-    val dropped = sliced.count() - kept.count()
-    (kept, audit, dropped)
+    // C1-C5: each column coerced to its declared type
+    val typedCol: Map[String, Column] = schema.fields.map(f =>
+      f.name -> coerce(col(f.name), f.dataType)).toMap
+    val typed = aligned.select(
+      schema.fieldNames.map(n => typedCol(n).as(n)).toIndexedSeq: _*)
+    // the F7 day filter and the F3 key check (NULL, or NaN like
+    // `na.drop`), over named typed columns: `col` on `typed`, or the
+    // coercions themselves inside the audit aggregate below
+    def inRun(c: String => Column): Column =
+      runDate.fold(lit(true))(Pipeline.daySlice(c(dateCol), _))
+    def keyMissing(c: String => Column): Column = keys.map { k =>
+      schema(k).dataType match {
+        case DoubleType | FloatType => c(k).isNull || isnan(c(k))
+        case _ => c(k).isNull
+      }
+    }.foldLeft(lit(false))(_ || _)
+    val kept = typed.filter(inRun(col) && !keyMissing(col))
+
+    // one aggregate over the aligned strings: the rows `kept` drops for
+    // a missing key, then the loss count of every typed column
+    val lossCols = schema.fields.filter(_.dataType != StringType)
+    val row = aligned.agg(
+      sum(when(inRun(typedCol) && keyMissing(typedCol), 1L).otherwise(0L)),
+      lossCols.map(f => Conversions.coercionLossCount(col(f.name),
+        typedCol(f.name))).toIndexedSeq: _*).collect()(0)
+    val audit = lossCols.zipWithIndex.map { case (f, i) =>
+      f.name -> row.getLong(i + 1)
+    }.toMap
+    (kept, audit, row.getLong(0))
   }
 
   /** Resolve configured key names (lowercase/underscored at the env
@@ -177,11 +182,10 @@ object CsvSeed {
       se.schema)
     JdbcWrite.ensureTable(jdbc, d, cfg.targetSchemaName, cfg.stagingTable,
       se.schema)
-    MergeSink.write(batch, jdbc, d, target, staging, keys, se.mode,
-      withByTarget = d == SqlDialect.SqlServer)
+    val staged = MergeSink.write(batch, jdbc, d, target, staging, keys,
+      se.mode, withByTarget = d == SqlDialect.SqlServer)
 
     val loaded = JdbcSources.countWhere(jdbc, target, "1=1")
-    val staged = batch.count()
     Pipeline.reconcile("csv-seed (target total ≥ batch)", staged,
       math.min(staged, loaded)) // target may hold prior rows; batch ⊆ target
     println(s"[csv-seed] batch=$staged targetTotal=$loaded")

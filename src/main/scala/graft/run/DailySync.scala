@@ -25,10 +25,14 @@ import graft.operators.Upsert
   * loop (orders_daily.py:129-135). Idempotent upsert makes replays
   * safe (O5).
   *
-  * The whole day is ONE Spark job: the reference's extract ≫ load ≫
-  * validate task DAG with CSV/XCom handoffs collapses into cached
-  * DataFrame branches (SURVEY §2.1 S5 — the handoff layer is
-  * unnecessary in Spark's lazy DAG).
+  * A day is one Spark pass per sink write (two for orders: the
+  * complete-branch upsert and the incomplete-branch refresh; one for
+  * an entity): the reference's extract ≫ load ≫ validate task DAG with
+  * CSV/XCom handoffs collapses into lazy DataFrame branches (SURVEY
+  * §2.1 S5 — the handoff layer is unnecessary in Spark's lazy DAG).
+  * Each branch's `extracted` count comes from the write that lands it,
+  * so no branch is scanned twice; `loaded` is a pushed COUNT on the
+  * target over a driver-side connection, not a Spark job.
   */
 object DailySync {
 
@@ -76,8 +80,7 @@ object DailySync {
       println(s"[daily-sync] === ${e.name} logical date $date ===")
       Alerts.onFailure(hook, e.name, date, "daily-sync") {
         val slice = Pipeline.extractEntityForDay(spark, cfg, e, date)
-        val extracted = slice.count()
-        Pipeline.loadEntityBatch(cfg, e, slice)
+        val extracted = Pipeline.loadEntityBatch(cfg, e, slice)
         val loaded = Pipeline.countEntityLoadedForDay(cfg, e, date)
         val ok = Pipeline.reconcile(s"${e.name} $date", extracted, loaded)
         if (!ok) Alerts.onMismatch(hook, e.name, date, extracted, loaded)
@@ -88,7 +91,7 @@ object DailySync {
       (if (allOk) "all counts reconciled" else "MISMATCHES logged above"))
   }
 
-  private def ordersSync(
+  private[run] def ordersSync(
       spark: org.apache.spark.sql.SparkSession,
       opts: Args,
       sfDir: String,
@@ -106,20 +109,18 @@ object DailySync {
         Pipeline.extractForDay(spark, cfg, sfDir, date)
 
       // Flow 1: complete orders for the day → upsert (S1+F1+F2, S6)
-      val extracted = complete.count()
-      Pipeline.upsertBatch(cfg, complete, Upsert.Unconditional)
+      val extracted =
+        Pipeline.upsertBatch(cfg, complete, Upsert.Unconditional)
       val loaded = Pipeline.countLoadedForDay(cfg, date)
 
       // Flow 2: incomplete orders (full-table IS NULL scan) → full
       // refresh of the side table (S2+F2, S8)
-      val extractedNull = incomplete.count()
-      graft.io.RefreshSink.write(incomplete, cfg.targetJdbc,
-        cfg.targetDialect,
-        cfg.targetDialect.table(cfg.targetSchemaName,
-          cfg.targetIncompleteTable))
-      val loadedNull = graft.io.JdbcSources.countWhere(cfg.targetJdbc,
-        cfg.targetDialect.table(cfg.targetSchemaName,
-          cfg.targetIncompleteTable), "1=1")
+      val side = cfg.targetDialect.table(cfg.targetSchemaName,
+        cfg.targetIncompleteTable)
+      val extractedNull = graft.io.RefreshSink.write(incomplete,
+        cfg.targetJdbc, cfg.targetDialect, side)
+      val loadedNull =
+        graft.io.JdbcSources.countWhere(cfg.targetJdbc, side, "1=1")
 
       // Validation is log-only, like the reference (:580-584) — but
       // an armed alert hook hears about a mismatch

@@ -8,8 +8,8 @@ import graft.core.{Conversions, Entity, Tables}
 import graft.io._
 
 /** Shared extract/load/validate stages for the entry points (O2: the
-  * reference's task DAG collapsed into one Spark job's stage
-  * functions).
+  * reference's task DAG collapsed into stage functions; each load is one
+  * Spark pass over its extract and returns the rows it wrote).
   */
 object Pipeline {
 
@@ -106,9 +106,9 @@ object Pipeline {
   /** Upsert a batch into the target. Dialect-routed: PG takes the
     * row-streamed `ON CONFLICT` sink, SQL Server and Derby take the
     * stage+MERGE sink (MERGE is their native upsert; Derby has no ON
-    * CONFLICT). */
+    * CONFLICT). Returns the rows written, counted in the writing pass. */
   def upsertBatch(cfg: Config, batch: DataFrame,
-      mode: graft.operators.Upsert.Mode): Unit = {
+      mode: graft.operators.Upsert.Mode): Long = {
     val d = cfg.targetDialect
     val target = d.table(cfg.targetSchemaName, cfg.targetTable)
     d match {
@@ -134,6 +134,20 @@ object Pipeline {
       cfg.targetJdbc,
       d.table(cfg.targetSchemaName, cfg.targetTable),
       s"$c >= {ts '$date 00:00:00'} AND $c < {ts '$next 00:00:00'}")
+  }
+
+  /** Per-date count-back over [start, end] (inclusive dates) on the
+    * target's `tsCol` — the backfill's S11/A1, one grouped COUNT pushed
+    * to the DB on a driver-side connection. Dates without rows are
+    * absent from the map. */
+  def countLoadedByDate(cfg: Config, tsCol: String, start: String,
+      end: String): Map[String, Long] = {
+    val d = cfg.targetDialect
+    JdbcSources.countByDate(
+      cfg.targetJdbc,
+      d.table(cfg.targetSchemaName, cfg.targetTable),
+      d.quote(tsCol), start,
+      java.time.LocalDate.parse(end).plusDays(1).toString)
   }
 
   /** Whole target table back into Spark (validation joins). */
@@ -182,8 +196,9 @@ object Pipeline {
     * upsert with the entity's mode and composite key — dialect-routed
     * like [[upsertBatch]]: PG takes the row-streamed `ON CONFLICT`
     * sink (S7's conditional form for LWW entities), everything else
-    * the stage+MERGE sink. */
-  def loadEntityBatch(cfg: Config, e: Entity, batch: DataFrame): Unit = {
+    * the stage+MERGE sink. Returns the rows written, counted in the
+    * writing pass. */
+  def loadEntityBatch(cfg: Config, e: Entity, batch: DataFrame): Long = {
     val aligned = Conversions.alignToSchema(
       Conversions.lowercaseColumns(batch), e.targetSchema)
     val d = cfg.targetDialect
@@ -244,7 +259,13 @@ object Pipeline {
   }
 
   /** A2/A1 reconciliation line, log-only on mismatch exactly like the
-    * reference (orders_daily.py:580-584). Returns match. */
+    * reference (orders_daily.py:580-584). Returns match.
+    *
+    * `extracted` is the number of rows handed to the sink in the pass
+    * that wrote them (the sinks' return value), not a separate
+    * `count()` of the extract, so on a live source it cannot see a
+    * different snapshot than the write did. `loaded` is the target's
+    * own count-back. */
   def reconcile(label: String, extracted: Long, loaded: Long): Boolean = {
     val ok = extracted == loaded
     val mark = if (ok) "OK" else "MISMATCH"

@@ -16,8 +16,11 @@ import graft.operators.Upsert
   * Mapping, `_historical` pyc), this is ONE scan + ONE upsert over the
   * whole range — Spark's task parallelism replaces the per-date task
   * fan-out and beats it (one pass instead of N) — with the per-date
-  * validation recovered by a single `groupBy(to_date(ts)).count()` on
-  * each side (SURVEY §3.2).
+  * validation recovered by one grouped count on each side (SURVEY
+  * §3.2): a `groupBy(to_date(ts)).count()` over the cached extract,
+  * which the upsert then reads, and one grouped COUNT pushed to the
+  * target over a driver-side connection
+  * ([[graft.io.JdbcSources.countByDate]]).
   *
   * `--entity transactions` backfills the wide 57-column entity instead
   * (the `_historical` pyc's actual workload): same single-scan range
@@ -44,7 +47,7 @@ object RangeSync {
   }
 
   /** Entity-generic range backfill: one pushed range scan, one LWW
-    * upsert, per-date validation from ONE groupBy on each side. */
+    * upsert, per-date validation from one grouped count on each side. */
   private def entityRange(
       spark: org.apache.spark.sql.SparkSession,
       e: graft.core.Entity,
@@ -79,15 +82,9 @@ object RangeSync {
     }
     slice.unpersist()
 
-    val tsCol = col(e.targetIncrementalColumn)
     val loaded = Alerts.onFailure(hook, e.name, s"$start..$end",
       "range-validate") {
-      Pipeline.readTarget(spark, cfg, cfg.targetTable)
-        .filter(tsCol >= lit(start).cast("timestamp") &&
-          tsCol < date_add(lit(end).cast("date"), 1).cast("timestamp"))
-        .groupBy(to_date(tsCol).as("d"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
+      Pipeline.countLoadedByDate(cfg, e.targetIncrementalColumn, start, end)
     }
 
     var allOk = true
@@ -101,7 +98,7 @@ object RangeSync {
       (if (allOk) "all counts reconciled" else "MISMATCHES logged above"))
   }
 
-  private def ordersRange(
+  private[run] def ordersRange(
       spark: org.apache.spark.sql.SparkSession,
       opts: Args,
       start: String,
@@ -132,18 +129,10 @@ object RangeSync {
     }
     slice.unpersist()
 
-    // per-date loaded counts from the target, one aggregation (S11/A1)
-    val loadedDf = Pipeline.readTarget(spark, cfg, cfg.targetTable)
-      .filter(
-        col("order_created_at") >= lit(start).cast("timestamp") &&
-          col("order_created_at") <
-            date_add(lit(end).cast("date"), 1).cast("timestamp"))
-      .groupBy(to_date(col("order_created_at")).as("d"))
-      .agg(count(lit(1)).as("n"))
+    // per-date loaded counts from the target, one pushed COUNT (S11/A1)
     val loaded = Alerts.onFailure(hook, "orders", s"$start..$end",
       "range-validate") {
-      loadedDf.collect()
-        .map(r => r.getDate(0).toString -> r.getLong(1)).toMap
+      Pipeline.countLoadedByDate(cfg, "order_created_at", start, end)
     }
 
     var allOk = true

@@ -1917,6 +1917,7 @@ object Streams {
           batch, cfg, dialect, target, staging, keys, mode,
           // `NOT MATCHED BY TARGET` is T-SQL-only spelling
           withByTarget = dialect == graft.io.SqlDialect.SqlServer)
+        ()
       }
       .start()
     q.awaitTermination()

@@ -88,6 +88,36 @@ class ConversionsSpec extends SparkSpecBase {
       null, null, null))
   }
 
+  test("C5 parseBoolean is bit-identical to upper(trim(c)).isin(tokens)") {
+    // the pre-regex expression, inlined as the reference
+    def reference(c: org.apache.spark.sql.Column) = {
+      val u = upper(trim(c))
+      when(u.isin("TRUE", "1", "YES", "T", "Y"), lit(true))
+        .when(u.isin("FALSE", "0", "NO", "F", "N"), lit(false))
+        .otherwise(lit(null).cast(BooleanType))
+    }
+    val tokens = Seq("TRUE", "1", "YES", "T", "Y",
+      "FALSE", "0", "NO", "F", "N")
+    val corpus = tokens ++ tokens.map(_.toLowerCase) ++ Seq(
+      "True", "tRuE", "Yes", "yEs", "fAlSe", "No", "nO", "t", "y", "f", "n",
+      " TRUE", "true ", "  no  ", "\tTRUE", "TRUE\t", "true\n", "\nfalse",
+      "\u00a0TRUE", "TRUE\u00a0", "\u3000yes",
+      "ye\u017f", "YE\u017f", "fal\u017fe", "FAL\u017fE", // ſ → S
+      "ye\u00df", "YE\u00df", "fal\u00dfe",                 // ß → SS
+      "\u0131", "tru\u0131", "\u0130",                      // ı → I, İ
+      "\uff34\uff32\uff35\uff25", "\uff59\uff45\uff53", // fullwidth
+      "\uff11", "\uff10",
+      "\ufb00alse", "\ufb05", "\u212a",                     // ligatures, K
+      "TRUEX", "XTRUE", "TRU", "YESNO", "1 ", "01", "10", "+1", "-0",
+      "T R U E", "", " ", "  ", null)
+    assert(one(parseBoolean(col("raw")), corpus) ==
+      one(reference(col("raw")), corpus))
+    // the corpus really reaches both non-NULL outcomes on the edge cases
+    assert(one(parseBoolean(col("raw")),
+      Seq("ye\u017f", "fal\u017fe", "ye\u00df", "true\n", null)) ==
+      Seq(true, false, null, null, null))
+  }
+
   test("F5/F6 lowercase + align pads missing columns as typed NULLs") {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row(1L, "x")), 1),

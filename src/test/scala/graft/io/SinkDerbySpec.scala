@@ -158,15 +158,39 @@ class SinkDerbySpec extends SparkSpecBase {
       else it
     }
     val flaky = spark.createDataFrame(flakyRdd, schema)
-    MergeSink.write(flaky, cfg, dialect, tbl, stg, Seq("orderid"),
-      Upsert.Unconditional, withByTarget = false)
+    val written = MergeSink.write(flaky, cfg, dialect, tbl, stg,
+      Seq("orderid"), Upsert.Unconditional, withByTarget = false)
     assert(SinkDerbySpec.induced.get() >= 1,
       "the fault never fired — the test proved nothing")
+    // the failed attempt had already served a row to the sink; only the
+    // successful attempt's count may reach the returned total
+    assert(written == batchRows.size.toLong,
+      s"sink reported $written rows for a ${batchRows.size}-row batch")
     val got = sortedRows(JdbcSources.readTable(spark, cfg, tbl))
     val want = sortedRows(
       Upsert(target, batch, Seq("orderid"), Upsert.Unconditional))
     assert(got == want,
       "post-retry JDBC state diverges from the Upsert oracle")
+  }
+
+  test("every sink returns the rows it wrote, 0 on empty input") {
+    ensureTables()
+    assert(RefreshSink.write(df(targetRows: _*), cfg, dialect, tbl) ==
+      targetRows.size.toLong)
+    assert(MergeSink.write(df(batchRows: _*), cfg, dialect, tbl, stg,
+      Seq("orderid"), Upsert.Unconditional, withByTarget = false) ==
+      batchRows.size.toLong)
+    // empty input: no partition opens a connection, so even the PG-only
+    // ON CONFLICT statement of UpsertSink never reaches Derby
+    assert(UpsertSink.write(df(), cfg, dialect, tbl, "orders",
+      Seq("orderid")) == 0L)
+    assert(MergeSink.write(df(), cfg, dialect, tbl, stg, Seq("orderid"),
+      Upsert.Unconditional, withByTarget = false) == 0L)
+    assert(RefreshSink.write(df(), cfg, dialect, stg) == 0L)
+    // the empty MERGE left the target as the non-empty one made it
+    assert(sortedRows(JdbcSources.readTable(spark, cfg, tbl)) ==
+      sortedRows(Upsert(df(targetRows: _*), df(batchRows: _*),
+        Seq("orderid"), Upsert.Unconditional)))
   }
 
   test("mid-batch failure rolls back the whole partition transaction") {

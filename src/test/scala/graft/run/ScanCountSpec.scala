@@ -1,0 +1,140 @@
+package graft.run
+
+import java.nio.file.Files
+import java.sql.Date
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.{FileSourceScanExec,
+  RowDataSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.SparkSpecBase
+
+/** Guards the sync path's single-pass shape: every Spark action an
+  * entry point runs is recorded with the source scans its executed plan
+  * holds, so a stray `count()` (an extra action re-reading the source)
+  * fails here. A cached relation's scans count once, at the action that
+  * materializes it. */
+class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
+
+  /** (action name, source scans) of every execution while `body` ran. */
+  private def actionsOf(body: => Unit): Seq[(String, Int)] = {
+    val seen = ArrayBuffer.empty[(String, Int)]
+    val cached = scala.collection.mutable.Set.empty[AnyRef]
+    def scans(p: SparkPlan): Int = collectWithSubqueries(p) {
+      case m: InMemoryTableScanExec =>
+        if (cached.add(m.relation.cacheBuilder)) scans(m.relation.cachedPlan)
+        else 0
+      case _: FileSourceScanExec | _: RowDataSourceScanExec |
+          _: BatchScanExec => 1
+    }.sum
+    val listener = new QueryExecutionListener {
+      private def record(fn: String, qe: QueryExecution): Unit =
+        seen.synchronized { seen += fn -> scans(qe.executedPlan) }
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        record(fn, qe)
+      override def onFailure(fn: String, qe: QueryExecution,
+          e: Exception): Unit = record(fn, qe)
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    seen.synchronized(seen.toList)
+  }
+
+  private val ordersSchema = StructType(Seq(
+    StructField("o_orderkey", LongType),
+    StructField("o_custkey", LongType),
+    StructField("o_orderstatus", StringType),
+    StructField("o_orderdate", DateType),
+    StructField("o_totalprice", DoubleType),
+    StructField("o_orderpriority", StringType)))
+
+  /** A parquet `orders` table for the sync entry points: two complete
+    * orders on each of 1996-03-01/02, and two 'P' (incomplete) orders. */
+  private lazy val sfDir: String = {
+    val dir = Files.createTempDirectory("graft_scan_guard").toString
+    val rows = Seq(
+      Row(1L, 10L, "F", Date.valueOf("1996-03-01"), 10.5, "1-URGENT"),
+      Row(2L, 20L, "O", Date.valueOf("1996-03-01"), 20.0, "2-HIGH"),
+      Row(3L, 30L, "F", Date.valueOf("1996-03-02"), 30.0, "3-MEDIUM"),
+      Row(4L, 40L, "O", Date.valueOf("1996-03-02"), 40.0, "4-NOT SPECIFIED"),
+      Row(5L, 50L, "P", Date.valueOf("1996-03-01"), 50.0, "5-LOW"),
+      Row(6L, 60L, "P", Date.valueOf("1996-03-02"), 60.0, "1-URGENT"))
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      ordersSchema).write.parquet(s"$dir/orders.parquet")
+    dir
+  }
+
+  /** Entry-point options: a fresh Derby target, the parquet source
+    * (written here, before any action is recorded). */
+  private def target(name: String) = Args(Map(
+    "target-url" -> s"jdbc:derby:memory:$name;create=true",
+    "sf-dir" -> sfDir))
+
+  test("DailySync: one source scan per sink write, no other action") {
+    val dates = Seq("1996-03-01", "1996-03-02")
+    val opts = target("scan_guard_daily")
+    val out = new java.io.ByteArrayOutputStream
+    val actions = actionsOf {
+      Console.withOut(out)(DailySync.ordersSync(spark, opts, opts.sfDir,
+        dates))
+    }
+    // per day: the complete-branch upsert and the side-table refresh
+    assert(actions.map(_._1) == Seq.fill(2 * dates.size)("foreachPartition"),
+      s"actions: $actions")
+    assert(actions.forall(_._2 == 1), s"scans per write: $actions")
+    // and the counts taken from those writes still reconcile
+    val log = out.toString("UTF-8")
+    assert(log.contains(
+      "[validate] complete 1996-03-01: extracted=2 loaded=2 OK"), log)
+    assert(log.contains(
+      "[validate] incomplete (full refresh): extracted=2 loaded=2 OK"), log)
+  }
+
+  test("CsvSeed.seed: two CSV scans, the audit and the write") {
+    val csv = Files.createTempDirectory("graft_scan_guard_csv").toString
+    FakeOrders.csvFrame(spark, 200L).coalesce(1).write
+      .option("header", "true").mode("overwrite").csv(csv)
+    val cfg = target("scan_guard_seed").config
+    var result = (0L, 0L)
+    val actions = actionsOf {
+      Console.withOut(new java.io.ByteArrayOutputStream) {
+        result = CsvSeed.seed(spark, cfg, CsvSeed.entities("orders"), csv,
+          None)
+      }
+    }
+    assert(actions.map(_._2).sum == 2, s"actions: $actions")
+    assert(actions.size == 2, s"actions: $actions")
+    assert(result == ((200L, 200L)))
+  }
+
+  test("RangeSync: one source scan for the one write, count-back pushed " +
+    "to the target") {
+    val opts = target("scan_guard_range")
+    val out = new java.io.ByteArrayOutputStream
+    val actions = actionsOf {
+      Console.withOut(out)(RangeSync.ordersRange(spark, opts, "1996-03-01",
+        "1996-03-03", Args.dateRange("1996-03-01", "1996-03-03")))
+    }
+    // the per-date extract count materializes the cached slice, which
+    // the write then reads; no JDBC read-back of the target
+    assert(actions.map(_._2).sum == 1, s"actions: $actions")
+    assert(actions.count(_._1 == "foreachPartition") == 1,
+      s"actions: $actions")
+    val log = out.toString("UTF-8")
+    assert(log.contains(
+      "[validate] range 1996-03-01: extracted=2 loaded=2 OK"), log)
+    assert(log.contains(
+      "[validate] range 1996-03-03: extracted=0 loaded=0 OK"), log)
+  }
+}

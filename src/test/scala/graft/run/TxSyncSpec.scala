@@ -82,8 +82,7 @@ class TxSyncSpec extends SparkSpecBase {
 
   private def syncDay(date: String): (Long, Long) = {
     val slice = Pipeline.extractEntityForDay(spark, cfg, e, date)
-    val extracted = slice.count()
-    Pipeline.loadEntityBatch(cfg, e, slice)
+    val extracted = Pipeline.loadEntityBatch(cfg, e, slice)
     (extracted, Pipeline.countEntityLoadedForDay(cfg, e, date))
   }
 
@@ -181,6 +180,8 @@ class TxSyncSpec extends SparkSpecBase {
     // count-back per date reconciles; day 4 never crossed
     for ((d, n) <- extracted)
       assert(Pipeline.countEntityLoadedForDay(cfg2, e, d) == n)
+    assert(Pipeline.countLoadedByDate(cfg2, e.targetIncrementalColumn,
+      "2025-03-01", "2025-03-03") == extracted)
     assert(Pipeline.countEntityLoadedForDay(cfg2, e, "2025-03-04") == 0L)
 
     // idempotency (O5): replaying the whole range is a no-op
