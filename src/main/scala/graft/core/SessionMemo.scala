@@ -3,9 +3,13 @@ package graft.core
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Bounded, session-evicting memo for driver-side shared passes (the
-  * catalog's one-pass-many-consumers caches: LSH pair sets, the PCA
-  * component, BPE training). Two leak guards (VERDICT r10 item 6):
+/** Bounded, session-evicting memo — the engine's one memo mechanism.
+  * Users: `Tables.load` reader plans (key `dir/name.parquet`),
+  * `Streams` footer probes (key (dir, glob)), and the catalog's eight
+  * shared-pass caches in `Queries` (LSH pairs and their components,
+  * PCA, BPE training, kNN, k-means cells, wedges, label propagation).
+  *
+  * Two leak guards:
   *
   *  - LRU bound: at most [[maxEntries]] live values; inserting past
   *    the bound drops the least-recently-used entry (a dropped entry
@@ -13,14 +17,17 @@ import org.apache.spark.sql.SparkSession
   *  - Session eviction: the first entry for a session registers ONE
   *    listener on its SparkContext; application end clears every
   *    entry keyed by that session, so harness-lifetime driver memory
-  *    no longer outlives the session that produced it.
+  *    (and the stopped session itself, which every memoized Dataset
+  *    references) no longer outlives the session that produced it.
   *
   * Every drop — LRU victim, race-loser discard, session eviction —
   * best-effort RELEASES the value (ADVICE r11): a memoized Dataset
   * (or tuple of Datasets) is unpersisted so its cache blocks /
   * localCheckpoint RDDs free with the map entry instead of surviving
   * to session end; the bound guards executor memory, not just the
-  * driver map.
+  * in-process map. Releasing a `Tables` reader plan is safe only because
+  * no caller caches a bare `Tables` scan: `unpersist` on a bare scan
+  * would also uncache an identical cached scan.
   *
   * All access synchronizes on the memo (the listener fires on the
   * listener-bus thread).

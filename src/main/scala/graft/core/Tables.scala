@@ -10,6 +10,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * so nothing else in the engine hard-codes paths.
   */
 object Tables {
+  /** LRU bound of the per-session memos (reader plans here, footer
+    * probes in `Streams`): one catalog pass reads the layout's 10
+    * tables of one data dir, and the bench's warm-up and timed passes
+    * read two dirs in one session. 20 holds both without an eviction;
+    * below 10, a pass cycling through its tables would miss on every
+    * lookup. */
+  private[graft] val MemoEntries = 2 * 10
+
   /** Per-session memo of the RESOLVED reader plan for each (dir,
     * table): `spark.read.parquet` pays DataSource resolution — file
     * listing plus a parquet-footer schema read — on every call, and a
@@ -18,37 +26,20 @@ object Tables {
     * what `spark.table` does for a registered table): NO data or
     * results are cached — the plan is an unexecuted scan, and every
     * query still computes from the parquet inputs. Keyed by session
-    * so tests with fresh sessions never see a stale plan.
+    * so tests with fresh sessions never see a stale plan; a stopped
+    * session's plans are dropped with it ([[SessionMemo]]).
     *
     * ASSUMPTION (documented per VERDICT r16 item 6): the files under
     * `dir/name.parquet` are immutable for the lifetime of a session —
     * the driver's testdata contract and the lakehouse-table norm. A
-    * caller that regenerates files in place within one JVM must call
-    * [[resetReaderMemo]] (test fixtures) or use a fresh session.
-    *
-    * The session key is WEAK (a WeakHashMap of per-session inner
-    * maps): round 16 kept every session ever used — plus its resolved
-    * InMemoryFileIndex — alive for the JVM lifetime, leaking across
-    * test suites that build many sessions. Outer map access is
-    * synchronized (a few hundred lookups per pass, ns-scale); the
-    * inner per-session map is a plain HashMap guarded by the same
-    * lock. */
-  private val readerMemo = new java.util.WeakHashMap[
-    SparkSession,
-    java.util.HashMap[(String, String), DataFrame]]()
+    * caller that regenerates files in place within one JVM must use a
+    * fresh session. */
+  private val readers = new SessionMemo[DataFrame](MemoEntries)
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    readerMemo.synchronized {
-      val per = readerMemo.computeIfAbsent(spark,
-        _ => new java.util.HashMap[(String, String), DataFrame]())
-      per.computeIfAbsent((dir, name),
-        _ => spark.read.parquet(s"$dir/$name.parquet"))
-    }
-
-  /** Drop every memoized reader plan (all sessions). For test
-    * fixtures that regenerate parquet files in place. */
-  private[graft] def resetReaderMemo(): Unit =
-    readerMemo.synchronized { readerMemo.clear() }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    readers.getOrElseUpdate(spark, path, spark.read.parquet(path))
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")
@@ -79,22 +70,7 @@ object Tables {
       s.conf.getOption("spark.sql.session.timeZone").contains("UTC"),
       "set graft.core.Tables.RequiredConf on the SparkSession builder")
     import org.apache.spark.sql.functions._
-    // On the legacy TIMESTAMP(NANOS) layout a session built without
-    // RequiredConf fails inside parquet schema conversion with an
-    // "Illegal Parquet type: INT64 (TIMESTAMP(NANOS,...))" — translate
-    // that to the actionable message (the UTC require above can't see
-    // this: nanosAsLong only matters for one of the two layouts).
-    val raw =
-      try load(s, d, "events")
-      catch {
-        case e: Throwable
-            if Option(e.getMessage).exists(_.contains("NANOS")) =>
-          throw new IllegalStateException(
-            s"$d/events.parquet uses the legacy TIMESTAMP(NANOS) " +
-              "layout; build the session with " +
-              "graft.core.Tables.RequiredConf " +
-              "(spark.sql.legacy.parquet.nanosAsLong=true)", e)
-      }
+    val raw = explainNanos(s"$d/events.parquet")(load(s, d, "events"))
     val shaped = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumnRenamed("ts", "ts_ns")
@@ -109,6 +85,24 @@ object Tables {
     shaped.select("event_id", "ts_ns", "user_id", "event_type",
       "value", "props", "ts")
   }
+
+  /** On the legacy TIMESTAMP(NANOS) layout a session built without
+    * [[RequiredConf]] fails inside parquet schema conversion with an
+    * "Illegal Parquet type: INT64 (TIMESTAMP(NANOS,...))": rethrow
+    * that as the actionable message (the UTC require in [[events]]
+    * can't see this: nanosAsLong only matters for one of the two
+    * layouts). */
+  private[graft] def explainNanos[T](path: String)(read: => T): T =
+    try read
+    catch {
+      case e: Throwable
+          if Option(e.getMessage).exists(_.contains("NANOS")) =>
+        throw new IllegalStateException(
+          s"$path uses the legacy TIMESTAMP(NANOS) layout; build the " +
+            "session with graft.core.Tables.RequiredConf " +
+            "(spark.sql.legacy.parquet.nanosAsLong=true)", e)
+    }
+
   def documents(s: SparkSession, d: String): DataFrame =
     load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame =

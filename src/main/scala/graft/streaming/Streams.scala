@@ -47,23 +47,42 @@ object Streams {
     eventsSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = LongType) else f))
 
-  /** Footer-probe memo keyed by (dir, glob) — see [[eventsStream]].
+  /** Footer-only schema probe of the parquet files under (dir, glob),
+    * memoized per (session, dir, glob): 41 stream twins each probed
+    * the same immutable footer — listing + schema read per query for a
+    * fact that cannot change within a run (the `Tables.load` memo
+    * rationale). Per session, not per JVM: the probed schema depends on
+    * the probing session's parquet conf (`nanosAsLong` decides between
+    * `LongType` and the NANOS error), so one session's probe must not
+    * answer for another.
     *
     * ASSUMPTION (documented per VERDICT r16 item 6): the files under
-    * (dir, glob) are schema-immutable for the JVM lifetime — the
-    * driver's testdata contract. A schema change in place under an
-    * already-probed (dir, glob) would be missed within one process;
-    * fixtures that regenerate files call [[resetProbeMemo]]. The
-    * memo holds only StructTypes (a few hundred bytes each, bounded
-    * by the number of distinct data dirs a process touches), so no
-    * eviction is needed. */
-  private val probeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      StructType]()
+    * (dir, glob) are schema-immutable for the lifetime of a session —
+    * the testdata contract. Regenerated inputs need a fresh
+    * session. */
+  private val probes =
+    new graft.core.SessionMemo[StructType](graft.core.Tables.MemoEntries)
+  private def probe(spark: SparkSession, dir: String, glob: String,
+      required: String*): StructType = {
+    // NUL cannot occur in a path, so the key is unambiguous
+    val probed = probes.getOrElseUpdate(spark, s"$dir\u0000$glob",
+      graft.core.Tables.explainNanos(s"$dir/$glob")(
+        spark.read.option("pathGlobFilter", glob).parquet(dir).schema))
+    require(required.forall(probed.fieldNames.contains),
+      s"$dir/$glob lacks ${required.mkString("/")}: " +
+        probed.fieldNames.mkString(","))
+    probed
+  }
 
-  /** Drop every memoized footer probe. For test fixtures that
-    * regenerate parquet files in place. */
-  private[graft] def resetProbeMemo(): Unit = probeMemo.clear()
+  /** File stream over (dir, glob) pinned to `schema`; `maxFilesPerTrigger`
+    * >0 caps files per micro-batch — lets tests drive a multi-batch
+    * drain (one file = one batch) through the stateful operators. */
+  private def fileStream(spark: SparkSession, dir: String, glob: String,
+      maxFilesPerTrigger: Int, schema: StructType): DataFrame = {
+    val r = spark.readStream.schema(schema).option("pathGlobFilter", glob)
+    (if (maxFilesPerTrigger > 0)
+      r.option("maxFilesPerTrigger", maxFilesPerTrigger) else r).parquet(dir)
+  }
 
   /** Streaming read of an events directory (the driver testdata file
     * works as a one-file stream); emits the same shape as
@@ -75,33 +94,11 @@ object Streams {
       dir: String,
       glob: String = "events.parquet",
       maxFilesPerTrigger: Int = 0): DataFrame = {
-    // Footer-only probe: which physical ts layout does this directory
-    // hold? (A stream pinned to the wrong schema would fail or
-    // misread at runtime — ADVICE r7.) The probe also surfaces the
-    // legacy-NANOS-without-RequiredConf misconfiguration as an
-    // actionable error instead of a mid-stream reader failure.
-    // memoized per (dir, glob): 41 stream twins each probed the same
-    // immutable footer — listing + schema read per query for a fact
-    // that cannot change within a run (the Tables.load memo rationale)
-    val probed = probeMemo.computeIfAbsent((dir, glob), _ =>
-      try spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-      catch {
-        case e: Throwable
-            if Option(e.getMessage).exists(_.contains("NANOS")) =>
-          throw new IllegalStateException(
-            s"$dir/$glob uses the legacy TIMESTAMP(NANOS) layout; " +
-              "build the session with graft.core.Tables.RequiredConf " +
-              "(spark.sql.legacy.parquet.nanosAsLong=true)", e)
-      })
-    val nanosLayout = probed("ts").dataType == LongType
-    val r = spark.readStream
-      .schema(if (nanosLayout) eventsSchemaNanos else eventsSchema)
-      .option("pathGlobFilter", glob)
-    // >0 caps files per micro-batch — lets tests drive a multi-batch
-    // drain (one file = one batch) through the stateful operators
-    val r2 = if (maxFilesPerTrigger > 0)
-      r.option("maxFilesPerTrigger", maxFilesPerTrigger) else r
-    val raw = r2.parquet(dir)
+    // Which physical ts layout does this directory hold? (A stream
+    // pinned to the wrong schema would fail or misread at runtime.)
+    val nanosLayout = probe(spark, dir, glob, "ts")("ts").dataType == LongType
+    val raw = fileStream(spark, dir, glob, maxFilesPerTrigger,
+      if (nanosLayout) eventsSchemaNanos else eventsSchema)
     val shaped =
       if (nanosLayout)
         raw.withColumnRenamed("ts", "ts_ns")
@@ -899,16 +896,9 @@ object Streams {
       spark: SparkSession,
       dir: String,
       glob: String = "documents.parquet",
-      maxFilesPerTrigger: Int = 0): DataFrame = {
-    val probed = probeMemo.computeIfAbsent((dir, glob), _ =>
-      spark.read.option("pathGlobFilter", glob).parquet(dir).schema)
-    require(Seq("doc_id", "text").forall(probed.fieldNames.contains),
-      s"$dir/$glob lacks doc_id/text: ${probed.fieldNames.mkString(",")}")
-    val r = spark.readStream.schema(probed).option("pathGlobFilter", glob)
-    val r2 = if (maxFilesPerTrigger > 0)
-      r.option("maxFilesPerTrigger", maxFilesPerTrigger) else r
-    r2.parquet(dir)
-  }
+      maxFilesPerTrigger: Int = 0): DataFrame =
+    fileStream(spark, dir, glob, maxFilesPerTrigger,
+      probe(spark, dir, glob, "doc_id", "text"))
 
   /** File stream over the embeddings table (the [[docsStream]]
     * shape): schema probed from a batch read, glob-pinned. */
@@ -916,18 +906,9 @@ object Streams {
       spark: SparkSession,
       dir: String,
       glob: String = "embeddings.parquet",
-      maxFilesPerTrigger: Int = 0): DataFrame = {
-    val probed = probeMemo.computeIfAbsent((dir, glob), _ =>
-      spark.read.option("pathGlobFilter", glob).parquet(dir).schema)
-    require(Seq("vec_id", "embedding", "label")
-      .forall(probed.fieldNames.contains),
-      s"$dir/$glob lacks vec_id/embedding/label: " +
-        probed.fieldNames.mkString(","))
-    val r = spark.readStream.schema(probed).option("pathGlobFilter", glob)
-    val r2 = if (maxFilesPerTrigger > 0)
-      r.option("maxFilesPerTrigger", maxFilesPerTrigger) else r
-    r2.parquet(dir)
-  }
+      maxFilesPerTrigger: Int = 0): DataFrame =
+    fileStream(spark, dir, glob, maxFilesPerTrigger,
+      probe(spark, dir, glob, "vec_id", "embedding", "label"))
 
   /** Cumulative occupancy of one (group, bin) histogram cell;
     * `updates` is the monotone drain counter. */
