@@ -151,6 +151,28 @@ object Queries {
   /** Unique memory-sink name per streaming-query run (a session forbids
     * two active queries with one name). */
   private val streamRun = new java.util.concurrent.atomic.AtomicInteger
+
+  /** The revenue twins' shared feeder (q_stream_ewma … q_stream_hurst):
+    * per-day purchase revenue of the events stream accumulates in keyed
+    * state as exact 4-dp scaled-integer sums (three longs per day —
+    * `Streams.dailySumState`), so the drained latest-per-day rows
+    * (d, updates, n, s4) equal the batch daily aggregate bit for bit
+    * whatever the file-to-batch split. Each twin casts `s4` back to
+    * revenue and runs its own series tail. */
+  private def streamDailyRevenue(
+      s: SparkSession, dir: String, query: String): DataFrame = {
+    val purchases = graft.streaming.Streams.eventsStream(s, dir)
+      .filter(col("event_type") === "purchase")
+      .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
+        col("value"))
+    graft.streaming.Streams.latest(
+      graft.streaming.Streams.runAvailableNow(
+        graft.streaming.Streams.dailySumState(purchases,
+          col("d"), col("value")),
+        s"${query}_${streamRun.incrementAndGet()}",
+        shufflePartitions = Some(8)),
+      "d")
+  }
   private def lshPairs(s: SparkSession, dir: String): DataFrame =
     pairMemo.getOrElseUpdate(s, dir,
       Dedup.minhashNearDupPairs(Tables.documents(s, dir), "doc_id",
@@ -799,11 +821,8 @@ object Queries {
           graft.streaming.Streams.eventsStream(s, dir),
           Seq("view", "click", "purchase")).toDF(),
         name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("user_id"))
-        .agg(max(struct(col("updates"), col("t1"), col("t2"),
-          col("t3"))).as("__x"))
-        .select(col("__x.t1").as("t1"), col("__x.t2").as("t2"),
-          col("__x.t3").as("t3"))
+      val latest = graft.streaming.Streams.latest(drained, "user_id")
+        .select(col("t1"), col("t2"), col("t3"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       def stage(nm: String, tc: String) = latest
         .filter(col(tc) >= 0)
@@ -3765,15 +3784,14 @@ object Queries {
       // boilerplate bloat) flags while landing, not at the nightly
       // audit.
       val name = s"q_stream_drift_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.histogramCountsState(
           graft.streaming.Streams.docsStream(s, dir),
-          "n_chars", "source", lo = 0.0, hi = 600.0, nBins = 10)
-          .toDF(), name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("g"), col("bin"))
-        .agg(max(col("n")).as("__c"))
-        .select(col("g").as("__g"), col("bin").as("__bin"), col("__c"))
+          "n_chars", "source", lo = 0.0, hi = 600.0, nBins = 10),
+        name, shufflePartitions = Some(8))
+      val latest = graft.streaming.Streams.latest(drained, "g", "bin")
+        .select(col("g").as("__g"), col("bin").as("__bin"),
+          col("n").as("__c"))
       graft.operators.Stats.psiFromBinCounts(
         latest, refGroup = "src0", nBins = 10, outGroupCol = "source")
     }),
@@ -3789,18 +3807,16 @@ object Queries {
       // crawl" monitor: a template flood or source blackout flags
       // while landing, not at the nightly audit.
       val name = s"q_stream_trending_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.tokenCountsState(
           graft.streaming.Streams.docsStream(s, dir),
-          col("doc_id") % 8 >= 4, col("text")).toDF(),
+          col("doc_id") % 8 >= 4, col("text")),
         name, shufflePartitions = Some(8))
-      val counts = drained.groupBy(col("late"), col("w"))
-        .agg(max(col("n")).as("__c"))
+      val counts = graft.streaming.Streams.latest(drained, "late", "w")
         .groupBy(col("w"))
-        .agg(sum(when(col("late"), 0L).otherwise(col("__c")))
+        .agg(sum(when(col("late"), 0L).otherwise(col("n")))
           .as("c_early"),
-          sum(when(col("late"), col("__c")).otherwise(0L)).as("c_late"))
+          sum(when(col("late"), col("n")).otherwise(0L)).as("c_late"))
       TextAnalysis.trendingFromCounts(counts)
     }),
     "q_stream_dsir" -> ((s, dir) => {
@@ -3814,15 +3830,14 @@ object Queries {
       // pattern): integer count folds are associative, the
       // file-to-batch split cannot change the model.
       val name = s"q_stream_dsir_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.dsirBucketCountsState(
           graft.streaming.Streams.docsStream(s, dir),
-          col("lang") === "en", col("text")).toDF(),
+          col("lang") === "en", col("text")),
         name, shufflePartitions = Some(8))
-      val counts = drained.groupBy(col("b"))
-        .agg(max(col("cr")).as("__cr"), max(col("ct")).as("__ct"))
-        .select(col("b").as("__b"), col("__cr"), col("__ct"))
+      val counts = graft.streaming.Streams.latest(drained, "b")
+        .select(col("b").as("__b"), col("cr").as("__cr"),
+          col("ct").as("__ct"))
       val grams = TextAnalysis.dsirGrams(Tables.documents(s, dir),
         "doc_id", col("text"), col("lang") === "en", 4096)
       TextAnalysis.dsirScore(grams, counts, "doc_id", 4096)
@@ -3843,16 +3858,15 @@ object Queries {
       // mid-crawl shows up in kilobytes of state, no vocab table.
       val depth = 4; val width = 16
       val name = s"q_stream_hh_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val tokenStream = graft.streaming.Streams.docsStream(s, dir)
         .select(explode(TextAnalysis.tokens(lower(col("text"))))
           .as("token"))
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.cmsCellsState(tokenStream,
-          col("token"), depth, width).toDF(),
+          col("token"), depth, width),
         name, shufflePartitions = Some(8))
-      val sketch = drained.groupBy(col("depth"), col("bucket"))
-        .agg(max(col("n")).as("cnt"))
+      val sketch = graft.streaming.Streams.latest(drained, "depth", "bucket")
+        .select(col("depth"), col("bucket"), col("n").as("cnt"))
       // identical tail to q_sketch_heavy_hitters, fed by the drain
       val occ = Tables.documents(s, dir)
         .select(explode(TextAnalysis.tokens(lower(col("text"))))
@@ -3875,17 +3889,16 @@ object Queries {
       // row (batch oracle verbatim). "Stop the experiment" flags
       // while the day's data lands, not at the nightly audit.
       val name = s"q_stream_sprt_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val purchases = graft.streaming.Streams.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
         .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
           (col("value") >= 100).as("ok"))
       val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.dailySuccessState(purchases,
-          col("d"), col("ok")).toDF(),
+        graft.streaming.Streams.cumulativeState(purchases, Seq(col("d")),
+          Seq(lit(1L).as("n"), col("ok").as("s"))),
         name, shufflePartitions = Some(8))
-      val daily = drained.groupBy(col("d"))
-        .agg(max(col("n")).as("n"), max(col("s")).as("s"))
+      val daily = graft.streaming.Streams.latest(drained, "d")
+        .select(col("d"), col("n"), col("s"))
       Stats.sprtBernoulli(daily, "d", col("n"), col("s"),
         p0 = 0.45, p1 = 0.55)
     }),
@@ -3907,12 +3920,9 @@ object Queries {
         graft.streaming.Streams.kmvCellsState(hashed, col("source"),
           col("h"), k).toDF(),
         name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("src"))
-        .agg(max(struct(col("updates"), col("n"), col("kth")))
-          .as("__x"))
+      val latest = graft.streaming.Streams.latest(drained, "src")
         .select(col("src").as("source"),
-          struct(col("__x.n").as("n"), col("__x.kth").as("kth"))
-            .as("kmv"))
+          struct(col("n"), col("kth")).as("kmv"))
       val h = graft.functions.KmvSketch.uniformize(
         TextAnalysis.fingerprintRolling(col("text")))
       val exact = Tables.documents(s, dir)
@@ -3932,21 +3942,9 @@ object Queries {
       // daily aggregate bit for bit, so the shared trailing-EWMA
       // tail must reproduce the batch smoother row for row — the
       // q_stream_sprt feeder pattern with a different series tail.
-      val name = s"q_stream_ewma_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
-      val purchases = graft.streaming.Streams.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
-          col("value"))
-      val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.dailySumState(purchases,
-          col("d"), col("value")).toDF(),
-        name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("d"))
-        .agg(max(struct(col("updates"), col("n"), col("s4")))
-          .as("__x"))
+      val latest = streamDailyRevenue(s, dir, "q_stream_ewma")
         .select(col("d"),
-          (col("__x.s4").cast(DoubleType) / 10000.0).as("rev"))
+          (col("s4").cast(DoubleType) / 10000.0).as("rev"))
       Stats.ewmaTrailing(latest, "d", "rev", k = 10)
     }),
     "q_stream_cusum" -> ((s, dir) => {
@@ -3959,21 +3957,9 @@ object Queries {
       // f2Oracle shared-def pattern). The drained latest-per-day
       // sums equal the batch daily aggregate bit for bit, so the
       // argmax never turns on the file-to-batch split.
-      val name = s"q_stream_cusum_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
-      val purchases = graft.streaming.Streams.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
-          col("value"))
-      val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.dailySumState(purchases,
-          col("d"), col("value")).toDF(),
-        name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("d"))
-        .agg(max(struct(col("updates"), col("n"), col("s4")))
-          .as("__x"))
+      val latest = streamDailyRevenue(s, dir, "q_stream_cusum")
         .select(col("d"),
-          (col("__x.s4").cast(DoubleType) / 10000.0).as("rev"))
+          (col("s4").cast(DoubleType) / 10000.0).as("rev"))
       Stats.cusumMaxShift(latest, "d", "rev")
     }),
     "q_stream_pettitt" -> ((s, dir) => {
@@ -3982,21 +3968,9 @@ object Queries {
       // locator - the outlier-robust ingest alarm beside the
       // mean-shift one, gating on the same spine-parameterized
       // oracle as the batch tail.
-      val name = s"q_stream_pettitt_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
-      val purchases = graft.streaming.Streams.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
-          col("value"))
-      val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.dailySumState(purchases,
-          col("d"), col("value")).toDF(),
-        name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("d"))
-        .agg(max(struct(col("updates"), col("n"), col("s4")))
-          .as("__x"))
+      val latest = streamDailyRevenue(s, dir, "q_stream_pettitt")
         .select(col("d"),
-          (col("__x.s4").cast(DoubleType) / 10000.0).as("rev"))
+          (col("s4").cast(DoubleType) / 10000.0).as("rev"))
       Stats.pettittTest(latest, "d", "rev")
     }),
     "q_stream_mk" -> ((s, dir) => {
@@ -4007,21 +3981,9 @@ object Queries {
       // monitor carries between micro-batches. Shared
       // spine-parameterized oracle with the batch query; the only
       // doubles are /18, one IEEE sqrt, and the Z division.
-      val name = s"q_stream_mk_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
-      val purchases = graft.streaming.Streams.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
-          col("value"))
-      val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.dailySumState(purchases,
-          col("d"), col("value")).toDF(),
-        name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("d"))
-        .agg(max(struct(col("updates"), col("n"), col("s4")))
-          .as("__x"))
+      val latest = streamDailyRevenue(s, dir, "q_stream_mk")
         .select(col("d"),
-          (col("__x.s4").cast(DoubleType) / 10000.0).as("rev"))
+          (col("s4").cast(DoubleType) / 10000.0).as("rev"))
       Stats.mannKendall(latest, "d", "rev")
     }),
     "q_stream_pareto" -> ((s, dir) => {
@@ -4048,11 +4010,9 @@ object Queries {
         graft.streaming.Streams.frontMaxState(docs, col("n_chars"),
           col("__b"), col("doc_id")).toDF(),
         name, shufflePartitions = Some(8))
-      val ga = drained.groupBy(col("a"))
-        .agg(max(struct(col("updates"), col("b"), col("n"),
-          col("min_id"))).as("__x"))
-        .select(col("a"), col("__x.b").as("mb"),
-          col("__x.n").as("n_docs"), col("__x.min_id").as("min_doc"))
+      val ga = graft.streaming.Streams.latest(drained, "a")
+        .select(col("a"), col("b").as("mb"), col("n").as("n_docs"),
+          col("min_id").as("min_doc"))
       val w = Guards.seriesWindow(col("a").desc)
         .rowsBetween(Window.unboundedPreceding, -1)
       Guards.boundedSeries(ga, "streamPareto length groups")
@@ -4114,21 +4074,9 @@ object Queries {
       // (maxPeriods-guarded), the medians through the two-phase
       // distributed rank; shared spine-parameterized oracle with the
       // batch query.
-      val name = s"q_stream_theilsen_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
-      val purchases = graft.streaming.Streams.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
-          col("value"))
-      val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.dailySumState(purchases,
-          col("d"), col("value")).toDF(),
-        name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("d"))
-        .agg(max(struct(col("updates"), col("n"), col("s4")))
-          .as("__x"))
+      val latest = streamDailyRevenue(s, dir, "q_stream_theilsen")
         .select(col("d"),
-          (col("__x.s4").cast(DoubleType) / 10000.0).as("rev"))
+          (col("s4").cast(DoubleType) / 10000.0).as("rev"))
       Stats.theilSenTrend(latest, "d", "rev")
     }),
     "q_stream_holt" -> ((s, dir) => {
@@ -4141,21 +4089,9 @@ object Queries {
       // the f2Oracle pattern). The 10⁻⁴-scaled integer state sum
       // converts to DECIMAL(18,4) by an exact decimal multiply — no
       // float touches the series.
-      val name = s"q_stream_holt_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
-      val purchases = graft.streaming.Streams.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
-          col("value"))
-      val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.dailySumState(purchases,
-          col("d"), col("value")).toDF(),
-        name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("d"))
-        .agg(max(struct(col("updates"), col("n"), col("s4")))
-          .as("__x"))
+      val latest = streamDailyRevenue(s, dir, "q_stream_holt")
         .select(col("d"),
-          (col("__x.s4").cast(DecimalType(18, 0)) *
+          (col("s4").cast(DecimalType(18, 0)) *
             lit(new java.math.BigDecimal("0.0001"))).as("rev"))
       Stats.holtLinear(latest, "d", "rev", alpha = 0.3, beta = 0.1)
     }),
@@ -4165,21 +4101,9 @@ object Queries {
       // integer window chain — "did today's drop shift the level" is
       // answered as the events land, and the replayed trajectory
       // gates on the SHARED phOracle over the same spine.
-      val name = s"q_stream_ph_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
-      val purchases = graft.streaming.Streams.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
-          col("value"))
-      val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.dailySumState(purchases,
-          col("d"), col("value")).toDF(),
-        name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("d"))
-        .agg(max(struct(col("updates"), col("n"), col("s4")))
-          .as("__x"))
+      val latest = streamDailyRevenue(s, dir, "q_stream_ph")
         .select(col("d"),
-          (col("__x.s4").cast(DecimalType(18, 0)) *
+          (col("s4").cast(DecimalType(18, 0)) *
             lit(new java.math.BigDecimal("0.0001"))).as("rev"))
       Stats.pageHinkley(latest, "d", "rev",
         deltaPpm = 0L, lambdaPpm = PhStreamLambdaPpm)
@@ -4192,21 +4116,9 @@ object Queries {
       // Windows sized to the 30-day purchase span (blocks 10/6/3/2);
       // the replayed spine gates on the SAME parameterized
       // hurstOracle as the batch query.
-      val name = s"q_stream_hurst_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
-      val purchases = graft.streaming.Streams.eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
-          col("value"))
-      val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.dailySumState(purchases,
-          col("d"), col("value")).toDF(),
-        name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("d"))
-        .agg(max(struct(col("updates"), col("n"), col("s4")))
-          .as("__x"))
+      val latest = streamDailyRevenue(s, dir, "q_stream_hurst")
         .select(col("d"),
-          (col("__x.s4").cast(DecimalType(18, 0)) *
+          (col("s4").cast(DecimalType(18, 0)) *
             lit(new java.math.BigDecimal("0.0001"))).as("rev"))
       Stats.hurstRS(latest, "d", "rev", windows = Seq(3, 5, 10, 15))
     }),
@@ -4220,7 +4132,6 @@ object Queries {
       // replayed trajectory gates on the SAME oracle as the batch
       // query. State is two longs per occupied bin (≤ 10 keys).
       val name = s"q_stream_isotonic_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val binned = graft.streaming.Streams.docsStream(s, dir)
         .select(Stats.binExpr("n_chars", 0.0, 600.0, 10).as("bin"),
           when(TextAnalysis.tokenCount(col("text")) >= 70, 1.0)
@@ -4228,16 +4139,13 @@ object Queries {
         .filter(col("bin").isNotNull)
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.dailySumState(binned,
-          col("bin"), col("y")).toDF(),
+          col("bin"), col("y")),
         name, shufflePartitions = Some(8))
       // latest state per bin: n = rows, k = positives (y folds ×10⁴
       // through the state's scaled-long sum — exact integers back out)
-      val cells = drained.groupBy(col("d"))
-        .agg(max(struct(col("updates"), col("n"), col("s4")))
-          .as("__x"))
-        .select(col("d").cast(IntegerType).as("bin"),
-          col("__x.n").as("n"),
-          (col("__x.s4") / lit(10000L)).cast(LongType).as("k"))
+      val cells = graft.streaming.Streams.latest(drained, "d")
+        .select(col("d").cast(IntegerType).as("bin"), col("n"),
+          (col("s4") / lit(10000L)).cast(LongType).as("k"))
       Stats.isotonicFromCells(cells)
     }),
     "q_stream_budget" -> ((s, dir) => {
@@ -4274,16 +4182,14 @@ object Queries {
       // for row. One more consumer of one keyed-state histogram: the
       // drift verdict and the percentile watch ride the same state.
       val name = s"q_stream_quantile_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.histogramCountsState(
           graft.streaming.Streams.docsStream(s, dir),
-          "n_chars", "source", lo = 0.0, hi = 600.0, nBins = 10)
-          .toDF(), name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("g"), col("bin"))
-        .agg(max(col("n")).as("__c"))
+          "n_chars", "source", lo = 0.0, hi = 600.0, nBins = 10),
+        name, shufflePartitions = Some(8))
+      val latest = graft.streaming.Streams.latest(drained, "g", "bin")
         .select(col("g").as("source"), col("bin").as("__bin"),
-          col("__c"))
+          col("n").as("__c"))
       graft.operators.Stats.quantilesFromBinCounts(latest,
         Seq("source"), qs = Seq("p50" -> 0.5, "p90" -> 0.9),
         lo = 0.0, hi = 600.0, nBins = 10)
@@ -4308,9 +4214,8 @@ object Queries {
         graft.streaming.Streams.hllRegistersState(
           src, col("event_type"), h).toDF(),
         name, shufflePartitions = Some(8))
-      val regs = drained.groupBy(col("g"), col("j"))
-        .agg(max(struct(col("updates"), col("m"))).as("x"))
-        .select(col("g"), col("j"), col("x.m").as("m"))
+      val regs = graft.streaming.Streams.latest(drained, "g", "j")
+        .select(col("g"), col("j"), col("m"))
         .filter(col("m") >= 1L) // TTL eviction rows carry m = 0
         .localCheckpoint(true)  // ≤ 5·256 rows; two consumers below
       val global = regs.groupBy(col("j")).agg(max(col("m")).as("m"))
@@ -4334,15 +4239,13 @@ object Queries {
       // folds are associative integers, so the rebuilt estimate gates
       // on the SAME oracle as q_sketch_f2.
       val name = s"q_stream_f2_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.amsSumsState(
           graft.streaming.Streams.eventsStream(s, dir),
-          col("event_type")).toDF(), name, shufflePartitions = Some(8))
-      val latest = drained.groupBy(col("j"))
-        .agg(max(struct(col("updates"), col("n"), col("s"))).as("x"))
-        .select(col("x.n").as("__n"),
-          (col("x.s") * col("x.s")).cast(DecimalType(38, 0)).as("__e"))
+          col("event_type")), name, shufflePartitions = Some(8))
+      val latest = graft.streaming.Streams.latest(drained, "j")
+        .select(col("n").as("__n"),
+          (col("s") * col("s")).cast(DecimalType(38, 0)).as("__e"))
       val ranked = Guards
         .boundedSeries(latest, "q_stream_f2 depth estimates")
         .withColumn("__rk", row_number().over(
@@ -4375,15 +4278,13 @@ object Queries {
       // the drained estimate gates on the IDENTICAL oracle as
       // q_sketch_joinsize.
       val name = s"q_stream_joinsize_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.amsSumsState(
           graft.streaming.Streams.eventsStream(s, dir),
-          col("user_id").cast(StringType)).toDF(), name,
+          col("user_id").cast(StringType)), name,
         shufflePartitions = Some(8))
-      val latestA = drained.groupBy(col("j"))
-        .agg(max(struct(col("updates"), col("n"), col("s"))).as("x"))
-        .select(col("j"), col("x.n").as("__na"), col("x.s").as("__sa"))
+      val latestA = graft.streaming.Streams.latest(drained, "j")
+        .select(col("j"), col("n").as("__na"), col("s").as("__sa"))
       val keyB = col("o_custkey").cast(StringType)
       // parallelized: 9 sigma hashes × |orders| explode inside a
       // one-split scan task otherwise (exact integer folds)
@@ -4433,7 +4334,6 @@ object Queries {
       // pre-scan (the sketch's documented two-pass layout) broadcast
       // into the stream; state is ≤ 256 longs per group.
       val name = s"q_stream_qsk_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       def e4(df: DataFrame): DataFrame = df
         .select(col("event_type").as("__g"),
           (col("value").cast(DecimalType(18, 4)) * 10000)
@@ -4449,13 +4349,16 @@ object Queries {
         .select(col("__g"), col("__min"), col("__w"),
           expr("(__e4 - __min) div __w").as("__idx"))
       val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.quantileSketchCellsState(cells).toDF(),
+        graft.streaming.Streams.cumulativeState(cells,
+          Seq(col("__g").as("g"), col("__min").as("mn"),
+            col("__w").as("w"), col("__idx").as("idx")),
+          Seq(lit(1L).as("n"))),
         name, shufflePartitions = Some(8))
-      val latest = drained
-        .groupBy(col("g"), col("mn"), col("w"), col("idx"))
-        .agg(max(col("n")).as("__cnt"))
+      val latest = graft.streaming.Streams
+        .latest(drained, "g", "mn", "w", "idx")
         .select(col("g").as("event_type"), col("mn").as("__min"),
-          col("w").as("__w"), col("idx").as("__idx"), col("__cnt"))
+          col("w").as("__w"), col("idx").as("__idx"),
+          col("n").as("__cnt"))
       Stats.quantilesFromSketch(latest, Seq("event_type"))
     }),
     "q_stream_neardedup" -> ((s, dir) => {
@@ -5879,15 +5782,13 @@ object Queries {
         // label keys — the commit overhead argument of r14 holds a
         // fortiori at one row per label)
         name, shufflePartitions = Some(8))
-      val cells = drained.groupBy(col("g"))
-        .agg(max(struct(col("updates"), col("n"), col("sh"),
-          col("sl"))).as("__x"))
+      val cells = graft.streaming.Streams.latest(drained, "g")
         .select(
           when(col("g") === lit("\u0000"), lit(null))
             .otherwise(col("g")).cast(labelType).as("label"),
-          col("__x.n").as("__n"),
-          posexplode(arrays_zip(col("__x.sh").as("sh"),
-            col("__x.sl").as("sl"))).as(Seq("k", "c")))
+          col("n").as("__n"),
+          posexplode(arrays_zip(col("sh"), col("sl")))
+            .as(Seq("k", "c")))
         .select(col("label"), col("k").cast(IntegerType).as("k"),
           col("__n"),
           (col("c.sh").cast(DecimalType(38, 0)) * 1000000L +

@@ -84,7 +84,7 @@ object MmdFold {
         val x = p * 1e12
         val p12 = roundHalfUpToLong(x)
         // truncating div/mod pair — the exact identity both engines
-        // share (the splitSumState contract)
+        // share (Scala / and % on Long, Spark div/%, DuckDB // and %)
         hi(k) += p12 / 1000000L
         lo(k) += p12 % 1000000L
         k += 1

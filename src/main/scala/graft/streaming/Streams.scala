@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 
 /** Structured Streaming surface of the engine: the daily-batch
   * semantics of the reference re-expressed as streams, plus the
@@ -264,16 +264,11 @@ object Streams {
             val merged = (prev.top ++ batch.map(_._2))
               .sortBy { case (v, id) => (-v, id) }
               .take(k)
-            // TTL counter discipline (ADVICE r11): event-time-derived
-            // so a post-eviction fresh leaderboard out-counts the old
-            // closure rows in a max-counter drain
             val maxUs = if (ttlMs.isDefined && batch.nonEmpty)
               batch.map(_._3.getTime * 1000L).max else Long.MinValue
-            val ctr = if (maxUs != Long.MinValue)
-              math.max(prev.updates + 1L, maxUs) else prev.updates + 1L
-            val next = TopKState(ctr, merged)
+            val next = TopKState(
+              drainCounter(state, ttlMs, prev.updates, maxUs), merged)
             state.update(next)
-            if (maxUs != Long.MinValue) armTtl(state, ttlMs, maxUs)
             merged.iterator.zipWithIndex.map { case ((v, id), i) =>
               TopKOut(g, next.updates, i + 1, v, id)
             }
@@ -346,12 +341,9 @@ object Streams {
               if (ttlMs.isDefined && ts != null)
                 maxUs = math.max(maxUs, ts.getTime * 1000L)
             }
-            // event-time counter in TTL mode (the cdcLatestState rule)
-            val ctr = if (maxUs != Long.MinValue)
-              math.max(st.updates + 1, maxUs) else st.updates + 1
-            st = st.copy(updates = ctr)
+            st = st.copy(
+              updates = drainCounter(state, ttlMs, st.updates, maxUs))
             state.update(st)
-            if (maxUs != Long.MinValue) armTtl(state, ttlMs, maxUs)
             Iterator(MomOut(g, st.updates, st.n, st.s, st.hi, st.lo))
           }
       }
@@ -395,15 +387,11 @@ object Streams {
     * input (alongside the exact `ts_ns` the fold orders by).
     *
     * TTL counter discipline (ADVICE r11): with TTL on, `updates` is
-    * event-time-derived — `max(prev + 1, maxEventMicros)` — so a key
-    * that RETURNS after eviction re-emits with a counter strictly
-    * above its own tombstone (whose counter is the evicted chain's
-    * `prev + 1`): the max-counter drain resolves to the live row, a
-    * restart can never be shadowed by the closure record. Holds
-    * whenever the return gap (≥ ttl − watermark delay) exceeds the
-    * evicted chain's batch count in microseconds — every real
-    * configuration. Without TTL the counter stays the plain 1,2,3,…
-    * per-key sequence. */
+    * event-time-derived (`drainCounter`), so a key that RETURNS after
+    * eviction re-emits with a counter strictly above its own
+    * tombstone and the max-counter drain resolves to the live row.
+    * Without TTL the counter stays the plain 1,2,3,… per-key
+    * sequence. */
   def cdcLatestState(
       changes: DataFrame,
       ttlMs: Option[Long] = None,
@@ -431,22 +419,18 @@ object Streams {
           } else {
             val prev = state.getOption.getOrElse(
               CdcState(0L, Long.MinValue, Long.MinValue, "", 0.0))
-            var maxUs = Long.MinValue
             val best = rows.foldLeft(prev) {
               case (acc, (_, (ts, id, op, v), _)) =>
-                maxUs = math.max(maxUs, ts / 1000L)
                 if (ts > acc.tsNs || (ts == acc.tsNs && id >= acc.id))
                   acc.copy(tsNs = ts, id = id, op = op, value = v)
                 else acc
             }
-            // TTL mode: event-time-derived counter (restart-proof
-            // vs the eviction tombstone); plain sequence otherwise.
-            val ctr =
-              if (ttlMs.isDefined) math.max(prev.updates + 1, maxUs)
-              else prev.updates + 1
-            val next = best.copy(updates = ctr)
+            // TTL armed at the winning version's event time. As the
+            // counter's event time it equals the batch max: a carried
+            // winner's time already sits below prev.updates.
+            val next = best.copy(updates =
+              drainCounter(state, ttlMs, prev.updates, best.tsNs / 1000L))
             state.update(next)
-            armTtl(state, ttlMs, next.tsNs / 1000L)
             Iterator(CdcOut(k, next.updates, next.tsNs, next.id,
               next.op, next.value))
           }
@@ -716,6 +700,24 @@ object Streams {
         math.max(target, state.getCurrentWatermarkMs() + 1L))
     }
 
+  /** The drain counter after `prev`, for every state that emits one:
+    * the plain per-key sequence `prev + 1` under NoTimeout; in TTL
+    * mode, with an event seen (`maxEventUs` set), event-time-derived
+    * `max(prev + 1, maxEventUs)` — and the key's TTL is armed at
+    * `maxEventUs`. A key returning after eviction then re-emits with a
+    * counter above its own closure record (`prev + 1` of the evicted
+    * chain), so a max-counter drain ([[latest]]) resolves to the live
+    * row on any sink, ordered or not. Holds whenever the return gap
+    * (≥ ttl − watermark delay) exceeds the evicted chain's batch count
+    * in microseconds — every real configuration. */
+  private def drainCounter[S](state: GroupState[S], ttlMs: Option[Long],
+      prev: Long, maxEventUs: Long): Long =
+    if (ttlMs.isEmpty || maxEventUs == Long.MinValue) prev + 1L
+    else {
+      armTtl(state, ttlMs, maxEventUs)
+      math.max(prev + 1L, maxEventUs)
+    }
+
   /** Streaming anchored-earliest funnel — conversion tracking AT
     * INGEST: each user carries (t1, t2, t3), the completion times of
     * the three-step chain (first step-1 event; first step-2 event
@@ -784,13 +786,8 @@ object Streams {
                 if (t2 >= 0 && ts > t2 && t3 < 0) t3 = ts
               }
             }
-            // TTL mode: event-time-derived counter (restart-proof
-            // vs the closure record); plain sequence otherwise.
-            val ctr =
-              if (ttlMs.isDefined) math.max(pu + 1L, evs.map(_._2).max)
-              else pu + 1L
+            val ctr = drainCounter(state, ttlMs, pu, evs.map(_._2).max)
             state.update((ctr, t1, t2, t3))
-            armTtl(state, ttlMs, evs.map(_._2).max)
             Iterator(FunnelStage(u, ctr, t1, t2, t3))
           }
       }
@@ -910,77 +907,118 @@ object Streams {
     fileStream(spark, dir, glob, maxFilesPerTrigger,
       probe(spark, dir, glob, "vec_id", "embedding", "label"))
 
-  /** Cumulative occupancy of one (group, bin) histogram cell;
-    * `updates` is the monotone drain counter. */
-  final case class GroupBinCount(g: String, bin: Int, updates: Long,
-      n: Long)
+  /** Cumulative keyed state — the one operator behind the keyed COUNT
+    * and SUM monitors (histogram, vocab, DSIR, CMS, quantile-sketch,
+    * AMS, SPRT and daily-sum cells): per distinct key, every `sums`
+    * column accumulates as a running Long across micro-batches and
+    * each touched key re-emits its totals (update mode).
+    *
+    * Output: the key columns (every column the `keys` expressions
+    * produce — a generator such as `explode` or `inline` may fan one
+    * input row out to several keys), then `updates`, then one Long per
+    * sum, named by its alias. A row count is just the sum
+    * `lit(1L).as("n")`. SQL semantics for NULL: a NULL key is its own
+    * group, and a NULL sum input adds 0 (the row still counts in `n`).
+    *
+    * `updates` is the drain counter (`drainCounter`): the plain
+    * per-key sequence under NoTimeout, where the sums only grow, so
+    * the max-counter row is also the max-count row; event-time-derived
+    * in TTL mode. Consumers keep the max-counter row per key
+    * ([[latest]]) — the current truth on any sink, ordered or not.
+    *
+    * State TTL (`ttlMs`): a key idle past the TTL (event time;
+    * requires a `ts` timestamp column on `rows`, which feed the
+    * watermark as given) evicts, emitting `updates = prev + 1` with
+    * every sum at 0, then drops its state; a returning key restarts
+    * from zero. `ttlMs = None` is the plain NoTimeout operator.
+    *
+    * 100 TB notes: state is 1 + |sums| longs per key, hash-partitioned
+    * by key across executors. flatMapGroupsWithState gets no map-side
+    * combine, so the stream shuffles one row per (input row, key) —
+    * at extreme rates pre-aggregate each micro-batch first. */
+  def cumulativeState(
+      rows: DataFrame,
+      keys: Seq[Column],
+      sums: Seq[Column],
+      ttlMs: Option[Long] = None,
+      watermark: String = "10 minutes"): DataFrame = {
+    val named = withTtlWatermark(rows, ttlMs, watermark)
+      .select(keys ++ sums :+ ttlTsCol(ttlMs).as("__ts"): _*)
+    val names = named.columns.toSeq.dropRight(1)
+    require(!names.contains("updates") && names.distinct == names,
+      "cumulativeState needs distinct output names: " + names.mkString(","))
+    val (keyNames, sumNames) = names.splitAt(names.length - sums.size)
+    val in = named.select(keyNames.map(col) ++
+      sumNames.map(n => col(n).cast(LongType).as(n)) :+ col("__ts"): _*)
+    val (nk, ns) = (keyNames.length, sumNames.length)
+    val keySchema = StructType(in.schema.take(nk))
+    val outSchema = StructType(keySchema ++ ("updates" +: sumNames)
+      .map(StructField(_, LongType, nullable = false)))
+    in.groupBy(keyNames.map(col): _*)
+      .as(Encoders.row(keySchema), Encoders.row(in.schema))
+      .flatMapGroupsWithState(OutputMode.Update(), ttlConf(ttlMs)) {
+        // state: (updates, sum 1, …, sum ns)
+        (key: Row, it: Iterator[Row], state: GroupState[Array[Long]]) =>
+          if (state.hasTimedOut) {
+            val pu = state.get.head
+            state.remove()
+            Iterator(Row.fromSeq(
+              key.toSeq ++ ((pu + 1L) +: Seq.fill(ns)(0L))))
+          } else {
+            val acc = state.getOption.getOrElse(new Array[Long](1 + ns))
+            var maxUs = Long.MinValue
+            while (it.hasNext) {
+              val r = it.next()
+              var i = 0
+              while (i < ns) {
+                if (!r.isNullAt(nk + i)) acc(1 + i) += r.getLong(nk + i)
+                i += 1
+              }
+              // the external type of `ts` follows the session's
+              // java8API conf; NULL is the NoTimeout placeholder
+              r.get(nk + ns) match {
+                case t: java.sql.Timestamp =>
+                  maxUs = math.max(maxUs, t.getTime * 1000L)
+                case t: java.time.Instant =>
+                  maxUs = math.max(maxUs, t.toEpochMilli * 1000L)
+                case _ =>
+              }
+            }
+            acc(0) = drainCounter(state, ttlMs, acc(0), maxUs)
+            state.update(acc)
+            Iterator(Row.fromSeq(key.toSeq ++ acc))
+          }
+      }(rows.sparkSession.implicits.newLongArrayEncoder,
+        Encoders.row(outSchema))
+  }
 
-  /** Shared cumulative-count state body for the keyed COUNT monitors
-    * (histogram / vocab / CMS / quantile-sketch cells): state carries
-    * (updates, n). `updates` is the drain counter — a plain sequence
-    * under NoTimeout (totals byte-identical to the pre-counter
-    * emissions), EVENT-TIME-DERIVED in TTL mode (the
-    * [[cdcLatestState]] drain rule), so a cell returning after
-    * eviction always out-counts its zero-count expiry record and a
-    * max-counter drain resolves correctly on ANY sink — ordered or
-    * not. Eviction emits `out(key, prevUpdates + 1, 0)` then drops
-    * the state. */
-  private def cumCountFn[K, V, O](
-      ttlMs: Option[Long],
-      ts: V => java.sql.Timestamp,
-      out: (K, Long, Long) => O)
-      : (K, Iterator[V], GroupState[(Long, Long)]) => Iterator[O] =
-    (key, it, state) =>
-      if (state.hasTimedOut) {
-        val (pu, _) = state.get
-        state.remove()
-        Iterator(out(key, pu + 1L, 0L))
-      } else {
-        var add = 0L
-        var maxUs = Long.MinValue
-        while (it.hasNext) {
-          val t = ts(it.next()); add += 1
-          if (t != null)
-            maxUs = math.max(maxUs, t.getTime * 1000L)
-        }
-        val (pu, pn) = state.getOption.getOrElse((0L, 0L))
-        val ctr =
-          if (ttlMs.isDefined && maxUs != Long.MinValue)
-            math.max(pu + 1L, maxUs)
-          else pu + 1L
-        val tot = pn + add
-        state.update((ctr, tot))
-        if (maxUs != Long.MinValue) armTtl(state, ttlMs, maxUs)
-        Iterator(out(key, ctr, tot))
-      }
+  /** The max-counter drain: per key, the row with the greatest
+    * `updates` — the current truth of every state that tags its
+    * emissions with the drain counter ([[cumulativeState]] and the
+    * top-k, moments, CDC, funnel, KMV, HLL, front-max and MMD
+    * states). One row per key: the keys, then `updates`, then the
+    * remaining drained columns in their order. */
+  def latest(drained: DataFrame, keys: String*): DataFrame = {
+    val rest = drained.columns.toSeq
+      .filterNot(c => c == "updates" || keys.contains(c))
+    drained.groupBy(keys.map(col): _*)
+      .agg(max(struct(("updates" +: rest).map(col): _*)).as("__x"))
+      .select(keys.map(col) :+ col("__x.*"): _*)
+  }
 
   /** Streaming cumulative histogram — the state backbone of the drift
     * monitor: as documents arrive, each (group, bin) cell's count
     * accumulates across micro-batches and the refreshed total is
-    * re-emitted (update mode — consumers take max per cell, the count
-    * is monotone). Binning is [[graft.operators.Stats.binExpr]], the
-    * SAME expression the batch PSI uses, so a drained stream's latest
-    * counts equal the batch [[graft.operators.Stats.binCounts]]
-    * exactly and the shared PSI tail
-    * ([[graft.operators.Stats.psiFromBinCounts]]) yields the identical
-    * drift verdict — that equality is the q_stream_drift gate.
-    *
-    * 100 TB notes: state is one long per (group, bin) —
-    * |groups|·nBins cells TOTAL regardless of corpus size,
-    * hash-partitioned across executors; the stream side shuffles only
-    * the (group, bin) pairs (map-side combine does not apply to
-    * flatMapGroupsWithState, so at extreme rates pre-aggregate each
-    * micro-batch before the stateful operator).
-    *
-    * State TTL (`ttlMs`, VERDICT r11 item 8): bounded retention for
-    * the monitor — a cell idle past the TTL (event time; requires a
-    * `ts` timestamp column on `rows`) EVICTS, emitting one zero-count
-    * row so a live consumer sees the reset; a returning cell restarts
-    * from zero. Every emission carries the `updates` drain counter —
-    * event-time-derived in TTL mode (the [[cdcLatestState]] rule), so
-    * the max-COUNTER row per cell is the current truth on any sink,
-    * ordered or not; the bounded-drain max-per-COUNT gate requires
-    * the default NoTimeout, whose totals stay byte-identical. */
+    * re-emitted. Binning is [[graft.operators.Stats.binExpr]], the
+    * SAME expression the batch PSI uses (rows without a bin drop), so
+    * a drained stream's latest counts equal the batch
+    * [[graft.operators.Stats.binCounts]] exactly and the shared PSI
+    * tail ([[graft.operators.Stats.psiFromBinCounts]]) yields the
+    * identical drift verdict — that equality is the q_stream_drift
+    * gate. Output (g, bin, updates, n); state is one cell per
+    * (group, bin) — |groups|·nBins cells TOTAL regardless of corpus
+    * size. TTL: see [[cumulativeState]] (a cell idle past the TTL
+    * evicts with one zero-count row). */
   def histogramCountsState(
       rows: DataFrame,
       valueCol: String,
@@ -989,84 +1027,40 @@ object Streams {
       hi: Double,
       nBins: Int,
       ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
-      implicit spark: SparkSession): Dataset[GroupBinCount] = {
-    import spark.implicits._
-    withTtlWatermark(rows, ttlMs, watermark)
-      .select(col(groupCol).cast(StringType).as("__g"),
-        graft.operators.Stats.binExpr(valueCol, lo, hi, nBins)
-          .as("__bin"),
-        ttlTsCol(ttlMs).as("__ts"))
-      .filter(col("__bin").isNotNull)
-      .as[(String, Int, java.sql.Timestamp)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs))(
-        cumCountFn[(String, Int), (String, Int, java.sql.Timestamp),
-          GroupBinCount](ttlMs, _._3,
-          (k, u, n) => GroupBinCount(k._1, k._2, u, n)))
+      watermark: String = "10 minutes"): DataFrame = {
+    val bin = graft.operators.Stats.binExpr(valueCol, lo, hi, nBins)
+    cumulativeState(rows.filter(bin.isNotNull),
+      Seq(col(groupCol).cast(StringType).as("g"), bin.as("bin")),
+      Seq(lit(1L).as("n")), ttlMs, watermark)
   }
 
-  /** Cumulative occurrence count of one token in one corpus half. */
-  final case class HalfTokenCount(late: Boolean, w: String,
-      updates: Long, n: Long)
-
   /** Streaming cumulative per-(half, token) counts — the state
-    * backbone of the TRENDING-TOKEN monitor (VERDICT r9 item 5): as
-    * documents arrive, each token occurrence bumps its (half, token)
-    * cell across micro-batches and the refreshed total re-emits
-    * (update mode — consumers take max per cell, the count is
-    * monotone). Tokenization is [[graft.operators.TextAnalysis
-    * .tokens]] over the lowercased text, the SAME expression the
-    * batch [[graft.operators.TextAnalysis.trendingTokens]] uses, so a
+    * backbone of the TRENDING-TOKEN monitor (VERDICT r9 item 5): each
+    * token occurrence bumps its (late, w) cell across micro-batches.
+    * Tokenization is [[graft.operators.TextAnalysis.tokens]] over the
+    * lowercased text, the SAME expression the batch
+    * [[graft.operators.TextAnalysis.trendingTokens]] uses, so a
     * drained stream's latest counts pivot into exactly the batch
     * (w, c_early, c_late) frame and the shared scoring tail
     * ([[graft.operators.TextAnalysis.trendingFromCounts]]) yields the
-    * identical rising/falling table — that equality is the
-    * q_stream_trending gate, against the batch oracle verbatim (the
-    * q_stream_drift pattern).
-    *
-    * 100 TB notes: state is one long per (half, token) — 2·|vocab|
-    * cells regardless of corpus size, hash-partitioned across
-    * executors; the stream side shuffles (half, token) occurrence
-    * rows (flatMapGroupsWithState gets no map-side combine, so at
-    * extreme rates pre-aggregate each micro-batch first — the
-    * histogramCountsState caveat).
+    * identical rising/falling table — the q_stream_trending gate.
+    * Output (late, w, updates, n).
     *
     * State TTL (`ttlMs`): the vocabulary IS this monitor's unbounded
     * state — one cell per distinct (half, token), growing with the
-    * crawl — so bounded retention matters most here. A token idle
-    * past the TTL (event time; requires a `ts` column on `docs`)
-    * evicts with one zero-count row and restarts from zero if it
-    * returns; the emitted `updates` counter (event-time-derived in
-    * TTL mode) makes the max-counter drain correct across evictions.
-    * The bounded-drain max-per-count gate keeps the default
-    * NoTimeout, whose totals stay byte-identical. */
+    * crawl — so bounded retention matters most here (eviction: see
+    * [[cumulativeState]]). */
   def tokenCountsState(
       docs: DataFrame,
       lateFlag: Column,
       text: Column,
       ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
-      implicit spark: SparkSession): Dataset[HalfTokenCount] = {
-    import spark.implicits._
-    withTtlWatermark(docs, ttlMs, watermark)
-      .select(lateFlag.cast(BooleanType).as("__late"),
+      watermark: String = "10 minutes"): DataFrame =
+    cumulativeState(docs,
+      Seq(lateFlag.cast(BooleanType).as("late"),
         explode(graft.operators.TextAnalysis.tokens(lower(text)))
-          .as("__w"),
-        ttlTsCol(ttlMs).as("__ts"))
-      .as[(Boolean, String, java.sql.Timestamp)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs))(
-        cumCountFn[(Boolean, String),
-          (Boolean, String, java.sql.Timestamp), HalfTokenCount](
-          ttlMs, _._3, (k, u, n) => HalfTokenCount(k._1, k._2, u, n)))
-  }
-
-  /** Cumulative (raw, target) gram counts of one DSIR hash bucket. */
-  final case class DsirBucket(b: Long, updates: Long, cr: Long,
-      ct: Long)
+          .as("w")),
+      Seq(lit(1L).as("n")), ttlMs, watermark)
 
   /** Streaming DSIR bucket counts — the importance model UPDATING AT
     * INGEST: each arriving document's hashed-bigram bag bumps its
@@ -1077,237 +1071,56 @@ object Streams {
     * associative integer folds, so the drained latest counts equal
     * the batch bucket frame bit for bit whatever the file-to-batch
     * split: feeding them to [[graft.operators.TextAnalysis.dsirScore]]
-    * reproduces the batch selection exactly (the q_stream_dsir gate,
-    * against the batch oracle verbatim — the q_stream_drift pattern).
-    *
-    * 100 TB notes: state is two longs per occupied bucket — ≤
-    * `buckets` cells (4096 default) TOTAL regardless of corpus size;
-    * the stream side shuffles one row per gram occurrence
-    * (flatMapGroupsWithState gets no map-side combine — at extreme
-    * rates pre-aggregate each micro-batch per bucket first).
-    *
-    * State TTL (`ttlMs`): bounded retention — a bucket idle past the
-    * TTL (event time; requires a `ts` column on `docs`) evicts with
-    * one zero-count row, turning the model into a trailing-window
-    * importance estimate; the emitted `updates` counter (event-time-
-    * derived in TTL mode) makes the max-counter drain correct across
-    * evictions. The bounded-drain max-per-count gate keeps the
-    * default NoTimeout, whose totals stay byte-identical. */
+    * reproduces the batch selection exactly (the q_stream_dsir gate).
+    * A NULL target flag counts as non-target, exactly the batch
+    * `when(__t, 1).otherwise(0)`. Output (b, updates, cr, ct); state
+    * is ≤ `buckets` cells TOTAL regardless of corpus size. TTL: see
+    * [[cumulativeState]] — eviction turns the model into a
+    * trailing-window importance estimate. */
   def dsirBucketCountsState(
       docs: DataFrame,
       isTarget: Column,
       text: Column,
       buckets: Int = 4096,
       ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
-      implicit spark: SparkSession): Dataset[DsirBucket] = {
-    import spark.implicits._
-    val in = withTtlWatermark(docs, ttlMs, watermark)
-      .withColumn("__ets", ttlTsCol(ttlMs))
-    // the doc id rides along only because dsirGrams carries one; the
-    // state op keys on the bucket alone
-    // NULL target flags count as non-target, exactly the batch
-    // when(__t, 1).otherwise(0) semantics — the tuple encoder's
-    // Boolean field is non-nullable, so normalize before encoding
-    val grams = graft.operators.TextAnalysis.dsirGrams(
-      in, "doc_id", text, coalesce(isTarget, lit(false)), buckets,
-      keep = Seq("__ets"))
-    grams
-      .select(col("__b"), col("__t"), col("__ets"))
-      .as[(Long, Boolean, java.sql.Timestamp)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (b: Long, it: Iterator[(Long, Boolean, java.sql.Timestamp)],
-         state: GroupState[(Long, Long, Long)]) =>
-          if (state.hasTimedOut) {
-            val (pu, _, _) = state.get
-            state.remove()
-            Iterator(DsirBucket(b, pu + 1L, 0L, 0L))
-          } else {
-            var cr = 0L; var ct = 0L
-            var maxUs = Long.MinValue
-            while (it.hasNext) {
-              val t = it.next(); cr += 1
-              if (t._2) ct += 1
-              if (t._3 != null)
-                maxUs = math.max(maxUs, t._3.getTime * 1000L)
-            }
-            val (pu, pcr, pct) = state.getOption.getOrElse((0L, 0L, 0L))
-            // the cumCountFn drain-counter rule, dual-count form
-            val ctr =
-              if (ttlMs.isDefined && maxUs != Long.MinValue)
-                math.max(pu + 1L, maxUs)
-              else pu + 1L
-            val tot = (ctr, pcr + cr, pct + ct)
-            state.update(tot)
-            if (maxUs != Long.MinValue) armTtl(state, ttlMs, maxUs)
-            Iterator(DsirBucket(b, ctr, tot._2, tot._3))
-          }
-      }
-  }
-
-  /** Cumulative occupancy of one count-min cell. */
-  final case class CmsCell(depth: Int, bucket: Long, updates: Long,
-      n: Long)
+      watermark: String = "10 minutes"): DataFrame =
+    // the doc id rides along only because dsirGrams carries one
+    cumulativeState(
+      graft.operators.TextAnalysis.dsirGrams(docs, "doc_id", text,
+        isTarget, buckets, keep = ttlMs.map(_ => "ts").toSeq),
+      Seq(col("__b").as("b")),
+      Seq(lit(1L).as("cr"), col("__t").cast(LongType).as("ct")),
+      ttlMs, watermark)
 
   /** Streaming count-min sketch — cumulative cell counts in keyed
     * state: each arriving key occurrence bumps its `depth` cells
-    * across micro-batches and the refreshed totals re-emit (update
-    * mode — consumers take max per cell, counts are monotone). Cells
-    * use the SAME hashing as the batch
+    * across micro-batches. Cells use the SAME hashing as the batch
     * [[graft.operators.Stats.countMinSketch]] (polyHash key, affine
     * row j, mod width), and counts are count-distributive, so a
     * drained stream's latest cells equal the batch sketch exactly and
     * the shared [[graft.operators.Stats.cmsEstimate]] + heavy-hitter
-    * cut yield the identical table — that equality is the
-    * q_stream_heavy_hitters gate (batch oracle verbatim, the
-    * q_stream_drift pattern).
-    *
-    * 100 TB notes: state is depth · width longs TOTAL — the smallest
-    * state footprint of any monitor here (4 · 2^20 at production
-    * width); the stream side shuffles depth rows per occurrence
-    * (flatMapGroupsWithState gets no map-side combine — at extreme
-    * rates pre-aggregate each micro-batch per key first).
-    *
-    * State TTL (`ttlMs`): bounded retention for the heavy-hitter
-    * monitor — a cell idle past the TTL (event time; requires a `ts`
-    * column on `rows`) evicts with one zero-count row and restarts
-    * from zero if touched again, turning the cumulative sketch into
-    * a trailing-window one; the emitted `updates` counter
-    * (event-time-derived in TTL mode) makes the max-counter drain
-    * correct across evictions. The bounded-drain max-per-count gate
-    * keeps the default NoTimeout, whose totals stay byte-identical. */
+    * cut yield the identical table — the q_stream_heavy_hitters gate.
+    * Output (depth, bucket, updates, n); state is depth · width
+    * longs TOTAL — the smallest footprint of any monitor here
+    * (4 · 2^20 at production width). TTL: see [[cumulativeState]] —
+    * eviction turns the cumulative sketch into a trailing-window
+    * one. */
   def cmsCellsState(
       rows: DataFrame,
       key: Column,
       depth: Int = 4,
       width: Int = 1 << 20,
       ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
-      implicit spark: SparkSession): Dataset[CmsCell] = {
-    import spark.implicits._
+      watermark: String = "10 minutes"): DataFrame = {
     import graft.operators.Dedup
     require(depth > 0 && width > 0)
-    withTtlWatermark(rows, ttlMs, watermark)
-      .select(Dedup.polyHash(key).as("__h"), ttlTsCol(ttlMs).as("__ts"))
-      .select(explode(array((0 until depth).map(j =>
-        struct(lit(j).as("r"),
+    cumulativeState(rows.withColumn("__h", Dedup.polyHash(key)),
+      Seq(inline(array((0 until depth).map(j =>
+        struct(lit(j).as("depth"),
           (pmod(col("__h") * Dedup.affineA(j) + Dedup.affineB(j),
-            lit(Dedup.PortableMod)) % width).as("b"))): _*)).as("__c"),
-        col("__ts"))
-      .select(col("__c.r").as("__r"), col("__c.b").as("__b"),
-        col("__ts"))
-      .as[(Int, Long, java.sql.Timestamp)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs))(
-        cumCountFn[(Int, Long), (Int, Long, java.sql.Timestamp),
-          CmsCell](ttlMs, _._3,
-          (k, u, n) => CmsCell(k._1, k._2, u, n)))
+            lit(Dedup.PortableMod)) % width).as("bucket"))): _*))),
+      Seq(lit(1L).as("n")), ttlMs, watermark)
   }
-
-  /** Cumulative (trials, successes) of one period. */
-  final case class DayNS(d: String, n: Long, s: Long)
-
-  /** Streaming cumulative per-period (trials, successes) — the state
-    * backbone of the SEQUENTIAL-TEST monitor: each arriving
-    * observation bumps its period's counts across micro-batches and
-    * the refreshed pair re-emits (update mode — consumers take max
-    * per period, both counts are monotone). The drained latest pairs
-    * are EXACTLY the batch daily aggregate, so the shared
-    * [[graft.operators.Stats.sprtBernoulli]] tail yields the
-    * identical decision trajectory — the q_stream_sprt gate (batch
-    * oracle verbatim, the q_stream_drift pattern): the experiment
-    * monitor runs AT INGEST, flagging "stop, H₁ accepted" while the
-    * day's data lands.
-    *
-    * 100 TB notes: state is two longs per period — a year of daily
-    * looks is 365 cells; the stream side shuffles (period, success)
-    * pairs (pre-aggregate per micro-batch at extreme rates — the
-    * flatMapGroupsWithState no-map-side-combine caveat). */
-  def dailySuccessState(
-      rows: DataFrame,
-      dayCol: Column,
-      successCol: Column)(
-      implicit spark: SparkSession): Dataset[DayNS] = {
-    import spark.implicits._
-    rows
-      .select(dayCol.cast(StringType).as("__d"),
-        successCol.cast(BooleanType).as("__s"))
-      .as[(String, Boolean)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (day: String, it: Iterator[(String, Boolean)],
-         state: GroupState[(Long, Long)]) =>
-          var n = 0L; var s = 0L
-          while (it.hasNext) { if (it.next()._2) s += 1; n += 1 }
-          val (pn, ps) = state.getOption.getOrElse((0L, 0L))
-          val tot = (pn + n, ps + s)
-          state.update(tot)
-          Iterator(DayNS(day, tot._1, tot._2))
-      }
-  }
-
-  /** Latest cumulative count of one grouped-quantile sketch cell
-    * (group, min, width, bin index) after each touching batch. */
-  final case class SketchCell(
-      g: String, mn: Long, w: Long, idx: Long, updates: Long, n: Long)
-
-  /** Streaming grouped-quantile sketch — the
-    * [[graft.operators.Stats.quantileSketchState]] histogram carried
-    * as CROSS-BATCH state (VERDICT r10 item 5): the 256-bin mergeable
-    * sketch is count-distributive by construction (that was the
-    * point of its design), so each arriving value bumps its
-    * (group, min, width, bin) cell across micro-batches and the
-    * drained latest counts equal the batch histogram EXACTLY,
-    * whatever the file-to-batch split — feeding the shared
-    * [[graft.operators.Stats.quantilesFromSketch]] tail yields the
-    * identical per-group p10/p50/p90 estimates bit for bit (the
-    * q_stream_quantile_group gate, against the batch sketch oracle
-    * verbatim — the q_stream_drift pattern).
-    *
-    * Input contract: `cells` carries one row per value, already
-    * binned against FIXED per-group bounds (`__g`, `__min`, `__w`,
-    * `__idx` — the bounds come from a control-plane pre-scan, the
-    * two-pass layout the batch sketch documents; binning against
-    * per-batch bounds would break mergeability). State is one long
-    * per occupied cell — ≤ bins per group regardless of stream
-    * length; update-mode re-emission with monotone counts, consumers
-    * take max per cell.
-    *
-    * State TTL (`ttlMs`): bounded retention per cell — an idle
-    * (group, min, width, bin) cell past the TTL (event time;
-    * requires a `ts` column on `cells`) evicts with one zero-count
-    * row and restarts from zero if touched again; the emitted
-    * `updates` counter (event-time-derived in TTL mode) makes the
-    * max-counter drain correct across evictions. The bounded-drain
-    * max-per-count gate (the q_stream_quantile_group contract) keeps
-    * the default NoTimeout, whose totals stay byte-identical. */
-  def quantileSketchCellsState(
-      cells: DataFrame,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
-      implicit spark: SparkSession): Dataset[SketchCell] = {
-    import spark.implicits._
-    withTtlWatermark(cells, ttlMs, watermark)
-      .select(col("__g").cast(StringType), col("__min").cast(LongType),
-        col("__w").cast(LongType), col("__idx").cast(LongType),
-        ttlTsCol(ttlMs).as("__ts"))
-      .as[(String, Long, Long, Long, java.sql.Timestamp)]
-      .groupByKey(t => (t._1, t._2, t._3, t._4))
-      .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs))(
-        cumCountFn[(String, Long, Long, Long),
-          (String, Long, Long, Long, java.sql.Timestamp), SketchCell](
-          ttlMs, _._5,
-          (k, u, n) => SketchCell(k._1, k._2, k._3, k._4, u, n)))
-  }
-
-  /** Latest signed AMS sum of one depth row after each touching
-    * batch, with the monotone keep-the-max drain counter. */
-  final case class AmsSum(j: Int, updates: Long, n: Long, s: Long)
 
   /** Streaming AMS F₂ state — the self-join-size monitor AT INGEST:
     * each depth row carries ONE signed sum S_j = Σ σ_j(key) across
@@ -1317,36 +1130,36 @@ object Streams {
     * are associative/commutative integers: the file-to-batch split
     * CANNOT change the drained state, which therefore equals the
     * batch [[graft.operators.Stats.amsF2]] sums bit for bit — the
-    * q_stream_f2 gate replays the batch oracle verbatim (the
-    * q_stream_drift pattern). State is `depth` (long, long) pairs
-    * TOTAL — the smallest monitor state in the module alongside the
-    * CMS cells. */
+    * q_stream_f2 gate. A NULL key is no key (the batch sketch's
+    * filter). Output (j, updates, n, s); state is `depth` cells
+    * TOTAL. */
   def amsSumsState(
       rows: DataFrame,
       key: Column,
-      depth: Int = 9)(
-      implicit spark: SparkSession): Dataset[AmsSum] = {
-    import spark.implicits._
+      depth: Int = 9): DataFrame = {
     require(depth >= 1 && depth <= 64, s"depth out of range: $depth")
-    rows.filter(key.isNotNull)
-      .select(explode(array((0 until depth).map(j =>
-        struct(lit(j).as("j"),
-          graft.operators.Stats.amsSigma(key, j).as("sg"))): _*))
-        .as("x"))
-      .select(col("x.j").as[Int], col("x.sg").as[Long])
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (j: Int, it: Iterator[(Int, Long)],
-         state: GroupState[(Long, Long, Long)]) =>
-          var n = 0L; var s = 0L
-          while (it.hasNext) { s += it.next()._2; n += 1 }
-          val (pu, pn, ps) = state.getOption.getOrElse((0L, 0L, 0L))
-          val tot = (pu + 1L, pn + n, ps + s)
-          state.update(tot)
-          Iterator(AmsSum(j, tot._1, tot._2, tot._3))
-      }
+    cumulativeState(
+      rows.filter(key.isNotNull)
+        .select(inline(array((0 until depth).map(j =>
+          struct(lit(j).as("j"),
+            graft.operators.Stats.amsSigma(key, j).as("sg"))): _*))),
+      Seq(col("j")), Seq(lit(1L).as("n"), col("sg").as("s")))
   }
+
+  /** Per-period EXACT value accumulation across micro-batches — the
+    * streaming feeder for any batch series tail (EWMA, CUSUM, trend
+    * tests, isotonic cells). Values fix at 4 dp as scaled integers
+    * (`floor(v·10⁴ + 0.5)`, the [[runningMomentsState]] contract) so
+    * the cross-batch sum is exact and independent of the
+    * file-to-batch split. Output (d, updates, n, s4); a NULL value
+    * adds 0 to `s4` and still counts in `n`. */
+  def dailySumState(
+      rows: DataFrame,
+      dayCol: Column,
+      valueCol: Column): DataFrame =
+    cumulativeState(rows, Seq(dayCol.cast(StringType).as("d")),
+      Seq(lit(1L).as("n"),
+        floor(valueCol * 10000 + lit(0.5)).cast(LongType).as("s4")))
 
   /** Latest per-key KMV summary after each touching batch: n =
     * min(distinct, k) and the k-th minimum (MaxValue while under
@@ -1414,14 +1227,8 @@ object Streams {
               if (t._3 != null)
                 maxUs = math.max(maxUs, t._3.getTime * 1000L)
             }
-            // TTL mode: event-time-derived counter so a key returning
-            // after eviction always out-counts its expiry record
-            val ctr =
-              if (ttlMs.isDefined && maxUs != Long.MinValue)
-                math.max(pu + 1L, maxUs)
-              else pu + 1L
+            val ctr = drainCounter(state, ttlMs, pu, maxUs)
             state.update((ctr, buf))
-            if (maxUs != Long.MinValue) armTtl(state, ttlMs, maxUs)
             val fin = agg.finish(buf)
             Iterator(KmvCell(key, ctr, fin.n, fin.kth))
           }
@@ -1451,9 +1258,7 @@ object Streams {
     * smallest monitor state in the module beside the DSIR buckets;
     * idempotent max even survives REPLAYED batches, which no counting
     * monitor here can claim. The stream side shuffles one (g, j, ρ)
-    * row per key occurrence (flatMapGroupsWithState gets no map-side
-    * combine — at extreme rates pre-aggregate each micro-batch per
-    * (g, j) first).
+    * row per key occurrence (the [[cumulativeState]] shuffle note).
     *
     * State TTL (`ttlMs`): bounded retention — a register idle past
     * the TTL (event time; requires a `ts` column on `rows`) evicts
@@ -1498,72 +1303,17 @@ object Streams {
                 maxUs = math.max(maxUs, t._4.getTime * 1000L)
             }
             val (pu, pm) = state.getOption.getOrElse((0L, 0L))
-            val ctr =
-              if (ttlMs.isDefined && maxUs != Long.MinValue)
-                math.max(pu + 1L, maxUs)
-              else pu + 1L
+            val ctr = drainCounter(state, ttlMs, pu, maxUs)
             val m = math.max(pm, add)
             state.update((ctr, m))
-            if (maxUs != Long.MinValue) armTtl(state, ttlMs, maxUs)
             Iterator(HllReg(k._1, k._2, ctr, m))
           }
       }
   }
 
-  /** Latest cumulative per-day (count, Σ value·10⁴) after each batch
-    * that touched the day; `updates` is the monotone keep-the-max
-    * drain counter. */
-  /** Latest per-key split-long sum: the EXACT unbounded-scale integer
-    * fold of [[graft.Queries]]' q_embedding_mmd cells — each value is
-    * a 12-dp scaled long p12 split into hi = p12 div 10⁶ / lo =
-    * p12 % 10⁶ halves (truncating div/mod — the exact identity both
-    * engines share), each half summed as a plain long: |hi|,|lo| ≤
-    * 10⁶ keeps both sums exact to ~9·10¹² rows PER KEY, and the two
-    * halves reconstruct the exact decimal Σp12 = 10⁶·Σsh + Σsl at
-    * drain time. Associative/commutative integers: the file-to-batch
-    * split cannot change the drained state (the q_stream_f2
-    * argument). */
-  final case class SplitSum(
-      g: String, updates: Long, n: Long, sh: Long, sl: Long)
-
-  /** Per-key split-long accumulation across micro-batches (see
-    * [[SplitSum]]). `p12` must already be the 12-dp scaled long. */
-  def splitSumState(
-      rows: DataFrame,
-      key: Column,
-      p12: Column)(
-      implicit spark: SparkSession): Dataset[SplitSum] = {
-    import spark.implicits._
-    rows
-      .select(key.cast(StringType).as("__g"),
-        p12.cast(LongType).as("__p"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (g: String, it: Iterator[(String, Long)],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          var n = 0L; var h = 0L; var l = 0L
-          while (it.hasNext) {
-            val p = it.next()._2
-            // Scala / and % on Long truncate toward zero and follow
-            // the dividend's sign — the same pair as Spark's div/%
-            // and DuckDB's // and %
-            h += p / 1000000L
-            l += p % 1000000L
-            n += 1
-          }
-          val (pu, pn, ph, pl) = state.getOption
-            .getOrElse((0L, 0L, 0L, 0L))
-          val tot = (pu + 1L, pn + n, ph + h, pl + l)
-          state.update(tot)
-          Iterator(SplitSum(g, tot._1, tot._2, tot._3, tot._4))
-      }
-  }
-
   /** Per-key ARRAY-packed split-long cell sums: one state row per
     * label carrying all upper-triangle MMD cells (VERDICT r14 item 1
-    * — the row-per-cell [[splitSumState]] keying paid labels × 2080
+    * — a row-per-cell keying paid labels × 2080
     * state-store commits AND shuffled n·2080 exploded tuples through
     * the non-codegen groupByKey; this shape shuffles only the n raw
     * embedding rows and commits one row per label). */
@@ -1580,8 +1330,9 @@ object Streams {
     * decimal HALF_UP round (`BigDecimal.valueOf(x).setScale(0,
     * HALF_UP)` — exactly Spark's `round(double, 0)`), split into the
     * truncating hi = p12 div 10⁶ / lo = p12 % 10⁶ halves summed as
-    * plain longs (exact to ~9·10¹² rows per cell, the [[SplitSum]]
-    * argument). Associative integer folds: the file-to-batch split
+    * plain longs (|hi|, |lo| ≤ 10⁶ keeps both sums exact to ~9·10¹²
+    * rows per cell; 10⁶·Σhi + Σlo reconstructs the exact Σp12 at
+    * drain time). Associative integer folds: the file-to-batch split
     * cannot change the drained state. Embedding elements must be
     * non-null (the batch twin's double lattice is null-free on the
     * gated corpus; a null element here fails loudly instead of
@@ -1665,42 +1416,6 @@ object Streams {
           }
           state.update((pu + 1L, b, n, mi))
           Iterator(FrontMax(a, pu + 1L, b, n, mi))
-      }
-  }
-
-  final case class DaySum(d: String, updates: Long, n: Long, s4: Long)
-
-  /** Per-day EXACT value accumulation across micro-batches — the
-    * streaming feeder for any batch series tail (EWMA, CUSUM, SPRT,
-    * trend tests): the [[dailySuccessState]] shape with a revenue
-    * sum instead of a success count. State is three longs per day;
-    * values fix at 4 dp as scaled integers (the
-    * [[runningMomentsState]] contract) so the cross-batch sum is
-    * exact and independent of the file-to-batch split. Each touched
-    * day re-emits its cumulative row tagged with the monotone
-    * `updates` counter; consumers keep the max-counter row per day
-    * (the [[cdcLatestState]] latest-wins drain). */
-  def dailySumState(
-      rows: DataFrame,
-      dayCol: Column,
-      valueCol: Column)(
-      implicit spark: SparkSession): Dataset[DaySum] = {
-    import spark.implicits._
-    rows
-      .select(dayCol.cast(StringType).as("__d"),
-        floor(valueCol * 10000 + lit(0.5)).cast(LongType).as("__v4"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (day: String, it: Iterator[(String, Long)],
-         state: GroupState[(Long, Long, Long)]) =>
-          var n = 0L; var s = 0L
-          while (it.hasNext) { s += it.next()._2; n += 1 }
-          val (pu, pn, ps) = state.getOption.getOrElse((0L, 0L, 0L))
-          val tot = (pu + 1L, pn + n, ps + s)
-          state.update(tot)
-          Iterator(DaySum(day, tot._1, tot._2, tot._3))
       }
   }
 

@@ -643,10 +643,12 @@ class StreamsSpec extends SparkSpecBase {
       t0 - 60000)
     writeDocsFile(tmp, "b.parquet", Seq((3L, "also long")), t0)
     val raw = Streams.runAvailableNow(
-      Streams.dailySuccessState(
+      Streams.cumulativeState(
         Streams.docsStream(spark, tmp.getPath, glob = "*.parquet",
           maxFilesPerTrigger = 1),
-        lit("D"), length(col("text")) > 3).toDF(), "sprt_multibatch")
+        Seq(lit("D").as("d")),
+        Seq(lit(1L).as("n"), (length(col("text")) > 3).as("s"))),
+      "sprt_multibatch")
     val emissions = raw.collect()
       .map(r => (r.getAs[Long]("n"), r.getAs[Long]("s"))).sorted.toSeq
     assert(emissions == Seq((2L, 1L), (3L, 2L)), s"got $emissions")
@@ -993,9 +995,12 @@ class StreamsSpec extends SparkSpecBase {
         expr("(__e4 - __min) div ((__max - __min) div 256 + 1)")
           .as("__idx"))
     val drained = Streams.runAvailableNow(
-      Streams.quantileSketchCellsState(toCells(e4(
+      Streams.cumulativeState(toCells(e4(
         Streams.eventsStream(spark, tmp.getPath, glob = "*.parquet",
-          maxFilesPerTrigger = 1)))).toDF(), "qsk_multibatch")
+          maxFilesPerTrigger = 1))),
+        Seq(col("__g").as("g"), col("__min").as("mn"), col("__w").as("w"),
+          col("__idx").as("idx")),
+        Seq(lit(1L).as("n"))), "qsk_multibatch")
     // cross-batch accumulation really happened: the value-2 cell was
     // emitted at n=2 (batch 1) then n=3 (batch 2 extended the STATE)
     val cell2 = drained.filter(col("n") === 3L).count()
@@ -1419,9 +1424,9 @@ class StreamsSpec extends SparkSpecBase {
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("splitSumState: hi/lo halves accumulate ACROSS micro-batches " +
-      "and reconstruct the exact signed sum, negatives included") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
+  test("cumulativeState: hi/lo split sums accumulate ACROSS " +
+      "micro-batches and reconstruct the exact signed sum, negatives " +
+      "included") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("splitsum").toFile
     // two files = two micro-batches with maxFilesPerTrigger = 1
@@ -1435,16 +1440,17 @@ class StreamsSpec extends SparkSpecBase {
       .schema("g STRING, p BIGINT")
       .option("maxFilesPerTrigger", 1)
       .parquet(tmp.getAbsolutePath + "/f*")
+    // truncating div / % on Long follow the dividend's sign — the same
+    // pair as Scala's / and % and DuckDB's // and %
     val out = Streams.runAvailableNow(
-      Streams.splitSumState(src, col("g"), col("p")).toDF(),
+      Streams.cumulativeState(src, Seq(col("g")),
+        Seq(lit(1L).as("n"), expr("p div 1000000").as("sh"),
+          (col("p") % 1000000L).as("sl"))),
       "splitsum_drain")
-    val last = out.groupBy(col("g"))
-      .agg(max(struct(col("updates"), col("n"), col("sh"), col("sl")))
-        .as("x"))
-      .collect()
-      .map(r => r.getString(0) ->
-        ((r.getStruct(1).getLong(1), r.getStruct(1).getLong(2),
-          r.getStruct(1).getLong(3)))).toMap
+    val last = Streams.latest(out, "g").collect()
+      .map(r => r.getAs[String]("g") ->
+        ((r.getAs[Long]("n"), r.getAs[Long]("sh"), r.getAs[Long]("sl"))))
+      .toMap
     // a: 1500000 → (1, 500000); −2500001 → (−2, −500001); 7 → (0, 7)
     //    totals (Σhi, Σlo) = (−1, 6); reconstruct sh·10⁶ + sl =
     //    −1000000 + 6 = −999994 = 1500000 − 2500001 + 7 ✓
@@ -1453,6 +1459,145 @@ class StreamsSpec extends SparkSpecBase {
       recon(last("a")) == 1500000L - 2500001L + 7L, s"got $last")
     assert(last("b")._1 == 2L &&
       recon(last("b")) == 999999L - 1000001L, s"got $last")
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
+  test("cumulativeState entry points keep their case-class encoder " +
+      "shapes: names, types and order") {
+    import org.apache.spark.sql.types._
+    val docs = Streams.docsStream(spark, dir)
+    val events = Streams.eventsStream(spark, dir)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType)
+    val counted = Seq("updates" -> LongType, "n" -> LongType)
+    val pins = Seq(
+      "histogramCountsState" -> (Streams.histogramCountsState(docs,
+        "n_chars", "source", lo = 0.0, hi = 600.0, nBins = 10),
+        Seq("g" -> StringType, "bin" -> IntegerType) ++ counted),
+      "tokenCountsState" -> (Streams.tokenCountsState(docs,
+        col("doc_id") % 8 >= 4, col("text")),
+        Seq("late" -> BooleanType, "w" -> StringType) ++ counted),
+      "dsirBucketCountsState" -> (Streams.dsirBucketCountsState(docs,
+        col("lang") === "en", col("text")),
+        Seq("b" -> LongType, "updates" -> LongType, "cr" -> LongType,
+          "ct" -> LongType)),
+      "cmsCellsState" -> (Streams.cmsCellsState(
+        docs.select(col("text").as("token")), col("token"), 4, 16),
+        Seq("depth" -> IntegerType, "bucket" -> LongType) ++ counted),
+      "amsSumsState" -> (Streams.amsSumsState(events,
+        col("event_type")),
+        Seq("j" -> IntegerType) ++ counted :+ ("s" -> LongType)),
+      "dailySumState" -> (Streams.dailySumState(events,
+        date_format(col("ts"), "yyyy-MM-dd"), col("value")),
+        Seq("d" -> StringType) ++ counted :+ ("s4" -> LongType)),
+      // q_stream_sprt's direct call: the old per-period (n, s) shape,
+      // now with the drain counter
+      "per-period successes" -> (Streams.cumulativeState(events,
+        Seq(date_format(col("ts"), "yyyy-MM-dd").as("d")),
+        Seq(lit(1L).as("n"), (col("value") >= 100).as("s"))),
+        Seq("d" -> StringType) ++ counted :+ ("s" -> LongType)),
+      // q_stream_quantile_group's direct call
+      "quantile-sketch cells" -> (Streams.cumulativeState(
+        events.select(col("event_type").as("__g"),
+          col("event_id").as("__min"), col("event_id").as("__w"),
+          col("event_id").as("__idx")),
+        Seq(col("__g").as("g"), col("__min").as("mn"),
+          col("__w").as("w"), col("__idx").as("idx")),
+        Seq(lit(1L).as("n"))),
+        Seq("g" -> StringType, "mn" -> LongType, "w" -> LongType,
+          "idx" -> LongType) ++ counted))
+    pins.foreach { case (what, (df, want)) =>
+      assert(shape(df) == want, s"$what: ${shape(df)}")
+    }
+  }
+
+  test("cumulativeState SQL NULLs: a NULL sum input adds 0 and the row " +
+      "still counts (dailySumState over a NULL value)") {
+    val tmp = java.nio.file.Files.createTempDirectory("dsum_null").toFile
+    writeDocsFile(tmp, "a.parquet", Seq((1L, "long text"), (2L, "no")),
+      System.currentTimeMillis())
+    val raw = Streams.runAvailableNow(
+      Streams.dailySumState(
+        Streams.docsStream(spark, tmp.getPath, glob = "*.parquet"),
+        lit("D"),
+        when(col("doc_id") === 1L, length(col("text")).cast("double"))),
+      "dsum_null")
+    val emissions = raw.collect()
+      .map(r => (r.getAs[Long]("updates"), r.getAs[Long]("n"),
+        r.getAs[Long]("s4"))).toSeq
+    assert(emissions == Seq((1L, 2L, 90000L)), s"got $emissions")
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
+  test("cumulativeState SQL NULLs: a NULL key is its own group " +
+      "(tokenCountsState over a NULL late flag)") {
+    val tmp = java.nio.file.Files.createTempDirectory("trend_null").toFile
+    writeDocsFile(tmp, "a.parquet", Seq((1L, "apple apple"), (9L, "apple")),
+      System.currentTimeMillis())
+    // late = true for doc_id >= 8, NULL otherwise
+    val raw = Streams.runAvailableNow(
+      Streams.tokenCountsState(
+        Streams.docsStream(spark, tmp.getPath, glob = "*.parquet"),
+        when(col("doc_id") >= 8, true), col("text")),
+      "trend_null")
+    val cells = raw.collect()
+      .map(r => (Option(r.getAs[java.lang.Boolean]("late")).map(_.booleanValue),
+        r.getAs[String]("w")) -> r.getAs[Long]("n")).toMap
+    assert(cells == Map((None, "apple") -> 2L, (Some(true), "apple") -> 1L),
+      s"got $cells")
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
+  test("cumulativeState TTL: an idle key with two sums EVICTS with " +
+      "updates = prev + 1 and both sums 0, then restarts from zero") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("cum_ttl").toFile
+    val t0 = System.currentTimeMillis()
+    def write(name: String, rows: Seq[(Long, Long, String, Double)],
+        mod: Long): Unit = {
+      val stage = new java.io.File(tmp, s"__stage_$name")
+      rows.map { case (id, t, tp, v) => (id, t, 1L, tp, v, "{}") }
+        .toDF("event_id", "ts", "user_id", "event_type", "value",
+          "props")
+        .withColumn("ts", timestamp_micros(expr("ts div 1000"))
+          .cast(org.apache.spark.sql.types.TimestampNTZType))
+        .coalesce(1).write.mode("overwrite").parquet(stage.getPath)
+      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
+      val dst = new java.io.File(tmp, name)
+      java.nio.file.Files.move(part.toPath, dst.toPath)
+      dst.setLastModified(mod)
+      org.apache.commons.io.FileUtils.deleteDirectory(stage)
+    }
+    val h = 3600L * 1000 * 1000 * 1000
+    val s = 1000L * 1000 * 1000
+    // key "a" lands two rows at 1h then goes idle; "b" stays live
+    write("a.parquet", Seq((1L, h, "a", 2.0), (2L, h, "a", 3.0),
+      (3L, h, "b", 1.0)), t0 - 90000)
+    write("b.parquet", Seq((4L, 4 * h, "b", 1.0)), t0 - 60000)
+    // the watermark (3h50m) has passed a's 2h expiry: eviction fires
+    write("c.parquet", Seq((5L, 4 * h + s, "b", 1.0)), t0 - 30000)
+    // "a" returns: the restarted key counts from scratch
+    write("d.parquet", Seq((6L, 4 * h + 2 * s, "a", 7.0)), t0)
+    val drained = Streams.runAvailableNow(
+      Streams.cumulativeState(
+        Streams.eventsStream(spark, tmp.getPath, glob = "*.parquet",
+          maxFilesPerTrigger = 1),
+        Seq(col("event_type").as("g")),
+        Seq(lit(1L).as("n"), col("value").cast("long").as("v")),
+        ttlMs = Some(3600L * 1000)), "cum_ttl")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getAs[String]("g"), r.getAs[Long]("updates"),
+        r.getAs[Long]("n"), r.getAs[Long]("v")))
+    // key a in counter order: (2, 5), the eviction record, the restart
+    val a = rows(drained).filter(_._1 == "a").sortBy(_._2)
+    assert(a.map(t => (t._3, t._4)).toSeq == Seq((2L, 5L), (0L, 0L),
+      (1L, 7L)), s"key a history: ${a.toSeq}")
+    assert(a(1)._2 == a(0)._2 + 1L, s"eviction counter: ${a.toSeq}")
+    // the max-counter drain resolves to the restart; b never evicted
+    val last = rows(Streams.latest(drained, "g"))
+      .map(t => t._1 -> ((t._3, t._4))).toMap
+    assert(last == Map("a" -> ((1L, 7L)), "b" -> ((3L, 3L))),
+      s"latest: $last")
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
