@@ -47,4 +47,14 @@ object Sessions {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Stop `spark` and clear the calling thread's active-session slot and
+    * the default session. `SparkSession.stop()` leaves the thread's
+    * inheritable slot pointing at the stopped session, which keeps it
+    * (and everything it memoizes) reachable from the caller. */
+  def stop(spark: SparkSession): Unit = {
+    spark.stop()
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+  }
 }

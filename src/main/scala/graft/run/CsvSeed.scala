@@ -2,7 +2,7 @@ package graft.run
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 import graft.core.{Conversions, Schemas, Sessions}
 import graft.io._
@@ -80,17 +80,20 @@ object CsvSeed {
     * the sargable half-open form. NULL timestamps drop out of a dated
     * run, like the reference's equality filter.
     *
-    * The audit is eager and costs ONE parse of the CSV: the per-column
+    * The audit rides the frame's first action: the per-column
     * coercion-loss counts (A3) and the NULL-key drop count (F3) are
-    * one aggregate over the aligned string frame. The returned frame
-    * stays lazy; its one parse is the sink's write. */
+    * observed on the aligned string frame, below the filter, so the
+    * sink's write parses the CSV once and computes them on the way.
+    * Only successful task attempts reach them. Read the two audit
+    * thunks after that action; they block until it has ended. */
   def readAndTransform(
       spark: SparkSession,
       path: String,
       keys: Seq[String],
       runDate: Option[String] = None,
       schema: StructType = Schemas.orders,
-      dateCol: String = "OrderCreatedAt"): (DataFrame, Map[String, Long], Long) = {
+      dateCol: String = "OrderCreatedAt")
+      : (DataFrame, () => Map[String, Long], () => Long) = {
     val rawSchema =
       StructType(schema.fields.map(f => StructField(f.name, StringType)))
     val raw = spark.read
@@ -103,15 +106,12 @@ object CsvSeed {
       .option("escape", "\"")
       .schema(rawSchema)
       .csv(path)
-    val aligned = Conversions.alignToSchema(raw, rawSchema)
     // C1-C5: each column coerced to its declared type
     val typedCol: Map[String, Column] = schema.fields.map(f =>
       f.name -> coerce(col(f.name), f.dataType)).toMap
-    val typed = aligned.select(
-      schema.fieldNames.map(n => typedCol(n).as(n)).toIndexedSeq: _*)
     // the F7 day filter and the F3 key check (NULL, or NaN like
     // `na.drop`), over named typed columns: `col` on `typed`, or the
-    // coercions themselves inside the audit aggregate below
+    // coercions themselves inside the observed audit below
     def inRun(c: String => Column): Column =
       runDate.fold(lit(true))(Pipeline.daySlice(c(dateCol), _))
     def keyMissing(c: String => Column): Column = keys.map { k =>
@@ -120,20 +120,30 @@ object CsvSeed {
         case _ => c(k).isNull
       }
     }.foldLeft(lit(false))(_ || _)
+
+    // the rows the filter below drops for a missing key, then the loss
+    // count of every typed column, observed over the aligned strings
+    val lossCols = schema.fields.filter(_.dataType != StringType)
+    val audit = Observation()
+    val aligned = Conversions.alignToSchema(raw, rawSchema).observe(audit,
+      sum(when(inRun(typedCol) && keyMissing(typedCol), 1L)
+        .otherwise(0L)).as(DroppedKeys),
+      lossCols.map(f => Conversions.coercionLossCount(col(f.name),
+        typedCol(f.name)).as(f.name)).toIndexedSeq: _*)
+    val typed = aligned.select(
+      schema.fieldNames.map(n => typedCol(n).as(n)).toIndexedSeq: _*)
     val kept = typed.filter(inRun(col) && !keyMissing(col))
 
-    // one aggregate over the aligned strings: the rows `kept` drops for
-    // a missing key, then the loss count of every typed column
-    val lossCols = schema.fields.filter(_.dataType != StringType)
-    val row = aligned.agg(
-      sum(when(inRun(typedCol) && keyMissing(typedCol), 1L).otherwise(0L)),
-      lossCols.map(f => Conversions.coercionLossCount(col(f.name),
-        typedCol(f.name))).toIndexedSeq: _*).collect()(0)
-    val audit = lossCols.zipWithIndex.map { case (f, i) =>
-      f.name -> row.getLong(i + 1)
-    }.toMap
-    (kept, audit, row.getLong(0))
+    // an input without rows observes NULL sums: they read as 0
+    def observed(name: String): Long =
+      audit.get.get(name).collect { case n: Long => n }.getOrElse(0L)
+    (kept, () => lossCols.map(f => f.name -> observed(f.name)).toMap,
+      () => observed(DroppedKeys))
   }
+
+  /** The observed metric holding the NULL-key drop count; the CSV
+    * columns are PascalCase, so it cannot shadow a loss count. */
+  private val DroppedKeys = "dropped_for_null_key"
 
   /** Resolve configured key names (lowercase/underscored at the env
     * edge, e.g. `order_id`, `txcorrelationid`) against the entity's
@@ -169,10 +179,6 @@ object CsvSeed {
       println(s"[csv-seed] filtering data for ${se.dateCol} == $d"))
     val (batch, audit, droppedKeys) =
       readAndTransform(spark, path, keys, runDate, se.schema, se.dateCol)
-    audit.toSeq.sortBy(_._1).foreach { case (c, n) =>
-      if (n > 0) println(s"[csv-seed] coercion losses in $c: $n")
-    }
-    println(s"[csv-seed] rows dropped for NULL key: $droppedKeys")
 
     val d = cfg.targetDialect
     val jdbc = cfg.targetJdbc.copy(batchSize = cfg.stagingLoadChunkSize)
@@ -184,6 +190,11 @@ object CsvSeed {
       se.schema)
     val staged = MergeSink.write(batch, jdbc, d, target, staging, keys,
       se.mode, withByTarget = d == SqlDialect.SqlServer)
+    // the audit was observed by the staging load above
+    audit().toSeq.sortBy(_._1).foreach { case (c, n) =>
+      if (n > 0) println(s"[csv-seed] coercion losses in $c: $n")
+    }
+    println(s"[csv-seed] rows dropped for NULL key: ${droppedKeys()}")
 
     val loaded = JdbcSources.countWhere(jdbc, target, "1=1")
     Pipeline.reconcile("csv-seed (target total ≥ batch)", staged,
@@ -211,6 +222,6 @@ object CsvSeed {
       .getOrElse(sys.error("missing --csv (or CSV_FILE_PATH)"))
     val spark = Sessions.local("graft-csv-seed")
     seed(spark, cfg, se, path, opts.get("run-date"))
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

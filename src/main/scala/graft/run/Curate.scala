@@ -165,6 +165,6 @@ object Curate {
       .foreach(r => println(s"[curate] shard=${r.get(0)} rows=${r.get(1)}"))
     println(s"[curate] total=${result.count()} -> $out")
     result.unpersist(false)
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.core.Sessions
 import graft.operators.Upsert
 
-/** Entry point 1 (O1/O2, SURVEY §3.1): run one logical day of the
-  * orders sync — extract the day slice, route complete/incomplete on
-  * the NULL incremental timestamp, upsert the complete branch, fully
-  * refresh the incomplete side table, and reconcile counts.
+/** Entry point 1 (O1/O2, SURVEY §3.1): run the orders sync for one
+  * logical day or a catch-up — extract the day slice, route
+  * complete/incomplete on the NULL incremental timestamp, upsert the
+  * complete branch, fully refresh the incomplete side table, and
+  * reconcile counts.
   *
   * Usage:
   *   sbt "runMain graft.run.DailySync --run-date 1996-03-15 \
@@ -25,14 +26,18 @@ import graft.operators.Upsert
   * loop (orders_daily.py:129-135). Idempotent upsert makes replays
   * safe (O5).
   *
-  * A day is one Spark pass per sink write (two for orders: the
-  * complete-branch upsert and the incomplete-branch refresh; one for
-  * an entity): the reference's extract ≫ load ≫ validate task DAG with
-  * CSV/XCom handoffs collapses into lazy DataFrame branches (SURVEY
-  * §2.1 S5 — the handoff layer is unnecessary in Spark's lazy DAG).
-  * Each branch's `extracted` count comes from the write that lands it,
-  * so no branch is scanned twice; `loaded` is a pushed COUNT on the
-  * target over a driver-side connection, not a Spark job.
+  * Each day is one Spark pass, its complete-branch upsert (one per day
+  * for an entity too). The incomplete side table is refreshed once per
+  * invocation, after the last day and labelled with --run-date: its
+  * `IS NULL` extract does not depend on the logical date, so a catch-up
+  * would only overwrite the earlier days' refreshes. A failing day
+  * aborts the invocation before the refresh; the resumed run refreshes.
+  * The reference's extract ≫ load ≫ validate task DAG with CSV/XCom
+  * handoffs collapses into lazy DataFrame branches (SURVEY §2.1 S5 —
+  * the handoff layer is unnecessary in Spark's lazy DAG). Each
+  * branch's `extracted` count comes from the write that lands it, so no
+  * branch is scanned twice; `loaded` is a pushed COUNT on the target
+  * over a driver-side connection, not a Spark job.
   */
 object DailySync {
 
@@ -52,7 +57,7 @@ object DailySync {
       case other => sys.error(s"unknown --entity $other " +
         "(orders | transactions)")
     }
-    spark.stop()
+    Sessions.stop(spark)
   }
 
   /** The generic entity sync (`--entity transactions`): the
@@ -105,33 +110,37 @@ object DailySync {
     for (date <- dates) {
       println(s"[daily-sync] === logical date $date ===")
       Alerts.onFailure(hook, "orders", date, "daily-sync") {
-      val (complete, incomplete) =
-        Pipeline.extractForDay(spark, cfg, sfDir, date)
+        // Flow 1: complete orders for the day → upsert (S1+F1+F2, S6)
+        val (complete, _) = Pipeline.extractForDay(spark, cfg, sfDir, date)
+        val extracted =
+          Pipeline.upsertBatch(cfg, complete, Upsert.Unconditional)
+        val loaded = Pipeline.countLoadedForDay(cfg, date)
+        // Validation is log-only, like the reference (:580-584) — but
+        // an armed alert hook hears about a mismatch
+        val ok = Pipeline.reconcile(s"complete $date", extracted, loaded)
+        if (!ok) Alerts.onMismatch(hook, "orders", date, extracted, loaded)
+        allOk &= ok
+      }
+    }
 
-      // Flow 1: complete orders for the day → upsert (S1+F1+F2, S6)
-      val extracted =
-        Pipeline.upsertBatch(cfg, complete, Upsert.Unconditional)
-      val loaded = Pipeline.countLoadedForDay(cfg, date)
-
-      // Flow 2: incomplete orders (full-table IS NULL scan) → full
-      // refresh of the side table (S2+F2, S8)
+    // Flow 2: incomplete orders (full-table IS NULL scan) → full refresh
+    // of the side table (S2+F2, S8), once: the extract does not depend
+    // on the logical date, so a per-day refresh would only be
+    // overwritten by the next day's
+    val runDate = dates.last
+    Alerts.onFailure(hook, "orders", runDate, "daily-sync") {
+      val (_, incomplete) = Pipeline.extractForDay(spark, cfg, sfDir, runDate)
       val side = cfg.targetDialect.table(cfg.targetSchemaName,
         cfg.targetIncompleteTable)
-      val extractedNull = graft.io.RefreshSink.write(incomplete,
+      val extracted = graft.io.RefreshSink.write(incomplete,
         cfg.targetJdbc, cfg.targetDialect, side)
-      val loadedNull =
+      val loaded =
         graft.io.JdbcSources.countWhere(cfg.targetJdbc, side, "1=1")
-
-      // Validation is log-only, like the reference (:580-584) — but
-      // an armed alert hook hears about a mismatch
-      val ok1 = Pipeline.reconcile(s"complete $date", extracted, loaded)
-      if (!ok1) Alerts.onMismatch(hook, "orders", date, extracted, loaded)
-      val ok2 = Pipeline.reconcile("incomplete (full refresh)",
-        extractedNull, loadedNull)
-      if (!ok2) Alerts.onMismatch(hook, "incomplete_orders", date,
-        extractedNull, loadedNull)
-      allOk &= ok1 && ok2
-      }
+      val ok = Pipeline.reconcile("incomplete (full refresh)", extracted,
+        loaded)
+      if (!ok) Alerts.onMismatch(hook, "incomplete_orders", runDate,
+        extracted, loaded)
+      allOk &= ok
     }
     println(s"[daily-sync] done: ${dates.size} day(s), " +
       (if (allOk) "all counts reconciled" else "MISMATCHES logged above"))

@@ -89,6 +89,6 @@ object FakeOrders {
       .mode("overwrite")
       .csv(out)
     println(s"[fake-orders] wrote $n rows to $out")
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

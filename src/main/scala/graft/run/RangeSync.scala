@@ -1,6 +1,8 @@
 package graft.run
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.AccumulatorV2
 
 import graft.core.Sessions
 import graft.operators.Upsert
@@ -16,11 +18,12 @@ import graft.operators.Upsert
   * Mapping, `_historical` pyc), this is ONE scan + ONE upsert over the
   * whole range — Spark's task parallelism replaces the per-date task
   * fan-out and beats it (one pass instead of N) — with the per-date
-  * validation recovered by one grouped count on each side (SURVEY
-  * §3.2): a `groupBy(to_date(ts)).count()` over the cached extract,
-  * which the upsert then reads, and one grouped COUNT pushed to the
-  * target over a driver-side connection
-  * ([[graft.io.JdbcSources.countByDate]]).
+  * validation recovered on each side (SURVEY §3.2): the extract's rows
+  * are counted per date as they stream into the sink, inside that one
+  * write ([[writeCountingByDate]]), and the target's by one grouped
+  * COUNT pushed over a driver-side connection
+  * ([[graft.io.JdbcSources.countByDate]]). The backfill runs one Spark
+  * job, with no shuffle and no cache.
   *
   * `--entity transactions` backfills the wide 57-column entity instead
   * (the `_historical` pyc's actual workload): same single-scan range
@@ -43,11 +46,11 @@ object RangeSync {
       case other => sys.error(s"unknown --entity $other " +
         "(orders | transactions)")
     }
-    spark.stop()
+    Sessions.stop(spark)
   }
 
   /** Entity-generic range backfill: one pushed range scan, one LWW
-    * upsert, per-date validation from one grouped count on each side. */
+    * upsert, per-date validation from a count on each side. */
   private def entityRange(
       spark: org.apache.spark.sql.SparkSession,
       e: graft.core.Entity,
@@ -65,22 +68,13 @@ object RangeSync {
       Pipeline.ensureEntityTables(cfg, e)
     }
 
-    val slice =
-      Pipeline.extractEntityForRange(spark, cfg, e, start, end).cache()
-    // the wrap sits on the ACTION (collect) — the extract plan itself
-    // is lazy and only fails here
+    // the extract plan is lazy: a failing source surfaces in the load
+    val slice = Pipeline.extractEntityForRange(spark, cfg, e, start, end)
     val extracted = Alerts.onFailure(hook, e.name, s"$start..$end",
-      "range-extract") {
-      slice
-        .groupBy(to_date(col(e.incrementalColumn)).as("d"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
+      "range-load") {
+      writeCountingByDate(slice, e.incrementalColumn)(
+        Pipeline.loadEntityBatch(cfg, e, _))
     }
-
-    Alerts.onFailure(hook, e.name, s"$start..$end", "range-load") {
-      Pipeline.loadEntityBatch(cfg, e, slice)
-    }
-    slice.unpersist()
 
     val loaded = Alerts.onFailure(hook, e.name, s"$start..$end",
       "range-validate") {
@@ -110,24 +104,14 @@ object RangeSync {
     Alerts.onFailure(hook, "orders", dates.head, "ensure-tables") {
       Pipeline.ensureTargetTables(cfg)
     }
-    val slice = Pipeline
-      .extractForRange(spark, cfg, opts.sfDir, start, end)
-      .cache()
-
-    // per-date extracted counts, one aggregation (A2); the alert wrap
-    // sits on the ACTION — the extract plan is lazy and fails here
+    // one write carries the per-date extracted counts (A2); the extract
+    // plan is lazy, so a failing source surfaces in the load
+    val slice = Pipeline.extractForRange(spark, cfg, opts.sfDir, start, end)
     val extracted = Alerts.onFailure(hook, "orders", s"$start..$end",
-      "range-extract") {
-      slice
-        .groupBy(to_date(col("order_created_at")).as("d"))
-        .agg(count(lit(1)).as("n"))
-        .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
+      "range-load") {
+      writeCountingByDate(slice, "order_created_at")(
+        Pipeline.upsertBatch(cfg, _, Upsert.Unconditional))
     }
-
-    Alerts.onFailure(hook, "orders", s"$start..$end", "range-load") {
-      Pipeline.upsertBatch(cfg, slice, Upsert.Unconditional)
-    }
-    slice.unpersist()
 
     // per-date loaded counts from the target, one pushed COUNT (S11/A1)
     val loaded = Alerts.onFailure(hook, "orders", s"$start..$end",
@@ -145,4 +129,38 @@ object RangeSync {
     println(s"[range-sync] done: ${dates.size} day(s), " +
       (if (allOk) "all counts reconciled" else "MISMATCHES logged above"))
   }
+
+  /** Run `write` over `slice` and return the rows it handed to the sink
+    * per date of `tsCol`. A pass-through filter on top of `slice` adds
+    * each row's date to a keyed accumulator as the sink pulls it, in the
+    * write's one result stage, so the per-date counts cost no action of
+    * their own; like the rows a sink returns ([[graft.io.JdbcWrite.run]]),
+    * only successful task attempts are merged. Dates without rows are
+    * absent from the map. */
+  private[run] def writeCountingByDate(slice: DataFrame, tsCol: String)(
+      write: DataFrame => Long): Map[String, Long] = {
+    val days = new DayCounts
+    slice.sparkSession.sparkContext.register(days, "rows per date")
+    val tally = udf { (day: java.lang.Integer) =>
+      if (day != null) days.add(day)
+      true
+    }.asNondeterministic()
+    write(slice.filter(tally(unix_date(to_date(col(tsCol))))))
+    days.value.map { case (day, n) =>
+      java.time.LocalDate.ofEpochDay(day.toLong).toString -> n }
+  }
+}
+
+/** Rows per day (days since the epoch), summed over the successful tasks
+  * of an action. */
+private[run] final class DayCounts extends AccumulatorV2[Int, Map[Int, Long]] {
+  private val counts = scala.collection.mutable.HashMap.empty[Int, Long]
+  def isZero: Boolean = counts.isEmpty
+  def copy(): DayCounts = { val c = new DayCounts; c.counts ++= counts; c }
+  def reset(): Unit = counts.clear()
+  def add(day: Int): Unit = counts(day) = counts.getOrElse(day, 0L) + 1L
+  def merge(other: AccumulatorV2[Int, Map[Int, Long]]): Unit =
+    other.value.foreach { case (day, n) =>
+      counts(day) = counts.getOrElse(day, 0L) + n }
+  def value: Map[Int, Long] = counts.toMap
 }

@@ -37,6 +37,6 @@ object StreamSync {
     q.awaitTermination()
     val n = spark.read.parquet(s"$out/data").count()
     println(s"[stream-sync] windows appended so far: $n")
-    spark.stop()
+    Sessions.stop(spark)
   }
 }

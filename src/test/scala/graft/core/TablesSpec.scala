@@ -1,12 +1,12 @@
 package graft.core
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.SparkSpecBase
+import graft.{ChildJvm, SparkSpecBase}
 import graft.streaming.Streams
 
 /** Scope of the per-session memos (`Tables.load` reader plans,
@@ -54,24 +54,8 @@ class TablesSpec extends SparkSpecBase {
   test("a stopped session is collectable after Tables.load and " +
     "eventsStream") {
     // a child JVM: stopping the suite's shared session is not an option
-    val dir = layout(spark)
-    // the forked suite JVM's flags: Spark needs its --add-opens
-    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
-    val log = Files.createTempFile("stopped_session", ".log").toFile
-    val pb = new ProcessBuilder((Seq(
-      Path.of(System.getProperty("java.home"), "bin", "java").toString,
-      "-Xmx1g", "-cp", System.getProperty("java.class.path")) ++ opens ++
-      Seq(StoppedSessionProbe.getClass.getName.stripSuffix("$"), dir))
-      .asJava)
-      .redirectErrorStream(true).redirectOutput(log)
-    pb.environment().put("SPARK_GRAFT_CPUS", "2")
-    val p = pb.start()
-    val done = p.waitFor(300, java.util.concurrent.TimeUnit.SECONDS)
-    if (!done) p.destroyForcibly()
-    val out = Files.readString(log.toPath)
-    assert(done && p.exitValue == 0,
-      s"the stopped session stayed reachable:\n${out.takeRight(4000)}")
+    val (freed, out) = ChildJvm.run(StoppedSessionProbe, layout(spark))
+    assert(freed, s"the stopped session stayed reachable:\n${out.takeRight(4000)}")
   }
 }
 
@@ -128,9 +112,7 @@ object StoppedSessionProbe {
     val s = Sessions.local("stopped-session-probe")
     Tables.load(s, dir, "orders")
     Streams.eventsStream(s, dir)
-    s.stop()
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
+    Sessions.stop(s)
     new java.lang.ref.WeakReference(s)
   }
 }

@@ -13,6 +13,7 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -21,24 +22,28 @@ import graft.SparkSpecBase
 /** Guards the sync path's single-pass shape: every Spark action an
   * entry point runs is recorded with the source scans its executed plan
   * holds, so a stray `count()` (an extra action re-reading the source)
-  * fails here. A cached relation's scans count once, at the action that
-  * materializes it. */
+  * fails here, and with whether that plan shuffles or reads a cached
+  * relation: no sync action may do either. */
 class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
-  /** (action name, source scans) of every execution while `body` ran. */
-  private def actionsOf(body: => Unit): Seq[(String, Int)] = {
-    val seen = ArrayBuffer.empty[(String, Int)]
-    val cached = scala.collection.mutable.Set.empty[AnyRef]
-    def scans(p: SparkPlan): Int = collectWithSubqueries(p) {
-      case m: InMemoryTableScanExec =>
-        if (cached.add(m.relation.cacheBuilder)) scans(m.relation.cachedPlan)
-        else 0
-      case _: FileSourceScanExec | _: RowDataSourceScanExec |
-          _: BatchScanExec => 1
-    }.sum
+  /** One execution: its action name, its source scans, and whether its
+    * executed plan holds a shuffle or an in-memory (cached) scan. */
+  private case class Action(name: String, scans: Int, shuffleOrCache: Boolean)
+
+  /** Every execution while `body` ran. */
+  private def actionsOf(body: => Unit): Seq[Action] = {
+    val seen = ArrayBuffer.empty[Action]
+    def action(fn: String, p: SparkPlan): Action = Action(fn,
+      collectWithSubqueries(p) {
+        case _: FileSourceScanExec | _: RowDataSourceScanExec |
+            _: BatchScanExec => 1
+      }.sum,
+      collectWithSubqueries(p) {
+        case s @ (_: ShuffleExchangeExec | _: InMemoryTableScanExec) => s
+      }.nonEmpty)
     val listener = new QueryExecutionListener {
       private def record(fn: String, qe: QueryExecution): Unit =
-        seen.synchronized { seen += fn -> scans(qe.executedPlan) }
+        seen.synchronized { seen += action(fn, qe.executedPlan) }
       override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
         record(fn, qe)
       override def onFailure(fn: String, qe: QueryExecution,
@@ -89,10 +94,11 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       Console.withOut(out)(DailySync.ordersSync(spark, opts, opts.sfDir,
         dates))
     }
-    // per day: the complete-branch upsert and the side-table refresh
-    assert(actions.map(_._1) == Seq.fill(2 * dates.size)("foreachPartition"),
-      s"actions: $actions")
-    assert(actions.forall(_._2 == 1), s"scans per write: $actions")
+    // one complete-branch upsert per day, then one side-table refresh
+    assert(actions.map(_.name) ==
+      Seq.fill(dates.size + 1)("foreachPartition"), s"actions: $actions")
+    assert(actions.forall(_.scans == 1), s"scans per write: $actions")
+    assert(!actions.exists(_.shuffleOrCache), s"shuffle or cache: $actions")
     // and the counts taken from those writes still reconcile
     val log = out.toString("UTF-8")
     assert(log.contains(
@@ -101,7 +107,7 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       "[validate] incomplete (full refresh): extracted=2 loaded=2 OK"), log)
   }
 
-  test("CsvSeed.seed: two CSV scans, the audit and the write") {
+  test("CsvSeed.seed: one CSV scan, the write carries the audit") {
     val csv = Files.createTempDirectory("graft_scan_guard_csv").toString
     FakeOrders.csvFrame(spark, 200L).coalesce(1).write
       .option("header", "true").mode("overwrite").csv(csv)
@@ -113,8 +119,9 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
           None)
       }
     }
-    assert(actions.map(_._2).sum == 2, s"actions: $actions")
-    assert(actions.size == 2, s"actions: $actions")
+    assert(actions.map(a => (a.name, a.scans)) ==
+      Seq(("foreachPartition", 1)), s"actions: $actions")
+    assert(!actions.exists(_.shuffleOrCache), s"shuffle or cache: $actions")
     assert(result == ((200L, 200L)))
   }
 
@@ -126,11 +133,11 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       Console.withOut(out)(RangeSync.ordersRange(spark, opts, "1996-03-01",
         "1996-03-03", Args.dateRange("1996-03-01", "1996-03-03")))
     }
-    // the per-date extract count materializes the cached slice, which
-    // the write then reads; no JDBC read-back of the target
-    assert(actions.map(_._2).sum == 1, s"actions: $actions")
-    assert(actions.count(_._1 == "foreachPartition") == 1,
-      s"actions: $actions")
+    // the per-date extract counts ride the write; no JDBC read-back of
+    // the target
+    assert(actions.map(a => (a.name, a.scans)) ==
+      Seq(("foreachPartition", 1)), s"actions: $actions")
+    assert(!actions.exists(_.shuffleOrCache), s"shuffle or cache: $actions")
     val log = out.toString("UTF-8")
     assert(log.contains(
       "[validate] range 1996-03-01: extracted=2 loaded=2 OK"), log)

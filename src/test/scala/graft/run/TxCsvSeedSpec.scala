@@ -84,10 +84,11 @@ class TxCsvSeedSpec extends SparkSpecBase {
     val (kept, audit, dropped) = CsvSeed.readAndTransform(
       spark, path, keys, None, se.schema, se.dateCol)
     assert(kept.count() == 3L)
-    assert(dropped == 1L)
-    assert(audit("WalletId") == 1L,
-      s"expected 1 WalletId coercion loss: ${audit.filter(_._2 > 0)}")
-    assert((audit - "WalletId").values.forall(_ == 0L))
+    // the audit was observed by the count above
+    assert(dropped() == 1L)
+    assert(audit()("WalletId") == 1L,
+      s"expected 1 WalletId coercion loss: ${audit().filter(_._2 > 0)}")
+    assert((audit() - "WalletId").values.forall(_ == 0L))
     val k1 = kept.filter(kept("TxCorrelationId") === "K1").collect()(0)
     assert(k1.getAs[Timestamp]("CreatedDateUtc") == ts("2025-03-01 08:00:00"))
     assert(k1.getAs[java.math.BigDecimal]("TxBaseAmount")
@@ -99,7 +100,7 @@ class TxCsvSeedSpec extends SparkSpecBase {
       spark, path, keys, Some("2025-03-01"), se.schema, se.dateCol)
     assert(day1.select("TxCorrelationId").collect().map(_.getString(0))
       .toSet == Set("K1", "K2"))
-    assert(d1drop == 1L)
+    assert(d1drop() == 1L)
   }
 
   test("two-day seed: MERGE upsert, CreatedDateUtc insert-only, " +
@@ -142,5 +143,28 @@ class TxCsvSeedSpec extends SparkSpecBase {
     // Idempotency (O5): replaying v2 changes nothing.
     assert(CsvSeed.seed(spark, cfg, se, v2, Some("2025-03-01")) == ((1L, 3L)))
     assert(state() == afterV2)
+  }
+
+  test("seed: the audit is read after the MERGE and keeps its values") {
+    val dir = Files.createTempDirectory("txcsv3")
+    val path = writeCsv(dir, "tx.csv", fixtureRows)
+    val auditCfg = Config.fromEnv(Map(
+      "GRAFT_TARGET_URL" -> "jdbc:derby:memory:txseed_audit;create=true",
+      "TARGET_TABLE_NAME" -> "transactions",
+      "STAGING_TABLE_NAME" -> "transactions_staging"))
+    val out = new java.io.ByteArrayOutputStream
+    val result =
+      Console.withOut(out)(CsvSeed.seed(spark, auditCfg, se, path, None))
+    assert(result == ((3L, 3L)))
+    val lines = out.toString("UTF-8").linesIterator.toSeq
+    val audit = lines.filter(l =>
+      l.startsWith("[csv-seed] coercion losses") ||
+        l.startsWith("[csv-seed] rows dropped"))
+    assert(audit == Seq("[csv-seed] coercion losses in WalletId: 1",
+      "[csv-seed] rows dropped for NULL key: 1"), lines.mkString("\n"))
+    // printed once the write is done: right before the reconcile line
+    assert(lines.indexOf(audit.last) + 1 ==
+      lines.indexWhere(_.startsWith("[validate] csv-seed")),
+      lines.mkString("\n"))
   }
 }

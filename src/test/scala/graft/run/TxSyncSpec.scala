@@ -160,19 +160,12 @@ class TxSyncSpec extends SparkSpecBase {
       src2, SqlDialect.Derby, srcTable)
     Pipeline.ensureEntityTables(cfg2, e)
 
-    def runRange(): Map[String, Long] = {
-      val slice = Pipeline
-        .extractEntityForRange(spark, cfg2, e, "2025-03-01", "2025-03-03")
-        .cache()
-      val extracted = slice
-        .groupBy(org.apache.spark.sql.functions.to_date(
-          slice(e.incrementalColumn)).as("d"))
-        .count()
-        .collect().map(r => r.getDate(0).toString -> r.getLong(1)).toMap
-      Pipeline.loadEntityBatch(cfg2, e, slice)
-      slice.unpersist()
-      extracted
-    }
+    // the shipped backfill step: one write that counts its rows per date
+    def runRange(): Map[String, Long] =
+      RangeSync.writeCountingByDate(
+        Pipeline.extractEntityForRange(spark, cfg2, e, "2025-03-01",
+          "2025-03-03"),
+        e.incrementalColumn)(Pipeline.loadEntityBatch(cfg2, e, _))
 
     val extracted = runRange()
     assert(extracted == Map(
