@@ -16,13 +16,22 @@ import graft.operators.Upsert
   * two edges can never drift apart. `mode` speaks target casing because
   * the upsert SQL runs against the target (the reference's conflict
   * clause writes `transactions.updateddateutc`).
+  *
+  * `routesNulls`: rows whose incremental timestamp is NULL go to the
+  * side table (`TARGET_INCOMPLETE_TABLE_NAME`), fully refreshed once
+  * per sync run. Orders route them (the reference's incomplete-orders
+  * flow); transactions do not, as in their pyc DAGs, where a NULL
+  * `CreatedDateUtc` is in no day slice.
+  *
+  * Every entity runs the one sync path of [[graft.run.Pipeline]].
   */
 final case class Entity(
     name: String,
     schema: StructType,
     key: Seq[String],
     incrementalColumn: String,
-    mode: Upsert.Mode) {
+    mode: Upsert.Mode,
+    routesNulls: Boolean = false) {
   require(key.nonEmpty, s"entity $name needs at least one key column")
   require(key.forall(schema.fieldNames.contains),
     s"entity $name key ${key.mkString(",")} not all in schema")
@@ -56,7 +65,8 @@ object Entities {
       StructField("product", StringType))),
     key = Seq("order_id"),
     incrementalColumn = "order_created_at",
-    mode = Upsert.Unconditional)
+    mode = Upsert.Unconditional,
+    routesNulls = true)
 
   /** The wide transactions entity
     * (dags/__pycache__/mssql_to_postgres_sync.cpython-38.pyc /
@@ -71,4 +81,10 @@ object Entities {
     key = Schemas.transactionsKey,
     incrementalColumn = "CreatedDateUtc",
     mode = Upsert.LastWriteWins("updateddateutc"))
+
+  val all: Seq[Entity] = Seq(orders, transactions)
+
+  /** The entity called `name`, as the entry points' `--entity` takes it. */
+  def named(name: String): Entity = all.find(_.name == name).getOrElse(
+    sys.error(s"unknown --entity $name (${all.map(_.name).mkString(" | ")})"))
 }

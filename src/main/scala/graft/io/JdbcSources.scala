@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** JDBC source reads (S1–S3, S11): the reference's chunked
   * `pd.read_sql` extracts re-expressed as Spark JDBC scans with
-  * predicate pushdown and partitioned parallel reads.
+  * predicate pushdown.
   *
   * Design decisions vs the reference:
   *  - The date slice `CAST(OrderCreatedAt AS DATE) = ds`
@@ -14,9 +14,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    every JDBC dialect and uses the source's index instead of
   *    defeating it with a per-row CAST (SURVEY.md §7.4 risk 2).
   *  - pandas' single-cursor `chunksize=5000` streaming (:203,119)
-  *    becomes `fetchsize` (cursor batching) + `partitionColumn`/
-  *    `numPartitions` (N parallel range-split cursors) — the
-  *    distributed replacement for chunk iteration.
+  *    becomes `fetchsize` (cursor batching) on one cursor per slice: a
+  *    slice is one Spark partition. A range-split read would need
+  *    `partitionColumn` with `lowerBound`/`upperBound` (Spark's
+  *    `JDBCOptions` takes all or none of them).
   */
 object JdbcSources {
 
@@ -30,14 +31,9 @@ object JdbcSources {
       table: String,
       tsCol: String,
       date: String,
-      numPartitions: Int = 1,
-      fetchSize: Int = 5000): DataFrame = {
-    val next = java.time.LocalDate.parse(date).plusDays(1)
-    datePredicate(
-      spark, cfg, table,
-      s"$tsCol >= {ts '$date 00:00:00'} AND $tsCol < {ts '$next 00:00:00'}",
-      tsCol, numPartitions, fetchSize)
-  }
+      fetchSize: Int = 5000): DataFrame =
+    rangeSlice(spark, cfg, table, tsCol, date,
+      java.time.LocalDate.parse(date).plusDays(1).toString, fetchSize)
 
   /** Half-open timestamp range [start, endExclusive) — the backfill
     * extract (O3); same portable `{ts}` bounds as [[dateSlice]]. */
@@ -48,13 +44,10 @@ object JdbcSources {
       tsCol: String,
       start: String,
       endExclusive: String,
-      numPartitions: Int = 1,
       fetchSize: Int = 5000): DataFrame =
-    datePredicate(
-      spark, cfg, table,
+    slice(spark, cfg, table,
       s"$tsCol >= {ts '$start 00:00:00'} AND " +
-        s"$tsCol < {ts '$endExclusive 00:00:00'}",
-      tsCol, numPartitions, fetchSize)
+        s"$tsCol < {ts '$endExclusive 00:00:00'}", fetchSize)
 
   /** Full-table NULL-predicate scan (S2):
     * `WHERE tsCol IS NULL` (mssql_to_postgresql_orders_daily.py:373). */
@@ -64,15 +57,13 @@ object JdbcSources {
       table: String,
       tsCol: String,
       fetchSize: Int = 5000): DataFrame =
-    datePredicate(spark, cfg, table, s"$tsCol IS NULL", tsCol, 1, fetchSize)
+    slice(spark, cfg, table, s"$tsCol IS NULL", fetchSize)
 
-  private def datePredicate(
+  private def slice(
       spark: SparkSession,
       cfg: JdbcConfig,
       table: String,
       predicate: String,
-      tsCol: String,
-      numPartitions: Int,
       fetchSize: Int): DataFrame = {
     // dbtable-as-subquery pins the predicate source-side regardless of
     // dialect pushdown support — the Spark equivalent of the
@@ -84,11 +75,6 @@ object JdbcSources {
       .option("dbtable", sub)
       .option("fetchsize", fetchSize)
     cfg.props.foreach { case (k, v) => r = r.option(k, v) }
-    // Partitioned parallel read needs numeric/date bounds; for the
-    // single-day slice the natural split column is the timestamp.
-    if (numPartitions > 1)
-      r = r.option("partitionColumn", tsCol)
-        .option("numPartitions", numPartitions)
     r.load()
   }
 

@@ -70,7 +70,7 @@ object JdbcWrite {
     * `schema` order) — the JVM replacement for the reference's per-row
     * python-native re-boxing (C8,
     * dags/mssql_to_postgresql_orders_daily.py:277-290). */
-  def bind(ps: PreparedStatement, schema: StructType, row: Row): Unit = {
+  private def bind(ps: PreparedStatement, schema: StructType, row: Row): Unit = {
     var i = 0
     while (i < schema.length) {
       val pos = i + 1

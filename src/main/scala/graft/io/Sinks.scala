@@ -91,105 +91,3 @@ object RefreshSink {
     JdbcWrite.run(df, cfg, SqlGen.insert(dialect, table, df.columns.toSeq))
   }
 }
-
-/** Exactly-once APPEND sink for targets WITHOUT a natural key (raw
-  * event/fact feeds, where the reference's upsert-idempotency trick
-  * has nothing to conflict on). Unit of atomicity: (batch_id,
-  * partition_id). Every partition commits its rows AND its ledger row
-  * in ONE transaction; a retried or speculative task finds the ledger
-  * row (or loses the ledger PK race) and skips, so re-running a batch
-  * — task retry, stage retry, whole-job re-run — never duplicates a
-  * row. This upgrades the engine's JDBC append path from
-  * per-partition-atomic (SURVEY §7.4 risk 1) to exactly-once.
-  *
-  * CONTRACT: a re-run of a batch id must present the SAME partitioning
-  * (same row→partition assignment and count — i.e. the same
-  * deterministic input and plan). Spark's own task/stage retries
-  * always satisfy this; a manual re-submission under a different
-  * `spark.sql.shuffle.partitions` would not, and needs a fresh batch
-  * id against an idempotent (upsert) sink instead.
-  */
-object LedgerSink {
-
-  /** Composite-PK ledger DDL (portable: plain VARCHAR/INT/BIGINT). The
-    * PRIMARY KEY is load-bearing — two concurrent attempts for one
-    * partition both pass the existence check, but only one can commit
-    * the ledger row; the loser's data rows roll back with it. */
-  private def ledgerDdl(d: SqlDialect, ledger: String): String =
-    s"""CREATE TABLE $ledger (
-       |  ${d.quote("batch_id")} VARCHAR(128) NOT NULL,
-       |  ${d.quote("partition_id")} INT NOT NULL,
-       |  ${d.quote("n_rows")} BIGINT,
-       |  PRIMARY KEY (${d.quote("batch_id")}, ${d.quote("partition_id")})
-       |)""".stripMargin
-
-  def ensureLedger(
-      cfg: JdbcConfig,
-      d: SqlDialect,
-      schemaName: String,
-      ledgerName: String): Unit =
-    if (!JdbcWrite.tableExists(cfg, schemaName, ledgerName))
-      JdbcWrite.execute(cfg, ledgerDdl(d, d.table(schemaName, ledgerName)))
-
-  def write(
-      df: DataFrame,
-      cfg: JdbcConfig,
-      d: SqlDialect,
-      table: String,
-      ledger: String,
-      batchId: String): Unit = {
-    val insertSql = SqlGen.insert(d, table, df.columns.toSeq)
-    val checkSql =
-      s"""SELECT 1 FROM $ledger WHERE ${d.quote("batch_id")} = ?
-         | AND ${d.quote("partition_id")} = ?""".stripMargin
-    val markSql =
-      s"""INSERT INTO $ledger (${d.quote("batch_id")},
-         | ${d.quote("partition_id")}, ${d.quote("n_rows")})
-         | VALUES (?, ?, ?)""".stripMargin
-    val schema = df.schema
-    df.foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      val conn = JdbcWrite.connect(cfg)
-      try {
-        conn.setAutoCommit(false)
-        val check = conn.prepareStatement(checkSql)
-        val done =
-          try {
-            check.setString(1, batchId); check.setInt(2, pid)
-            val rs = check.executeQuery()
-            try rs.next() finally rs.close()
-          } finally check.close()
-        if (!done) {
-          var n = 0L
-          val ps = conn.prepareStatement(insertSql)
-          try {
-            var pending = 0
-            rows.foreach { row =>
-              JdbcWrite.bind(ps, schema, row)
-              ps.addBatch()
-              pending += 1; n += 1
-              if (pending >= cfg.batchSize) { ps.executeBatch(); pending = 0 }
-            }
-            if (pending > 0) ps.executeBatch()
-          } finally ps.close()
-          val mark = conn.prepareStatement(markSql)
-          try {
-            mark.setString(1, batchId); mark.setInt(2, pid)
-            mark.setLong(3, n)
-            mark.executeUpdate()
-          } finally mark.close()
-          // rows + ledger row commit or roll back TOGETHER
-          conn.commit()
-        } else {
-          // the existence SELECT opened a txn; release it before close
-          conn.rollback()
-        }
-      } catch {
-        case e: Throwable =>
-          try conn.rollback()
-          catch { case _: Throwable => () }
-          throw e
-      } finally conn.close()
-    }
-  }
-}

@@ -206,17 +206,11 @@ object CsvSeed {
   def main(args: Array[String]): Unit = {
     val opts = Args.parse(args)
     val entityName = opts.get("entity").getOrElse("orders")
-    val se = entities.getOrElse(entityName,
-      sys.error(s"unknown --entity $entityName (orders | transactions)"))
-    val cfg0 = opts.config
     // env defaults name the orders tables; a transactions seed that
     // wasn't given explicit names substitutes transactions /
     // transactions_staging (the reference's STAGING_TABLE_NAME)
-    val cfg = cfg0.copy(
-      targetTable =
-        if (cfg0.targetTable == "orders") se.name else cfg0.targetTable,
-      stagingTable = if (cfg0.stagingTable == "orders_staging")
-        s"${se.name}_staging" else cfg0.stagingTable)
+    val cfg = Pipeline.entityConfig(opts.config, entityName)
+    val se = entities(entityName)
     val path = opts.get("csv")
       .orElse(cfg.csvFilePath)
       .getOrElse(sys.error("missing --csv (or CSV_FILE_PATH)"))

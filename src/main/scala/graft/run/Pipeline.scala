@@ -4,17 +4,29 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{Conversions, Entity, Tables}
+import graft.core.{Conversions, Entities, Entity, Tables}
 import graft.io._
 
 /** Shared extract/load/validate stages for the entry points (O2: the
   * reference's task DAG collapsed into stage functions; each load is one
   * Spark pass over its extract and returns the rows it wrote).
+  *
+  * One path for every [[Entity]] (SURVEY §2.5: the reference clones its
+  * DAG body per table; here the entity is a parameter). Each stage takes
+  * the entity last, defaulting to orders:
+  *  - the extract picks the source in one place (a JDBC slice when
+  *    `GRAFT_SOURCE_URL` is set, else the parquet stand-in, which only
+  *    orders have) and returns target-shaped rows, so one load serves
+  *    every entity;
+  *  - [[entityConfig]] names the entity's tables and resolves its
+  *    conflict keys;
+  *  - the NULL-timestamp side table exists only for an entity that
+  *    routes NULLs (`Entity.routesNulls`: orders, not transactions).
   */
 object Pipeline {
 
   /** The orders source entity. In a deployed sync this is the MSSQL
-    * JDBC scan (JdbcSources.dateSlice); in the sandbox the driver
+    * JDBC scan (JdbcSources.rangeSlice); in the sandbox the driver
     * parquet `orders` table stands in, with the reference's NULL-bearing
     * incremental timestamp derived (status 'P' rows model incomplete
     * orders — the same stand-in the query catalog uses).
@@ -31,80 +43,89 @@ object Pipeline {
         col("o_totalprice").cast(DecimalType(18, 4)).as("amount"),
         col("o_orderpriority").as("product"))
 
-  val targetSchema: StructType = graft.core.Entities.orders.targetSchema
-
   /** Half-open day predicate [date, date+1) — SURVEY §7.4 risk 2. */
   def daySlice(c: org.apache.spark.sql.Column, date: String) =
     c >= lit(date).cast(TimestampType) &&
       c < date_add(lit(date).cast(DateType), 1).cast(TimestampType)
 
-  /** The two extract branches for one logical day. With a JDBC source
-    * configured (GRAFT_SOURCE_URL, or the MSSQL DB_* keys in a real
-    * deployment) both predicates push into the source database (S1/S2);
-    * otherwise the parquet stand-in is sliced by Catalyst pushdown. */
+  /** The entity's rows whose incremental timestamp lies in the half-open
+    * [start, endExclusive), or, for `None`, is NULL. With a JDBC source
+    * (GRAFT_SOURCE_URL) the predicate pushes into the source database
+    * (S1-S3); otherwise the orders parquet stand-in is filtered by
+    * Catalyst, and any other entity fails: it has no stand-in. The
+    * rows come back lowercased (F5) and aligned to the target schema
+    * (F6). */
+  private def extract(
+      spark: SparkSession,
+      cfg: Config,
+      sfDir: String,
+      e: Entity,
+      range: Option[(String, String)]): DataFrame = {
+    val rows = cfg.sourceUrlOverride match {
+      case Some(_) =>
+        val d = cfg.sourceDialect
+        val table = d.table(cfg.sourceSchemaName, cfg.sourceTable)
+        val ts = d.quote(e.incrementalColumn)
+        range match {
+          case Some((start, end)) => JdbcSources.rangeSlice(spark,
+            cfg.sourceJdbc, table, ts, start, end,
+            fetchSize = cfg.extractChunkSize)
+          case None => JdbcSources.nullSlice(spark, cfg.sourceJdbc, table,
+            ts, fetchSize = cfg.extractChunkSize)
+        }
+      case None =>
+        require(e == Entities.orders, s"--entity ${e.name} syncs " +
+          "DB-to-DB: pass --source-url (or GRAFT_SOURCE_URL)")
+        val ts = col(e.incrementalColumn)
+        ordersSource(spark, sfDir).filter(range.fold(ts.isNull) {
+          case (start, end) => ts >= lit(start).cast(TimestampType) &&
+            ts < lit(end).cast(TimestampType)
+        })
+    }
+    Conversions.alignToSchema(Conversions.lowercaseColumns(rows),
+      e.targetSchema)
+  }
+
+  private def nextDay(date: String): String =
+    java.time.LocalDate.parse(date).plusDays(1).toString
+
+  /** The two extract branches for one logical day: the day's rows, and
+    * the rows with a NULL incremental timestamp (the side table's, read
+    * only for an entity that routes NULLs). */
   def extractForDay(
       spark: SparkSession,
       cfg: Config,
       sfDir: String,
-      date: String): (DataFrame, DataFrame) =
-    cfg.sourceUrlOverride match {
-      case Some(_) =>
-        val d = cfg.sourceDialect
-        val table = d.table(cfg.sourceSchemaName, cfg.sourceTable)
-        val tsCol = d.quote("order_created_at")
-        val complete = JdbcSources.dateSlice(
-          spark, cfg.sourceJdbc, table, tsCol, date,
-          fetchSize = cfg.extractChunkSize)
-        val incomplete = JdbcSources.nullSlice(
-          spark, cfg.sourceJdbc, table, tsCol,
-          fetchSize = cfg.extractChunkSize)
-        (complete, incomplete)
-      case None =>
-        val src = ordersSource(spark, sfDir)
-        (src.filter(daySlice(col("order_created_at"), date)),
-          src.filter(col("order_created_at").isNull))
-    }
+      date: String,
+      e: Entity = Entities.orders): (DataFrame, DataFrame) =
+    (extract(spark, cfg, sfDir, e, Some(date -> nextDay(date))),
+      extract(spark, cfg, sfDir, e, None))
 
-  /** Range extract [start, end] (inclusive dates) — one pushed scan
-    * whether the source is JDBC or parquet (O3's single-scan shape). */
+  /** Range extract [start, end] (inclusive dates): one pushed scan, where
+    * the reference's `_historical` pyc fans out one task per date (O3). */
   def extractForRange(
       spark: SparkSession,
       cfg: Config,
       sfDir: String,
       start: String,
-      end: String): DataFrame = {
-    val endNext = java.time.LocalDate.parse(end).plusDays(1)
-    cfg.sourceUrlOverride match {
-      case Some(_) =>
-        val d = cfg.sourceDialect
-        val tsCol = d.quote("order_created_at")
-        JdbcSources.rangeSlice(
-          spark, cfg.sourceJdbc,
-          d.table(cfg.sourceSchemaName, cfg.sourceTable),
-          tsCol, start, endNext.toString,
-          fetchSize = cfg.extractChunkSize)
-      case None =>
-        ordersSource(spark, sfDir).filter(
-          col("order_created_at") >= lit(start).cast(TimestampType) &&
-            col("order_created_at") <
-              lit(endNext.toString).cast(TimestampType))
-    }
+      end: String,
+      e: Entity = Entities.orders): DataFrame =
+    extract(spark, cfg, sfDir, e, Some(start -> nextDay(end)))
+
+  /** Bootstrap the target and staging tables, and the side table for an
+    * entity that routes NULLs (stands in for postgres_init/init.sql +
+    * mssql_init DDL). */
+  def ensureTargetTables(cfg: Config, e: Entity = Entities.orders): Unit = {
+    val tables = Seq(cfg.targetTable, cfg.stagingTable) ++
+      (if (e.routesNulls) Seq(cfg.targetIncompleteTable) else Nil)
+    for (t <- tables)
+      JdbcWrite.ensureTable(cfg.targetJdbc, cfg.targetDialect,
+        cfg.targetSchemaName, t, e.targetSchema)
   }
 
-  /** Bootstrap the three target tables (stands in for
-    * postgres_init/init.sql + mssql_init DDL). */
-  def ensureTargetTables(cfg: Config): Unit = {
-    val jdbc = cfg.targetJdbc; val d = cfg.targetDialect
-    JdbcWrite.ensureTable(jdbc, d, cfg.targetSchemaName, cfg.targetTable,
-      targetSchema)
-    JdbcWrite.ensureTable(jdbc, d, cfg.targetSchemaName,
-      cfg.targetIncompleteTable, targetSchema)
-    JdbcWrite.ensureTable(jdbc, d, cfg.targetSchemaName, cfg.stagingTable,
-      targetSchema)
-  }
-
-  /** Upsert a batch into the target. Dialect-routed: PG takes the
-    * row-streamed `ON CONFLICT` sink, SQL Server and Derby take the
+  /** Upsert a target-shaped batch on `cfg.uniqueKeyColumns`.
+    * Dialect-routed: PG takes the row-streamed `ON CONFLICT` sink (S7's
+    * conditional form for LWW entities), SQL Server and Derby take the
     * stage+MERGE sink (MERGE is their native upsert; Derby has no ON
     * CONFLICT). Returns the rows written, counted in the writing pass. */
   def upsertBatch(cfg: Config, batch: DataFrame,
@@ -123,17 +144,39 @@ object Pipeline {
     }
   }
 
-  /** Count-back validation (S11/A1): rows in the target for one day,
-    * pushed to the DB as a COUNT subquery. `{ts '...'}` is the JDBC
-    * escape — portable across PG/MSSQL/Derby. */
-  def countLoadedForDay(cfg: Config, date: String): Long = {
+  /** Count-back validation (S11/A1): rows in the target for one day on
+    * the entity's lowercased incremental column, pushed to the DB as a
+    * COUNT subquery. `{ts '...'}` is the JDBC escape — portable across
+    * PG/MSSQL/Derby. */
+  def countLoadedForDay(cfg: Config, date: String,
+      e: Entity = Entities.orders): Long = {
     val d = cfg.targetDialect
-    val c = d.quote("order_created_at")
-    val next = java.time.LocalDate.parse(date).plusDays(1)
+    val c = d.quote(e.targetIncrementalColumn)
+    val next = nextDay(date)
     JdbcSources.countWhere(
       cfg.targetJdbc,
       d.table(cfg.targetSchemaName, cfg.targetTable),
       s"$c >= {ts '$date 00:00:00'} AND $c < {ts '$next 00:00:00'}")
+  }
+
+  /** Env defaults name the orders tables; an entity run that wasn't
+    * given explicit names substitutes the entity's own. The conflict
+    * keys are the configured UNIQUE_KEY_COLUMNS if all of them exist on
+    * the entity's target schema, else the entity's own key. An identity
+    * for orders under the default env. */
+  def entityConfig(base: Config, name: String): Config = {
+    val e = Entities.named(name)
+    def own(table: String, default: String, mine: String) =
+      if (table == default) mine else table
+    base.copy(
+      sourceTable = own(base.sourceTable, "orders", e.name),
+      targetTable = own(base.targetTable, "orders", e.name),
+      stagingTable = own(base.stagingTable, "orders_staging",
+        s"${e.name}_staging"),
+      uniqueKeyColumns =
+        if (base.uniqueKeyColumns.forall(e.targetSchema.fieldNames.contains))
+          base.uniqueKeyColumns
+        else e.targetKey)
   }
 
   /** Per-date count-back over [start, end] (inclusive dates) on the
@@ -146,117 +189,13 @@ object Pipeline {
     JdbcSources.countByDate(
       cfg.targetJdbc,
       d.table(cfg.targetSchemaName, cfg.targetTable),
-      d.quote(tsCol), start,
-      java.time.LocalDate.parse(end).plusDays(1).toString)
+      d.quote(tsCol), start, nextDay(end))
   }
 
   /** Whole target table back into Spark (validation joins). */
   def readTarget(spark: SparkSession, cfg: Config, table: String): DataFrame =
     JdbcSources.readTable(spark, cfg.targetJdbc,
       cfg.targetDialect.table(cfg.targetSchemaName, table))
-
-  // ===================================================================
-  // Entity-parametric stages: the same extract → lowercase → upsert →
-  // count-back flow for ANY declared [[Entity]] (the reference clones
-  // its DAG body per table; here the entity is a parameter). The
-  // orders-specific functions above remain for orders' extra
-  // complete/incomplete NULL-routing flow; the transactions sync
-  // (mssql_to_postgres_sync / mssql_to_postgresql_daily pycs) runs
-  // entirely on these.
-  // ===================================================================
-
-  /** Bootstrap the entity's target + staging tables with the
-    * lowercased target schema. */
-  def ensureEntityTables(cfg: Config, e: Entity): Unit = {
-    val jdbc = cfg.targetJdbc; val d = cfg.targetDialect
-    JdbcWrite.ensureTable(jdbc, d, cfg.targetSchemaName, cfg.targetTable,
-      e.targetSchema)
-    JdbcWrite.ensureTable(jdbc, d, cfg.targetSchemaName, cfg.stagingTable,
-      e.targetSchema)
-  }
-
-  /** S3: one day's slice of the entity from the JDBC source, pushed
-    * down on the entity's incremental column (the pyc's
-    * `WHERE CAST(CreatedDateUtc AS DATE) = ?` in sargable half-open
-    * form). Source-edge casing. */
-  def extractEntityForDay(
-      spark: SparkSession,
-      cfg: Config,
-      e: Entity,
-      date: String): DataFrame = {
-    val d = cfg.sourceDialect
-    JdbcSources.dateSlice(
-      spark, cfg.sourceJdbc,
-      d.table(cfg.sourceSchemaName, cfg.sourceTable),
-      d.quote(e.incrementalColumn), date,
-      fetchSize = cfg.extractChunkSize)
-  }
-
-  /** Lowercase-rename (F5), align to the target schema (F6), then
-    * upsert with the entity's mode and composite key — dialect-routed
-    * like [[upsertBatch]]: PG takes the row-streamed `ON CONFLICT`
-    * sink (S7's conditional form for LWW entities), everything else
-    * the stage+MERGE sink. Returns the rows written, counted in the
-    * writing pass. */
-  def loadEntityBatch(cfg: Config, e: Entity, batch: DataFrame): Long = {
-    val aligned = Conversions.alignToSchema(
-      Conversions.lowercaseColumns(batch), e.targetSchema)
-    val d = cfg.targetDialect
-    val target = d.table(cfg.targetSchemaName, cfg.targetTable)
-    d match {
-      case SqlDialect.Postgres =>
-        UpsertSink.write(aligned, cfg.targetJdbc, d, target,
-          cfg.targetTable, e.targetKey, e.mode)
-      case _ =>
-        MergeSink.write(aligned, cfg.targetJdbc, d, target,
-          d.table(cfg.targetSchemaName, cfg.stagingTable),
-          e.targetKey, e.mode,
-          withByTarget = d == SqlDialect.SqlServer)
-    }
-  }
-
-  /** Env defaults name the orders tables; an entity run that wasn't
-    * given explicit names substitutes the entity's own. Shared by the
-    * DailySync and RangeSync entity branches. */
-  def entityConfig(base: Config, e: Entity): Config = base.copy(
-    sourceTable =
-      if (base.sourceTable == "orders") e.name else base.sourceTable,
-    targetTable =
-      if (base.targetTable == "orders") e.name else base.targetTable,
-    stagingTable = if (base.stagingTable == "orders_staging")
-      s"${e.name}_staging" else base.stagingTable)
-
-  /** O3 for any entity: one pushed range scan [start, end] (inclusive
-    * dates) on the entity's incremental column — the `_historical`
-    * pyc's backfill workload as a SINGLE scan + upsert, where the
-    * reference fans out one Airflow task per date. Source casing. */
-  def extractEntityForRange(
-      spark: SparkSession,
-      cfg: Config,
-      e: Entity,
-      start: String,
-      end: String): DataFrame = {
-    val endNext = java.time.LocalDate.parse(end).plusDays(1)
-    val d = cfg.sourceDialect
-    JdbcSources.rangeSlice(
-      spark, cfg.sourceJdbc,
-      d.table(cfg.sourceSchemaName, cfg.sourceTable),
-      d.quote(e.incrementalColumn), start, endNext.toString,
-      fetchSize = cfg.extractChunkSize)
-  }
-
-  /** S11 for the entity: count-back on the lowercased incremental
-    * column (the `_historical` pyc's
-    * `WHERE CAST(createddateutc AS DATE) = %s`). */
-  def countEntityLoadedForDay(cfg: Config, e: Entity, date: String): Long = {
-    val d = cfg.targetDialect
-    val c = d.quote(e.targetIncrementalColumn)
-    val next = java.time.LocalDate.parse(date).plusDays(1)
-    JdbcSources.countWhere(
-      cfg.targetJdbc,
-      d.table(cfg.targetSchemaName, cfg.targetTable),
-      s"$c >= {ts '$date 00:00:00'} AND $c < {ts '$next 00:00:00'}")
-  }
 
   /** A2/A1 reconciliation line, log-only on mismatch exactly like the
     * reference (orders_daily.py:580-584). Returns match.

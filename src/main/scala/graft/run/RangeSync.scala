@@ -1,18 +1,18 @@
 package graft.run
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.AccumulatorV2
 
-import graft.core.Sessions
-import graft.operators.Upsert
+import graft.core.{Entities, Entity, Sessions}
 
-/** Entry point 2 (O3, SURVEY §3.2): historical/backfill range sync.
+/** Entry point 2 (O3, SURVEY §3.2): historical/backfill range sync of
+  * one entity.
   *
   * Usage:
   *   sbt "runMain graft.run.RangeSync --start-date 1996-03-01 \
   *        --end-date 1996-03-07 [--sf-dir ...] [--target-url jdbc:...] \
-  *        [--entity transactions --source-url jdbc:...]"
+  *        [--entity orders|transactions] [--source-url jdbc:...]"
   *
   * Where the reference fans out one Airflow task per date (Dynamic Task
   * Mapping, `_historical` pyc), this is ONE scan + ONE upsert over the
@@ -25,11 +25,10 @@ import graft.operators.Upsert
   * ([[graft.io.JdbcSources.countByDate]]). The backfill runs one Spark
   * job, with no shuffle and no cache.
   *
-  * `--entity transactions` backfills the wide 57-column entity instead
-  * (the `_historical` pyc's actual workload): same single-scan range
-  * extract on `CreatedDateUtc`, lowercase-align, composite-key LWW
-  * upsert, per-date count reconciliation. DB-to-DB only — requires
-  * `--source-url`.
+  * Every entity runs the same stages as [[DailySync]], with the same
+  * `--entity` and source rules; `--entity transactions` is the
+  * `_historical` pyc's own workload (range scan on `CreatedDateUtc`,
+  * composite-key LWW upsert). A backfill reads no NULL-timestamp rows.
   */
 object RangeSync {
 
@@ -38,44 +37,39 @@ object RangeSync {
     val start = opts.required("start-date")
     val end = opts.required("end-date")
     val dates = Args.dateRange(start, end) // validates start <= end
+    val e = Entities.named(opts.get("entity").getOrElse("orders"))
     val spark = Sessions.local("graft-range-sync")
-    opts.get("entity").getOrElse("orders") match {
-      case "orders" => ordersRange(spark, opts, start, end, dates)
-      case "transactions" => entityRange(
-        spark, graft.core.Entities.transactions, opts, start, end, dates)
-      case other => sys.error(s"unknown --entity $other " +
-        "(orders | transactions)")
-    }
+    range(spark, e, opts, start, end, dates)
     Sessions.stop(spark)
   }
 
-  /** Entity-generic range backfill: one pushed range scan, one LWW
-    * upsert, per-date validation from a count on each side. */
-  private def entityRange(
-      spark: org.apache.spark.sql.SparkSession,
-      e: graft.core.Entity,
+  /** Backfill [start, end]: one pushed range scan, one upsert, per-date
+    * validation from a count on each side. An entity that routes NULLs
+    * labels its lines `range <date>`; any other entity leads them with
+    * its name, as [[DailySync.sync]] does. */
+  private[run] def range(
+      spark: SparkSession,
+      e: Entity,
       opts: Args,
       start: String,
       end: String,
       dates: Seq[String]): Unit = {
-    val base = opts.config
-    require(base.sourceUrlOverride.nonEmpty,
-      s"--entity ${e.name} syncs DB-to-DB: pass --source-url " +
-        "(or GRAFT_SOURCE_URL)")
-    val cfg = Pipeline.entityConfig(base, e)
+    val cfg = Pipeline.entityConfig(opts.config, e.name)
     val hook = Alerts.fromEnv(opts.alertEnv)
+    val branch = if (e.routesNulls) "range" else s"${e.name} range"
     Alerts.onFailure(hook, e.name, dates.head, "ensure-tables") {
-      Pipeline.ensureEntityTables(cfg, e)
+      Pipeline.ensureTargetTables(cfg, e)
     }
-
-    // the extract plan is lazy: a failing source surfaces in the load
-    val slice = Pipeline.extractEntityForRange(spark, cfg, e, start, end)
+    // one write carries the per-date extracted counts (A2)
     val extracted = Alerts.onFailure(hook, e.name, s"$start..$end",
       "range-load") {
-      writeCountingByDate(slice, e.incrementalColumn)(
-        Pipeline.loadEntityBatch(cfg, e, _))
+      val slice =
+        Pipeline.extractForRange(spark, cfg, opts.sfDir, start, end, e)
+      writeCountingByDate(slice, e.targetIncrementalColumn)(
+        Pipeline.upsertBatch(cfg, _, e.mode))
     }
 
+    // per-date loaded counts from the target, one pushed COUNT (S11/A1)
     val loaded = Alerts.onFailure(hook, e.name, s"$start..$end",
       "range-validate") {
       Pipeline.countLoadedByDate(cfg, e.targetIncrementalColumn, start, end)
@@ -84,46 +78,8 @@ object RangeSync {
     var allOk = true
     for (d <- dates) {
       val (x, l) = (extracted.getOrElse(d, 0L), loaded.getOrElse(d, 0L))
-      val ok = Pipeline.reconcile(s"${e.name} range $d", x, l)
+      val ok = Pipeline.reconcile(s"$branch $d", x, l)
       if (!ok) Alerts.onMismatch(hook, e.name, d, x, l)
-      allOk &= ok
-    }
-    println(s"[range-sync] done: ${dates.size} day(s), " +
-      (if (allOk) "all counts reconciled" else "MISMATCHES logged above"))
-  }
-
-  private[run] def ordersRange(
-      spark: org.apache.spark.sql.SparkSession,
-      opts: Args,
-      start: String,
-      end: String,
-      dates: Seq[String]): Unit = {
-    val cfg = opts.config
-    val hook = Alerts.fromEnv(opts.alertEnv)
-
-    Alerts.onFailure(hook, "orders", dates.head, "ensure-tables") {
-      Pipeline.ensureTargetTables(cfg)
-    }
-    // one write carries the per-date extracted counts (A2); the extract
-    // plan is lazy, so a failing source surfaces in the load
-    val slice = Pipeline.extractForRange(spark, cfg, opts.sfDir, start, end)
-    val extracted = Alerts.onFailure(hook, "orders", s"$start..$end",
-      "range-load") {
-      writeCountingByDate(slice, "order_created_at")(
-        Pipeline.upsertBatch(cfg, _, Upsert.Unconditional))
-    }
-
-    // per-date loaded counts from the target, one pushed COUNT (S11/A1)
-    val loaded = Alerts.onFailure(hook, "orders", s"$start..$end",
-      "range-validate") {
-      Pipeline.countLoadedByDate(cfg, "order_created_at", start, end)
-    }
-
-    var allOk = true
-    for (d <- dates) {
-      val (x, l) = (extracted.getOrElse(d, 0L), loaded.getOrElse(d, 0L))
-      val ok = Pipeline.reconcile(s"range $d", x, l)
-      if (!ok) Alerts.onMismatch(hook, "orders", d, x, l)
       allOk &= ok
     }
     println(s"[range-sync] done: ${dates.size} day(s), " +

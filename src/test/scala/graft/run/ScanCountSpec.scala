@@ -18,6 +18,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpecBase
+import graft.core.Entities
+import graft.io.{JdbcConfig, JdbcWrite, RefreshSink, SqlDialect}
 
 /** Guards the sync path's single-pass shape: every Spark action an
   * entry point runs is recorded with the source scans its executed plan
@@ -26,9 +28,11 @@ import graft.SparkSpecBase
   * relation: no sync action may do either. */
 class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
-  /** One execution: its action name, its source scans, and whether its
-    * executed plan holds a shuffle or an in-memory (cached) scan. */
-  private case class Action(name: String, scans: Int, shuffleOrCache: Boolean)
+  /** One execution: its action name, its source scans (of which `jdbc`
+    * are JDBC scans), and whether its executed plan holds a shuffle or
+    * an in-memory (cached) scan. */
+  private case class Action(name: String, scans: Int, jdbc: Int,
+      shuffleOrCache: Boolean)
 
   /** Every execution while `body` ran. */
   private def actionsOf(body: => Unit): Seq[Action] = {
@@ -38,6 +42,7 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
         case _: FileSourceScanExec | _: RowDataSourceScanExec |
             _: BatchScanExec => 1
       }.sum,
+      collectWithSubqueries(p) { case _: RowDataSourceScanExec => 1 }.sum,
       collectWithSubqueries(p) {
         case s @ (_: ShuffleExchangeExec | _: InMemoryTableScanExec) => s
       }.nonEmpty)
@@ -91,7 +96,7 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val opts = target("scan_guard_daily")
     val out = new java.io.ByteArrayOutputStream
     val actions = actionsOf {
-      Console.withOut(out)(DailySync.ordersSync(spark, opts, opts.sfDir,
+      Console.withOut(out)(DailySync.sync(spark, Entities.orders, opts,
         dates))
     }
     // one complete-branch upsert per day, then one side-table refresh
@@ -130,8 +135,9 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val opts = target("scan_guard_range")
     val out = new java.io.ByteArrayOutputStream
     val actions = actionsOf {
-      Console.withOut(out)(RangeSync.ordersRange(spark, opts, "1996-03-01",
-        "1996-03-03", Args.dateRange("1996-03-01", "1996-03-03")))
+      Console.withOut(out)(RangeSync.range(spark, Entities.orders, opts,
+        "1996-03-01", "1996-03-03", Args.dateRange("1996-03-01",
+          "1996-03-03")))
     }
     // the per-date extract counts ride the write; no JDBC read-back of
     // the target
@@ -143,5 +149,91 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       "[validate] range 1996-03-01: extracted=2 loaded=2 OK"), log)
     assert(log.contains(
       "[validate] range 1996-03-03: extracted=0 loaded=0 OK"), log)
+  }
+
+  /** The parquet orders, loaded into an in-memory Derby source table
+    * (target-cased, as in the DB-to-DB topology) before any action is
+    * recorded: the JDBC URL to pass as `--source-url`. */
+  private lazy val derbySource: String = {
+    val src = JdbcConfig("jdbc:derby:memory:scan_guard_src;create=true")
+    val d = SqlDialect.Derby
+    JdbcWrite.ensureTable(src, d, "APP", "orders", Entities.orders.schema)
+    RefreshSink.write(Pipeline.ordersSource(spark, sfDir), src, d,
+      d.table("APP", "orders"))
+    src.url
+  }
+
+  /** Sorted rows of the target table `table` names. */
+  private def rows(opts: Args, table: Config => String): Seq[String] = {
+    val cfg = opts.config
+    Pipeline.readTarget(spark, cfg, table(cfg)).collect()
+      .map(_.toString).sorted.toSeq
+  }
+
+  test("DailySync from a Derby source: one JDBC scan per sink write, " +
+    "targets equal the parquet path's") {
+    val dates = Seq("1996-03-01", "1996-03-02")
+    val fromDb = Args(target("scan_guard_db").kv +
+      ("source-url" -> derbySource))
+    val fromParquet = target("scan_guard_pq")
+
+    val out = new java.io.ByteArrayOutputStream
+    val actions = actionsOf {
+      Console.withOut(out)(DailySync.sync(spark, Entities.orders, fromDb,
+        dates))
+    }
+    // one upsert per day, then one side-table refresh, each reading the
+    // source through exactly one JDBC scan
+    assert(actions.map(_.name) ==
+      Seq.fill(dates.size + 1)("foreachPartition"), s"actions: $actions")
+    assert(actions.forall(a => a.scans == 1 && a.jdbc == 1),
+      s"scans per write: $actions")
+    assert(!actions.exists(_.shuffleOrCache), s"shuffle or cache: $actions")
+    val log = out.toString("UTF-8")
+    assert(log.contains(
+      "[validate] complete 1996-03-01: extracted=2 loaded=2 OK"), log)
+    assert(log.contains(
+      "[validate] incomplete (full refresh): extracted=2 loaded=2 OK"), log)
+
+    Console.withOut(new java.io.ByteArrayOutputStream)(
+      DailySync.sync(spark, Entities.orders, fromParquet, dates))
+    // 4 complete orders upserted, 2 incomplete in the side table
+    for ((table, n) <- Seq[(Config => String, Int)](
+        (_.targetTable, 4), (_.targetIncompleteTable, 2))) {
+      val viaDb = rows(fromDb, table)
+      assert(viaDb.size == n, viaDb)
+      assert(viaDb == rows(fromParquet, table))
+    }
+  }
+
+  test("RangeSync from a Derby source: one JDBC scan for the one write, " +
+    "target equals the parquet path's") {
+    // a window ending the day before the source's last date, so a
+    // source slice wider than the window shows in the target
+    val (start, end) = ("1996-02-29", "1996-03-01")
+    val fromDb = Args(target("scan_guard_range_db").kv +
+      ("source-url" -> derbySource))
+    val fromParquet = target("scan_guard_range_pq")
+
+    val out = new java.io.ByteArrayOutputStream
+    val actions = actionsOf {
+      Console.withOut(out)(RangeSync.range(spark, Entities.orders, fromDb,
+        start, end, Args.dateRange(start, end)))
+    }
+    assert(actions.map(a => (a.name, a.scans, a.jdbc)) ==
+      Seq(("foreachPartition", 1, 1)), s"actions: $actions")
+    assert(!actions.exists(_.shuffleOrCache), s"shuffle or cache: $actions")
+    val log = out.toString("UTF-8")
+    assert(log.contains(
+      "[validate] range 1996-02-29: extracted=0 loaded=0 OK"), log)
+    assert(log.contains(
+      "[validate] range 1996-03-01: extracted=2 loaded=2 OK"), log)
+
+    Console.withOut(new java.io.ByteArrayOutputStream)(
+      RangeSync.range(spark, Entities.orders, fromParquet, start, end,
+        Args.dateRange(start, end)))
+    val viaDb = rows(fromDb, _.targetTable)
+    assert(viaDb.size == 2, viaDb)
+    assert(viaDb == rows(fromParquet, _.targetTable))
   }
 }

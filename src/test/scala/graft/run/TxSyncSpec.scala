@@ -1,5 +1,6 @@
 package graft.run
 
+import java.io.ByteArrayOutputStream
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row}
@@ -18,7 +19,9 @@ import graft.io.{JdbcSources, JdbcWrite, RefreshSink, SqlDialect, SqlGen}
   *
   * The source table keeps MSSQL casing; the target gets the lowercased
   * rename — both edges of the reference's casing contract are live in
-  * one test.
+  * one test. The syncs run through the shipped CLI bodies,
+  * `DailySync.sync` and `RangeSync.range`, and read their counts from
+  * the `[validate]` lines those print.
   */
 class TxSyncSpec extends SparkSpecBase {
 
@@ -27,14 +30,12 @@ class TxSyncSpec extends SparkSpecBase {
   private val srcCfg = graft.io.JdbcConfig(
     "jdbc:derby:memory:txsrc;create=true", batchSize = 7)
 
-  // Config as DailySync's entity branch would build it: Derby source +
-  // Derby target, transactions table names.
-  private val cfg = Config.fromEnv(Map(
-    "GRAFT_SOURCE_URL" -> srcCfg.url,
-    "GRAFT_TARGET_URL" -> "jdbc:derby:memory:txdst;create=true",
-    "SOURCE_TABLE_NAME" -> "transactions",
-    "TARGET_TABLE_NAME" -> "transactions",
-    "STAGING_TABLE_NAME" -> "transactions_staging"))
+  // CLI options for a Derby source + Derby target; DailySync derives
+  // the transactions table names and keys (cfg, as it builds it)
+  private val opts = Args(Map(
+    "source-url" -> srcCfg.url,
+    "target-url" -> "jdbc:derby:memory:txdst;create=true"))
+  private val cfg = Pipeline.entityConfig(opts.config, e.name)
 
   private val srcTable = SqlDialect.Derby.table("APP", "transactions")
 
@@ -80,10 +81,21 @@ class TxSyncSpec extends SparkSpecBase {
         SqlGen.createTable(SqlDialect.Derby, srcTable, Schemas.transactions))
   }
 
+  /** (extracted, loaded) of every `[validate]` line in `log` whose
+    * label is `prefix` followed by a date, keyed by that date. */
+  private def validated(log: String, prefix: String)
+      : Map[String, (Long, Long)] = {
+    val line = (s"\\[validate\\] ${java.util.regex.Pattern.quote(prefix)}" +
+      """(\d{4}-\d\d-\d\d): extracted=(\d+) loaded=(\d+) \w+""").r
+    log.linesIterator.collect { case line(d, x, l) =>
+      d -> ((x.toLong, l.toLong)) }.toMap
+  }
+
+  /** One `DailySync` run for `date`: its (extracted, loaded). */
   private def syncDay(date: String): (Long, Long) = {
-    val slice = Pipeline.extractEntityForDay(spark, cfg, e, date)
-    val extracted = Pipeline.loadEntityBatch(cfg, e, slice)
-    (extracted, Pipeline.countEntityLoadedForDay(cfg, e, date))
+    val out = new ByteArrayOutputStream
+    Console.withOut(out)(DailySync.sync(spark, e, opts, Seq(date)))
+    validated(out.toString("UTF-8"), "transactions ")(date)
   }
 
   private def targetState(): Map[String, (String, Timestamp, String)] =
@@ -99,7 +111,6 @@ class TxSyncSpec extends SparkSpecBase {
   test("two-day sync, LWW conflict resolution, idempotent replay (S3/S7)") {
     ensureSource()
     RefreshSink.write(txDf(seedRows: _*), srcCfg, SqlDialect.Derby, srcTable)
-    Pipeline.ensureEntityTables(cfg, e)
 
     // Day 1: A, B. Day 2: C. Counts reconcile via target count-back.
     assert(syncDay("2025-03-01") == ((2L, 2L)))
@@ -141,13 +152,14 @@ class TxSyncSpec extends SparkSpecBase {
     // isolated DBs so earlier tests' LWW mutations can't leak in
     val src2 = graft.io.JdbcConfig(
       "jdbc:derby:memory:txsrc_range;create=true", batchSize = 7)
-    val cfg2 = Pipeline.entityConfig(
-      Config.fromEnv(Map(
-        "GRAFT_SOURCE_URL" -> src2.url,
-        "GRAFT_TARGET_URL" -> "jdbc:derby:memory:txdst_range;create=true")),
-      e)
+    val opts2 = Args(Map(
+      "source-url" -> src2.url,
+      "target-url" -> "jdbc:derby:memory:txdst_range;create=true"))
+    val cfg2 = Pipeline.entityConfig(opts2.config, e.name)
     assert(cfg2.sourceTable == "transactions" &&
       cfg2.stagingTable == "transactions_staging")
+    // the env default key (order_id) is not a transactions column
+    assert(cfg2.uniqueKeyColumns == e.targetKey)
     JdbcWrite.execute(src2,
       SqlGen.createTable(SqlDialect.Derby, srcTable, Schemas.transactions))
     // day 1: A, B; day 2: C; day 3: D — plus an out-of-range day 4 row
@@ -158,24 +170,26 @@ class TxSyncSpec extends SparkSpecBase {
       txRow("E", 3, "2025-03-04 00:00:00", "2025-03-04 00:00:00", "50.0",
         """{"ch":"app","score":2}""")): _*),
       src2, SqlDialect.Derby, srcTable)
-    Pipeline.ensureEntityTables(cfg2, e)
 
-    // the shipped backfill step: one write that counts its rows per date
-    def runRange(): Map[String, Long] =
-      RangeSync.writeCountingByDate(
-        Pipeline.extractEntityForRange(spark, cfg2, e, "2025-03-01",
-          "2025-03-03"),
-        e.incrementalColumn)(Pipeline.loadEntityBatch(cfg2, e, _))
+    // the shipped backfill: one write that counts its rows per date;
+    // the extracted counts of its [validate] lines
+    def runRange(): Map[String, Long] = {
+      val out = new ByteArrayOutputStream
+      Console.withOut(out)(RangeSync.range(spark, e, opts2, "2025-03-01",
+        "2025-03-03", Args.dateRange("2025-03-01", "2025-03-03")))
+      validated(out.toString("UTF-8"), "transactions range ")
+        .map { case (d, (x, _)) => d -> x }
+    }
 
     val extracted = runRange()
     assert(extracted == Map(
       "2025-03-01" -> 2L, "2025-03-02" -> 1L, "2025-03-03" -> 1L))
     // count-back per date reconciles; day 4 never crossed
     for ((d, n) <- extracted)
-      assert(Pipeline.countEntityLoadedForDay(cfg2, e, d) == n)
+      assert(Pipeline.countLoadedForDay(cfg2, d, e) == n)
     assert(Pipeline.countLoadedByDate(cfg2, e.targetIncrementalColumn,
       "2025-03-01", "2025-03-03") == extracted)
-    assert(Pipeline.countEntityLoadedForDay(cfg2, e, "2025-03-04") == 0L)
+    assert(Pipeline.countLoadedForDay(cfg2, "2025-03-04", e) == 0L)
 
     // idempotency (O5): replaying the whole range is a no-op
     val before = JdbcSources.readTable(spark, cfg2.targetJdbc,
@@ -191,12 +205,33 @@ class TxSyncSpec extends SparkSpecBase {
 
   test("target edge is fully lowercased, all 57 columns present (F5/F6)") {
     ensureSource()
-    Pipeline.ensureEntityTables(cfg, e)
+    Pipeline.ensureTargetTables(cfg, e)
+    // transactions route no NULLs: no side table
+    assert(!JdbcWrite.tableExists(cfg.targetJdbc, cfg.targetSchemaName,
+      cfg.targetIncompleteTable))
     val tgt = JdbcSources.readTable(spark, cfg.targetJdbc,
       cfg.targetDialect.table(cfg.targetSchemaName, cfg.targetTable))
     assert(tgt.columns.length == 57)
     assert(tgt.columns.forall(c => c == c.toLowerCase))
     assert(tgt.columns.toSeq ==
       Schemas.transactions.fieldNames.map(_.toLowerCase).toSeq)
+  }
+
+  test("an entity without a parquet stand-in needs --source-url") {
+    val noSource = Args(Map(
+      "target-url" -> "jdbc:derby:memory:txdst_nosrc;create=true"))
+    val msg = "--entity transactions syncs DB-to-DB: pass --source-url " +
+      "(or GRAFT_SOURCE_URL)"
+    val out = new ByteArrayOutputStream
+    val daily = intercept[IllegalArgumentException] {
+      Console.withOut(out)(DailySync.sync(spark, e, noSource,
+        Seq("2025-03-01")))
+    }
+    assert(daily.getMessage.contains(msg), daily.getMessage)
+    val range = intercept[IllegalArgumentException] {
+      Console.withOut(out)(RangeSync.range(spark, e, noSource, "2025-03-01",
+        "2025-03-02", Args.dateRange("2025-03-01", "2025-03-02")))
+    }
+    assert(range.getMessage.contains(msg), range.getMessage)
   }
 }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.SparkSpecBase
-import graft.core.Schemas
+import graft.core.{Entities, Schemas}
 import graft.io.{JdbcConfig, JdbcWrite, MergeSink, SqlDialect}
 import graft.operators.Upsert
 
@@ -62,7 +62,7 @@ class WriteCountsSpec extends SparkSpecBase {
         "target-url" -> s"jdbc:derby:memory:$db;create=true",
         "sf-dir" -> sfDir))
       val out = new ByteArrayOutputStream
-      Console.withOut(out)(DailySync.ordersSync(spark, opts, sfDir, days))
+      Console.withOut(out)(DailySync.sync(spark, Entities.orders, opts, days))
       val cfg = opts.config
       (out.toString("UTF-8"),
         sorted(Pipeline.readTarget(spark, cfg, cfg.targetIncompleteTable)))
