@@ -140,9 +140,9 @@ object Queries {
        | (m6 - mn6) > $lambdaPpm AS alarm
        |FROM p""".stripMargin
 
-  /** Session-shared MinHash-LSH near-dup pair set (portable mode,
-    * t=0.8): computed once per (session, sf dir) and reused by every
-    * consumer — the report query AND the apply query (VERDICT r2
+  /** Session-shared MinHash-LSH near-dup pair set (t=0.8): computed
+    * once per (session, sf dir) and reused by every consumer — the
+    * report query AND the apply query (VERDICT r2
     * "What's wrong" #1). The returned frame is tiny (verified pairs)
     * and persisted by the operator; its corpus-sized intermediates are
     * already released. */
@@ -176,7 +176,7 @@ object Queries {
   private def lshPairs(s: SparkSession, dir: String): DataFrame =
     pairMemo.getOrElseUpdate(s, dir,
       Dedup.minhashNearDupPairs(Tables.documents(s, dir), "doc_id",
-        col("text"), threshold = 0.8, numHashes = 64, portable = true))
+        col("text"), threshold = 0.8, numHashes = 64))
 
   /** Session-shared dominant principal component (collected weights,
     * [[Similarity.topPrincipalComponent]] at PcaIters rounds):
@@ -221,7 +221,7 @@ object Queries {
   private def knnEdges(s: SparkSession, dir: String): DataFrame =
     knnMemo.getOrElseUpdate(s, dir,
       Similarity.knnGraph(Tables.embeddings(s, dir), "vec_id",
-        "embedding", k = 5, portable = true))
+        "embedding", k = 5))
 
   /** Session-shared k-means assignment over the embeddings (8 cells,
     * one Lloyd round) — the clustering family (q_cluster_balance,
@@ -1031,7 +1031,7 @@ object Queries {
       // elsewhere, before paying for a cross-source dedup. Portable
       // hash family so the oracle replays the same arithmetic.
       Dedup.sourceOverlap(Tables.documents(s, dir), col("source"),
-        col("text"), shingleSize = 3, portable = true)
+        col("text"), shingleSize = 3)
     }),
     "q_winsorize" -> ((s, dir) => {
       // Robust mean, clamping flavor: the 5% tails vote at the fence
@@ -2868,8 +2868,7 @@ object Queries {
       // self-join-of-same-lineage rule).
       val nn = Similarity.lshTopKPerQuery(
           Tables.embeddings(s, dir), Tables.embeddings(s, dir),
-          "vec_id", "embedding", 5, portable = true,
-          excludeSelf = true)
+          "vec_id", "embedding", 5, excludeSelf = true)
         .select(col("query_id").as("src"), col("corpus_id").as("dst"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val rev = nn.select(col("dst").as("src"), col("src").as("dst"),
@@ -4377,7 +4376,7 @@ object Queries {
       graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.nearDupFlags(
           graft.streaming.Streams.docsStream(s, dir),
-          maxHamming = 3, portable = true).toDF(), name,
+          maxHamming = 3).toDF(), name,
         shufflePartitions = Some(8))
         .groupBy(col("doc_id"))
         .agg(max(when(col("dup"), 1).otherwise(0)).as("__d"))
@@ -5039,11 +5038,10 @@ object Queries {
       // Exact duplicated-substring audit (Lee et al. ACL'22 ExactSubstr
       // signal): 40-char windows every 10 chars, corpus-frequency
       // counted on the portable hash so DuckDB replays the identical
-      // arithmetic (production mode hashes xxhash64 instead — the plan
-      // is the same). Per doc: windows, duplicated windows, windows
+      // arithmetic. Per doc: windows, duplicated windows, windows
       // shared with ANOTHER doc, and the duplicated share.
       Dedup.windowDupStats(Tables.documents(s, dir), "doc_id",
-          col("text"), width = 40, stride = 10, portable = true)
+          col("text"), width = 40, stride = 10)
         .select(col("id").as("doc_id"), col("n_windows"),
           col("n_dup_windows"), col("n_cross_doc"),
           round(col("n_dup_windows").cast(DoubleType) / col("n_windows"),
@@ -5055,7 +5053,7 @@ object Queries {
       // wave. Pair set carries 8-byte hashes only; first-seen is one
       // min-per-hash aggregate — O(pairs) however many waves.
       Dedup.shingleNovelty(Tables.documents(s, dir), col("doc_id") % 8,
-        col("text"), shingleSize = 3, portable = true)
+        col("text"), shingleSize = 3)
     }),
     "q_dedup_cdc" -> ((s, dir) => {
       // Content-defined chunking: cut where the 8-char window hash
@@ -5132,8 +5130,7 @@ object Queries {
       // Portable-hash mode: the polynomial hash family is replicated in
       // DuckDB, so signatures get a full value-level oracle.
       val docs = Tables.documents(s, dir)
-      val sigs = Dedup.minhashSignatures(docs, "doc_id", col("text"),
-        portable = true)
+      val sigs = Dedup.minhashSignatures(docs, "doc_id", col("text"))
       sigs.select(col("doc_id"), col("signature")(0).as("sig0"),
         col("signature")(1).as("sig1"))
     }),
@@ -5155,7 +5152,7 @@ object Queries {
       // up to (n_pairs, mae, bias, max_ae) — the check that the
       // signature width still supports the dedup threshold.
       Dedup.minhashEstimatorAudit(Tables.documents(s, dir), "doc_id",
-        col("text"), threshold = 0.8, numHashes = 64, portable = true)
+        col("text"), threshold = 0.8, numHashes = 64)
     }),
     "q_dedup_scurve" -> ((s, dir) => {
       // LSH band-geometry tuning table: per true-Jaccard bin, the
@@ -5170,8 +5167,7 @@ object Queries {
         col("text"))
     }),
     "q_dedup_simhash" -> ((s, dir) => {
-      Dedup.simhash(Tables.documents(s, dir), "doc_id", col("text"),
-        portable = true)
+      Dedup.simhash(Tables.documents(s, dir), "doc_id", col("text"))
     }),
     "q_dedup_simhash_pairs" -> ((s, dir) => {
       // SimHash near-dup pairs end-to-end: 16-bit-quadrant blocking
@@ -5179,7 +5175,7 @@ object Queries {
       // then full-Hamming verify. Portable lane hashes → the whole
       // pipeline is oracle-replicated, blocking included.
       Dedup.simhashNearDupPairs(Tables.documents(s, dir), "doc_id",
-          col("text"), maxHamming = 3, portable = true)
+          col("text"), maxHamming = 3)
         .select(col("a"), col("b"), col("hamming").cast(IntegerType)
           .as("hamming"))
     }),
@@ -5479,8 +5475,7 @@ object Queries {
       // the trade).
       val emb = Tables.embeddings(s, dir)
       Similarity.mipsLshTopKPerQuery(emb, emb.filter(col("vec_id") < 5),
-        "vec_id", "embedding", k = 10, bits = 36, bands = 6,
-        portable = true, probes = 1)
+        "vec_id", "embedding", k = 10, bits = 36, bands = 6, probes = 1)
     }),
     "q_sim_mips_ivf" -> ((s, dir) => {
       // INDEXED MIPS via the inverted file in the norm-augmented
@@ -5508,7 +5503,7 @@ object Queries {
         "embedding", k = 10)
       Similarity.recallAtK(truth,
         Similarity.mipsLshTopKPerQuery(emb, q, "vec_id", "embedding",
-          k = 10, bits = 36, bands = 6, portable = true, probes = 1),
+          k = 10, bits = 36, bands = 6, probes = 1),
         "mips_lsh")
         .unionAll(Similarity.recallAtK(truth,
           Similarity.mipsIvfTopKPerQuery(emb, q, "vec_id",
@@ -5536,8 +5531,7 @@ object Queries {
             col("n_total"),
             expr("n_candidates * 1000000 div n_total").as("work_ppm"))
       row("mips_lsh", Similarity.mipsLshCandidatePairs(emb, q,
-          "vec_id", "embedding", bits = 36, bands = 6,
-          portable = true, probes = 1))
+          "vec_id", "embedding", bits = 36, bands = 6, probes = 1))
         .unionAll(row("mips_ivf", Similarity.mipsIvfCandidatePairs(
           emb, q, "vec_id", "embedding", nCells = 16, nProbe = 4)))
     }),
@@ -5576,7 +5570,7 @@ object Queries {
       // family → the banding and verification are oracle-replicated.
       val emb = Tables.embeddings(s, dir)
       Similarity.lshTopKPerQuery(emb, emb.filter(col("vec_id") < 5),
-          "vec_id", "embedding", k = 10, portable = true)
+          "vec_id", "embedding", k = 10)
         .select(col("query_id"), col("corpus_id"),
           round(col("cos"), 6).as("cos"))
     }),
@@ -5617,7 +5611,7 @@ object Queries {
         k = 10)
       Similarity.recallAtK(brute,
           Similarity.lshTopKPerQuery(emb, q, "vec_id", "embedding",
-            k = 10, portable = true), "lsh")
+            k = 10), "lsh")
         .unionByName(Similarity.recallAtK(brute,
           Similarity.ivfTopKPerQuery(emb, q, "vec_id", "embedding",
             k = 10, nCells = 16, nProbe = 4), "ivf"))
@@ -5632,8 +5626,7 @@ object Queries {
       // Embedding-cosine near-dup pairs: SRP-LSH blocking (portable
       // plane family) + exact cosine verification within one dataset.
       Similarity.cosineNearDupPairs(Tables.embeddings(s, dir),
-          "vec_id", "embedding", threshold = 0.45,
-          bits = 48, bands = 8, portable = true)
+          "vec_id", "embedding", threshold = 0.45, bits = 48, bands = 8)
         .select(col("a"), col("b"), round(col("cos"), 6).as("cos"))
     }),
     "q_sim_threshold_curve" -> ((s, dir) => {
@@ -5645,8 +5638,7 @@ object Queries {
       // q_sim_cosine_dedup; the curve itself is ≤ 41 rows, so the
       // single-partition cumulative window is control-plane work.
       val curve = Similarity.cosineNearDupPairs(Tables.embeddings(s, dir),
-          "vec_id", "embedding", threshold = -1.0, bits = 48, bands = 8,
-          portable = true)
+          "vec_id", "embedding", threshold = -1.0, bits = 48, bands = 8)
         .groupBy(floor(round(col("cos"), 6) * 20).cast(LongType)
           .as("bucket"))
         .agg(count(lit(1)).as("n_pairs"))
@@ -5665,8 +5657,7 @@ object Queries {
       // control frame.
       val curve = Similarity.cosineNearDupPairs(
           Tables.embeddings(s, dir),
-          "vec_id", "embedding", threshold = -1.0, bits = 48,
-          bands = 8, portable = true)
+          "vec_id", "embedding", threshold = -1.0, bits = 48, bands = 8)
         .groupBy(floor(round(col("cos"), 6) * 20).cast(LongType)
           .as("bucket"))
         .agg(count(lit(1)).as("n_pairs"))
@@ -5937,7 +5928,7 @@ object Queries {
       // graph (never all pairs); duplicates and single-candidate
       // vectors excluded and counted.
       Similarity.twoNNDimension(Tables.embeddings(s, dir),
-        "vec_id", "embedding", portable = true)
+        "vec_id", "embedding")
     }),
     "q_embedding_dimstats" -> ((s, dir) => {
       // Per-dimension feature health: n, mean, population variance
@@ -6405,8 +6396,7 @@ object Queries {
       Dedup.containmentPairs(
         docs.filter(col("doc_id") % 10 =!= 0),
         docs.filter(col("doc_id") % 10 === 0),
-        "doc_id", col("text"), shingleSize = 3, minShared = 4,
-        portable = true)
+        "doc_id", col("text"), shingleSize = 3, minShared = 4)
     }),
     "q_io_roundtrip" -> ((s, dir) => {
       // Source/sink format coverage beyond parquet/CSV/JDBC: one

@@ -48,6 +48,15 @@ object Sessions {
     s
   }
 
+  /** Run `body` on a fresh [[local]] session, then [[stop]] it, also
+    * when `body` throws. The entry points' `main`s run through this:
+    * `perfbench` calls them in-process one after another, where a
+    * failed body must not leave a live session under the next call. */
+  def withLocal[A](appName: String)(body: SparkSession => A): A = {
+    val spark = local(appName)
+    try body(spark) finally stop(spark)
+  }
+
   /** Stop `spark` and clear the calling thread's active-session slot and
     * the default session. `SparkSession.stop()` leaves the thread's
     * inheritable slot pointing at the stopped session, which keeps it

@@ -15,7 +15,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `aggregate(filter(split(s, ""), ...), 0L, (acc, c) -> pmod(acc*31 +
   * ascii(c), M))`. That chain materializes one single-char STRING per
   * character and evaluates three interpreted lambda frames per step —
-  * the dominant cost of every portable-mode dedup query. This
+  * the dominant cost of every sketch-based dedup query. This
   * expression computes the identical value in a tight codegen'd loop
   * over the string's code points: no per-char allocation, no lambda
   * dispatch, stays inside whole-stage codegen.
@@ -304,20 +304,17 @@ case class DotProduct(left: Expression, right: Expression)
   *
   * Exact-equivalence contract with the formulations it replaces (the
   * q_dedup_simhash oracle replicates this arithmetic in DuckDB):
-  *  - portable=true: lane i's sign bit is
-  *    `pmod(h·A_i + B_i, 1e9+7) & 1` with A_i = ((2i+1)·104729) mod p,
-  *    B_i = (i·94906249 + 12345) mod p — [[graft.operators.Dedup
-  *    .affineA]]/[[graft.operators.Dedup.affineB]] re-derived; callers
-  *    pass polyHash values (h ∈ [0, 1e9+7), so h·A_i cannot overflow);
-  *  - portable=false: lane i's bit is `(h >> i) & 1` over xxhash64
-  *    values (identical to `(h >>> i) & 1` for i ≤ 63);
+  *  - lane i's sign bit is `pmod(h·A_i + B_i, 1e9+7) & 1` with
+  *    A_i = ((2i+1)·104729) mod p, B_i = (i·94906249 + 12345) mod p —
+  *    [[graft.operators.Dedup.affineA]]/[[graft.operators.Dedup
+  *    .affineB]] re-derived; callers pass polyHash values
+  *    (h ∈ [0, 1e9+7), so h·A_i cannot overflow);
   *  - each token adds ±1 per lane; a NULL element contributes −1 to
   *    every lane (`when(NULL === 1).otherwise(-1)` in the HOF fold);
   *  - lanes with positive sum set their bit (lane 63 = the sign bit);
   *    an empty array yields 0L (callers drop token-less docs first).
   */
-case class SimHash64(child: Expression, portable: Boolean)
-    extends UnaryExpression {
+case class SimHash64(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -334,12 +331,11 @@ case class SimHash64(child: Expression, portable: Boolean)
 
   override protected def nullSafeEval(input: Any): Any =
     SimHash64.evalStatic(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
-      portable)
+      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev,
-      c => s"${ev.value} = graft.functions.SimHash64.evalStatic($c, $portable);")
+      c => s"${ev.value} = graft.functions.SimHash64.evalStatic($c);")
 
   override protected def withNewChildInternal(
       newChild: Expression): SimHash64 =
@@ -355,9 +351,7 @@ object SimHash64 {
     Array.tabulate(64)(i => (i.toLong * 94906249L + 12345L) % Mod)
 
   /** Shared kernel for the interpreted and codegen paths. */
-  def evalStatic(
-      arr: org.apache.spark.sql.catalyst.util.ArrayData,
-      portable: Boolean): Long = {
+  def evalStatic(arr: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
     val n = arr.numElements()
     val lanes = new Array[Int](64)
     var j = 0
@@ -368,17 +362,11 @@ object SimHash64 {
       } else {
         val h = arr.getLong(j)
         var i = 0
-        if (portable)
-          while (i < 64) {
-            val bit = java.lang.Math.floorMod(h * A(i) + B(i), Mod) & 1L
-            lanes(i) += (if (bit == 1L) 1 else -1)
-            i += 1
-          }
-        else
-          while (i < 64) {
-            lanes(i) += (if (((h >> i) & 1L) == 1L) 1 else -1)
-            i += 1
-          }
+        while (i < 64) {
+          val bit = java.lang.Math.floorMod(h * A(i) + B(i), Mod) & 1L
+          lanes(i) += (if (bit == 1L) 1 else -1)
+          i += 1
+        }
       }
       j += 1
     }
@@ -700,9 +688,8 @@ object GraftFunctions {
 
   /** Per-row SimHash over an array of token hashes (see
     * [[SimHash64]]). */
-  def simhash64(hashes: Column, portable: Boolean): Column =
-    GraftColumnBridge.column(SimHash64(
-      GraftColumnBridge.expression(hashes), portable))
+  def simhash64(hashes: Column): Column =
+    GraftColumnBridge.column(SimHash64(GraftColumnBridge.expression(hashes)))
 
   /** Per-row portable MinHash signature over an array of shingle
     * hashes (see [[MinHashSig]]). */

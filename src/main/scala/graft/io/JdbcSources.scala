@@ -21,22 +21,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object JdbcSources {
 
-  /** One day's slice of a table: `WHERE tsCol >= date AND
-    * tsCol < date + 1 day` pushed into the source DB. Bounds use the
-    * JDBC `{ts '...'}` escape with the next-day computed driver-side,
-    * so the same predicate text runs on PG, SQL Server, and Derby. */
-  def dateSlice(
-      spark: SparkSession,
-      cfg: JdbcConfig,
-      table: String,
-      tsCol: String,
-      date: String,
-      fetchSize: Int = 5000): DataFrame =
-    rangeSlice(spark, cfg, table, tsCol, date,
-      java.time.LocalDate.parse(date).plusDays(1).toString, fetchSize)
-
-  /** Half-open timestamp range [start, endExclusive) — the backfill
-    * extract (O3); same portable `{ts}` bounds as [[dateSlice]]. */
+  /** Half-open timestamp range [start, endExclusive) pushed into the
+    * source DB: the day slice (S1, one day wide) and the backfill
+    * extract (O3). Bounds use the JDBC `{ts '...'}` escape, so the same
+    * predicate text runs on PG, SQL Server, and Derby. */
   def rangeSlice(
       spark: SparkSession,
       cfg: JdbcConfig,

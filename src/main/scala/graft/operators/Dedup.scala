@@ -12,11 +12,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   *
   *  - exact dedup shuffles once on the content hash (never on the raw
   *    text when `keyExpr` is a digest);
-  *  - SimHash and portable-mode MinHash signatures are PER-ROW native
-  *    expressions (a doc's signature depends only on its own row):
-  *    zero exchanges, no explode blowup — the scan stage emits
-  *    finished signatures; native-mode MinHash keeps the explode →
-  *    groupBy(min) form (one shuffle of `numHashes` longs per doc);
+  *  - SimHash and MinHash signatures are PER-ROW native expressions
+  *    (a doc's signature depends only on its own row): zero exchanges,
+  *    no explode blowup — the scan stage emits finished signatures;
   *  - LSH banding turns the quadratic all-pairs problem into a
   *    per-bucket join; bucket sizes are counted BEFORE any per-bucket
   *    materialization, so a degenerate hot bucket is dropped by a
@@ -27,11 +25,18 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    shingle text, and the prefix + length filters are provably
   *    complete for the threshold (no missed pairs).
   *
-  * Hashing comes in two modes: `xxhash64` (native, codegen'd — the
-  * 100 TB path) and a "portable" polynomial hash (base 31 mod 1e9+7)
-  * that DuckDB can replicate exactly, which the correctness-gate
-  * queries use so the approximate family gets full value-level
-  * oracles instead of rows-only checks.
+  * The sketches (MinHash, SimHash, shingle and window hashes) use one
+  * hash family: the "portable" polynomial hash [[polyHash]] (base 31
+  * mod 1e9+7) plus the affine family over it ([[affineA]],
+  * [[affineB]]). DuckDB replays it exactly, so every approximate
+  * operator gets a value-level oracle instead of a rows-only check.
+  * The price is a ~1e9-value hash space: n distinct shingles collide
+  * in about n²/2e9 pairs. The exact-count operators state that bound
+  * where it applies; the oracle replays every collision, so their
+  * check stays exact. xxhash64 remains only for internal keys whose
+  * values never reach an output: LSH band buckets, Bloom positions,
+  * edit-distance blocks and the 64-bit shingle hashes of
+  * [[ngramJaccardPairs]].
   *
   * All-new capability beyond the reference (SURVEY.md §7.2 step 7).
   */
@@ -304,87 +309,42 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** MinHash signature: `numHashes` min-hashes over the shingle set.
-    * Native mode seeds xxhash64 per hash function; portable mode
-    * applies the affine family to one polyHash per shingle (cheaper:
-    * the string is hashed once, not `numHashes` times — and DuckDB-
-    * replicable).
+  /** MinHash signature: `numHashes` min-hashes over the shingle set,
+    * the affine family applied to one polyHash per shingle (the string
+    * is hashed once, not `numHashes` times).
     *
-    * Portable mode computes PER ROW (the native [[graft.functions
-    * .MinHashSig]] tight loop over the shingle-hash array): a doc's
-    * signature depends only on its own shingles, so like the per-row
-    * [[simhash]] there is ZERO exchange — the explode → groupBy(min)
-    * formulation (kept for native mode, whose per-function xxhash64
-    * seeding needs the string per lane, and as the equivalence
-    * witness `DedupSpec` pins) shuffles `numHashes` longs per doc. */
+    * Computed PER ROW by the fused [[graft.functions.MinHashFromTokens]]
+    * kernel straight from the token array — shingle strings are never
+    * built (constructing them is the dominant cost of the signature
+    * plan). A doc's signature depends only on its own shingles, so
+    * like the per-row [[simhash]] there is ZERO exchange; `DedupSpec`
+    * pins it value-identical to the explode → groupBy(min) form. */
   def minhashSignatures(
       docs: DataFrame,
       idCol: String,
       text: Column,
       numHashes: Int = 64,
-      shingleSize: Int = 3,
-      portable: Boolean = false): DataFrame =
-    if (portable)
-      // fused kernel straight from the token array — shingle strings
-      // are never built (constructing them is the dominant cost of
-      // the signature plan; see MinHashFromTokens)
-      docs.select(col(idCol),
-        graft.functions.GraftFunctions.minhashFromTokens(
-          TextAnalysis.tokens(lower(text)), shingleSize, numHashes)
-          .as("signature"))
-    else
-      signaturesFromExploded(
-        docs.select(col(idCol),
-          explode(shinglesOfTokens(TextAnalysis.tokens(lower(text)),
-            shingleSize)).as("__sh")),
-        idCol, numHashes, portable)
+      shingleSize: Int = 3): DataFrame =
+    docs.select(col(idCol),
+      graft.functions.GraftFunctions.minhashFromTokens(
+        TextAnalysis.tokens(lower(text)), shingleSize, numHashes)
+        .as("signature"))
 
   /** Signatures from an (__id, __sh string-array) frame — the entry
     * the cached-[[shingleFrame]] pipelines use (the frame is needed
     * anyway for the exact-Jaccard verify joins, so signatures read the
-    * SAME cache). Portable: per-row native expression, no shuffle —
-    * total over shinglesOfTokens-built frames (≥1 non-null shingle per
-    * doc, so no null signatures arise; a degenerate caller-built empty
-    * array yields NULL, which downstream banding's generate simply
-    * drops). Native: explode → groupBy(min). */
+    * SAME cache). Per-row native expression, no shuffle — total over
+    * shinglesOfTokens-built frames (≥1 non-null shingle per doc, so no
+    * null signatures arise; a degenerate caller-built empty array
+    * yields NULL, which downstream banding's generate simply drops). */
   private def signaturesOfShingles(
       sh: DataFrame,
       idCol: String,
-      numHashes: Int,
-      portable: Boolean): DataFrame =
-    if (portable)
-      sh.select(col("__id").as(idCol),
-        graft.functions.GraftFunctions.minhashSig(
-          transform(col("__sh"), s => polyHash(s)), numHashes)
-          .as("signature"))
-    else
-      signaturesFromExploded(
-        sh.select(col("__id").as(idCol), explode(col("__sh")).as("__sh")),
-        idCol, numHashes, portable)
-
-  private def signaturesFromExploded(
-      exploded: DataFrame, // (idCol, __sh string)
-      idCol: String,
-      numHashes: Int,
-      portable: Boolean): DataFrame = {
-    // Portable mode: with the codegen'd PolyHash the per-occurrence
-    // hash is a ~20-step integer loop — cheaper than the
-    // distinct+join-back rendezvous it used to hide behind (which cost
-    // a full extra shuffle of the exploded shingle stream).
-    val withBase =
-      if (portable) exploded.withColumn("__h", polyHash(col("__sh")))
-      else exploded
-    val mins = (0 until numHashes).map { i =>
-      val h = if (portable) affine(i, col("__h"))
-              else xxhash64(lit(i), col("__sh"))
-      min(h).as(s"h$i")
-    }
-    withBase
-      .groupBy(col(idCol))
-      .agg(mins.head, mins.tail: _*)
-      .select(col(idCol),
-        array((0 until numHashes).map(i => col(s"h$i")): _*).as("signature"))
-  }
+      numHashes: Int): DataFrame =
+    sh.select(col("__id").as(idCol),
+      graft.functions.GraftFunctions.minhashSig(
+        transform(col("__sh"), s => polyHash(s)), numHashes)
+        .as("signature"))
 
   /** LSH candidate pairs from MinHash signatures: split each signature
     * into `bands` bands of `numHashes / bands` rows, bucket docs by
@@ -567,6 +527,11 @@ object Dedup {
     * large right side, disable the broadcast and it degrades to one
     * shuffle on the shingle hash.
     *
+    * Collision bound: shingles are counted by [[polyHash]] value, a
+    * ~1e9-value space, so n distinct shingles collide in about
+    * n²/2e9 pairs; a collision can add one to `n_shared`. The oracle
+    * replays the same hash, so its check stays exact.
+    *
     * Returns (train_id, eval_id, n_shared), n_shared ≥ minShared.
     */
   def containmentPairs(
@@ -576,13 +541,9 @@ object Dedup {
       text: Column,
       shingleSize: Int = 3,
       minShared: Int = 2,
-      portable: Boolean = false,
       broadcastEval: Boolean = true): DataFrame = {
     require(minShared > 0)
     def shingleHashes(df: DataFrame, out: String): DataFrame = {
-      val h =
-        if (portable) polyHash(col("__s"))
-        else xxhash64(col("__s"))
       // stage the token array as an attribute BEFORE shingling — the
       // inline form re-tokenizes once per shingle (HOFs defeat
       // subexpression elimination; same trap shingleFrame documents)
@@ -590,7 +551,7 @@ object Dedup {
           TextAnalysis.tokens(lower(text)).as("__tk"))
         .select(col(out),
           explode(shinglesOfTokens(col("__tk"), shingleSize)).as("__s"))
-        .select(col(out), h.as("__h"))
+        .select(col(out), polyHash(col("__s")).as("__h"))
         .distinct()
     }
     val trainSh = shingleHashes(corpus, "train_id")
@@ -641,11 +602,10 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 64,
       bands: Int = 0,
-      shingleSize: Int = 3,
-      portable: Boolean = false): DataFrame = {
+      shingleSize: Int = 3): DataFrame = {
     val b = if (bands > 0) bands else lshBanding(numHashes, threshold)
     val sh = shingleFrame(docs, idCol, text, shingleSize)
-    val sigs = signaturesOfShingles(sh, idCol, numHashes, portable)
+    val sigs = signaturesOfShingles(sh, idCol, numHashes)
     val cand = lshCandidatePairs(sigs, idCol, numHashes, b)
     val pairs = cand
       .join(sh.select(col("__id").as("a"), col("__sh").as("sh_a")), Seq("a"))
@@ -681,11 +641,10 @@ object Dedup {
       threshold: Double = 0.8,
       numHashes: Int = 64,
       bands: Int = 0,
-      shingleSize: Int = 3,
-      portable: Boolean = false): DataFrame = {
+      shingleSize: Int = 3): DataFrame = {
     val b = if (bands > 0) bands else lshBanding(numHashes, threshold)
     val sh = shingleFrame(docs, idCol, text, shingleSize)
-    val sigs = signaturesOfShingles(sh, idCol, numHashes, portable)
+    val sigs = signaturesOfShingles(sh, idCol, numHashes)
     val cand = lshCandidatePairs(sigs, idCol, numHashes, b)
     val est = round(minhashJaccard(col("sig_a"), col("sig_b")), 6)
       .cast(DecimalType(18, 6))
@@ -750,7 +709,7 @@ object Dedup {
       s"true-pair floor must be a proper fraction: $pairNum/$pairDen")
     val width = numHashes / bands
     val sh = shingleFrame(docs, idCol, text, shingleSize)
-    val sigs = signaturesOfShingles(sh, idCol, numHashes, portable = true)
+    val sigs = signaturesOfShingles(sh, idCol, numHashes)
     // AllPairs prefix filter at the integer threshold pairNum/pairDen:
     // a doc needs only its n − ceil(n·p/q) + 1 RAREST shingles indexed
     val inv = sh.select(col("__id"), size(col("__sh")).as("__n"),
@@ -812,67 +771,46 @@ object Dedup {
     ownResult(out, sh)
   }
 
-  /** 64-bit SimHash over whitespace tokens. Native mode: bit i of the
-    * token's xxhash64 contributes ±1 to lane i. Portable mode: lane i's
-    * contribution is the parity of the i-th affine transform of the
-    * token's polyHash — same statistics, DuckDB-replicable.
+  /** 64-bit SimHash over whitespace tokens: lane i's ±1 contribution
+    * is the parity of the i-th affine transform of the token's
+    * [[polyHash]] — DuckDB-replicable.
     *
     * A document's SimHash depends only on that document's row, so this
-    * is the PER-ROW formulation — the 64 lane sums fold over the token
-    * array with higher-order functions, entirely inside the scan stage:
-    * ZERO exchanges, no explode row blowup. At 100 TB that is the
-    * difference between "shuffle 64 longs per doc" (the old explode +
-    * groupBy formulation, kept as [[simhashViaGroupBy]] and pinned
-    * value-identical by `SimhashSpec`) and "never shuffle at all".
-    * Docs with no tokens are dropped — the exact semantics the explode
-    * formulation has (no token rows ⇒ no group). */
+    * is the PER-ROW formulation — the native codegen'd
+    * [[graft.functions.SimHash64]] expression folds the 64 lane sums
+    * over the token-hash array in one tight loop per row, entirely
+    * inside the scan stage: ZERO exchanges, no explode row blowup. At
+    * 100 TB that is the difference between "shuffle 64 longs per doc"
+    * (the explode + groupBy formulation, kept as [[simhashViaGroupBy]]
+    * and pinned value-identical by `DedupSpec`) and "never shuffle at
+    * all". Docs with no tokens are dropped — the exact semantics the
+    * explode formulation has (no token rows ⇒ no group). */
   def simhash(
       docs: DataFrame,
       idCol: String,
-      text: Column,
-      portable: Boolean = false): DataFrame =
+      text: Column): DataFrame =
     docs
-      .select(col(idCol), tokenHashes(text, portable).as("__th"))
+      .select(col(idCol),
+        transform(TextAnalysis.tokens(lower(text)), t => polyHash(t))
+          .as("__th"))
       .filter(size(col("__th")) > 0)
       .select(col(idCol),
-        simhashOfHashes(col("__th"), portable).as("simhash"))
-
-  /** Hashed whitespace tokens of `text` (lowercased): xxhash64 in
-    * native mode, [[polyHash]] in portable mode. */
-  private def tokenHashes(text: Column, portable: Boolean): Column =
-    transform(TextAnalysis.tokens(lower(text)),
-      t => if (portable) polyHash(t) else xxhash64(t))
-
-  /** Per-row SimHash over an array of token hashes — the native
-    * codegen'd [[graft.functions.SimHash64]] expression (one static
-    * tight-loop call per row; a nested-HOF fold here costs 64
-    * interpreted lambda frames + a fresh 64-int array PER TOKEN).
-    * Lane arithmetic is byte-identical to the DuckDB oracle replica
-    * in both hash modes — see the expression's scaladoc for the
-    * pinned contract. */
-  private[graft] def simhashOfHashes(
-      hashes: Column, portable: Boolean): Column =
-    graft.functions.GraftFunctions.simhash64(hashes, portable)
+        graft.functions.GraftFunctions.simhash64(col("__th")).as("simhash"))
 
   /** The round-7 explode + groupBy SimHash formulation — one shuffle
     * of 64 map-side-combined lane sums per doc. Retained as the
-    * equivalence witness for the shuffle-free [[simhash]] (SimhashSpec
-    * pins them value-identical on the documents fixture in both hash
-    * modes); prefer [[simhash]] everywhere. */
+    * equivalence witness for the shuffle-free [[simhash]] (`DedupSpec`
+    * pins them value-identical on the documents fixture); prefer
+    * [[simhash]] everywhere. */
   private[graft] def simhashViaGroupBy(
       docs: DataFrame,
       idCol: String,
-      text: Column,
-      portable: Boolean = false): DataFrame = {
-    val tok0 = docs.select(col(idCol),
-      explode(TextAnalysis.tokens(lower(text))).as("__t"))
-    val tok =
-      if (portable) tok0.withColumn("__h", polyHash(col("__t")))
-      else tok0.withColumn("__h", xxhash64(col("__t")))
+      text: Column): DataFrame = {
+    val tok = docs.select(col(idCol),
+        explode(TextAnalysis.tokens(lower(text))).as("__t"))
+      .withColumn("__h", polyHash(col("__t")))
     val laneSums = (0 until 64).map { i =>
-      val bit =
-        if (portable) affine(i, col("__h")).bitwiseAND(1L)
-        else shiftright(col("__h"), i).bitwiseAND(1L)
+      val bit = affine(i, col("__h")).bitwiseAND(1L)
       sum(when(bit === 1L, 1).otherwise(-1)).as(s"b$i")
     }
     val lanes = tok.groupBy(col(idCol)).agg(laneSums.head, laneSums.tail: _*)
@@ -894,10 +832,9 @@ object Dedup {
       docs: DataFrame,
       idCol: String,
       text: Column,
-      maxHamming: Int = 3,
-      portable: Boolean = false): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     require(maxHamming < 16, "quadrant blocking needs maxHamming < 16")
-    val sh = simhash(docs, idCol, text, portable)
+    val sh = simhash(docs, idCol, text)
     val blocked = sh.select(
       col(idCol),
       col("simhash"),
@@ -995,20 +932,21 @@ object Dedup {
     * leaves the scan); the frequency count is one map-side-combined
     * shuffle on the hash; tagging each window with its corpus
     * frequency is a same-key shuffle join of 16-byte rows; the final
-    * per-doc rollup shuffles on the doc id. `portable = true` swaps
-    * xxhash64 for the oracle-replicable polynomial family (so even a
-    * hash collision replicates in the DuckDB gate). */
+    * per-doc rollup shuffles on the doc id.
+    *
+    * Collision bound: windows are counted by [[polyHash]] value, a
+    * ~1e9-value space, so n distinct windows collide in about n²/2e9
+    * pairs; a collision marks both windows duplicated. The oracle
+    * replays the same hash, so even a collision replicates and the
+    * check stays exact. */
   def windowDupStats(
       docs: DataFrame,
       idCol: String,
       text: Column,
       width: Int = 40,
-      stride: Int = 10,
-      portable: Boolean = false): DataFrame = {
+      stride: Int = 10): DataFrame = {
     require(width > 0, s"width must be positive: $width")
     require(stride > 0, s"stride must be positive: $stride")
-    val hashOf: Column => Column =
-      if (portable) polyHash else xxhash64(_)
     // The (id, hash) window frame feeds BOTH the frequency aggregate
     // and the probe side of the join — unpersisted, the document scan
     // + window expansion + hashing subtree would run twice (the freq
@@ -1021,7 +959,7 @@ object Dedup {
           greatest(length(col("__t")) - lit(width - 1), lit(1)),
           lit(stride))).as("__p"))
       .select(col("id"),
-        hashOf(col("__t").substr(col("__p"), lit(width))).as("__h"))
+        polyHash(col("__t").substr(col("__p"), lit(width))).as("__h"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val freq = windows.groupBy(col("__h"))
       .agg(count(lit(1)).as("__freq"),
@@ -1048,21 +986,23 @@ object Dedup {
     * combined); one hash-keyed join back. No window over waves, so a
     * new wave recomputes in O(pairs), not O(waves²).
     *
+    * Collision bound: shingles are counted by [[polyHash]] value, a
+    * ~1e9-value space, so n distinct shingles collide in about
+    * n²/2e9 pairs; a collision counts two shingles as one. The oracle
+    * replays the same hash, so its check stays exact.
+    *
     * Returns (wave, n_shingles, n_novel, novelty), novelty 6 dp. */
   def shingleNovelty(
       docs: DataFrame,
       waveCol: Column,
       text: Column,
-      shingleSize: Int = 3,
-      portable: Boolean = false): DataFrame = {
-    val hashOf: Column => Column =
-      if (portable) polyHash else xxhash64(_)
+      shingleSize: Int = 3): DataFrame = {
     val pairs = docs
       .select(waveCol.cast(LongType).as("wave"),
         TextAnalysis.tokens(lower(text)).as("__tk"))
       .select(col("wave"),
         explode(shinglesOfTokens(col("__tk"), shingleSize)).as("__s"))
-      .select(col("wave"), hashOf(col("__s")).as("__h"))
+      .select(col("wave"), polyHash(col("__s")).as("__h"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val first = pairs.groupBy(col("__h")).agg(min(col("wave")).as("__first"))
@@ -1093,22 +1033,24 @@ object Dedup {
     * intentionally, since at scale the |sources|² zero matrix is
     * noise. Jaccard in integer ppm: common·10⁶ div (n_a+n_b−common).
     *
+    * Collision bound: shingles are counted by [[polyHash]] value, a
+    * ~1e9-value space, so n distinct shingles collide in about
+    * n²/2e9 pairs; a collision counts two shingles as one. The oracle
+    * replays the same hash, so its check stays exact.
+    *
     * Returns (src_a, src_b, n_a, n_b, n_common, jaccard_ppm),
     * src_a < src_b lexicographically. */
   def sourceOverlap(
       docs: DataFrame,
       sourceCol: Column,
       text: Column,
-      shingleSize: Int = 3,
-      portable: Boolean = false): DataFrame = {
-    val hashOf: Column => Column =
-      if (portable) polyHash else xxhash64(_)
+      shingleSize: Int = 3): DataFrame = {
     val pairs = docs
       .select(sourceCol.cast(StringType).as("src"),
         TextAnalysis.tokens(lower(text)).as("__tk"))
       .select(col("src"),
         explode(shinglesOfTokens(col("__tk"), shingleSize)).as("__s"))
-      .select(col("src"), hashOf(col("__s")).as("__h"))
+      .select(col("src"), polyHash(col("__s")).as("__h"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val sizes = pairs.groupBy(col("src")).agg(count(lit(1)).as("n"))

@@ -149,13 +149,11 @@ object Similarity {
       embCol: String,
       bits: Int = 32,
       bands: Int = 4,
-      seed: Int = 42,
-      portable: Boolean = false,
       targetCohort: Int = 16,
       probes: Int = 0): DataFrame = {
     val (caug, qaug) = mipsAugmented(corpus, queries, idCol, embCol)
     lshScoredCandidates(caug, qaug, idCol, embCol,
-      bits, bands, seed, portable, excludeSelf = true, targetCohort,
+      bits, bands, excludeSelf = true, targetCohort,
       probes = probes)
       .select(col("query_id"), col("corpus_id"))
   }
@@ -189,14 +187,12 @@ object Similarity {
       k: Int,
       bits: Int = 32,
       bands: Int = 4,
-      seed: Int = 42,
-      portable: Boolean = false,
       targetCohort: Int = 16,
       probes: Int = 0): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     val (caug, qaug) = mipsAugmented(corpus, queries, idCol, embCol)
     val scored = lshScoredCandidates(caug, qaug, idCol, embCol,
-      bits, bands, seed, portable, excludeSelf = true, targetCohort,
+      bits, bands, excludeSelf = true, targetCohort,
       probes = probes)
       .select(col("query_id"), col("corpus_id"),
         dot(col("corpus_emb"), col("query_emb")).as("__ip"))
@@ -329,16 +325,11 @@ object Similarity {
     }.reduce(_ unionAll _)
   }
 
-  /** Deterministic pseudo-random hyperplanes: plane p, dim d weight =
-    * a double in [-1, 1) derived from xxhash64(seed, p, d). Generated as
-    * a plan-time literal-free expression so the same planes exist on
-    * every executor with zero driver→executor data movement. */
-  private def planeWeight(p: Column, d: Column, seed: Int): Column =
-    (xxhash64(lit(seed), p, d).cast(DoubleType) / lit(Long.MaxValue.toDouble))
-
-  /** Portable plane weight (integer-valued, ~uniform in [-2000, 2000]):
-    * the same arithmetic generates the literal plane arrays in the
-    * DuckDB oracle, so SRP signatures become value-checkable.
+  /** SRP plane weight of plane p, dim d (integer-valued, ~uniform in
+    * [-2000, 2000]): deterministic, so the same planes exist on every
+    * executor with zero driver→executor data movement, and the same
+    * arithmetic generates the literal plane arrays in the DuckDB
+    * oracle, so SRP signatures are value-checkable.
     * Quadratic mixing matters: a LINEAR formula in (p, d) makes every
     * plane a cyclic shift of one arithmetic progression — correlated
     * planes, recall collapse. Squaring the seed decorrelates them
@@ -349,34 +340,15 @@ object Similarity {
   }
 
   /** Random-hyperplane (SRP) LSH signature: `bits` sign bits packed
-    * into a long. Two vectors with small angle agree on most bits.
-    * `portable = true` switches to the oracle-replicable plane family. */
-  def srpSignature(
-      emb: Column,
-      bits: Int = 16,
-      seed: Int = 42,
-      portable: Boolean = false): Column = {
+    * into a long, over the [[planeWeightPortable]] planes. Two vectors
+    * with small angle agree on most bits. Runs the native codegen'd
+    * [[graft.functions.SrpSignaturePortable]] expression — one tight
+    * bits×dims double loop with left-to-right IEEE accumulation, the
+    * order the DuckDB oracle replays (pinned by ExpressionsSpec and
+    * the q_sim_lsh/q_sim_cosine_dedup oracles). */
+  def srpSignature(emb: Column, bits: Int = 16): Column = {
     require(bits <= 63, "signature must fit a long")
-    // Portable mode runs the native codegen'd expression — one tight
-    // bits×dims double loop, bit-identical to the HOF fold it replaced
-    // (same weights, same left-to-right IEEE accumulation; equivalence
-    // pinned by ExpressionsSpec and the q_sim_lsh/q_sim_cosine_dedup
-    // oracles). Native (xxhash64-seeded) mode keeps the HOF form.
-    if (portable)
-      graft.functions.GraftFunctions.srpSignaturePortable(emb, bits)
-    else
-      aggregate(
-        transform(sequence(lit(0), lit(bits - 1)), p => {
-          val proj = aggregate(
-            zip_with(emb, sequence(lit(0), size(emb) - 1),
-              (x, d) => x.cast(DoubleType) * planeWeight(p, d, seed)),
-            lit(0.0), (acc, x) => acc + x)
-          when(proj >= 0,
-            call_function("shiftleft", lit(1L), p.cast(IntegerType)))
-            .otherwise(lit(0L))
-        }),
-        lit(0L),
-        (acc, x) => acc.bitwiseOR(x))
+    graft.functions.GraftFunctions.srpSignaturePortable(emb, bits)
   }
 
   /** Approximate NN via SRP-LSH with multi-probe over band keys: both
@@ -407,12 +379,10 @@ object Similarity {
       k: Int,
       bits: Int = 32,
       bands: Int = 4,
-      seed: Int = 42,
-      portable: Boolean = false,
       excludeSelf: Boolean = false,
       targetCohort: Int = 16): DataFrame = {
     val scored = lshScoredCandidates(corpus, queries, idCol, embCol,
-      bits, bands, seed, portable, excludeSelf, targetCohort)
+      bits, bands, excludeSelf, targetCohort)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("corpus_id").asc)
     scored.select(col("query_id"), col("corpus_id"), col("cos"))
@@ -435,8 +405,6 @@ object Similarity {
       embCol: String,
       bits: Int,
       bands: Int,
-      seed: Int,
-      portable: Boolean,
       excludeSelf: Boolean,
       targetCohort: Int,
       corpusExtra: Seq[String] = Nil,
@@ -452,7 +420,7 @@ object Similarity {
     val mask = (1L << bandBits) - 1
     def withBands(
         df: DataFrame, side: String, extra: Seq[String]): DataFrame = {
-      val sig = srpSignature(col(embCol), effBits, seed, portable)
+      val sig = srpSignature(col(embCol), effBits)
       df.select(col(idCol).as(s"${side}_id") +:
           col(embCol).as(s"${side}_emb") +: sig.as("__sig") +:
           extra.map(col): _*)
@@ -528,8 +496,7 @@ object Similarity {
   def twoNNDimension(
       corpus: DataFrame,
       idCol: String,
-      embCol: String,
-      portable: Boolean = false): DataFrame = {
+      embCol: String): DataFrame = {
     // distinct-embedding corpus side: one linear groupBy; reps carry
     // their multiplicity. min(id) is only a stable rep label — cos
     // values don't depend on it.
@@ -542,8 +509,7 @@ object Similarity {
     // the multiplicity rides the band join (key-functional on the
     // rep id) — zero corpus-sized joins back
     val scored = lshScoredCandidates(reps, corpus, idCol, embCol,
-      bits = 32, bands = 4, seed = 42, portable = portable,
-      excludeSelf = false, targetCohort = 16,
+      bits = 32, bands = 4, excludeSelf = false, targetCohort = 16,
       corpusExtra = Seq("__m"))
     val cand = scored
       .withColumn("__cap",
@@ -605,11 +571,10 @@ object Similarity {
       k: Int,
       bits: Int = 32,
       bands: Int = 4,
-      portable: Boolean = false,
       targetCohort: Int = 16): DataFrame = {
     val nn = lshTopKPerQuery(corpus, corpus, idCol, embCol, k,
-      bits = bits, bands = bands, portable = portable,
-      excludeSelf = true, targetCohort = targetCohort)
+      bits = bits, bands = bands, excludeSelf = true,
+      targetCohort = targetCohort)
     val e = nn.select(
         least(col("query_id"), col("corpus_id")).as("a"),
         greatest(col("query_id"), col("corpus_id")).as("b"))
@@ -1775,14 +1740,12 @@ object Similarity {
       embCol: String,
       threshold: Double = 0.95,
       bits: Int = 32,
-      bands: Int = 4,
-      seed: Int = 42,
-      portable: Boolean = false): DataFrame = {
+      bands: Int = 4): DataFrame = {
     val bandBits = bits / bands
     val mask = (1L << bandBits) - 1
     val emb = df.select(col(idCol).as("__id"), col(embCol).as("__emb"))
     val sig = df.select(col(idCol).as("__id"),
-        srpSignature(col(embCol), bits, seed, portable).as("__sig"))
+        srpSignature(col(embCol), bits).as("__sig"))
       .select(col("__id"),
         posexplode(transform(sequence(lit(0), lit(bands - 1)),
           b => call_function("shiftrightunsigned", col("__sig"),

@@ -7,10 +7,9 @@ import graft.io.{JdbcConfig, SqlDialect}
   * csv_to_mssqldb.py:79-106): identical keys and defaults, so a user of
   * the reference can point the same `.env` at this engine.
   *
-  * Sandbox additions (clearly marked GRAFT_*): a JDBC target URL
-  * override so the demo/test environment can run against embedded
-  * Derby, and a parquet source dir standing in for the MSSQL source
-  * where no DB is reachable.
+  * Sandbox additions (clearly marked GRAFT_*): JDBC target and source
+  * URL overrides, each with a dialect name, so the demo/test
+  * environment can run against embedded Derby.
   */
 final case class Config(
     // MSSQL source (DB_* keys, orders_daily.py:80-88)
@@ -41,7 +40,6 @@ final case class Config(
     // GRAFT sandbox overrides
     targetUrlOverride: Option[String],
     targetDialectName: String,
-    sourceParquetDir: Option[String],
     sourceUrlOverride: Option[String] = None,
     sourceDialectName: String = "sqlserver") {
 
@@ -68,22 +66,17 @@ final case class Config(
       batchSize = stagingLoadChunkSize)
   }
 
-  def sourceDialect: SqlDialect = sourceUrlOverride match {
-    case Some(_) => SqlDialect.Derby
-    case None => sourceDialectName.toLowerCase match {
-      case "postgres" | "postgresql" => SqlDialect.Postgres
-      case "derby"                   => SqlDialect.Derby
-      case _                         => SqlDialect.SqlServer
-    }
-  }
+  def sourceDialect: SqlDialect = Config.dialectNamed(sourceDialectName)
+  def sourceSchemaName: String = Config.schemaOf(sourceDialect)
+  def targetDialect: SqlDialect = Config.dialectNamed(targetDialectName)
+  def targetSchemaName: String = Config.schemaOf(targetDialect)
+}
 
-  def sourceSchemaName: String = sourceDialect match {
-    case SqlDialect.Postgres  => "public"
-    case SqlDialect.SqlServer => "dbo"
-    case SqlDialect.Derby     => "APP"
-  }
+object Config {
 
-  def targetDialect: SqlDialect = targetDialectName.toLowerCase match {
+  /** The dialect a `GRAFT_*_DIALECT` name selects, for source and
+    * target alike; an unknown name fails. */
+  def dialectNamed(name: String): SqlDialect = name.toLowerCase match {
     case "postgres" | "postgresql" => SqlDialect.Postgres
     case "sqlserver" | "mssql"     => SqlDialect.SqlServer
     case "derby"                   => SqlDialect.Derby
@@ -91,16 +84,13 @@ final case class Config(
       throw new IllegalArgumentException(s"unknown dialect: $other")
   }
 
-  /** Target schema name per dialect (public for PG, dbo for MSSQL, APP
-    * for Derby) — the reference hard-codes public./dbo. the same way. */
-  def targetSchemaName: String = targetDialect match {
+  /** Schema name per dialect (public for PG, dbo for MSSQL, APP for
+    * Derby) — the reference hard-codes public./dbo. the same way. */
+  def schemaOf(d: SqlDialect): String = d match {
     case SqlDialect.Postgres  => "public"
     case SqlDialect.SqlServer => "dbo"
     case SqlDialect.Derby     => "APP"
   }
-}
-
-object Config {
 
   def fromEnv(env: Map[String, String] = sys.env): Config = {
     def get(k: String, d: String) = env.getOrElse(k, d)
@@ -132,9 +122,8 @@ object Config {
       targetUrlOverride = env.get("GRAFT_TARGET_URL"),
       targetDialectName = get("GRAFT_TARGET_DIALECT",
         if (env.contains("GRAFT_TARGET_URL")) "derby" else "postgres"),
-      sourceParquetDir = env.get("GRAFT_SOURCE_PARQUET_DIR")
-        .orElse(env.get("SPARK_GRAFT_SF_DIR")),
       sourceUrlOverride = env.get("GRAFT_SOURCE_URL"),
-      sourceDialectName = get("GRAFT_SOURCE_DIALECT", "sqlserver"))
+      sourceDialectName = get("GRAFT_SOURCE_DIALECT",
+        if (env.contains("GRAFT_SOURCE_URL")) "derby" else "sqlserver"))
   }
 }

@@ -214,8 +214,7 @@ object CsvSeed {
     val path = opts.get("csv")
       .orElse(cfg.csvFilePath)
       .getOrElse(sys.error("missing --csv (or CSV_FILE_PATH)"))
-    val spark = Sessions.local("graft-csv-seed")
-    seed(spark, cfg, se, path, opts.get("run-date"))
-    Sessions.stop(spark)
+    Sessions.withLocal("graft-csv-seed")(
+      seed(_, cfg, se, path, opts.get("run-date")))
   }
 }

@@ -1,6 +1,6 @@
 package graft.run
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, expr}
 
 import graft.core.{Sessions, Tables}
@@ -151,20 +151,21 @@ object Curate {
     val recipe = CurationRecipe.parse(
       new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(recipePath)), "UTF-8"))
-    val spark: SparkSession = Sessions.local("graft-curate")
-    // --staged <dir>: materialize stages and resume across re-runs
-    // (preemption-safe; same result as the in-memory composition)
-    val result = arg("staged") match {
-      case Some(stageDir) =>
-        recipe.runStaged(Tables.documents(spark, sfDir), stageDir)
-      case None => recipe.run(Tables.documents(spark, sfDir))
+    Sessions.withLocal("graft-curate") { spark =>
+      // --staged <dir>: materialize stages and resume across re-runs
+      // (preemption-safe; same result as the in-memory composition)
+      val result = arg("staged") match {
+        case Some(stageDir) =>
+          recipe.runStaged(Tables.documents(spark, sfDir), stageDir)
+        case None => recipe.run(Tables.documents(spark, sfDir))
+      }
+      result.write.mode("overwrite").partitionBy("shard").parquet(out)
+      result.groupBy(col("shard")).count().orderBy(col("shard"))
+        .collect()
+        .foreach(r =>
+          println(s"[curate] shard=${r.get(0)} rows=${r.get(1)}"))
+      println(s"[curate] total=${result.count()} -> $out")
+      result.unpersist(false)
     }
-    result.write.mode("overwrite").partitionBy("shard").parquet(out)
-    result.groupBy(col("shard")).count().orderBy(col("shard"))
-      .collect()
-      .foreach(r => println(s"[curate] shard=${r.get(0)} rows=${r.get(1)}"))
-    println(s"[curate] total=${result.count()} -> $out")
-    result.unpersist(false)
-    Sessions.stop(spark)
   }
 }

@@ -52,9 +52,7 @@ object DailySync {
       case Some(from) => Args.dateRange(from, runDate)
       case None       => Seq(runDate)
     }
-    val spark = Sessions.local("graft-daily-sync")
-    sync(spark, e, opts, dates)
-    Sessions.stop(spark)
+    Sessions.withLocal("graft-daily-sync")(sync(_, e, opts, dates))
   }
 
   /** Sync `dates` in order, then refresh the side table once if `e`

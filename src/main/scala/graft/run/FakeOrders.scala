@@ -82,13 +82,13 @@ object FakeOrders {
     val opts = Args.parse(args)
     val out = opts.get("out").getOrElse("tmp/fake_orders_csv")
     val n = opts.get("num-orders").map(_.toLong).getOrElse(1000L)
-    val spark = Sessions.local("graft-fake-orders")
-    // single CSV part at fixture scale; drop the coalesce to fan out
-    csvFrame(spark, n).coalesce(1).write
-      .option("header", "true")
-      .mode("overwrite")
-      .csv(out)
+    Sessions.withLocal("graft-fake-orders") { spark =>
+      // single CSV part at fixture scale; drop the coalesce to fan out
+      csvFrame(spark, n).coalesce(1).write
+        .option("header", "true")
+        .mode("overwrite")
+        .csv(out)
+    }
     println(s"[fake-orders] wrote $n rows to $out")
-    Sessions.stop(spark)
   }
 }

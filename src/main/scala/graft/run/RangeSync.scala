@@ -38,9 +38,8 @@ object RangeSync {
     val end = opts.required("end-date")
     val dates = Args.dateRange(start, end) // validates start <= end
     val e = Entities.named(opts.get("entity").getOrElse("orders"))
-    val spark = Sessions.local("graft-range-sync")
-    range(spark, e, opts, start, end, dates)
-    Sessions.stop(spark)
+    Sessions.withLocal("graft-range-sync")(
+      range(_, e, opts, start, end, dates))
   }
 
   /** Backfill [start, end]: one pushed range scan, one upsert, per-date

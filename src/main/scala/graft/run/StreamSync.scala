@@ -22,21 +22,20 @@ object StreamSync {
   def main(args: Array[String]): Unit = {
     val opts = Args.parse(args)
     val out = opts.required("out")
-    val spark = Sessions.local("graft-stream-sync")
-
-    val agg = Streams.windowedCounts(
-      Streams.eventsStream(spark, opts.sfDir))
-    val q = agg.writeStream
-      .format("parquet")
-      .option("path", s"$out/data")
-      .option("checkpointLocation", s"$out/checkpoint")
-      // parquet sink requires Append; watermark closes windows
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val n = spark.read.parquet(s"$out/data").count()
-    println(s"[stream-sync] windows appended so far: $n")
-    Sessions.stop(spark)
+    Sessions.withLocal("graft-stream-sync") { spark =>
+      val agg = Streams.windowedCounts(
+        Streams.eventsStream(spark, opts.sfDir))
+      val q = agg.writeStream
+        .format("parquet")
+        .option("path", s"$out/data")
+        .option("checkpointLocation", s"$out/checkpoint")
+        // parquet sink requires Append; watermark closes windows
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      val n = spark.read.parquet(s"$out/data").count()
+      println(s"[stream-sync] windows appended so far: $n")
+    }
   }
 }

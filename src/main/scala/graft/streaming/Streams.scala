@@ -1458,13 +1458,11 @@ object Streams {
     * deterministic). */
   def nearDupFlags(
       docs: DataFrame,
-      maxHamming: Int = 3,
-      portable: Boolean = false)(
+      maxHamming: Int = 3)(
       implicit spark: SparkSession): Dataset[BandFlag] = {
     import spark.implicits._
     require(maxHamming < 16, "quadrant blocking needs maxHamming < 16")
-    val sh = graft.operators.Dedup.simhash(docs, "doc_id", col("text"),
-      portable)
+    val sh = graft.operators.Dedup.simhash(docs, "doc_id", col("text"))
     sh.select(col("doc_id"), col("simhash"),
         posexplode(array((0 until 4).map(q =>
           shiftrightunsigned(col("simhash"), q * 16)

@@ -19,6 +19,36 @@ class SessionsSpec extends AnyFunSuite {
     val (clear, log) = ChildJvm.run(StoppedSlotProbe, out.toString)
     assert(clear, s"a stopped session stayed in the slot:\n${log.takeRight(4000)}")
   }
+
+  test("an entry point's main whose body throws still stops its session") {
+    val (stopped, log) = ChildJvm.run(FailingMainProbe)
+    assert(stopped, s"a failed main left its session running:\n" +
+      log.takeRight(4000))
+  }
+}
+
+/** Child-JVM body: run `DailySync.main` on a body that fails after the
+  * session is up (a transactions sync without a source URL, against an
+  * in-memory Derby target), then check that the SparkContext is stopped
+  * (no live `SparkEnv`) and no active or default session is left.
+  * Exits 0 when the main threw and left nothing running. */
+object FailingMainProbe {
+  def main(args: Array[String]): Unit = {
+    val err = try {
+      graft.run.DailySync.main(Array("--entity", "transactions",
+        "--run-date", "2025-03-01",
+        "--target-url", "jdbc:derby:memory:failing_main;create=true"))
+      None
+    } catch { case e: Throwable => Some(e) }
+    val threwInBody = err.exists(e =>
+      String.valueOf(e.getMessage).contains("syncs DB-to-DB"))
+    val contextLive = org.apache.spark.SparkEnv.get != null
+    val sessionLeft = SparkSession.getActiveSession.isDefined ||
+      SparkSession.getDefaultSession.isDefined
+    println(s"threw in body: $threwInBody ($err), context live: " +
+      s"$contextLive, session left: $sessionLeft")
+    System.exit(if (threwInBody && !contextLive && !sessionLeft) 0 else 1)
+  }
 }
 
 /** Child-JVM body: stop a session with [[Sessions.stop]], then run an

@@ -217,11 +217,12 @@ class SinkDerbySpec extends SparkSpecBase {
     assert(sortedRows(JdbcSources.readTable(spark, cfg, ck)).isEmpty)
   }
 
-  test("JdbcSources.dateSlice pushes a portable half-open predicate (S1)") {
+  test("JdbcSources.rangeSlice over one day pushes a portable half-open " +
+      "predicate (S1)") {
     ensureTables()
     RefreshSink.write(df(targetRows: _*), cfg, dialect, tbl)
-    val got = JdbcSources.dateSlice(spark, cfg, tbl,
-      "\"ordercreatedat\"", "2025-01-02")
+    val got = JdbcSources.rangeSlice(spark, cfg, tbl,
+      "\"ordercreatedat\"", "2025-01-02", "2025-01-03")
     assert(got.collect().map(_.getAs[Long]("orderid")).toSeq == Seq(2L))
     // NULL scan (S2) — complement of the slice family
     val nulls = JdbcSources.nullSlice(spark, cfg, tbl, "\"ordercreatedat\"")

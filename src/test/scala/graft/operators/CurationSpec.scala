@@ -141,13 +141,11 @@ class CurationSpec extends SparkSpecBase {
     val ev = Seq((10L, "cc dd ee ff gg hh")).toDF("doc_id", "text")
     // eval 10 has shingles {cc dd ee, dd ee ff, ee ff gg, ff gg hh}; all
     // 4 appear in doc 1; doc 3 shares none of them (its overlap with
-    // eval is only the 2-gram region) — both hash modes must agree
-    for (portable <- Seq(true, false)) {
-      val got = Dedup.containmentPairs(train, ev, "doc_id", col("text"),
-          shingleSize = 3, minShared = 3, portable = portable)
-        .as[(Long, Long, Long)].collect().toSet
-      assert(got == Set((1L, 10L, 4L)), s"portable=$portable: $got")
-    }
+    // eval is only the 2-gram region)
+    val got = Dedup.containmentPairs(train, ev, "doc_id", col("text"),
+        shingleSize = 3, minShared = 3)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(got == Set((1L, 10L, 4L)), s"$got")
     // broadcast off: same answer through the shuffled-join path
     val shuffled = Dedup.containmentPairs(train, ev, "doc_id", col("text"),
         shingleSize = 3, minShared = 3, broadcastEval = false)

@@ -12,7 +12,7 @@ import graft.SparkSpecBase
   *  - prefix-filtered n-gram pairs EQUAL the brute-force Jaccard join
   *    (the completeness claim the oracle gate relies on);
   *  - hashed shingles preserve set cardinalities;
-  *  - portable MinHash matches an independent Scala reimplementation;
+  *  - MinHash matches an independent Scala reimplementation;
   *  - LSH band math rejects non-divisible configurations.
   */
 class DedupSpec extends SparkSpecBase {
@@ -82,7 +82,7 @@ class DedupSpec extends SparkSpecBase {
     val text = "alpha beta gamma alpha beta gamma delta"
     val docs = docsDf(Seq((1L, text)))
     val sig = Dedup.minhashSignatures(docs, "doc_id", col("text"),
-      numHashes = 8, portable = true)
+      numHashes = 8)
       .collect()(0).getSeq[Long](1)
     // independent model: same shingles, polynomial hash, affine family
     val toks = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
@@ -111,7 +111,7 @@ class DedupSpec extends SparkSpecBase {
     val docs = docsDf(corpus(13L, 30))
     for (mk <- Seq(
         () => Dedup.minhashNearDupPairs(docs, "doc_id", col("text"),
-          threshold = 0.8, portable = false),
+          threshold = 0.8),
         () => Dedup.ngramJaccardPairs(docs, "doc_id", col("text"), 0.8))) {
       val pairs = mk()
       pairs.count() // consume
@@ -131,15 +131,13 @@ class DedupSpec extends SparkSpecBase {
     }
   }
 
-  test("simhash portable vs native both produce full-width hashes") {
+  test("simhash produces one non-degenerate hash per doc") {
     val rows = corpus(9L, 10)
     val docs = docsDf(rows)
-    for (portable <- Seq(true, false)) {
-      val out = Dedup.simhash(docs, "doc_id", col("text"), portable)
-        .collect().map(_.getLong(1))
-      assert(out.length == rows.size)
-      assert(out.distinct.length > 1, "degenerate simhash output")
-    }
+    val out = Dedup.simhash(docs, "doc_id", col("text"))
+      .collect().map(_.getLong(1))
+    assert(out.length == rows.size)
+    assert(out.distinct.length > 1, "degenerate simhash output")
   }
 
   /** Adversarial unicode corpus for the native-kernel equivalence
@@ -168,20 +166,16 @@ class DedupSpec extends SparkSpecBase {
   test("native kernels match the column formulations on an adversarial " +
       "unicode corpus (surrogate pairs, odd whitespace, short docs)") {
     val docs = docsDf(unicodeCorpus(1234))
-    // SimHash: native expression vs explode+groupBy, both hash modes
-    for (portable <- Seq(true, false)) {
-      val perRow = Dedup.simhash(docs, "doc_id", col("text"), portable)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val witness =
-        Dedup.simhashViaGroupBy(docs, "doc_id", col("text"), portable)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(perRow == witness, s"simhash portable=$portable")
-    }
+    // SimHash: native expression vs explode+groupBy
+    val perRow = Dedup.simhash(docs, "doc_id", col("text"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val witness = Dedup.simhashViaGroupBy(docs, "doc_id", col("text"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(perRow == witness, "simhash")
     // MinHash: fused token-array kernel vs explode+groupBy(min)
     for (shingleSize <- Seq(1, 3, 4); numHashes <- Seq(16)) {
       val fused = Dedup.minhashSignatures(docs, "doc_id", col("text"),
-          numHashes = numHashes, shingleSize = shingleSize,
-          portable = true)
+          numHashes = numHashes, shingleSize = shingleSize)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       val exploded = docs
         .select(col("doc_id"),
@@ -207,10 +201,10 @@ class DedupSpec extends SparkSpecBase {
       .unionAll(docsDf(Seq((100000L, "a"), (100001L, "one two three four"))))
     for (numHashes <- Seq(10, 64)) {
       val perRow = Dedup.minhashSignatures(docs, "doc_id", col("text"),
-          numHashes = numHashes, portable = true)
+          numHashes = numHashes)
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      // witness: the old explode path, via the native-mode entry with
-      // the portable arithmetic reproduced through the public helper
+      // witness: the explode → groupBy(min) formulation, the affine
+      // arithmetic reproduced through the public helpers
       val exploded = docs
         .select(col("doc_id"),
           explode(Dedup.shingles(col("text"), 3)).as("__s"))
@@ -226,15 +220,14 @@ class DedupSpec extends SparkSpecBase {
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(perRow == viaGroupBy, s"numHashes=$numHashes")
     }
-    val plan = Dedup.minhashSignatures(docs, "doc_id", col("text"),
-        portable = true)
+    val plan = Dedup.minhashSignatures(docs, "doc_id", col("text"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"per-row minhash must not shuffle:\n$plan")
   }
 
   test("per-row simhash is value-identical to the groupBy formulation " +
-      "(both hash modes, fixture + empty-doc edge)") {
+      "(fixture + empty-doc edge)") {
     // real corpus + an all-whitespace doc (must be DROPPED by both
     // formulations: no tokens ⇒ no simhash row)
     val fixture = graft.core.Tables.documents(spark, "/root/testdata/sf0.001")
@@ -242,19 +235,16 @@ class DedupSpec extends SparkSpecBase {
     val edge = docsDf(Seq((100000L, "   \t  "), (100001L, "one token")))
       .select(col("doc_id"), col("text"))
     val docs = fixture.unionAll(edge)
-    for (portable <- Seq(true, false)) {
-      val perRow = Dedup.simhash(docs, "doc_id", col("text"), portable)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val viaGroupBy =
-        Dedup.simhashViaGroupBy(docs, "doc_id", col("text"), portable)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      assert(perRow == viaGroupBy, s"portable=$portable")
-      assert(!perRow.contains(100000L), "empty-token doc must be dropped")
-      assert(perRow.contains(100001L))
-    }
+    val perRow = Dedup.simhash(docs, "doc_id", col("text"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val viaGroupBy = Dedup.simhashViaGroupBy(docs, "doc_id", col("text"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(perRow == viaGroupBy)
+    assert(!perRow.contains(100000L), "empty-token doc must be dropped")
+    assert(perRow.contains(100001L))
     // and the per-row plan has no exchange: the fold runs in the scan
     // stage (the 100 TB contract this formulation exists for)
-    val plan = Dedup.simhash(docs, "doc_id", col("text"), portable = true)
+    val plan = Dedup.simhash(docs, "doc_id", col("text"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"per-row simhash must not shuffle:\n$plan")
@@ -355,7 +345,7 @@ class DedupSpec extends SparkSpecBase {
         "docE" -> "docB", "docX" -> "docX", "docY" -> "docX"))
     }
 
-  test("windowDupStats matches brute-force window counting (both hash modes)") {
+  test("windowDupStats matches brute-force window counting") {
     import spark.implicits._
     val width = 10
     val stride = 4
@@ -380,14 +370,12 @@ class DedupSpec extends SparkSpecBase {
         ws.count(w => nDocs(w._2) > 1).toLong)
     }.toSet
     assert(expected.exists(_._3 > 0) && expected.exists(_._4 > 0))
-    for (portable <- Seq(true, false)) {
-      val got = Dedup.windowDupStats(rows.toDF("doc_id", "text"),
-          "doc_id", col("text"), width, stride, portable)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-        .toSet
-      assert(got === expected, s"portable=$portable")
-    }
+    val got = Dedup.windowDupStats(rows.toDF("doc_id", "text"),
+        "doc_id", col("text"), width, stride)
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet
+    assert(got === expected)
   }
 
   test("cdcChunks edge inputs: empty text is one empty chunk; " +
@@ -410,7 +398,7 @@ class DedupSpec extends SparkSpecBase {
       (2L, "wholly new words here now") // wave 2: untouched vocabulary
     ).toDF("wave", "text")
     val got = Dedup.shingleNovelty(rows, col("wave"), col("text"),
-        shingleSize = 3, portable = true)
+        shingleSize = 3)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(got(0L) == ((2L, 2L, 1.0)))
@@ -429,7 +417,7 @@ class DedupSpec extends SparkSpecBase {
       ("s3", "wholly new words here") // disjoint
     ).toDF("source", "text")
     val got = Dedup.sourceOverlap(rows, col("source"), col("text"),
-        shingleSize = 3, portable = true)
+        shingleSize = 3)
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toMap
     // s1 ∩ s2 = {abg}: 1 of 3 distinct -> 333333 ppm
@@ -478,7 +466,7 @@ class DedupSpec extends SparkSpecBase {
       (3L, "completely different content with no overlap at all here"))
       .toDF("doc_id", "text")
     val r = Dedup.minhashEstimatorAudit(docs, "doc_id",
-      org.apache.spark.sql.functions.col("text"), portable = true)
+      org.apache.spark.sql.functions.col("text"))
       .collect()(0)
     assert(r.getLong(0) == 1L, s"expected exactly the identical pair: $r")
     assert(r.getDouble(1) == 0.0 && r.getDouble(2) == 0.0 &&

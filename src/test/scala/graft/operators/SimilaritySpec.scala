@@ -20,7 +20,7 @@ class SimilaritySpec extends SparkSpecBase {
       "well under the ambient dimension; a duplicated corpus abstains") {
     import spark.implicits._
     val r = Similarity.twoNNDimension(Tables.embeddings(spark, dir),
-      "vec_id", "embedding", portable = true).collect()(0)
+      "vec_id", "embedding").collect()(0)
     val nv = r.getAs[Long]("n_vectors")
     assert(nv > 0 && r.getAs[Long]("n_used") <= nv)
     val id = r.getAs[Double]("id_hat")
@@ -31,8 +31,8 @@ class SimilaritySpec extends SparkSpecBase {
     // abstention (id_hat NULL, n_used 0)
     val dup = (1L to 12L).map(i => (i, Array.fill(8)(0.5f)))
       .toDF("vec_id", "embedding")
-    val d = Similarity.twoNNDimension(dup, "vec_id", "embedding",
-      portable = true).collect()(0)
+    val d = Similarity.twoNNDimension(dup, "vec_id", "embedding")
+      .collect()(0)
     assert(d.getAs[Long]("n_used") == 0L &&
       d.isNullAt(d.fieldIndex("id_hat")), s"got $d")
   }
@@ -261,8 +261,7 @@ class SimilaritySpec extends SparkSpecBase {
       Seq(10L, 11L, 12L, 13L).map(id => (id, Array(1f, 0f, 2f))) ++
         Seq(20L, 21L).map(id => (id, Array(-1f, 3f, 0f)))
     val emb = rows.toDF("vec_id", "embedding")
-    val e = Similarity.knnGraph(emb, "vec_id", "embedding", k = 5,
-      portable = true)
+    val e = Similarity.knnGraph(emb, "vec_id", "embedding", k = 5)
     val got = e.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got.forall { case (a, b) => a < b }, "edges must be canonical")
     assert(got.size == e.count(), "edges must be distinct")
@@ -292,8 +291,7 @@ class SimilaritySpec extends SparkSpecBase {
     val corpus = (base ++ twins).toDF("vec_id", "embedding")
     val queries = twins.toDF("vec_id", "embedding")
     val got = Similarity.lshTopKPerQuery(corpus, queries,
-      "vec_id", "embedding", k = 1, portable = true,
-      excludeSelf = true)
+      "vec_id", "embedding", k = 1, excludeSelf = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (0 until 10).foreach { j =>
       assert(got(100000L + j) == j * 37L,
@@ -304,10 +302,10 @@ class SimilaritySpec extends SparkSpecBase {
     val small = (0L until 100L).map(i => (i, vec(i))).toDF(
       "vec_id", "embedding")
     val a = Similarity.lshTopKPerQuery(small, small, "vec_id",
-      "embedding", k = 3, portable = true, excludeSelf = true)
+      "embedding", k = 3, excludeSelf = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = Similarity.lshTopKPerQuery(small, small, "vec_id",
-      "embedding", k = 3, portable = true, excludeSelf = true,
+      "embedding", k = 3, excludeSelf = true,
       targetCohort = 1000000)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b, "below-threshold geometry must be unchanged")
@@ -543,7 +541,7 @@ class SimilaritySpec extends SparkSpecBase {
     val emb = Tables.embeddings(spark, dir)
     val q = emb.filter(col("vec_id") < 3)
     val idx = Similarity.mipsLshTopKPerQuery(emb, q, "vec_id",
-      "embedding", k = 10, bits = 36, bands = 6, portable = true)
+      "embedding", k = 10, bits = 36, bands = 6)
     val exact = Similarity.mipsTopKPerQuery(emb, q, "vec_id",
       "embedding", k = 10)
     val idxRows = idx.collect()
@@ -586,7 +584,7 @@ class SimilaritySpec extends SparkSpecBase {
     ).toDF("vec_id", "embedding")
     val q = emb.filter(col("vec_id") === 1L)
     val got = Similarity.mipsLshTopKPerQuery(emb, q, "vec_id",
-        "embedding", k = 3, portable = true)
+        "embedding", k = 3)
       .orderBy(col("rank")).collect()
       .map(r => (r.getInt(2), r.getLong(1), r.getDouble(3)))
     assert(got.nonEmpty && got.head == ((1, 2L, 9.0)),
@@ -605,8 +603,7 @@ class SimilaritySpec extends SparkSpecBase {
     def hits(probes: Int): Long =
       Similarity.recallAtK(exact,
         Similarity.mipsLshTopKPerQuery(emb, q, "vec_id", "embedding",
-          k = 10, bits = 36, bands = 6, portable = true,
-          probes = probes),
+          k = 10, bits = 36, bands = 6, probes = probes),
         "x").collect()(0).getAs[Long]("n_hits")
     val (h0, h1) = (hits(0), hits(1))
     assert(h1 >= h0, s"multi-probe lost recall: $h0 -> $h1")
@@ -615,7 +612,7 @@ class SimilaritySpec extends SparkSpecBase {
     val exactIp = exact.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(3)).toMap
     Similarity.mipsLshTopKPerQuery(emb, q, "vec_id", "embedding",
-        k = 10, bits = 36, bands = 6, portable = true, probes = 1)
+        k = 10, bits = 36, bands = 6, probes = 1)
       .collect().foreach { r =>
         exactIp.get((r.getLong(0), r.getLong(1))).foreach(ip =>
           assert(ip == r.getDouble(3),
