@@ -4215,7 +4215,6 @@ object Queries {
         name, shufflePartitions = Some(8))
       val regs = graft.streaming.Streams.latest(drained, "g", "j")
         .select(col("g"), col("j"), col("m"))
-        .filter(col("m") >= 1L) // TTL eviction rows carry m = 0
         .localCheckpoint(true)  // ≤ 5·256 rows; two consumers below
       val global = regs.groupBy(col("j")).agg(max(col("m")).as("m"))
         .select(lit("__all__").as("g"), col("j"), col("m"))
@@ -13489,29 +13488,31 @@ object Queries {
   /** The transition-matrix + 20-round power-iteration CTE chain
     * shared by [[markovSteadyOracle]] and the entropy-rate oracle:
     * returns (cte prefix text, final π relation name). `tr` and `st`
-    * stay visible for downstream composition. */
+    * stay visible for downstream composition. Every CTE is
+    * MATERIALIZED: DuckDB inlines a plain CTE at each reference, so
+    * each step would re-evaluate all the steps before it. */
   private def markovSteadyCte: (String, String) = {
     val iters = 20
     val head =
-      """WITH s AS (SELECT user_id, event_type,
+      """WITH s AS MATERIALIZED (SELECT user_id, event_type,
         |  lag(event_type) OVER (PARTITION BY user_id
         |    ORDER BY ts, event_id) AS prev
         | FROM events),
-        |c AS (SELECT prev AS from_state, event_type AS to_state,
+        |c AS MATERIALIZED (SELECT prev AS from_state, event_type AS to_state,
         |  CAST(count(*) AS BIGINT) AS n_trans
         | FROM s WHERE prev IS NOT NULL GROUP BY 1, 2),
-        |tt AS (SELECT *, CAST(sum(n_trans)
+        |tt AS MATERIALIZED (SELECT *, CAST(sum(n_trans)
         |  OVER (PARTITION BY from_state) AS BIGINT) AS tot FROM c),
-        |tr AS (SELECT from_state, to_state,
+        |tr AS MATERIALIZED (SELECT from_state, to_state,
         |  n_trans * 1000000 // tot AS p_ppm FROM tt),
-        |st AS (SELECT DISTINCT state FROM (
+        |st AS MATERIALIZED (SELECT DISTINCT state FROM (
         |  SELECT from_state AS state FROM tr
         |  UNION ALL SELECT to_state FROM tr)),
-        |ns AS (SELECT CAST(count(*) AS DOUBLE) AS k FROM st),
-        |p0 AS (SELECT state, 1.0 / ns.k AS pi FROM st, ns)"""
+        |ns AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS k FROM st),
+        |p0 AS MATERIALIZED (SELECT state, 1.0 / ns.k AS pi FROM st, ns)"""
         .stripMargin
     val steps = (1 to iters).map { k =>
-      s"""p$k AS (SELECT st.state,
+      s"""p$k AS MATERIALIZED (SELECT st.state,
          | coalesce(n.pi, 0.0) AS pi
          | FROM st LEFT JOIN (
          |  SELECT tr.to_state AS state,
@@ -13539,14 +13540,14 @@ object Queries {
   private def markovEntropyOracle: String = {
     val (cte, last) = markovSteadyCte
     s"""$cte,
-       |piR AS (SELECT state, round(pi, 6) AS pi FROM $last),
-       |terms AS (SELECT CAST(round(piR.pi *
+       |piR AS MATERIALIZED (SELECT state, round(pi, 6) AS pi FROM $last),
+       |terms AS MATERIALIZED (SELECT CAST(round(piR.pi *
        |    (CAST(tr.p_ppm AS DOUBLE) / 1000000.0) *
        |    ln(CAST(tr.p_ppm AS DOUBLE) / 1000000.0), 9)
        |   AS DECIMAL(28,9)) AS t
        |  FROM tr JOIN piR ON tr.from_state = piR.state
        |  WHERE tr.p_ppm > 0),
-       |agg AS (SELECT
+       |agg AS MATERIALIZED (SELECT
        |  (SELECT CAST(count(*) AS BIGINT) FROM st) AS n_states,
        |  (SELECT CAST(count(*) AS BIGINT) FROM tr) AS n_transitions,
        |  CAST(coalesce(sum(t), 0) AS DOUBLE) AS s FROM terms)
@@ -13984,16 +13985,18 @@ object Queries {
     * exactness removes every op-order constraint a float recursion
     * would carry. `spineSql` must emit (d VARCHAR, rev
     * DECIMAL(18,4)). The boundary is DOUBLE via exact scaled-long
-    * divisions (no decimal leaves the CTE — the r12 emit lesson). */
+    * divisions (no decimal leaves the CTE — the r12 emit lesson).
+    * `daily` and `idx` are MATERIALIZED so the recursion joins a
+    * stored spine instead of re-running its window every step. */
   private def holtOracle(spineSql: String): String = {
     val a = java.math.BigDecimal.valueOf(0.3)
     val b = java.math.BigDecimal.valueOf(0.1)
     val ia = java.math.BigDecimal.ONE.subtract(a)
     val ib = java.math.BigDecimal.ONE.subtract(b)
     val lvl = s"round($a * x.rev + $ia * (r.level + r.trend), 6)"
-    s"""WITH RECURSIVE daily AS (
+    s"""WITH RECURSIVE daily AS MATERIALIZED (
        | $spineSql),
-       |idx AS (SELECT d, rev,
+       |idx AS MATERIALIZED (SELECT d, rev,
        |  row_number() OVER (ORDER BY d ASC) AS i FROM daily),
        |rec AS (
        | SELECT i, d, rev, CAST(rev AS DECIMAL(18,6)) AS level,
@@ -14096,37 +14099,42 @@ object Queries {
     * quotient (t = G·c by the iteration's own rounded-product decimal
     * sums, num/den the same), the 12-dp deflation
     * G' = G − λ·c_i·c_j/den cell-wise in the engine's literal op
-    * order, and a second unrolled power chain over G'. */
+    * order, and a second unrolled power chain over G'. Every CTE is
+    * MATERIALIZED (see [[markovSteadyCte]]). */
   private def pca2Oracle: String = {
     val last = s"v$PcaIters"
     val steps2 = (1 to PcaIters).map { k =>
-      s"""t$k AS (SELECT d1 AS pos,
+      s"""t$k AS MATERIALIZED (SELECT d1 AS pos,
          |  sum(CAST(round(CAST(g AS DOUBLE) * c, 12)
          |      AS DECIMAL(28,12))) AS s
          | FROM g2 JOIN w${k - 1} v ON g2.d2 = v.pos GROUP BY 1),
-         |u$k AS (SELECT max(abs(CAST(s AS DOUBLE))) AS m FROM t$k),
-         |w$k AS (SELECT pos,
+         |u$k AS MATERIALIZED (SELECT max(abs(CAST(s AS DOUBLE))) AS m
+         | FROM t$k),
+         |w$k AS MATERIALIZED (SELECT pos,
          |  CASE WHEN m <> 0.0 THEN round(CAST(s AS DOUBLE) / m, 6)
          |       ELSE 0.0 END AS c
          | FROM t$k, u$k)""".stripMargin
     }.mkString(",\n")
     s"""WITH $pcaChainCte,
-       |gc AS (SELECT d1 AS pos,
+       |gc AS MATERIALIZED (SELECT d1 AS pos,
        |  sum(CAST(round(CAST(g AS DOUBLE) * c, 12)
        |      AS DECIMAL(28,12))) AS s
        | FROM g JOIN $last v ON g.d2 = v.pos GROUP BY 1),
-       |num AS (SELECT sum(CAST(round(CAST(gc.s AS DOUBLE) * v.c, 12)
+       |num AS MATERIALIZED (SELECT
+       |  sum(CAST(round(CAST(gc.s AS DOUBLE) * v.c, 12)
        |    AS DECIMAL(28,12))) AS x
        |  FROM gc JOIN $last v USING (pos)),
-       |den AS (SELECT sum(CAST(round(c * c, 12) AS DECIMAL(28,12)))
+       |den AS MATERIALIZED (SELECT
+       |  sum(CAST(round(c * c, 12) AS DECIMAL(28,12)))
        |    AS x FROM $last),
-       |lam AS (SELECT CAST(num.x AS DOUBLE) / CAST(den.x AS DOUBLE)
+       |lam AS MATERIALIZED (SELECT
+       |  CAST(num.x AS DOUBLE) / CAST(den.x AS DOUBLE)
        |    AS l, CAST(den.x AS DOUBLE) AS dn FROM num, den),
-       |g2 AS (SELECT a.d1, a.d2,
+       |g2 AS MATERIALIZED (SELECT a.d1, a.d2,
        |  round(CAST(a.g AS DOUBLE) - l * ca.c * cb.c / dn, 12) AS g
        | FROM g a JOIN $last ca ON a.d1 = ca.pos
        |  JOIN $last cb ON a.d2 = cb.pos, lam),
-       |w0 AS (SELECT DISTINCT d1 AS pos, CAST(1.0 AS DOUBLE) AS c
+       |w0 AS MATERIALIZED (SELECT DISTINCT d1 AS pos, CAST(1.0 AS DOUBLE) AS c
        |       FROM g2),
        |$steps2
        |SELECT CAST(1 AS BIGINT) AS component,
@@ -14162,30 +14170,34 @@ object Queries {
        |GROUP BY e.label, vv.s""".stripMargin
 
   private final val PcaIters = 3
+  /** The Gram matrix and its unrolled power chain, shared by the PCA
+    * oracles. Every CTE is MATERIALIZED (see [[markovSteadyCte]]). */
   private def pcaChainCte: String = {
     val iters = PcaIters
     val head =
-      """ex AS (SELECT vec_id,
+      """ex AS MATERIALIZED (SELECT vec_id,
         |  unnest(range(1, len(embedding) + 1)) AS pos, embedding
         | FROM embeddings),
-        |e2 AS (SELECT vec_id, pos,
+        |e2 AS MATERIALIZED (SELECT vec_id, pos,
         |  CAST(embedding[pos] AS DOUBLE) AS x FROM ex),
-        |gs AS (SELECT a.pos AS d1, b.pos AS d2,
+        |gs AS MATERIALIZED (SELECT a.pos AS d1, b.pos AS d2,
         |  sum(CAST(CASE WHEN a.x * b.x >= 0
         |    THEN floor(a.x * b.x * 1e12 + 0.5)
         |    ELSE -floor(-(a.x * b.x) * 1e12 + 0.5) END AS BIGINT))
         |    AS s
         | FROM e2 a JOIN e2 b USING (vec_id) GROUP BY 1, 2),
-        |g AS (SELECT d1, d2, CAST(s AS DOUBLE) / 1e12 AS g FROM gs),
-        |v0 AS (SELECT DISTINCT d1 AS pos, CAST(1.0 AS DOUBLE) AS c
+        |g AS MATERIALIZED (SELECT d1, d2, CAST(s AS DOUBLE) / 1e12 AS g
+        | FROM gs),
+        |v0 AS MATERIALIZED (SELECT DISTINCT d1 AS pos, CAST(1.0 AS DOUBLE) AS c
         |       FROM g)""".stripMargin
     val steps = (1 to iters).map { k =>
-      s"""s$k AS (SELECT d1 AS pos,
+      s"""s$k AS MATERIALIZED (SELECT d1 AS pos,
          |  sum(CAST(round(CAST(g AS DOUBLE) * c, 12)
          |      AS DECIMAL(28,12))) AS s
          | FROM g JOIN v${k - 1} v ON g.d2 = v.pos GROUP BY 1),
-         |m$k AS (SELECT max(abs(CAST(s AS DOUBLE))) AS m FROM s$k),
-         |v$k AS (SELECT pos,
+         |m$k AS MATERIALIZED (SELECT max(abs(CAST(s AS DOUBLE))) AS m
+         | FROM s$k),
+         |v$k AS MATERIALIZED (SELECT pos,
          |  CASE WHEN m <> 0.0 THEN round(CAST(s AS DOUBLE) / m, 6)
          |       ELSE 0.0 END AS c
          | FROM s$k, m$k)""".stripMargin
@@ -14267,31 +14279,35 @@ object Queries {
     * mutual-reinforcement rounds (auth from hubs, hub from auths),
     * exact DECIMAL(18,6) sums, L1 normalization as one double
     * division + 6-dp round per node — the Graph.hits arithmetic
-    * step for step. */
+    * step for step. Every CTE is MATERIALIZED (see
+    * [[markovSteadyCte]]). */
   private def hitsOracle: String = {
     val iters = 3
     val head =
-      """WITH p AS (
+      """WITH p AS MATERIALIZED (
         | SELECT DISTINCT l_suppkey AS src, o_custkey + 1000000 AS dst
         | FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |n AS (SELECT DISTINCT node FROM (
+        |n AS MATERIALIZED (SELECT DISTINCT node FROM (
         |  SELECT src AS node FROM p UNION ALL SELECT dst FROM p)),
-        |h0 AS (SELECT node, CAST(1.0 AS DECIMAL(18,6)) AS h FROM n)"""
+        |h0 AS MATERIALIZED (SELECT node, CAST(1.0 AS DECIMAL(18,6)) AS h
+        | FROM n)"""
         .stripMargin
     val steps = (1 to iters).map { k =>
-      s"""ar$k AS (SELECT e.dst AS node,
+      s"""ar$k AS MATERIALIZED (SELECT e.dst AS node,
          |  CAST(sum(h.h) AS DECIMAL(18,6)) AS raw
          | FROM p e JOIN h${k - 1} h ON e.src = h.node GROUP BY e.dst),
-         |at$k AS (SELECT CAST(sum(raw) AS DOUBLE) AS tot FROM ar$k),
-         |a$k AS (SELECT n.node, CAST(CASE WHEN tot > 0 THEN
+         |at$k AS MATERIALIZED (SELECT CAST(sum(raw) AS DOUBLE) AS tot
+         | FROM ar$k),
+         |a$k AS MATERIALIZED (SELECT n.node, CAST(CASE WHEN tot > 0 THEN
          |   round(CAST(coalesce(raw, 0) AS DOUBLE) / tot, 6)
          |  ELSE 0.0 END AS DECIMAL(18,6)) AS a
          | FROM n LEFT JOIN ar$k ON ar$k.node = n.node, at$k),
-         |hr$k AS (SELECT e.src AS node,
+         |hr$k AS MATERIALIZED (SELECT e.src AS node,
          |  CAST(sum(a.a) AS DECIMAL(18,6)) AS raw
          | FROM p e JOIN a$k a ON e.dst = a.node GROUP BY e.src),
-         |ht$k AS (SELECT CAST(sum(raw) AS DOUBLE) AS tot FROM hr$k),
-         |h$k AS (SELECT n.node, CAST(CASE WHEN tot > 0 THEN
+         |ht$k AS MATERIALIZED (SELECT CAST(sum(raw) AS DOUBLE) AS tot
+         | FROM hr$k),
+         |h$k AS MATERIALIZED (SELECT n.node, CAST(CASE WHEN tot > 0 THEN
          |   round(CAST(coalesce(raw, 0) AS DOUBLE) / tot, 6)
          |  ELSE 0.0 END AS DECIMAL(18,6)) AS h
          | FROM n LEFT JOIN hr$k ON hr$k.node = n.node, ht$k)"""
@@ -14299,12 +14315,12 @@ object Queries {
     }.mkString(",\n")
     s"""$head,
        |$steps,
-       |fin AS (SELECT h.node, CAST(h.h AS DOUBLE) AS hub,
+       |fin AS MATERIALIZED (SELECT h.node, CAST(h.h AS DOUBLE) AS hub,
        |  CAST(a.a AS DOUBLE) AS auth
        | FROM h$iters h JOIN a$iters a ON h.node = a.node),
-       |th AS (SELECT 'hub' AS role, node, hub, auth FROM fin
+       |th AS MATERIALIZED (SELECT 'hub' AS role, node, hub, auth FROM fin
        | ORDER BY hub DESC, node ASC LIMIT 12),
-       |ta AS (SELECT 'auth' AS role, node, hub, auth FROM fin
+       |ta AS MATERIALIZED (SELECT 'auth' AS role, node, hub, auth FROM fin
        | ORDER BY auth DESC, node ASC LIMIT 12)
        |SELECT * FROM th UNION ALL SELECT * FROM ta""".stripMargin
   }

@@ -101,7 +101,9 @@ object Conversions {
 
   /** F6: column alignment/padding — keep expected columns in target
     * order, add missing ones as typed NULLs
-    * (csv_to_mssqldb.py:226-234). */
+    * (csv_to_mssqldb.py:226-234). Any column outside `schema` drops,
+    * which covers F4's auto-increment `id` drop
+    * (dags/mssql_to_postgresql_orders_daily.py:217). */
   def alignToSchema(df: DataFrame, schema: StructType): DataFrame = {
     val present = df.columns.map(_.toLowerCase).toSet
     df.select(schema.fields.map { f =>
@@ -109,11 +111,6 @@ object Conversions {
       else lit(null).cast(f.dataType).as(f.name)
     }.toIndexedSeq: _*)
   }
-
-  /** F4: drop auto-increment id column if present
-    * (dags/mssql_to_postgresql_orders_daily.py:217). */
-  def dropIdColumn(df: DataFrame, idCol: String = "id"): DataFrame =
-    if (df.columns.contains(idCol)) df.drop(idCol) else df
 
   /** Coercion-audit metric (csv_to_mssqldb.py:251-256): count of values
     * that a coercion nulled out (non-null in, null out). */

@@ -11,24 +11,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   */
 object Lakehouse {
 
-  /** Write `df` partitioned by the DATE of `tsCol` (a `ds=YYYY-MM-DD`
-    * directory per day, Hive layout). */
-  def writeDatePartitioned(
-      df: DataFrame,
-      tsCol: String,
-      path: String): Unit =
-    df.withColumn("ds", to_date(col(tsCol)))
-      .write
-      .mode("overwrite")
-      .partitionBy("ds")
-      .parquet(path)
-
-  /** Read one day back: the `ds` equality prunes to a single
-    * directory — verify with explain(): `PartitionFilters: [isnotnull
-    * (ds), (ds = ...)]` and one partition scanned. */
-  def readDay(spark: SparkSession, path: String, date: String): DataFrame =
-    spark.read.parquet(path).filter(col("ds") === lit(date))
-
   /** Morton (Z-order) code of two non-negative dimension values: the
     * low `bits` of each interleave into one long (a bit of `a` in the
     * even positions, `b` odd). Range-sorting by this code clusters
@@ -228,13 +210,20 @@ object Lakehouse {
     * snapshot ledger: stage the full snapshot, then claim version
     * `expectedLatest + 1` with ONE atomic directory rename — if the
     * ledger moved past `expectedLatest` (a pre-check), or another
-    * writer claims the same slot between check and rename (the
-    * rename fails because the target exists), the commit throws
-    * `ConcurrentModificationException` and the caller REBASES: read
-    * the new latest, reapply the intent, retry. This is the
+    * writer claims the same slot between check and rename, the commit
+    * throws `ConcurrentModificationException` and the caller REBASES:
+    * read the new latest, reapply the intent, retry. This is the
     * Delta/Iceberg commit-protocol shape on plain directories — the
     * rename is the compare-and-swap (atomic on HDFS-like stores),
     * the staged copy means a loser leaves no partial state behind.
+    *
+    * A rename onto an EXISTING directory does not fail on the local
+    * file system or HDFS: it moves the source inside the target and
+    * returns true. So a racer that claimed the slot between the
+    * existence check and the rename shows up as this attempt's stage
+    * dir nested at `v=<n>/__stage_<uuid>`; that is a lost race, and
+    * the nested copy is deleted before the throw (readers never see
+    * it: Spark skips `_`-prefixed paths).
     *
     * Each attempt stages under its OWN uuid-named directory, so the
     * rename is the single shared point: two writers that both pass
@@ -267,10 +256,14 @@ object Lakehouse {
     try {
       df.write.mode("overwrite").parquet(stagePath.toString)
       val target = new org.apache.hadoop.fs.Path(path, s"v=$next")
-      // the compare-and-swap: rename fails if a racer claimed the slot
-      if (fs.exists(target) || !fs.rename(stagePath, target))
-        throw new java.util.ConcurrentModificationException(
-          s"commitVersion: lost the race for v=$next — rebase and retry")
+      val nested = new org.apache.hadoop.fs.Path(target, stagePath.getName)
+      def lost = new java.util.ConcurrentModificationException(
+        s"commitVersion: lost the race for v=$next — rebase and retry")
+      if (fs.exists(target) || !fs.rename(stagePath, target)) throw lost
+      if (fs.exists(nested)) {
+        fs.delete(nested, true)
+        throw lost
+      }
       committed = true
       next
     } finally {

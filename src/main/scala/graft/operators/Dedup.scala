@@ -521,11 +521,9 @@ object Dedup {
     * must be caught, and its Jaccard is near zero.)
     *
     * Scale shape: the eval set is tiny next to a 100 TB corpus, so
-    * its shingle index broadcasts (`broadcastEval`) and the corpus
-    * streams through one map-side hash join — no corpus shuffle at
-    * all. Shingles travel as 8-byte hashes, never strings. With a
-    * large right side, disable the broadcast and it degrades to one
-    * shuffle on the shingle hash.
+    * its shingle index broadcasts and the corpus streams through one
+    * map-side hash join — no corpus shuffle at all. Shingles travel as
+    * 8-byte hashes, never strings.
     *
     * Collision bound: shingles are counted by [[polyHash]] value, a
     * ~1e9-value space, so n distinct shingles collide in about
@@ -540,8 +538,7 @@ object Dedup {
       idCol: String,
       text: Column,
       shingleSize: Int = 3,
-      minShared: Int = 2,
-      broadcastEval: Boolean = true): DataFrame = {
+      minShared: Int = 2): DataFrame = {
     require(minShared > 0)
     def shingleHashes(df: DataFrame, out: String): DataFrame = {
       // stage the token array as an attribute BEFORE shingling — the
@@ -555,9 +552,8 @@ object Dedup {
         .distinct()
     }
     val trainSh = shingleHashes(corpus, "train_id")
-    val evalSh0 = shingleHashes(evalSet, "eval_id")
-    val evalSh = if (broadcastEval) broadcast(evalSh0) else evalSh0
-    trainSh.join(evalSh, Seq("__h"))
+    val evalSh = shingleHashes(evalSet, "eval_id")
+    trainSh.join(broadcast(evalSh), Seq("__h"))
       .groupBy(col("train_id"), col("eval_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

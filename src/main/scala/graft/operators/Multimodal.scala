@@ -68,10 +68,11 @@ object Multimodal {
 
   /** Canonical-WAV (RIFF → fmt → data chunk order) field extraction as
     * ONE struct: is_wav, channel count, sample rate, bits/sample,
-    * data-chunk bytes, derived duration — all pure byte arithmetic,
-    * field-NULL for non-WAV. Non-canonical chunk orders would need a
-    * real parser; the metadata-prunes-before-decode posture is
-    * identical to the PNG path.
+    * data-chunk bytes, derived duration (milliseconds, floored:
+    * dataBytes · 1000 / (rate · channels · bytesPerSample)) — all pure
+    * byte arithmetic, field-NULL for non-WAV. Non-canonical chunk
+    * orders would need a real parser; the metadata-prunes-before-
+    * decode posture is identical to the PNG path.
     *
     * Single-pass by construction: the per-byte `conv(hex(substring))`
     * little-endian chains live under `when` branches, and Spark's
@@ -103,21 +104,6 @@ object Multimodal {
           .cast(LongType))
         .otherwise(lit(null).cast(LongType)).as("duration_ms"))
   }
-
-  /** Single-field conveniences projecting from [[wavMeta]]. Fine for a
-    * one-field read; a query touching two or more WAV fields should
-    * stage the struct once instead (`wavMeta(bin).as("w")`, then
-    * `w.getField(…)`) — inline, each extractor re-parses the header. */
-  def wavChannels(bin: Column): Column = wavMeta(bin).getField("channels")
-  def wavSampleRate(bin: Column): Column =
-    wavMeta(bin).getField("sample_rate")
-  def wavBitsPerSample(bin: Column): Column =
-    wavMeta(bin).getField("bits_per_sample")
-  def wavDataBytes(bin: Column): Column = wavMeta(bin).getField("data_bytes")
-
-  /** Playback duration in milliseconds, floored: dataBytes · 1000 /
-    * (rate · channels · bytesPerSample). */
-  def wavDurationMs(bin: Column): Column = wavMeta(bin).getField("duration_ms")
 
   /** Typed metadata struct for a media column: one expression, usable
     * as a pruning predicate source before any decode. */

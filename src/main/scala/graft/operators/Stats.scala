@@ -2151,19 +2151,6 @@ object Stats {
       .agg(sum(col("__w")).as("cnt"))
   }
 
-  /** Merge two [[countMinSketch]] states built with the same
-    * (depth, width): cell-wise count sum — associative and
-    * commutative, so 1000 executors can sketch shards independently
-    * and a tree-reduce combines them; the count-distributive
-    * construction makes merge(A, B) equal the whole-input sketch bit
-    * for bit (pinned in StatsSpec). The 100 TB topology: per-shard
-    * sketches are depth·width longs, and the merge never touches the
-    * data again. */
-  def cmsMerge(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-      .groupBy(col("depth"), col("bucket"))
-      .agg(sum(col("cnt")).as("cnt"))
-
   /** Point-estimate item counts from a [[countMinSketch]]: the minimum
     * over depths of the counter each depth hashes the item into
     * (absent cell = 0). The sketch side is depth·width rows at most —

@@ -591,16 +591,9 @@ object TextAnalysis {
     * the frame twice and recomputes the explode on the probe side).
     * Token arrays are staged as an attribute before the chunking HOF
     * fans out (the staging rule: per-element work must not re-evaluate
-    * the tokenizer). Segments key by text for oracle replication
-    * (`hashKey = false`, the gated default); `hashKey = true` is the
-    * 100 TB path — the window partitions on the segment's 8-byte
-    * xxhash64 so the shuffle carries a long key instead of the full
-    * segment text ([[graft.operators.Dedup]]'s hashed-shingle trade:
-    * a 64-bit collision conflates two segments' document frequencies,
-    * ~n²/2⁶⁵ expected — acceptable for a ≤-maxDf filter). Survivors
-    * are identical absent a collision; the 10× probe measures 2.5×
-    * for the text key (the recorded cost contract: the shuffle
-    * payload is the segment text itself).
+    * the tokenizer). Segments key by their text, exactly as the
+    * oracle replays them; the shuffle payload is the segment text
+    * itself.
     *
     * Returns surviving (idCol, seg_id, seg_text, seg_df) rows;
     * reassemble with array_join over seg_id order if full text is
@@ -610,8 +603,7 @@ object TextAnalysis {
       idCol: String,
       text: Column,
       segTokens: Int = 8,
-      maxDf: Int = 2,
-      hashKey: Boolean = false): DataFrame = {
+      maxDf: Int = 2): DataFrame = {
     require(segTokens > 0 && maxDf > 0, "segTokens and maxDf must be > 0")
     val segs = docs
       .select(col(idCol), tokens(lower(text)).as("__toks"))
@@ -622,8 +614,7 @@ object TextAnalysis {
         array_join(col("seg"), " ").as("seg_text"))
     // unordered full-frame window on the segment key (the accepted
     // corpus-statistics idiom — no ordering, so no sort-based rank)
-    val byPseg = Window.partitionBy(
-      if (hashKey) xxhash64(col("seg_text")) else col("seg_text"))
+    val byPseg = Window.partitionBy(col("seg_text"))
     segs
       .withColumn("seg_df", count(lit(1)).over(byPseg))
       .filter(col("seg_df") <= maxDf)
@@ -1072,27 +1063,23 @@ object TextAnalysis {
   }
 
   /** The hashed-bigram bag of [[dsirLogWeights]]: one row per gram
-    * occurrence — (idCol, __b bucket, __t target flag, keep*). Shared
-    * by the batch scorer and the streaming bucket-count state so both
-    * sides hash identically; `keep` names input columns carried
-    * through (the stream threads its watermark-tagged event time). */
+    * occurrence — (idCol, __b bucket, __t target flag). Shared by the
+    * batch scorer and the streaming bucket-count state so both sides
+    * hash identically. */
   private[graft] def dsirGrams(
       docs: DataFrame,
       idCol: String,
       text: Column,
       isTarget: Column,
-      buckets: Int,
-      keep: Seq[String] = Nil): DataFrame = {
-    val kept = keep.map(col)
+      buckets: Int): DataFrame =
     docs
-      .select(Seq(col(idCol), tokens(lower(text)).as("__toks"),
-        isTarget.as("__t")) ++ kept: _*)
-      .select(Seq(col(idCol), explode(gramsOfTokens(col("__toks"), 2))
-        .as("__g"), col("__t")) ++ kept: _*)
-      .select(Seq(col(idCol),
+      .select(col(idCol), tokens(lower(text)).as("__toks"),
+        isTarget.as("__t"))
+      .select(col(idCol), explode(gramsOfTokens(col("__toks"), 2))
+        .as("__g"), col("__t"))
+      .select(col(idCol),
         pmod(graft.operators.Dedup.polyHash(col("__g")), lit(buckets))
-          .as("__b"), col("__t")) ++ kept: _*)
-  }
+          .as("__b"), col("__t"))
 
   /** [[dsirLogWeights]]'s scoring tail over an ALREADY-BUILT bucket
     * count frame (__b, __cr, __ct) — counts are associative integer

@@ -19,6 +19,10 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSes
   *    reference computes per-day (A1/A2), incrementally;
   *  - `flatMapGroupsWithState` carries per-key state across batches —
   *    the streaming form of the upsert target (latest row per key).
+  *    Every state runs `GroupStateTimeout.NoTimeout`: the twins are
+  *    bounded AvailableNow drains, so no key is held long enough to
+  *    need an eviction policy, and a state's drain counter is the
+  *    plain per-key sequence 1, 2, 3, ….
   *
   * At 100 TB the same topology holds: state is hash-partitioned by key
   * across executors (RocksDB state store in production), and the file
@@ -161,52 +165,30 @@ object Streams {
     * as events arrive — `flatMapGroupsWithState` is the custom-state
     * path the brief calls for (the reference's nightly MERGE becomes a
     * continuously-maintained keyed state). Emits the refreshed state of
-    * every key touched in the micro-batch.
-    *
-    * State TTL (`ttlMs` — VERDICT r12 item 5, the same option every
-    * other per-user op takes): a user idle past the TTL (event time)
-    * is EVICTED once the watermark passes — the eviction re-emits the
-    * final state as the closure record and drops the key; a returning
-    * user restarts the count (n_events is monotone only within one
-    * retention span — the documented trade that bounds a month-scale
-    * deployment's unbounded user_id key space). Requires a `ts`
-    * column; `ttlMs = None` is byte-identical to the old NoTimeout. */
-  def runningUserState(
-      events: DataFrame,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+    * every key touched in the micro-batch. */
+  def runningUserState(events: DataFrame)(
       implicit spark: SparkSession): Dataset[UserUpdate] = {
     import spark.implicits._
-    withTtlWatermark(events, ttlMs, watermark)
+    events
       .select(col("user_id").as[Long],
-        struct(col("ts_ns"), col("event_type")).as("e"),
-        ttlTsCol(ttlMs).as[java.sql.Timestamp])
-      .as[(Long, (Long, String), java.sql.Timestamp)]
+        struct(col("ts_ns"), col("event_type")).as("e"))
+      .as[(Long, (Long, String))]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (user: Long, rows: Iterator[(Long, (Long, String), java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (user: Long, rows: Iterator[(Long, (Long, String))],
          state: GroupState[UserState]) =>
-          if (state.hasTimedOut) {
-            val cur = state.get
-            state.remove()
-            Iterator(UserUpdate(user, cur.nEvents, cur.lastTsNs,
-              cur.lastType))
-          } else {
-            val prev = state.getOption
-              .getOrElse(UserState(0L, Long.MinValue, ""))
-            val next = rows.foldLeft(prev) { case (acc, (_, (tsNs, tpe), _)) =>
-              // last-write-wins on the event timestamp (S7 semantics)
-              if (tsNs >= acc.lastTsNs)
-                UserState(acc.nEvents + 1, tsNs, tpe)
-              else acc.copy(nEvents = acc.nEvents + 1)
-            }
-            state.update(next)
-            if (next.lastTsNs != Long.MinValue)
-              armTtl(state, ttlMs, next.lastTsNs / 1000L)
-            Iterator(UserUpdate(user, next.nEvents, next.lastTsNs,
-              next.lastType))
+          val prev = state.getOption
+            .getOrElse(UserState(0L, Long.MinValue, ""))
+          val next = rows.foldLeft(prev) { case (acc, (_, (tsNs, tpe))) =>
+            // last-write-wins on the event timestamp (S7 semantics)
+            if (tsNs >= acc.lastTsNs)
+              UserState(acc.nEvents + 1, tsNs, tpe)
+            else acc.copy(nEvents = acc.nEvents + 1)
           }
+          state.update(next)
+          Iterator(UserUpdate(user, next.nEvents, next.lastTsNs,
+            next.lastType))
       }
   }
 
@@ -224,54 +206,30 @@ object Streams {
     * latest-wins drain pattern). The merge is a pure function of the
     * candidate MULTISET — batch order and in-batch order cannot
     * change it — so the drained leaderboard must equal the batch
-    * window top-k, whatever the file-to-batch split.
-    *
-    * State TTL (`ttlMs` — VERDICT r12 item 5): an idle key's
-    * leaderboard evicts past the TTL (event time), emitting its final
-    * rows as the closure record; with TTL on, `updates` is
-    * event-time-derived (the [[cdcLatestState]] counter rule) so a
-    * returning key's fresh board out-counts the closure in a
-    * max-counter drain. `ttlMs = None` (the gated default) is
-    * byte-identical to the old NoTimeout operator. */
+    * window top-k, whatever the file-to-batch split. */
   def topKPerKeyState(
       events: DataFrame,
-      k: Int = 3,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+      k: Int = 3)(
       implicit spark: SparkSession): Dataset[TopKOut] = {
     import spark.implicits._
     require(k >= 1 && k <= 100, s"k out of range: $k")
-    withTtlWatermark(events, ttlMs, watermark)
+    events
       .select(col("event_type").as[String],
-        struct(col("value"), col("event_id")).as("e"),
-        ttlTsCol(ttlMs).as[java.sql.Timestamp])
-      .as[(String, (Double, Long), java.sql.Timestamp)]
+        struct(col("value"), col("event_id")).as("e"))
+      .as[(String, (Double, Long))]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (g: String, rows: Iterator[(String, (Double, Long), java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (g: String, rows: Iterator[(String, (Double, Long))],
          state: GroupState[TopKState]) =>
-          if (state.hasTimedOut) {
-            // closure record: the leaderboard as it stood, then evict
-            val cur = state.get
-            state.remove()
-            cur.top.iterator.zipWithIndex.map { case ((v, id), i) =>
-              TopKOut(g, cur.updates, i + 1, v, id)
-            }
-          } else {
-            val batch = rows.toArray
-            val prev = state.getOption.getOrElse(TopKState(0L, Seq.empty))
-            val merged = (prev.top ++ batch.map(_._2))
-              .sortBy { case (v, id) => (-v, id) }
-              .take(k)
-            val maxUs = if (ttlMs.isDefined && batch.nonEmpty)
-              batch.map(_._3.getTime * 1000L).max else Long.MinValue
-            val next = TopKState(
-              drainCounter(state, ttlMs, prev.updates, maxUs), merged)
-            state.update(next)
-            merged.iterator.zipWithIndex.map { case ((v, id), i) =>
-              TopKOut(g, next.updates, i + 1, v, id)
-            }
+          val prev = state.getOption.getOrElse(TopKState(0L, Seq.empty))
+          val merged = (prev.top ++ rows.map(_._2))
+            .sortBy { case (v, id) => (-v, id) }
+            .take(k)
+          val next = TopKState(prev.updates + 1L, merged)
+          state.update(next)
+          merged.iterator.zipWithIndex.map { case ((v, id), i) =>
+            TopKOut(g, next.updates, i + 1, v, id)
           }
       }
   }
@@ -300,52 +258,29 @@ object Streams {
     * Emits each touched key's full state per micro-batch tagged with
     * a monotone `updates` counter (latest-wins drain); consumers
     * reassemble mean/variance from the exact integers. O(1) state
-    * per key.
-    *
-    * State TTL (`ttlMs` — VERDICT r12 item 5): an idle key evicts
-    * past the TTL (event time), re-emitting its final state as the
-    * closure record; event-time-derived counter in TTL mode (the
-    * [[cdcLatestState]] rule). `ttlMs = None` (the gated default) is
-    * byte-identical to the old NoTimeout operator. */
-  def runningMomentsState(
-      events: DataFrame,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+    * per key. */
+  def runningMomentsState(events: DataFrame)(
       implicit spark: SparkSession): Dataset[MomOut] = {
     import spark.implicits._
     val L = 1000000000L
-    withTtlWatermark(events, ttlMs, watermark)
+    events
       .select(col("event_type").as[String],
-        floor(col("value") * 10000 + lit(0.5)).cast("long").as[Long],
-        ttlTsCol(ttlMs).as[java.sql.Timestamp])
-      .as[(String, Long, java.sql.Timestamp)]
+        floor(col("value") * 10000 + lit(0.5)).cast("long").as[Long])
+      .as[(String, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (g: String, rows: Iterator[(String, Long, java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (g: String, rows: Iterator[(String, Long)],
          state: GroupState[MomState]) =>
-          if (state.hasTimedOut) {
-            // closure record (the latest-wins row consumers already
-            // hold), then evict; a returning key restarts from zero
-            val cur = state.get
-            state.remove()
-            Iterator(MomOut(g, cur.updates, cur.n, cur.s, cur.hi,
-              cur.lo))
-          } else {
-            var st = state.getOption.getOrElse(MomState(0L, 0L, 0L, 0L, 0L))
-            var maxUs = Long.MinValue
-            rows.foreach { case (_, t, ts) =>
-              val sq = t * t
-              st = st.copy(n = st.n + 1, s = st.s + t,
-                hi = st.hi + sq / L, lo = st.lo + sq % L)
-              if (ttlMs.isDefined && ts != null)
-                maxUs = math.max(maxUs, ts.getTime * 1000L)
-            }
-            st = st.copy(
-              updates = drainCounter(state, ttlMs, st.updates, maxUs))
-            state.update(st)
-            Iterator(MomOut(g, st.updates, st.n, st.s, st.hi, st.lo))
+          var st = state.getOption.getOrElse(MomState(0L, 0L, 0L, 0L, 0L))
+          rows.foreach { case (_, t) =>
+            val sq = t * t
+            st = st.copy(n = st.n + 1, s = st.s + t,
+              hi = st.hi + sq / L, lo = st.lo + sq % L)
           }
+          st = st.copy(updates = st.updates + 1L)
+          state.update(st)
+          Iterator(MomOut(g, st.updates, st.n, st.s, st.hi, st.lo))
       }
   }
 
@@ -376,64 +311,32 @@ object Streams {
     *
     * At 100 TB: the stream shuffles once on the key per micro-batch,
     * state is one row per live key, and the drained table IS the
-    * target — no staging table, no per-batch MERGE round-trip.
-    *
-    * State TTL (`ttlMs`): retention for the materialized table — a
-    * key idle past the TTL (event time of its winning version) emits
-    * a final TOMBSTONE row (`op = "D"`, `updates` bumped — consumers
-    * keeping the max-counter row per key drop it, exactly the delete
-    * drain) and evicts; a later change for the key starts fresh, the
-    * LWW fold unbroken. Requires a `ts` event-time column on the
-    * input (alongside the exact `ts_ns` the fold orders by).
-    *
-    * TTL counter discipline (ADVICE r11): with TTL on, `updates` is
-    * event-time-derived (`drainCounter`), so a key that RETURNS after
-    * eviction re-emits with a counter strictly above its own
-    * tombstone and the max-counter drain resolves to the live row.
-    * Without TTL the counter stays the plain 1,2,3,… per-key
-    * sequence. */
-  def cdcLatestState(
-      changes: DataFrame,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+    * target — no staging table, no per-batch MERGE round-trip. */
+  def cdcLatestState(changes: DataFrame)(
       implicit spark: SparkSession): Dataset[CdcOut] = {
     import spark.implicits._
-    withTtlWatermark(changes, ttlMs, watermark)
+    changes
       .select(col("user_id").as[Long],
         struct(col("ts_ns"), col("event_id"), col("op"), col("value"))
-          .as("e"),
-        ttlTsCol(ttlMs).as[java.sql.Timestamp])
-      .as[(Long, (Long, Long, String, Double), java.sql.Timestamp)]
+          .as("e"))
+      .as[(Long, (Long, Long, String, Double))]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (k: Long,
-         rows: Iterator[(Long, (Long, Long, String, Double), java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (k: Long, rows: Iterator[(Long, (Long, Long, String, Double))],
          state: GroupState[CdcState]) =>
-          if (state.hasTimedOut) {
-            // retention expiry: one tombstone, then eviction
-            val prev = state.get
-            state.remove()
-            Iterator(CdcOut(k, prev.updates + 1L, prev.tsNs, prev.id,
-              "D", prev.value))
-          } else {
-            val prev = state.getOption.getOrElse(
-              CdcState(0L, Long.MinValue, Long.MinValue, "", 0.0))
-            val best = rows.foldLeft(prev) {
-              case (acc, (_, (ts, id, op, v), _)) =>
-                if (ts > acc.tsNs || (ts == acc.tsNs && id >= acc.id))
-                  acc.copy(tsNs = ts, id = id, op = op, value = v)
-                else acc
-            }
-            // TTL armed at the winning version's event time. As the
-            // counter's event time it equals the batch max: a carried
-            // winner's time already sits below prev.updates.
-            val next = best.copy(updates =
-              drainCounter(state, ttlMs, prev.updates, best.tsNs / 1000L))
-            state.update(next)
-            Iterator(CdcOut(k, next.updates, next.tsNs, next.id,
-              next.op, next.value))
+          val prev = state.getOption.getOrElse(
+            CdcState(0L, Long.MinValue, Long.MinValue, "", 0.0))
+          val best = rows.foldLeft(prev) {
+            case (acc, (_, (ts, id, op, v))) =>
+              if (ts > acc.tsNs || (ts == acc.tsNs && id >= acc.id))
+                acc.copy(tsNs = ts, id = id, op = op, value = v)
+              else acc
           }
+          val next = best.copy(updates = prev.updates + 1L)
+          state.update(next)
+          Iterator(CdcOut(k, next.updates, next.tsNs, next.id,
+            next.op, next.value))
       }
   }
 
@@ -463,59 +366,39 @@ object Streams {
     * open session rather than retroactively splitting closed ones.
     * Per-user batch events are sorted in memory — bounded by one
     * user's events per micro-batch, hash-partitioned across
-    * executors.
-    *
-    * State TTL (`ttlMs`): an idle user's OPEN session closes once the
-    * watermark passes — the eviction emits the session's final extent
-    * (already the latest-wins row consumers keep, so a drain's
-    * results are unchanged) and drops the key; a returning user
-    * starts a fresh session, which is exactly the gap rule's verdict
-    * anyway whenever ttl ≥ gap. Requires a `ts` column. */
+    * executors. */
   def sessionCountsState(
       events: DataFrame,
-      gapMs: Long = 10 * 60 * 1000L,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+      gapMs: Long = 10 * 60 * 1000L)(
       implicit spark: SparkSession): Dataset[SessionOut] = {
     import spark.implicits._
     val gapUs = gapMs * 1000L
-    withTtlWatermark(events, ttlMs, watermark)
+    events
       // integer division: ts_ns exceeds 2^53, a double round-trip
       // would corrupt the microsecond value
-      .select(col("user_id").as[Long],
-        expr("ts_ns div 1000").as[Long],
-        ttlTsCol(ttlMs).as[java.sql.Timestamp])
-      .as[(Long, Long, java.sql.Timestamp)]
+      .select(col("user_id").as[Long], expr("ts_ns div 1000").as[Long])
+      .as[(Long, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (user: Long, rows: Iterator[(Long, Long, java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (user: Long, rows: Iterator[(Long, Long)],
          state: GroupState[OpenSession]) =>
-          if (state.hasTimedOut) {
-            // the open session's final extent was already emitted;
-            // re-emit it as the closure record and evict
-            val cur = state.get
-            state.remove()
-            Iterator(SessionOut(user, cur.startUs, cur.n))
-          } else {
-            val ts = rows.map(_._2).toArray.sorted
-            val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-            var cur: OpenSession = state.getOption.orNull
-            ts.foreach { t =>
-              if (cur == null) cur = OpenSession(t, t, 1L)
-              else if (t - cur.lastUs >= gapUs) {
-                out += SessionOut(user, cur.startUs, cur.n) // closed final
-                cur = OpenSession(t, t, 1L)
-              } else cur = OpenSession(cur.startUs,
-                math.max(cur.lastUs, t), cur.n + 1L)
-            }
-            if (cur != null) {
-              out += SessionOut(user, cur.startUs, cur.n) // current extent
-              state.update(cur)
-              armTtl(state, ttlMs, cur.lastUs)
-            }
-            out.iterator
+          val ts = rows.map(_._2).toArray.sorted
+          val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
+          var cur: OpenSession = state.getOption.orNull
+          ts.foreach { t =>
+            if (cur == null) cur = OpenSession(t, t, 1L)
+            else if (t - cur.lastUs >= gapUs) {
+              out += SessionOut(user, cur.startUs, cur.n) // closed final
+              cur = OpenSession(t, t, 1L)
+            } else cur = OpenSession(cur.startUs,
+              math.max(cur.lastUs, t), cur.n + 1L)
           }
+          if (cur != null) {
+            out += SessionOut(user, cur.startUs, cur.n) // current extent
+            state.update(cur)
+          }
+          out.iterator
       }
   }
 
@@ -541,56 +424,35 @@ object Streams {
     * late event older than the carried state appends after it rather
     * than retroactively splicing into history. Per-user batch events
     * sort in memory — bounded by one user's events per micro-batch,
-    * hash-partitioned by user across executors.
-    *
-    * State TTL (`ttlMs`): a user idle past the TTL (event time) is
-    * evicted once the watermark passes — nothing to emit (every
-    * transition increment already left in the batch that produced
-    * it); a returning user's first event simply starts a new chain,
-    * so the one divergence from the unbounded run is the single
-    * transition that would have spanned the idle gap — the documented
-    * trade-off that bounds a month-scale deployment's state. Requires
-    * a `ts` event-time column on the input. */
-  def transitionCountsState(
-      events: DataFrame,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+    * hash-partitioned by user across executors. */
+  def transitionCountsState(events: DataFrame)(
       implicit spark: SparkSession): Dataset[TransitionInc] = {
     import spark.implicits._
-    withTtlWatermark(events, ttlMs, watermark)
+    events
       .select(col("user_id").as[Long],
         expr("ts_ns div 1000").as[Long],
-        col("event_id").as[Long], col("event_type").as[String],
-        ttlTsCol(ttlMs).as[java.sql.Timestamp])
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
+        col("event_id").as[Long], col("event_type").as[String])
+      .as[(Long, Long, Long, String)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (_: Long, rows: Iterator[(Long, Long, Long, String, java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (_: Long, rows: Iterator[(Long, Long, Long, String)],
          state: GroupState[LastEvent]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val evs = rows.map(r => (r._2, r._3, r._4)).toArray
-              .sortBy(e => (e._1, e._2))
-            val counts =
-              scala.collection.mutable.Map.empty[(String, String), Long]
-            var prev = state.getOption.orNull
-            evs.foreach { case (ts, id, tpe) =>
-              if (prev != null) {
-                val k = (prev.tpe, tpe)
-                counts(k) = counts.getOrElse(k, 0L) + 1L
-              }
-              prev = LastEvent(ts, id, tpe)
-            }
+          val evs = rows.map(r => (r._2, r._3, r._4)).toArray
+            .sortBy(e => (e._1, e._2))
+          val counts =
+            scala.collection.mutable.Map.empty[(String, String), Long]
+          var prev = state.getOption.orNull
+          evs.foreach { case (ts, id, tpe) =>
             if (prev != null) {
-              state.update(prev)
-              armTtl(state, ttlMs, evs.map(_._1).max)
+              val k = (prev.tpe, tpe)
+              counts(k) = counts.getOrElse(k, 0L) + 1L
             }
-            counts.iterator.map { case ((f, t), n) =>
-              TransitionInc(f, t, n)
-            }
+            prev = LastEvent(ts, id, tpe)
+          }
+          if (prev != null) state.update(prev)
+          counts.iterator.map { case ((f, t), n) =>
+            TransitionInc(f, t, n)
           }
       }
   }
@@ -612,51 +474,35 @@ object Streams {
     * Same replay discipline as [[transitionCountsState]]: batches
     * are time-ordered across files, a late event appends after the
     * carried state. State is TWO strings per user — smaller than the
-    * session or top-k monitors — hash-partitioned by user.
-    *
-    * State TTL (`ttlMs`): the [[transitionCountsState]] eviction
-    * contract — idle keys drop once the watermark passes, emitted
-    * increments stand, a returning user restarts with an empty
-    * window (the paths that would have spanned the idle gap are the
-    * documented trade-off). Requires a `ts` column. */
-  def pathCountsState(
-      events: DataFrame,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+    * session or top-k monitors — hash-partitioned by user. */
+  def pathCountsState(events: DataFrame)(
       implicit spark: SparkSession): Dataset[PathInc] = {
     import spark.implicits._
-    withTtlWatermark(events, ttlMs, watermark)
+    events
       .select(col("user_id").as[Long],
         expr("ts_ns div 1000").as[Long],
-        col("event_id").as[Long], col("event_type").as[String],
-        ttlTsCol(ttlMs).as[java.sql.Timestamp])
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
+        col("event_id").as[Long], col("event_type").as[String])
+      .as[(Long, Long, Long, String)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (_: Long, rows: Iterator[(Long, Long, Long, String, java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (_: Long, rows: Iterator[(Long, Long, Long, String)],
          state: GroupState[LastTwo]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val evs = rows.map(r => (r._2, r._3, r._4)).toArray
-              .sortBy(e => (e._1, e._2))
-            val counts = scala.collection.mutable.Map.empty[String, Long]
-            var (a, b) = state.getOption
-              .map(s => (s.a.orNull, s.b.orNull)).getOrElse((null, null))
-            evs.foreach { case (_, _, tpe) =>
-              if (a != null && b != null) {
-                val p = s"$a>$b>$tpe"
-                counts(p) = counts.getOrElse(p, 0L) + 1L
-              }
-              a = b
-              b = tpe
+          val evs = rows.map(r => (r._2, r._3, r._4)).toArray
+            .sortBy(e => (e._1, e._2))
+          val counts = scala.collection.mutable.Map.empty[String, Long]
+          var (a, b) = state.getOption
+            .map(s => (s.a.orNull, s.b.orNull)).getOrElse((null, null))
+          evs.foreach { case (_, _, tpe) =>
+            if (a != null && b != null) {
+              val p = s"$a>$b>$tpe"
+              counts(p) = counts.getOrElse(p, 0L) + 1L
             }
-            state.update(LastTwo(Option(a), Option(b)))
-            if (evs.nonEmpty) armTtl(state, ttlMs, evs.map(_._1).max)
-            counts.iterator.map { case (p, n) => PathInc(p, n) }
+            a = b
+            b = tpe
           }
+          state.update(LastTwo(Option(a), Option(b)))
+          counts.iterator.map { case (p, n) => PathInc(p, n) }
       }
   }
 
@@ -665,58 +511,6 @@ object Streams {
     * `updates` is the monotone keep-the-max drain counter. */
   final case class FunnelStage(user_id: Long, updates: Long,
       t1: Long, t2: Long, t3: Long)
-
-  /** Event-time TTL plumbing shared by the per-user state operators
-    * (VERDICT r10 item 1): `conf` picks the timeout mode, `watermarked`
-    * attaches the event-time watermark the timeout engine needs
-    * (requires a `ts` timestamp column on the input), and `arm` sets
-    * the key's expiry to `maxEventMs + ttl` — clamped above the
-    * current watermark, which Spark requires of any timeout
-    * timestamp. With `ttlMs = None` every operator is byte-for-byte
-    * its old NoTimeout self (the gated replays stay bitwise). */
-  private def ttlConf(ttlMs: Option[Long]): GroupStateTimeout =
-    if (ttlMs.isDefined) GroupStateTimeout.EventTimeTimeout()
-    else GroupStateTimeout.NoTimeout()
-
-  private def withTtlWatermark(
-      df: DataFrame, ttlMs: Option[Long], watermark: String): DataFrame =
-    ttlMs.map { t =>
-      require(t > 0, s"ttlMs must be positive: $t")
-      df.withWatermark("ts", watermark)
-    }.getOrElse(df)
-
-  /** The watermark-tagged event-time attribute must SURVIVE into the
-    * stateful operator's input for EventTimeTimeout to be accepted —
-    * in TTL mode the tuple carries the real `ts`, otherwise a typed
-    * NULL placeholder keeps the tuple shape without the column. */
-  private def ttlTsCol(ttlMs: Option[Long]): Column =
-    if (ttlMs.isDefined) col("ts") else lit(null).cast(TimestampType)
-
-  private def armTtl[S](
-      state: GroupState[S], ttlMs: Option[Long], maxEventUs: Long): Unit =
-    ttlMs.foreach { ttl =>
-      val target = maxEventUs / 1000L + ttl
-      state.setTimeoutTimestamp(
-        math.max(target, state.getCurrentWatermarkMs() + 1L))
-    }
-
-  /** The drain counter after `prev`, for every state that emits one:
-    * the plain per-key sequence `prev + 1` under NoTimeout; in TTL
-    * mode, with an event seen (`maxEventUs` set), event-time-derived
-    * `max(prev + 1, maxEventUs)` — and the key's TTL is armed at
-    * `maxEventUs`. A key returning after eviction then re-emits with a
-    * counter above its own closure record (`prev + 1` of the evicted
-    * chain), so a max-counter drain ([[latest]]) resolves to the live
-    * row on any sink, ordered or not. Holds whenever the return gap
-    * (≥ ttl − watermark delay) exceeds the evicted chain's batch count
-    * in microseconds — every real configuration. */
-  private def drainCounter[S](state: GroupState[S], ttlMs: Option[Long],
-      prev: Long, maxEventUs: Long): Long =
-    if (ttlMs.isEmpty || maxEventUs == Long.MinValue) prev + 1L
-    else {
-      armTtl(state, ttlMs, maxEventUs)
-      math.max(prev + 1L, maxEventUs)
-    }
 
   /** Streaming anchored-earliest funnel — conversion tracking AT
     * INGEST: each user carries (t1, t2, t3), the completion times of
@@ -732,64 +526,37 @@ object Streams {
     * chain is deterministic; the strictly-later requirement means
     * same-timestamp steps never advance the chain, matching the
     * batch operator's `>` comparisons whatever the within-timestamp
-    * processing order.
-    *
-    * State TTL (`ttlMs` — VERDICT r10 item 1): a month-scale
-    * deployment cannot hold every user ever seen; with a TTL, a user
-    * idle past `ttlMs` (event time, measured from their last event)
-    * is EVICTED once the watermark passes — the eviction emits one
-    * final [[FunnelStage]] (the chain as it stood, `updates` bumped —
-    * the closure record a conversion report keeps), and a later
-    * return starts a fresh chain. Requires the input to carry the
-    * `ts` event-time column; `watermark` is the lateness bound.
-    *
-    * TTL counter discipline (ADVICE r11): with TTL on, `updates` is
-    * event-time-derived — `max(prev + 1, maxEventMicros)` — so a
-    * returning user's fresh chain always out-counts the old chain's
-    * closure record (`prev + 1`) in the max-counter drain; a restart
-    * is never shadowed (see [[cdcLatestState]] for the bound).
-    * Without TTL the counter is the plain per-key sequence. */
+    * processing order. */
   def funnelStageState(
       events: DataFrame,
-      steps: Seq[String],
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+      steps: Seq[String])(
       implicit spark: SparkSession): Dataset[FunnelStage] = {
     require(steps.size == 3 && steps.distinct.size == 3,
       s"funnelStageState needs 3 distinct steps, got $steps")
     import spark.implicits._
-    withTtlWatermark(events, ttlMs, watermark)
+    events
       .select(col("user_id").as[Long],
         expr("ts_ns div 1000").as[Long],
-        col("event_id").as[Long], col("event_type").as[String],
-        ttlTsCol(ttlMs).as[java.sql.Timestamp])
-      .as[(Long, Long, Long, String, java.sql.Timestamp)]
+        col("event_id").as[Long], col("event_type").as[String])
+      .as[(Long, Long, Long, String)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (u: Long, rows: Iterator[(Long, Long, Long, String, java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (u: Long, rows: Iterator[(Long, Long, Long, String)],
          state: GroupState[(Long, Long, Long, Long)]) =>
-          if (state.hasTimedOut) {
-            // closure record: the chain as it stood, then eviction
-            val (pu, t1, t2, t3) = state.get
-            state.remove()
-            Iterator(FunnelStage(u, pu + 1L, t1, t2, t3))
-          } else {
-            val evs = rows.toArray.sortBy(e => (e._2, e._3))
-            var (pu, t1, t2, t3) = state.getOption
-              .getOrElse((0L, -1L, -1L, -1L))
-            evs.foreach { case (_, ts, _, tpe, _) =>
-              if (tpe == steps(0)) { if (t1 < 0) t1 = ts }
-              else if (tpe == steps(1)) {
-                if (t1 >= 0 && ts > t1 && t2 < 0) t2 = ts
-              } else if (tpe == steps(2)) {
-                if (t2 >= 0 && ts > t2 && t3 < 0) t3 = ts
-              }
+          val evs = rows.toArray.sortBy(e => (e._2, e._3))
+          var (pu, t1, t2, t3) = state.getOption
+            .getOrElse((0L, -1L, -1L, -1L))
+          evs.foreach { case (_, ts, _, tpe) =>
+            if (tpe == steps(0)) { if (t1 < 0) t1 = ts }
+            else if (tpe == steps(1)) {
+              if (t1 >= 0 && ts > t1 && t2 < 0) t2 = ts
+            } else if (tpe == steps(2)) {
+              if (t2 >= 0 && ts > t2 && t3 < 0) t3 = ts
             }
-            val ctr = drainCounter(state, ttlMs, pu, evs.map(_._2).max)
-            state.update((ctr, t1, t2, t3))
-            Iterator(FunnelStage(u, ctr, t1, t2, t3))
           }
+          state.update((pu + 1L, t1, t2, t3))
+          Iterator(FunnelStage(u, pu + 1L, t1, t2, t3))
       }
   }
 
@@ -816,54 +583,35 @@ object Streams {
     *
     * State per user is its distinct item vector — bounded by the
     * item vocabulary (event types, provenance labels), NOT by event
-    * volume; hash-partitioned by user across executors.
-    *
-    * State TTL (`ttlMs`): idle baskets evict once the watermark
-    * passes (emitted increments stand); a returning user counts as a
-    * NEW basket — their first post-expiry event re-emits the user
-    * increment and their items recount, which is the census a
-    * windowed-retention deployment wants (a basket is an activity
-    * span, not a lifetime). Requires a `ts` column. */
-  def assocSetState(
-      events: DataFrame,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+    * volume; hash-partitioned by user across executors. */
+  def assocSetState(events: DataFrame)(
       implicit spark: SparkSession): Dataset[AssocInc] = {
     import spark.implicits._
-    withTtlWatermark(events, ttlMs, watermark)
+    events
       .filter(col("user_id").isNotNull && col("event_type").isNotNull)
-      .select(col("user_id").as[Long], col("event_type").as[String],
-        expr("ts_ns div 1000").as[Long],
-        ttlTsCol(ttlMs).as[java.sql.Timestamp])
-      .as[(Long, String, Long, java.sql.Timestamp)]
+      .select(col("user_id").as[Long], col("event_type").as[String])
+      .as[(Long, String)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (_: Long, rows: Iterator[(Long, String, Long, java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (_: Long, rows: Iterator[(Long, String)],
          state: GroupState[ItemSet]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val evs = rows.toArray
-            val out = scala.collection.mutable.ArrayBuffer.empty[AssocInc]
-            if (!state.exists) out += AssocInc("user", "", "", 1L)
-            var cur = state.getOption.map(_.items.toSet)
-              .getOrElse(Set.empty[String])
-            evs.foreach { case (_, tpe, _, _) =>
-              if (!cur.contains(tpe)) {
-                out += AssocInc("item", tpe, "", 1L)
-                cur.foreach { j =>
-                  out += AssocInc("pair", tpe, j, 1L)
-                  out += AssocInc("pair", j, tpe, 1L)
-                }
-                cur = cur + tpe
+          val out = scala.collection.mutable.ArrayBuffer.empty[AssocInc]
+          if (!state.exists) out += AssocInc("user", "", "", 1L)
+          var cur = state.getOption.map(_.items.toSet)
+            .getOrElse(Set.empty[String])
+          rows.foreach { case (_, tpe) =>
+            if (!cur.contains(tpe)) {
+              out += AssocInc("item", tpe, "", 1L)
+              cur.foreach { j =>
+                out += AssocInc("pair", tpe, j, 1L)
+                out += AssocInc("pair", j, tpe, 1L)
               }
+              cur = cur + tpe
             }
-            state.update(ItemSet(cur.toSeq.sorted))
-            if (evs.nonEmpty) armTtl(state, ttlMs, evs.map(_._3).max)
-            out.iterator
           }
+          state.update(ItemSet(cur.toSeq.sorted))
+          out.iterator
       }
   }
 
@@ -920,17 +668,10 @@ object Streams {
     * `lit(1L).as("n")`. SQL semantics for NULL: a NULL key is its own
     * group, and a NULL sum input adds 0 (the row still counts in `n`).
     *
-    * `updates` is the drain counter (`drainCounter`): the plain
-    * per-key sequence under NoTimeout, where the sums only grow, so
-    * the max-counter row is also the max-count row; event-time-derived
-    * in TTL mode. Consumers keep the max-counter row per key
-    * ([[latest]]) — the current truth on any sink, ordered or not.
-    *
-    * State TTL (`ttlMs`): a key idle past the TTL (event time;
-    * requires a `ts` timestamp column on `rows`, which feed the
-    * watermark as given) evicts, emitting `updates = prev + 1` with
-    * every sum at 0, then drops its state; a returning key restarts
-    * from zero. `ttlMs = None` is the plain NoTimeout operator.
+    * `updates` is the drain counter: the plain per-key sequence
+    * 1, 2, 3, …, and the sums only grow, so the max-counter row is
+    * also the max-count row. Consumers keep the max-counter row per
+    * key ([[latest]]) — the current truth on any sink, ordered or not.
     *
     * 100 TB notes: state is 1 + |sums| longs per key, hash-partitioned
     * by key across executors. flatMapGroupsWithState gets no map-side
@@ -939,55 +680,36 @@ object Streams {
   def cumulativeState(
       rows: DataFrame,
       keys: Seq[Column],
-      sums: Seq[Column],
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes"): DataFrame = {
-    val named = withTtlWatermark(rows, ttlMs, watermark)
-      .select(keys ++ sums :+ ttlTsCol(ttlMs).as("__ts"): _*)
-    val names = named.columns.toSeq.dropRight(1)
+      sums: Seq[Column]): DataFrame = {
+    val named = rows.select(keys ++ sums: _*)
+    val names = named.columns.toSeq
     require(!names.contains("updates") && names.distinct == names,
       "cumulativeState needs distinct output names: " + names.mkString(","))
     val (keyNames, sumNames) = names.splitAt(names.length - sums.size)
     val in = named.select(keyNames.map(col) ++
-      sumNames.map(n => col(n).cast(LongType).as(n)) :+ col("__ts"): _*)
+      sumNames.map(n => col(n).cast(LongType).as(n)): _*)
     val (nk, ns) = (keyNames.length, sumNames.length)
     val keySchema = StructType(in.schema.take(nk))
     val outSchema = StructType(keySchema ++ ("updates" +: sumNames)
       .map(StructField(_, LongType, nullable = false)))
     in.groupBy(keyNames.map(col): _*)
       .as(Encoders.row(keySchema), Encoders.row(in.schema))
-      .flatMapGroupsWithState(OutputMode.Update(), ttlConf(ttlMs)) {
+      .flatMapGroupsWithState(
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
         // state: (updates, sum 1, …, sum ns)
         (key: Row, it: Iterator[Row], state: GroupState[Array[Long]]) =>
-          if (state.hasTimedOut) {
-            val pu = state.get.head
-            state.remove()
-            Iterator(Row.fromSeq(
-              key.toSeq ++ ((pu + 1L) +: Seq.fill(ns)(0L))))
-          } else {
-            val acc = state.getOption.getOrElse(new Array[Long](1 + ns))
-            var maxUs = Long.MinValue
-            while (it.hasNext) {
-              val r = it.next()
-              var i = 0
-              while (i < ns) {
-                if (!r.isNullAt(nk + i)) acc(1 + i) += r.getLong(nk + i)
-                i += 1
-              }
-              // the external type of `ts` follows the session's
-              // java8API conf; NULL is the NoTimeout placeholder
-              r.get(nk + ns) match {
-                case t: java.sql.Timestamp =>
-                  maxUs = math.max(maxUs, t.getTime * 1000L)
-                case t: java.time.Instant =>
-                  maxUs = math.max(maxUs, t.toEpochMilli * 1000L)
-                case _ =>
-              }
+          val acc = state.getOption.getOrElse(new Array[Long](1 + ns))
+          while (it.hasNext) {
+            val r = it.next()
+            var i = 0
+            while (i < ns) {
+              if (!r.isNullAt(nk + i)) acc(1 + i) += r.getLong(nk + i)
+              i += 1
             }
-            acc(0) = drainCounter(state, ttlMs, acc(0), maxUs)
-            state.update(acc)
-            Iterator(Row.fromSeq(key.toSeq ++ acc))
           }
+          acc(0) += 1L
+          state.update(acc)
+          Iterator(Row.fromSeq(key.toSeq ++ acc))
       }(rows.sparkSession.implicits.newLongArrayEncoder,
         Encoders.row(outSchema))
   }
@@ -1017,21 +739,18 @@ object Streams {
     * identical drift verdict — that equality is the q_stream_drift
     * gate. Output (g, bin, updates, n); state is one cell per
     * (group, bin) — |groups|·nBins cells TOTAL regardless of corpus
-    * size. TTL: see [[cumulativeState]] (a cell idle past the TTL
-    * evicts with one zero-count row). */
+    * size. */
   def histogramCountsState(
       rows: DataFrame,
       valueCol: String,
       groupCol: String,
       lo: Double,
       hi: Double,
-      nBins: Int,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes"): DataFrame = {
+      nBins: Int): DataFrame = {
     val bin = graft.operators.Stats.binExpr(valueCol, lo, hi, nBins)
     cumulativeState(rows.filter(bin.isNotNull),
       Seq(col(groupCol).cast(StringType).as("g"), bin.as("bin")),
-      Seq(lit(1L).as("n")), ttlMs, watermark)
+      Seq(lit(1L).as("n")))
   }
 
   /** Streaming cumulative per-(half, token) counts — the state
@@ -1044,23 +763,17 @@ object Streams {
     * (w, c_early, c_late) frame and the shared scoring tail
     * ([[graft.operators.TextAnalysis.trendingFromCounts]]) yields the
     * identical rising/falling table — the q_stream_trending gate.
-    * Output (late, w, updates, n).
-    *
-    * State TTL (`ttlMs`): the vocabulary IS this monitor's unbounded
-    * state — one cell per distinct (half, token), growing with the
-    * crawl — so bounded retention matters most here (eviction: see
-    * [[cumulativeState]]). */
+    * Output (late, w, updates, n); state is one cell per distinct
+    * (half, token), growing with the crawl's vocabulary. */
   def tokenCountsState(
       docs: DataFrame,
       lateFlag: Column,
-      text: Column,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes"): DataFrame =
+      text: Column): DataFrame =
     cumulativeState(docs,
       Seq(lateFlag.cast(BooleanType).as("late"),
         explode(graft.operators.TextAnalysis.tokens(lower(text)))
           .as("w")),
-      Seq(lit(1L).as("n")), ttlMs, watermark)
+      Seq(lit(1L).as("n")))
 
   /** Streaming DSIR bucket counts — the importance model UPDATING AT
     * INGEST: each arriving document's hashed-bigram bag bumps its
@@ -1074,23 +787,18 @@ object Streams {
     * reproduces the batch selection exactly (the q_stream_dsir gate).
     * A NULL target flag counts as non-target, exactly the batch
     * `when(__t, 1).otherwise(0)`. Output (b, updates, cr, ct); state
-    * is ≤ `buckets` cells TOTAL regardless of corpus size. TTL: see
-    * [[cumulativeState]] — eviction turns the model into a
-    * trailing-window importance estimate. */
+    * is ≤ `buckets` cells TOTAL regardless of corpus size. */
   def dsirBucketCountsState(
       docs: DataFrame,
       isTarget: Column,
       text: Column,
-      buckets: Int = 4096,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes"): DataFrame =
+      buckets: Int = 4096): DataFrame =
     // the doc id rides along only because dsirGrams carries one
     cumulativeState(
       graft.operators.TextAnalysis.dsirGrams(docs, "doc_id", text,
-        isTarget, buckets, keep = ttlMs.map(_ => "ts").toSeq),
+        isTarget, buckets),
       Seq(col("__b").as("b")),
-      Seq(lit(1L).as("cr"), col("__t").cast(LongType).as("ct")),
-      ttlMs, watermark)
+      Seq(lit(1L).as("cr"), col("__t").cast(LongType).as("ct")))
 
   /** Streaming count-min sketch — cumulative cell counts in keyed
     * state: each arriving key occurrence bumps its `depth` cells
@@ -1102,16 +810,12 @@ object Streams {
     * cut yield the identical table — the q_stream_heavy_hitters gate.
     * Output (depth, bucket, updates, n); state is depth · width
     * longs TOTAL — the smallest footprint of any monitor here
-    * (4 · 2^20 at production width). TTL: see [[cumulativeState]] —
-    * eviction turns the cumulative sketch into a trailing-window
-    * one. */
+    * (4 · 2^20 at production width). */
   def cmsCellsState(
       rows: DataFrame,
       key: Column,
       depth: Int = 4,
-      width: Int = 1 << 20,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes"): DataFrame = {
+      width: Int = 1 << 20): DataFrame = {
     import graft.operators.Dedup
     require(depth > 0 && width > 0)
     cumulativeState(rows.withColumn("__h", Dedup.polyHash(key)),
@@ -1119,7 +823,7 @@ object Streams {
         struct(lit(j).as("depth"),
           (pmod(col("__h") * Dedup.affineA(j) + Dedup.affineB(j),
             lit(Dedup.PortableMod)) % width).as("bucket"))): _*))),
-      Seq(lit(1L).as("n")), ttlMs, watermark)
+      Seq(lit(1L).as("n")))
   }
 
   /** Streaming AMS F₂ state — the self-join-size monitor AT INGEST:
@@ -1178,60 +882,31 @@ object Streams {
     * [[graft.functions.KmvSketch.kmvAgg]] bit for bit, which is the
     * correctness gate (the batch oracle replays the same k-minima).
     * Consumers keep the max-counter row per key and apply the
-    * standard (k−1)·M/kth estimate.
-    *
-    * State TTL (`ttlMs`): a source idle past the TTL (event time;
-    * requires a `ts` column on `rows`) evicts — one empty-sketch
-    * record (n = 0) is emitted, then the k-minima drop; a returning
-    * source re-sketches from scratch. TTL-mode counters are
-    * event-time-derived (the [[cdcLatestState]] drain rule), so the
-    * max-counter drain stays correct across evictions: a post-return
-    * emission always out-counts the expiry record. Default NoTimeout
-    * is byte-identical to the gated replays. */
+    * standard (k−1)·M/kth estimate. */
   def kmvCellsState(
       rows: DataFrame,
       keyCol: Column,
       hashCol: Column,
-      k: Int,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+      k: Int)(
       implicit spark: SparkSession): Dataset[KmvCell] = {
     import spark.implicits._
     val agg = new graft.functions.KmvSketch.KmvAggregator(k)
-    withTtlWatermark(rows, ttlMs, watermark)
+    rows
       .select(keyCol.cast(StringType).as("__k"),
-        hashCol.cast(LongType).as("__h"),
-        ttlTsCol(ttlMs).as("__ts"))
-      .as[(String, Long, java.sql.Timestamp)]
+        hashCol.cast(LongType).as("__h"))
+      .as[(String, Long)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (key: String, it: Iterator[(String, Long, java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (key: String, it: Iterator[(String, Long)],
          state: GroupState[(Long, Array[Long])]) =>
-          if (state.hasTimedOut) {
-            // retention expiry: one empty-sketch record, then
-            // eviction — its counter stays BELOW any post-return
-            // emission (event-time-derived, the CDC drain rule)
-            val (pu, _) = state.get
-            state.remove()
-            val fin = agg.finish(Array.emptyLongArray)
-            Iterator(KmvCell(key, pu + 1L, fin.n, fin.kth))
-          } else {
-            val (pu, pbuf) = state.getOption
-              .getOrElse((0L, Array.emptyLongArray))
-            var buf = pbuf
-            var maxUs = Long.MinValue
-            while (it.hasNext) {
-              val t = it.next()
-              buf = agg.reduce(buf, t._2)
-              if (t._3 != null)
-                maxUs = math.max(maxUs, t._3.getTime * 1000L)
-            }
-            val ctr = drainCounter(state, ttlMs, pu, maxUs)
-            state.update((ctr, buf))
-            val fin = agg.finish(buf)
-            Iterator(KmvCell(key, ctr, fin.n, fin.kth))
-          }
+          val (pu, pbuf) = state.getOption
+            .getOrElse((0L, Array.emptyLongArray))
+          var buf = pbuf
+          while (it.hasNext) buf = agg.reduce(buf, it.next()._2)
+          state.update((pu + 1L, buf))
+          val fin = agg.finish(buf)
+          Iterator(KmvCell(key, pu + 1L, fin.n, fin.kth))
       }
   }
 
@@ -1258,56 +933,30 @@ object Streams {
     * smallest monitor state in the module beside the DSIR buckets;
     * idempotent max even survives REPLAYED batches, which no counting
     * monitor here can claim. The stream side shuffles one (g, j, ρ)
-    * row per key occurrence (the [[cumulativeState]] shuffle note).
-    *
-    * State TTL (`ttlMs`): bounded retention — a register idle past
-    * the TTL (event time; requires a `ts` column on `rows`) evicts
-    * with one zero-rank row (m = 0: "no register"; the estimate tail
-    * treats it as absent), turning the cumulative sketch into a
-    * trailing-window distinct estimate; the emitted `updates` counter
-    * (event-time-derived in TTL mode) makes the max-counter drain
-    * correct across evictions. The gate keeps the default NoTimeout,
-    * whose registers stay byte-identical. */
+    * row per key occurrence (the [[cumulativeState]] shuffle note). */
   def hllRegistersState(
       rows: DataFrame,
       groupCol: Column,
-      hashCol: Column,
-      ttlMs: Option[Long] = None,
-      watermark: String = "10 minutes")(
+      hashCol: Column)(
       implicit spark: SparkSession): Dataset[HllReg] = {
     import spark.implicits._
     import graft.functions.HllSketch
-    withTtlWatermark(rows, ttlMs, watermark)
+    rows
       .select(groupCol.cast(StringType).as("__g"),
         HllSketch.bucket(hashCol).as("__j"),
-        HllSketch.rho(hashCol).as("__r"),
-        ttlTsCol(ttlMs).as("__ts"))
-      .as[(String, Long, Long, java.sql.Timestamp)]
+        HllSketch.rho(hashCol).as("__r"))
+      .as[(String, Long, Long)]
       .groupByKey(t => (t._1, t._2))
       .flatMapGroupsWithState(
-        OutputMode.Update(), ttlConf(ttlMs)) {
-        (k: (String, Long),
-         it: Iterator[(String, Long, Long, java.sql.Timestamp)],
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+        (k: (String, Long), it: Iterator[(String, Long, Long)],
          state: GroupState[(Long, Long)]) =>
-          if (state.hasTimedOut) {
-            val (pu, _) = state.get
-            state.remove()
-            Iterator(HllReg(k._1, k._2, pu + 1L, 0L))
-          } else {
-            var add = 0L
-            var maxUs = Long.MinValue
-            while (it.hasNext) {
-              val t = it.next()
-              add = math.max(add, t._3)
-              if (t._4 != null)
-                maxUs = math.max(maxUs, t._4.getTime * 1000L)
-            }
-            val (pu, pm) = state.getOption.getOrElse((0L, 0L))
-            val ctr = drainCounter(state, ttlMs, pu, maxUs)
-            val m = math.max(pm, add)
-            state.update((ctr, m))
-            Iterator(HllReg(k._1, k._2, ctr, m))
-          }
+          var add = 0L
+          while (it.hasNext) add = math.max(add, it.next()._3)
+          val (pu, pm) = state.getOption.getOrElse((0L, 0L))
+          val m = math.max(pm, add)
+          state.update((pu + 1L, m))
+          Iterator(HllReg(k._1, k._2, pu + 1L, m))
       }
   }
 
@@ -1453,9 +1102,7 @@ object Streams {
     * is hash-partitioned by (quadrant, qval) — 2^18 buckets spread
     * evenly by construction (SimHash bits are balanced); per-bucket
     * state is the distinct-hash list the batch LSH bucket guard bounds
-    * the same way, and a production deployment would add a
-    * processing-time TTL (NoTimeout here keeps the bounded-drain gate
-    * deterministic). */
+    * the same way. */
   def nearDupFlags(
       docs: DataFrame,
       maxHamming: Int = 3)(
@@ -1667,17 +1314,17 @@ object Streams {
     // watermark-driven work — append-mode aggregate flushes and state
     // TIMEOUT callbacks. Every gated twin drains in UPDATE mode (or
     // Append only for the inner stream-stream join, which emits on
-    // match during the data batch) and runs NoTimeout state, so the
-    // extra batch re-plans and re-executes the full incremental plan
-    // to emit nothing. Set/restored around the drain like the other
+    // match during the data batch) and every state here is
+    // NoTimeout, so the extra batch re-plans and re-executes the full
+    // incremental plan to emit nothing. Set/restored around the drain like the other
     // two; the DuckDB oracle gates that every drained value is
     // unchanged.
     // GATED on mode == Update (ADVICE r16): this helper is generic,
-    // and a future Append-mode WATERMARKED aggregation (or an
-    // EventTimeTimeout state twin) drained through it would silently
-    // lose its final watermark-driven flush with the no-data batch
-    // disabled. Update-mode drains emit on every data batch, so for
-    // them the trailing batch only re-plans to emit nothing. The one
+    // and a future Append-mode WATERMARKED aggregation drained
+    // through it would silently lose its final watermark-driven flush
+    // with the no-data batch disabled. Update-mode drains emit on
+    // every data batch, so for them the trailing batch only re-plans
+    // to emit nothing. The one
     // current Append-mode caller (the inner stream-stream join, which
     // emits on match during the data batch) keeps the default — one
     // trailing batch of fixed cost buys the mode-safety invariant.

@@ -133,11 +133,12 @@ class ConversionsSpec extends SparkSpecBase {
     assert(aligned.collect().toSeq == Seq(Row(1L, "x", null)))
   }
 
-  test("F4 dropIdColumn drops only when present") {
+  test("F4 alignToSchema drops an id column outside the target schema") {
     val df = spark.range(3).withColumnRenamed("id", "orderid")
-    assert(dropIdColumn(df).columns.toSeq == Seq("orderid"))
+    assert(alignToSchema(df, df.schema).columns.toSeq == Seq("orderid"))
     val withId = spark.range(3).withColumn("v", lit(1))
-    assert(dropIdColumn(withId).columns.toSeq == Seq("v"))
+    val target = StructType(Seq(StructField("v", IntegerType)))
+    assert(alignToSchema(withId, target).columns.toSeq == Seq("v"))
   }
 
   test("coercionLossCount counts only non-null→null transitions") {

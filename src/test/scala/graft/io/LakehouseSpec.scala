@@ -8,15 +8,16 @@ import graft.core.Tables
 class LakehouseSpec extends SparkSpecBase {
 
   test("date-partitioned layout prunes the scan to one partition") {
+    import org.apache.spark.sql.functions.{col, lit, to_date}
     val path = Files.createTempDirectory("lake").toString + "/orders"
     val src = Tables.orders(spark, "/root/testdata/sf0.001")
-    Lakehouse.writeDatePartitioned(src, "o_orderdate", path)
+    Lakehouse.writePartitioned(
+      src.withColumn("ds", to_date(col("o_orderdate"))), path, Seq("ds"))
 
-    val day = Lakehouse.readDay(spark, path, "1996-03-09")
+    val day = spark.read.parquet(path).filter(col("ds") === lit("1996-03-09"))
     // correctness: the partition read equals the row-filter read
     assert(day.count() ==
-      src.filter(org.apache.spark.sql.functions.to_date(
-        src("o_orderdate")) === "1996-03-09").count())
+      src.filter(to_date(src("o_orderdate")) === "1996-03-09").count())
     assert(day.count() > 0)
 
     // the plan must prune on the partition column, not post-filter
@@ -375,4 +376,55 @@ class LakehouseSpec extends SparkSpecBase {
       Seq((9L, "rebased")).toDF("k", "v")) == 3)
     assert(Lakehouse.versions(spark, path) == Seq(1, 2, 3))
   }
+
+  test("commitVersion: a writer that reaches the rename after a racer " +
+    "took the slot loses, though the rename nests its stage dir " +
+    "inside the slot and returns true") {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.slothide.impl", classOf[SlotHidingFs].getName)
+    conf.setBoolean("fs.slothide.impl.disable.cache", true)
+    val path = "slothide://" +
+      Files.createTempDirectory("occ4").toString + "/t"
+    assert(Lakehouse.commitVersion(spark, path, 0,
+      Seq((0L, "seed")).toDF("k", "v")) == 1)
+    assert(Lakehouse.commitVersion(spark, path, 1,
+      Seq((1L, "winner")).toDF("k", "v")) == 2)
+    // the loser read the ledger and checked the slot before the
+    // winner's rename: both checks miss v=2 until a rename onto it
+    SlotHidingFs.hidden = Some("v=2")
+    try intercept[java.util.ConcurrentModificationException] {
+      Lakehouse.commitVersion(spark, path, 1,
+        Seq((1L, "loser")).toDF("k", "v"))
+    } finally SlotHidingFs.hidden = None
+    assert(Lakehouse.versions(spark, path) == Seq(1, 2))
+    assert(Lakehouse.readVersion(spark, path, 2)
+      .as[(Long, String)].collect().toSeq == Seq((1L, "winner")))
+    val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
+    val stages = Seq(path, s"$path/v=2").flatMap(d =>
+      fs.listStatus(new org.apache.hadoop.fs.Path(d)).map(_.getPath.getName))
+      .filter(_.startsWith("__stage"))
+    assert(stages.isEmpty, s"staging left behind: $stages")
+  }
+}
+
+/** The local file system under the `slothide` scheme, able to hide one
+  * ledger slot (and everything under it) from `exists` until a rename
+  * onto it: the view of a writer that checked the ledger just before a
+  * racer's commit landed. */
+class SlotHidingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("slothide:///")
+  override def exists(f: org.apache.hadoop.fs.Path): Boolean =
+    !SlotHidingFs.hidden.exists(slot =>
+      Iterator.iterate(f)(_.getParent).takeWhile(_ != null)
+        .exists(_.getName == slot)) && super.exists(f)
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    if (SlotHidingFs.hidden.contains(dst.getName)) SlotHidingFs.hidden = None
+    super.rename(src, dst)
+  }
+}
+
+object SlotHidingFs {
+  @volatile var hidden: Option[String] = None
 }

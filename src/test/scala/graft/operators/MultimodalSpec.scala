@@ -91,12 +91,10 @@ class MultimodalSpec extends SparkSpecBase {
       le(44100, 4) ++ le(44100L * 2 * 2, 4) ++ le(4, 2) ++ le(16, 2) ++
       "data".getBytes ++ le(2000, 4) ++ payload
     val df = Seq((1L, wav), (2L, "notawav".getBytes)).toDF("id", "bin")
-    val r = df.select(col("id"),
-      Multimodal.wavChannels(col("bin")).as("ch"),
-      Multimodal.wavSampleRate(col("bin")).as("sr"),
-      Multimodal.wavBitsPerSample(col("bin")).as("bits"),
-      Multimodal.wavDataBytes(col("bin")).as("db"),
-      Multimodal.wavDurationMs(col("bin")).as("dur"))
+    val r = df.select(col("id"), Multimodal.wavMeta(col("bin")).as("w"))
+      .select(col("id"), col("w.channels"), col("w.sample_rate"),
+        col("w.bits_per_sample"), col("w.data_bytes"),
+        col("w.duration_ms"))
       .orderBy("id").collect()
     assert(r(0).getLong(1) == 2L && r(0).getLong(2) == 44100L)
     assert(r(0).getLong(3) == 16L && r(0).getLong(4) == 2000L)

@@ -2104,23 +2104,12 @@ class StatsSpec extends SparkSpecBase {
     assert(out(9L) == ((1L, 0L, 1L, 0.0, 0.583333)), s"got ${out(9L)}")
   }
 
-  test("countMinSketch: shard states merge to the whole-input sketch " +
-    "cell for cell, and estimates never undercount under forced " +
+  test("countMinSketch: estimates never undercount under forced " +
     "collisions") {
     import spark.implicits._
     val df = Seq.tabulate(300)(i => (s"w${i % 30}", i.toLong))
       .toDF("w", "id")
-    val a = Stats.countMinSketch(
-      df.filter(col("id") % 2 === 0), col("w"), width = 16)
-    val b = Stats.countMinSketch(
-      df.filter(col("id") % 2 === 1), col("w"), width = 16)
-    val merged = Stats.cmsMerge(a, b)
     val whole = Stats.countMinSketch(df, col("w"), width = 16)
-    def asMap(s: org.apache.spark.sql.DataFrame) =
-      s.collect().map(r => (r.getAs[Int]("depth"),
-        r.getAs[Long]("bucket")) -> r.getAs[Long]("cnt")).toMap
-    assert(asMap(merged) == asMap(whole),
-      "shard merge must equal the whole-input sketch")
     // width 16 over 30 keys forces collisions: the one-sided
     // estimate bound (min of upper bounds) must still hold per key
     val exact = df.groupBy(col("w")).agg(count(lit(1)).as("c_true"))

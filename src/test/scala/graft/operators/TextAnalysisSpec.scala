@@ -64,13 +64,6 @@ class TextAnalysisSpec extends SparkSpecBase {
     // "the quick fox" occurs in all 3 docs (df=3 > maxDf=2) → dropped
     // everywhere; doc 3 was ALL boilerplate and vanishes entirely.
     assert(kept == Set(1L -> "jumps over dogs", 2L -> "likes warm sun"))
-    // the 100 TB hash-key path (8-byte xxhash64 window key instead of
-    // the full segment text) keeps the identical survivor set
-    val hashed = TextAnalysis
-      .removeBoilerplateSegments(docs, "doc_id", col("text"),
-        segTokens = 3, maxDf = 2, hashKey = true)
-      .collect().map(r => (r.getLong(0), r.getString(2))).toSet
-    assert(hashed == kept)
   }
 
   test("bm25Retrieve: inverted-index top-k per query, set semantics") {

@@ -728,12 +728,11 @@ class StreamsSpec extends SparkSpecBase {
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("funnelStageState TTL: an idle user's state EVICTS once the " +
-    "watermark passes (closure record emitted, chain restarts from " +
-    "scratch); non-expired keys are byte-identical to the NoTimeout run") {
+  test("funnelStageState: a user idle for batches keeps the carried " +
+    "anchor, so a returning click advances the chain") {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("funnel_ttl").toFile
+    val tmp = java.nio.file.Files.createTempDirectory("funnel_idle").toFile
     val t0 = System.currentTimeMillis()
     def write(name: String, rows: Seq[(Long, Long, Long, String)],
         mod: Long): Unit = {
@@ -752,156 +751,38 @@ class StreamsSpec extends SparkSpecBase {
     }
     val h = 3600L * 1000 * 1000 * 1000 // 1 hour in ns
     val s = 1000L * 1000 * 1000 // 1 second in ns
-    // batch 1: users 1 & 2 view at 1h (TTL 1h → both expire at 2h)
+    // batch 1: users 1 & 2 view at 1h
     write("a.parquet",
       Seq((1L, h, 1L, "view"), (2L, h, 2L, "view")), t0 - 90000)
-    // batch 2: user 2 clicks at 4h — watermark AFTER this batch is
-    // 3h50m, past user 1's 2h expiry; user 2 re-arms to 5h
+    // batches 2 and 3: user 1 gets no data for three event-time hours
     write("b.parquet", Seq((3L, 4 * h, 2L, "click")), t0 - 60000)
-    // batch 3: only user 3 — user 1 gets NO data while the watermark
-    // (3h50m) exceeds its expiry → timeout fires: closure + eviction
     write("c.parquet", Seq((4L, 4 * h + s, 3L, "view")), t0 - 30000)
-    // batch 4: user 1 returns with a click — a FRESH chain cannot
-    // anchor on a click; user 2 completes the funnel
+    // batch 4: user 1 returns with a click; user 2 completes the funnel
     write("d.parquet", Seq((5L, 4 * h + 2 * s, 1L, "click"),
       (6L, 4 * h + 2 * s, 2L, "purchase")), t0)
-    def drain(ttl: Option[Long], name: String) = Streams.runAvailableNow(
+    val rows = Streams.runAvailableNow(
       Streams.funnelStageState(
         Streams.eventsStream(spark, tmp.getPath, glob = "*.parquet",
           maxFilesPerTrigger = 1),
-        Seq("view", "click", "purchase"), ttlMs = ttl,
-        watermark = "10 minutes").toDF(), name)
+        Seq("view", "click", "purchase")).toDF(), "funnel_idle")
       .collect()
       .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("updates"),
         r.getAs[Long]("t1"), r.getAs[Long]("t2"), r.getAs[Long]("t3")))
-    val ttlRows = drain(Some(3600L * 1000), "funnel_ttl")
     val hUs = h / 1000
-    // user 1's emission history in counter order: batch-1 anchor, the
-    // timeout CLOSURE record (same chain, counter bumped), then the
-    // restart where the returning click cannot anchor — proof the
-    // state was dropped. TTL counters are event-time-derived
-    // (ADVICE r11), so the restart row's counter (4h in µs) exceeds
-    // the closure's (1h µs + 1).
-    val u1 = ttlRows.filter(_._1 == 1L).map(t => (t._2, t._3, t._4, t._5))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(u1 == Seq((hUs, hUs, -1L, -1L), (hUs + 1, hUs, -1L, -1L),
-      (4 * hUs + 2 * s / 1000, -1L, -1L, -1L)), s"user 1 history: $u1")
-    // THE DRAIN FIX: the max-counter row per key is the RESTART, not
-    // the stale closure record — a returning user is never shadowed
-    val u1Latest = ttlRows.filter(_._1 == 1L).maxBy(_._2)
-    assert((u1Latest._3, u1Latest._4, u1Latest._5) == ((-1L, -1L, -1L)),
-      s"restart row must win the max-counter drain: $u1Latest")
-    // user 2 stayed live throughout (each batch re-armed its TTL):
-    // the full chain completes exactly as in the NoTimeout run
-    val u2Latest = ttlRows.filter(_._1 == 2L).maxBy(_._2)
+    // user 1's emissions: the batch-1 anchor, then the return, whose
+    // click advances the carried chain; the counter is the plain
+    // per-key sequence
+    val u1 = rows.filter(_._1 == 1L).map(t => (t._2, t._3, t._4, t._5))
+      .sortBy(_._1).toSeq
+    assert(u1 == Seq((1L, hUs, -1L, -1L),
+      (2L, hUs, 4 * hUs + 2 * s / 1000, -1L)), s"user 1 history: $u1")
+    val u1Plain = rows.filter(_._1 == 1L).maxBy(_._2)
+    assert((u1Plain._3, u1Plain._4) == ((hUs, 4 * hUs + 2 * s / 1000)),
+      s"user 1: $u1Plain")
+    // user 2 completes the full chain
+    val u2Latest = rows.filter(_._1 == 2L).maxBy(_._2)
     assert((u2Latest._3, u2Latest._4, u2Latest._5) ==
       ((hUs, 4 * hUs, 4 * hUs + 2 * s / 1000)), s"user 2: $u2Latest")
-    val plainRows = drain(None, "funnel_nottl")
-    // chains (not counters — TTL counters are event-time-derived)
-    // match the NoTimeout run for the non-expired key
-    val u2Plain = plainRows.filter(_._1 == 2L).map(t =>
-      (t._3, t._4, t._5)).sorted.toSeq
-    val u2Ttl = ttlRows.filter(_._1 == 2L).map(t =>
-      (t._3, t._4, t._5)).sorted.toSeq
-    assert(u2Ttl == u2Plain,
-      s"non-expired key diverged: ttl=$u2Ttl plain=$u2Plain")
-    // and WITHOUT the TTL, user 1's carried anchor lets the returning
-    // click advance the chain — the behavior the eviction removed
-    val u1Plain = plainRows.filter(_._1 == 1L).maxBy(_._2)
-    assert((u1Plain._3, u1Plain._4) == ((hUs, 4 * hUs + 2 * s / 1000)),
-      s"user 1 without TTL: $u1Plain")
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-  }
-
-  test("sessionCountsState TTL: an idle user's OPEN session evicts " +
-    "(drained sessions unchanged); a return starts a FRESH session " +
-    "even within the gap") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("sess_ttl").toFile
-    val t0 = System.currentTimeMillis()
-    val h = 3600L * 1000 * 1000 * 1000
-    val s = 1000L * 1000 * 1000
-    // user 1: two events at 1h, then idle; users 2/3 advance the
-    // watermark past 1h + TTL(30min) in later batches
-    writeEventsFile(tmp, "a.parquet",
-      Seq((h, 1L), (h + s, 1L)), t0 - 90000)
-    writeEventsFile(tmp, "b.parquet", Seq((3 * h, 2L)), t0 - 60000)
-    writeEventsFile(tmp, "c.parquet", Seq((3 * h + s, 3L)), t0 - 30000)
-    // user 1 returns at 3h+2s — with a HUGE gap parameter the old
-    // session would absorb it; only eviction forces a fresh one
-    writeEventsFile(tmp, "d.parquet", Seq((3 * h + 2 * s, 1L)), t0)
-    val raw = Streams.runAvailableNow(
-      Streams.sessionCountsState(
-        Streams.eventsStream(spark, tmp.getPath, glob = "*.parquet",
-          maxFilesPerTrigger = 1),
-        gapMs = Long.MaxValue / 2000, // gap never splits — TTL must
-        ttlMs = Some(30L * 60 * 1000),
-        watermark = "10 minutes").toDF(), "sess_ttl")
-    val u1 = raw.filter(col("user_id") === 1L)
-      .groupBy(col("session_start_us")).agg(max(col("n")).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // TWO sessions for user 1: the evicted 2-event one at 1h and the
-    // fresh 1-event one at 3h+2s — a NoTimeout run would show ONE
-    assert(u1 == Map(h / 1000 -> 2L, (3 * h + 2 * s) / 1000 -> 1L),
-      s"got $u1")
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-  }
-
-  test("cdcLatestState TTL: an idle key expires into a TOMBSTONE " +
-    "(latest-wins drain drops it); a later change restarts the key") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("cdc_ttl").toFile
-    val t0 = System.currentTimeMillis()
-    def write(name: String, rows: Seq[(Long, Long, Long, String)],
-        mod: Long): Unit = {
-      val stage = new java.io.File(tmp, s"__stage_$name")
-      rows.map { case (id, t, u, tp) => (id, t, u, tp, 1.0, "{}") }
-        .toDF("event_id", "ts", "user_id", "event_type", "value",
-          "props")
-        .withColumn("ts", timestamp_micros(expr("ts div 1000"))
-          .cast(org.apache.spark.sql.types.TimestampNTZType))
-        .coalesce(1).write.mode("overwrite").parquet(stage.getPath)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(tmp, name)
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(mod)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
-    val h = 3600L * 1000 * 1000 * 1000
-    val s = 1000L * 1000 * 1000
-    // key 1 upserts at 1h then goes idle; key 2 stays live
-    write("a.parquet",
-      Seq((1L, h, 1L, "up"), (2L, h, 2L, "up")), t0 - 90000)
-    write("b.parquet", Seq((3L, 4 * h, 2L, "up")), t0 - 60000)
-    // key 1 idle while the watermark (3h50m) passes its 2h expiry →
-    // tombstone + eviction fires in this batch
-    write("c.parquet", Seq((4L, 4 * h + s, 3L, "up")), t0 - 30000)
-    // key 1 RETURNS after eviction — the fresh chain's event-time-
-    // derived counter must exceed the tombstone's (ADVICE r11: a
-    // plain restart-at-1 counter left the key shadowed forever)
-    write("d.parquet", Seq((5L, 4 * h + 2 * s, 1L, "up")), t0)
-    val changes = Streams.eventsStream(spark, tmp.getPath,
-        glob = "*.parquet", maxFilesPerTrigger = 1)
-      .withColumn("op", lit("U"))
-      .select(col("user_id"), col("ts"), col("ts_ns"), col("event_id"),
-        col("op"), col("value"))
-    val drained = Streams.runAvailableNow(
-      Streams.cdcLatestState(changes, ttlMs = Some(3600L * 1000),
-        watermark = "10 minutes").toDF(), "cdc_ttl").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("updates"),
-        r.getAs[String]("op"), r.getAs[Long]("event_id")))
-    // key 1: upsert, retention tombstone, then the post-return upsert
-    val k1 = drained.filter(_._1 == 1L).sortBy(_._2).toSeq
-    assert(k1.map(_._3) == Seq("U", "D", "U"), s"key 1 history: $k1")
-    // latest-wins drain: key 1 resolves to the RETURNED upsert (the
-    // tombstone lost — the drain fix), keys 2 and 3 stay live
-    val latest = drained.groupBy(_._1)
-      .map { case (k, rs) =>
-        val w = rs.maxBy(_._2); k -> ((w._3, w._4)) }
-    assert(latest == Map(1L -> (("U", 5L)), 2L -> (("U", 3L)),
-      3L -> (("U", 4L))), s"latest: $latest")
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
@@ -1126,11 +1007,11 @@ class StreamsSpec extends SparkSpecBase {
     assert(streamed == batch)
   }
 
-  test("histogramCountsState TTL: an idle cell EVICTS with a zero " +
-    "row and restarts from scratch; live cells match the NoTimeout run") {
+  test("histogramCountsState: a cell idle for batches keeps its count " +
+    "and resumes cumulatively") {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("hist_ttl").toFile
+    val tmp = java.nio.file.Files.createTempDirectory("hist_idle").toFile
     val t0 = System.currentTimeMillis()
     def write(name: String, rows: Seq[(Long, Long, String)],
         mod: Long): Unit = {
@@ -1153,90 +1034,20 @@ class StreamsSpec extends SparkSpecBase {
     write("a.parquet", Seq((1L, h, "a"), (2L, h, "a"), (3L, h, "b")),
       t0 - 90000)
     write("b.parquet", Seq((4L, 4 * h, "b")), t0 - 60000)
-    // "a" gets no data while the watermark (3h50m) passes its 2h
-    // expiry → the zero-count eviction row fires in this batch
     write("c.parquet", Seq((5L, 4 * h + s, "b")), t0 - 30000)
-    // "a" returns: the restarted cell counts from scratch
+    // "a" returns: its cell carries on from the held count
     write("d.parquet", Seq((6L, 4 * h + 2 * s, "a")), t0)
-    def drain(ttl: Option[Long], name: String) = Streams.runAvailableNow(
+    val rows = Streams.runAvailableNow(
       Streams.histogramCountsState(
         Streams.eventsStream(spark, tmp.getPath, glob = "*.parquet",
           maxFilesPerTrigger = 1),
-        "value", "event_type", lo = 0.0, hi = 100.0, nBins = 10,
-        ttlMs = ttl, watermark = "10 minutes").toDF(), name)
+        "value", "event_type", lo = 0.0, hi = 100.0, nBins = 10).toDF(),
+      "hist_idle")
       .collect().map(r => (r.getAs[String]("g"), r.getAs[Int]("bin"),
         r.getAs[Long]("updates"), r.getAs[Long]("n")))
-    val ttlRows = drain(Some(3600L * 1000), "hist_ttl")
-    // cell (a, 1) history in COUNTER order: 2 (batch 1), the
-    // zero-count eviction record, then the restart at 1 — the state
-    // was dropped, not carried
-    val aCell = ttlRows.filter(t => t._1 == "a" && t._2 == 1)
-      .sortBy(_._3).map(_._4)
-    assert(aCell.toSeq == Seq(2L, 0L, 1L), s"cell history: $aCell")
-    // THE DRAIN RULE: the max-counter row is the restart (TTL
-    // counters are event-time-derived), on any sink ordering
-    val aLatest = ttlRows.filter(t => t._1 == "a" && t._2 == 1)
-      .maxBy(_._3)
-    assert(aLatest._4 == 1L, s"max-counter drain must pick: $aLatest")
-    // the live group matches the NoTimeout run cell for cell
-    // (counts, not counters — TTL counters are event-time-derived)
-    val plainRows = drain(None, "hist_nottl")
-    assert(ttlRows.filter(_._1 == "b").map(t => (t._2, t._4)).sorted.toSeq
-      == plainRows.filter(_._1 == "b").map(t => (t._2, t._4)).sorted.toSeq,
-      "non-expired cells must match the NoTimeout run")
-    // NoTimeout keeps cumulative semantics for the idle group too
-    assert(plainRows.filter(t => t._1 == "a" && t._2 == 1).map(_._4)
-      .sorted.toSeq == Seq(2L, 3L))
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-  }
-
-  test("kmvCellsState TTL: an idle source expires into an empty-" +
-    "sketch record whose counter LOSES the max-counter drain to the " +
-    "post-return re-sketch") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("kmv_ttl").toFile
-    val t0 = System.currentTimeMillis()
-    def write(name: String, rows: Seq[(Long, Long, String)],
-        mod: Long): Unit = {
-      val stage = new java.io.File(tmp, s"__stage_$name")
-      rows.map { case (id, t, src) => (id, t, 1L, src, 1.0, "{}") }
-        .toDF("event_id", "ts", "user_id", "event_type", "value",
-          "props")
-        .withColumn("ts", timestamp_micros(expr("ts div 1000"))
-          .cast(org.apache.spark.sql.types.TimestampNTZType))
-        .coalesce(1).write.mode("overwrite").parquet(stage.getPath)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(tmp, name)
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(mod)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
-    val h = 3600L * 1000 * 1000 * 1000
-    val s = 1000L * 1000 * 1000
-    // source "a" sketches two distinct hashes at 1h then idles
-    write("a.parquet", Seq((1L, h, "a"), (2L, h, "a"), (3L, h, "b")),
-      t0 - 90000)
-    write("b.parquet", Seq((4L, 4 * h, "b")), t0 - 60000)
-    write("c.parquet", Seq((5L, 4 * h + s, "b")), t0 - 30000)
-    write("d.parquet", Seq((6L, 4 * h + 2 * s, "a")), t0)
-    val rows = Streams.eventsStream(spark, tmp.getPath,
-      glob = "*.parquet", maxFilesPerTrigger = 1)
-    val drained = Streams.runAvailableNow(
-      Streams.kmvCellsState(rows, col("event_type"),
-        col("event_id") * 1000L + 7L, k = 4,
-        ttlMs = Some(3600L * 1000), watermark = "10 minutes").toDF(),
-      "kmv_ttl").collect()
-      .map(r => (r.getAs[String]("src"), r.getAs[Long]("updates"),
-        r.getAs[Long]("n")))
-    // source "a" history in counter order: the 2-hash sketch, the
-    // empty-sketch expiry record, then the 1-hash re-sketch
-    val a = drained.filter(_._1 == "a").sortBy(_._2).map(t => t._3)
-    assert(a.toSeq == Seq(2L, 0L, 1L), s"source a history: $a")
-    // the re-sketch's event-time-derived counter out-counts the
-    // expiry record: the max-counter drain never resolves to n = 0
-    val aLatest = drained.filter(_._1 == "a").maxBy(_._2)
-    assert(aLatest._3 == 1L, s"drain must pick the re-sketch: $aLatest")
+    // cell (a, 1) in counter order: 2 after batch 1, 3 after the return
+    assert(rows.filter(t => t._1 == "a" && t._2 == 1)
+      .map(t => (t._3, t._4)).sorted.toSeq == Seq((1L, 2L), (2L, 3L)))
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
@@ -1346,12 +1157,11 @@ class StreamsSpec extends SparkSpecBase {
       == batch.view.mapValues(_._2).toMap, "LWW timestamp per user")
   }
 
-  test("TTL uniformity (VERDICT r12 item 5): runningUserState, " +
-    "topKPerKeyState and runningMomentsState evict idle keys and " +
-    "restart from scratch on return") {
+  test("runningUserState, topKPerKeyState and runningMomentsState " +
+    "carry an idle key's state to its return") {
     implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("ttl_uni").toFile
+    val tmp = java.nio.file.Files.createTempDirectory("idle_keys").toFile
     val t0 = System.currentTimeMillis()
     def write(name: String,
         rows: Seq[(Long, Long, Long, String, Double)],
@@ -1371,56 +1181,40 @@ class StreamsSpec extends SparkSpecBase {
     }
     val h = 3600L * 1000 * 1000 * 1000 // 1h in ns
     val s1 = 1000L * 1000 * 1000 // 1s in ns
-    // the funnelStageState TTL fixture shape: key "alpha"/user 1 live
-    // at 1h (TTL 1h → expiry 2h), "beta" keeps the watermark moving,
-    // batch 3 fires alpha's timeout, batch 4 is alpha's return
+    // key "alpha"/user 1 lands at 1h, "beta" keeps the stream moving
+    // for two batches, batch 4 is alpha's return
     write("a.parquet", Seq((1L, h, 1L, "alpha", 5.0),
       (2L, h, 2L, "beta", 3.0)), t0 - 90000)
     write("b.parquet", Seq((3L, 4 * h, 2L, "beta", 7.0)), t0 - 60000)
     write("c.parquet", Seq((4L, 4 * h + s1, 3L, "beta", 1.0)),
       t0 - 30000)
     write("d.parquet", Seq((5L, 4 * h + 2 * s1, 1L, "alpha", 9.0)), t0)
-    val ttl = Some(3600L * 1000)
     def src = Streams.eventsStream(spark, tmp.getPath,
       glob = "*.parquet", maxFilesPerTrigger = 1)
-    // runningUserState: user 1's return restarts at n_events = 1
-    // (the carried state was dropped); without TTL it would be 2
-    val users = Streams.runAvailableNow(
-      Streams.runningUserState(src, ttlMs = ttl).toDF(), "ttl_user")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val u1Final = users.filter(u => u._1 == 1L && u._3 == 4 * h + 2 * s1)
-    assert(u1Final.map(_._2).toSeq == Seq(1L),
-      s"return must restart the count: ${users.toSeq}")
+    // runningUserState: user 1's return counts on from the carried 1
     val plainUsers = Streams.runAvailableNow(
-      Streams.runningUserState(src).toDF(), "ttl_user_plain")
+      Streams.runningUserState(src).toDF(), "idle_user")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(plainUsers.filter(_._1 == 1L).map(_._2).max == 2L,
-      "without TTL the carried state must keep counting")
-    // topKPerKeyState: alpha's fresh post-eviction board holds ONLY
-    // the returning event, and out-counts the closure in a
-    // max-counter drain (event-time-derived counters)
+      "the carried state must keep counting")
+    // topKPerKeyState: alpha's board after the return holds both events
     val topk = Streams.runAvailableNow(
-      Streams.topKPerKeyState(src, k = 2, ttlMs = ttl).toDF(),
-      "ttl_topk").collect()
+      Streams.topKPerKeyState(src, k = 2).toDF(), "idle_topk").collect()
       .map(r => (r.getAs[String]("g"), r.getAs[Long]("updates"),
         r.getAs[Int]("rank"), r.getAs[Double]("value"),
         r.getAs[Long]("event_id")))
-    val aMax = topk.filter(_._1 == "alpha").map(_._2).max
-    val aBoard = topk.filter(t => t._1 == "alpha" && t._2 == aMax)
+    val aBoard = topk.filter(t => t._1 == "alpha" && t._2 == 2L)
       .map(t => (t._3, t._4, t._5)).toSeq.sorted
-    assert(aBoard == Seq((1, 9.0, 5L)),
-      s"fresh board must hold only the return: $aBoard")
-    // runningMomentsState: alpha's max-counter state restarts at
-    // n = 1, s = 9.0·10⁴ — the evicted 5.0 is gone
+    assert(aBoard == Seq((1, 9.0, 5L), (2, 5.0, 1L)),
+      s"board must carry the first event: $aBoard")
+    // runningMomentsState: alpha's second state sums both values
     val mom = Streams.runAvailableNow(
-      Streams.runningMomentsState(src, ttlMs = ttl).toDF(),
-      "ttl_mom").collect()
+      Streams.runningMomentsState(src).toDF(), "idle_mom").collect()
       .map(r => (r.getAs[String]("g"), r.getAs[Long]("updates"),
         r.getAs[Long]("n"), r.getAs[Long]("s")))
-    val mMax = mom.filter(_._1 == "alpha").map(_._2).max
-    val mRow = mom.filter(m => m._1 == "alpha" && m._2 == mMax).head
-    assert((mRow._3, mRow._4) == ((1L, 90000L)),
-      s"fresh moments must restart: $mRow")
+    val mRow = mom.filter(m => m._1 == "alpha").maxBy(_._2)
+    assert(mRow == (("alpha", 2L, 2L, 140000L)),
+      s"moments must carry the first value: $mRow")
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
@@ -1545,59 +1339,6 @@ class StreamsSpec extends SparkSpecBase {
         r.getAs[String]("w")) -> r.getAs[Long]("n")).toMap
     assert(cells == Map((None, "apple") -> 2L, (Some(true), "apple") -> 1L),
       s"got $cells")
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-  }
-
-  test("cumulativeState TTL: an idle key with two sums EVICTS with " +
-      "updates = prev + 1 and both sums 0, then restarts from zero") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("cum_ttl").toFile
-    val t0 = System.currentTimeMillis()
-    def write(name: String, rows: Seq[(Long, Long, String, Double)],
-        mod: Long): Unit = {
-      val stage = new java.io.File(tmp, s"__stage_$name")
-      rows.map { case (id, t, tp, v) => (id, t, 1L, tp, v, "{}") }
-        .toDF("event_id", "ts", "user_id", "event_type", "value",
-          "props")
-        .withColumn("ts", timestamp_micros(expr("ts div 1000"))
-          .cast(org.apache.spark.sql.types.TimestampNTZType))
-        .coalesce(1).write.mode("overwrite").parquet(stage.getPath)
-      val part = stage.listFiles().find(_.getName.endsWith(".parquet")).get
-      val dst = new java.io.File(tmp, name)
-      java.nio.file.Files.move(part.toPath, dst.toPath)
-      dst.setLastModified(mod)
-      org.apache.commons.io.FileUtils.deleteDirectory(stage)
-    }
-    val h = 3600L * 1000 * 1000 * 1000
-    val s = 1000L * 1000 * 1000
-    // key "a" lands two rows at 1h then goes idle; "b" stays live
-    write("a.parquet", Seq((1L, h, "a", 2.0), (2L, h, "a", 3.0),
-      (3L, h, "b", 1.0)), t0 - 90000)
-    write("b.parquet", Seq((4L, 4 * h, "b", 1.0)), t0 - 60000)
-    // the watermark (3h50m) has passed a's 2h expiry: eviction fires
-    write("c.parquet", Seq((5L, 4 * h + s, "b", 1.0)), t0 - 30000)
-    // "a" returns: the restarted key counts from scratch
-    write("d.parquet", Seq((6L, 4 * h + 2 * s, "a", 7.0)), t0)
-    val drained = Streams.runAvailableNow(
-      Streams.cumulativeState(
-        Streams.eventsStream(spark, tmp.getPath, glob = "*.parquet",
-          maxFilesPerTrigger = 1),
-        Seq(col("event_type").as("g")),
-        Seq(lit(1L).as("n"), col("value").cast("long").as("v")),
-        ttlMs = Some(3600L * 1000)), "cum_ttl")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[String]("g"), r.getAs[Long]("updates"),
-        r.getAs[Long]("n"), r.getAs[Long]("v")))
-    // key a in counter order: (2, 5), the eviction record, the restart
-    val a = rows(drained).filter(_._1 == "a").sortBy(_._2)
-    assert(a.map(t => (t._3, t._4)).toSeq == Seq((2L, 5L), (0L, 0L),
-      (1L, 7L)), s"key a history: ${a.toSeq}")
-    assert(a(1)._2 == a(0)._2 + 1L, s"eviction counter: ${a.toSeq}")
-    // the max-counter drain resolves to the restart; b never evicted
-    val last = rows(Streams.latest(drained, "g"))
-      .map(t => t._1 -> ((t._3, t._4))).toMap
-    assert(last == Map("a" -> ((1L, 7L)), "b" -> ((3L, 3L))),
-      s"latest: $last")
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
