@@ -30,10 +30,6 @@ object Queries {
   private def dsum(c: Column, scale: Int = 4): Column =
     round(sum(c.cast(DecimalType(18, scale))).cast(DoubleType), scale)
 
-  private def davg(c: Column, sumScale: Int = 6): Column =
-    round(sum(c.cast(DecimalType(18, sumScale))).cast(DoubleType) /
-      count(lit(1)), 6)
-
   private def tsFmt(c: Column): Column =
     date_format(c, "yyyy-MM-dd HH:mm:ss")
 
@@ -13481,10 +13477,6 @@ object Queries {
       |SELECT path, n, n * 1000000 // tot AS share_ppm
       |FROM c, tt ORDER BY n DESC, path ASC LIMIT 20""".stripMargin
 
-  /** q_markov_steady replica: the [[transitionsOracle]] matrix with
-    * 20 unrolled power-iteration steps — uniform start, 9-dp
-    * round-then-DECIMAL fold per state, dangling mass leaks, states
-    * with no incoming transitions coalesce to 0. */
   /** The transition-matrix + 20-round power-iteration CTE chain
     * shared by [[markovSteadyOracle]] and the entropy-rate oracle:
     * returns (cte prefix text, final π relation name). `tr` and `st`
@@ -13527,6 +13519,10 @@ object Queries {
        |$steps""".stripMargin, s"p$iters")
   }
 
+  /** q_markov_steady replica: the [[transitionsOracle]] matrix with
+    * 20 unrolled power-iteration steps — uniform start, 9-dp
+    * round-then-DECIMAL fold per state, dangling mass leaks, states
+    * with no incoming transitions coalesce to 0. */
   private def markovSteadyOracle: String = {
     val (cte, last) = markovSteadyCte
     s"""$cte
@@ -13555,12 +13551,6 @@ object Queries {
        |FROM agg""".stripMargin
   }
 
-  /** rolling polynomial hash of a string expression */
-  /** DSIR replica: the same bigram bag (multiplicity kept, no
-    * distinct), polyHash bucket, Laplace log-ratio in the identical
-    * literal op order (+ln(ct+1) − ln(nt+B) − ln(cr+1) + ln(nr+B),
-    * rounded once at 6 dp, DECIMAL(18,6)), exact decimal per-doc
-    * sums, ties by doc id. */
   /** The shared scored-documents CTE chain of the DSIR family —
     * phase-1 per-doc importance log-weights, used verbatim by the
     * selection oracle (top-20) and the resampling oracle (priority
@@ -13590,6 +13580,11 @@ object Queries {
        | GROUP BY 1)""".stripMargin
   }
 
+  /** DSIR replica: the same bigram bag (multiplicity kept, no
+    * distinct), polyHash bucket, Laplace log-ratio in the identical
+    * literal op order (+ln(ct+1) − ln(nt+B) − ln(cr+1) + ln(nr+B),
+    * rounded once at 6 dp, DECIMAL(18,6)), exact decimal per-doc
+    * sums, ties by doc id. */
   private def dsirOracle: String =
     s"""$dsirScoredSql
        |SELECT doc_id, n_grams, score FROM scored
@@ -13619,6 +13614,7 @@ object Queries {
        |FROM r WHERE rk <= 50""".stripMargin
   }
 
+  /** rolling polynomial hash of a string expression */
   private def polySql(e: String): String =
     s"""list_reduce(list_prepend(CAST(0 AS BIGINT),
        |  list_transform(list_filter(string_split($e, ''),

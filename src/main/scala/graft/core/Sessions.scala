@@ -36,9 +36,16 @@ object Sessions {
       // pass, so pass 2 recompiles (Janino, tens of ms per unit) what
       // pass 1 already compiled. Sizing the cache to the catalog is a
       // driver/executor-memory-for-CPU trade that holds at any data
-      // scale (the cache is keyed by generated source, not data).
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "8192"))
+      // scale (the cache is keyed by generated source, not data), so
+      // the size is a constant, not a knob.
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
+      // The codegen cache is keyed by (classloader, source), and with
+      // artifact isolation on every session gets its own classloader:
+      // each streaming drain runs on a cloned session, so identical
+      // generated code compiled again on every drain. graft adds no
+      // jars, files or artifacts to a session, so isolation buys it
+      // nothing.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .config("spark.driver.host", "127.0.0.1")

@@ -131,17 +131,17 @@ object JdbcWrite {
 
   /** Distributed write: every partition runs [[writePartition]] with
     * the same statement text. Returns the number of rows written, counted
-    * inside this one pass: each partition adds its committed count to an
-    * accumulator, and Spark applies an action's accumulator update once
-    * per successful task, so a retried task's failed attempt is not
-    * counted. No separate `count()` scan of `df` is needed. */
+    * inside this one pass: each partition adds its committed count to a
+    * [[Tally]], which merges only successful task attempts, so a retried
+    * task's failed attempt is not counted. No separate `count()` scan of
+    * `df` is needed. */
   def run(df: DataFrame, cfg: JdbcConfig, sql: String): Long = {
     val schema = df.schema
-    val written = df.sparkSession.sparkContext.longAccumulator
+    val written = Tally(df.sparkSession, "rows written")
     df.foreachPartition { rows: Iterator[Row] =>
-      written.add(writePartition(cfg, sql, schema, rows))
+      written.add("rows", writePartition(cfg, sql, schema, rows))
     }
-    written.sum
+    written("rows")
   }
 
   /** True if `name` exists in `schema` per JDBC metadata. */

@@ -2,7 +2,7 @@ package graft.run
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.core.{Conversions, Schemas, Sessions}
 import graft.io._
@@ -80,12 +80,14 @@ object CsvSeed {
     * the sargable half-open form. NULL timestamps drop out of a dated
     * run, like the reference's equality filter.
     *
-    * The audit rides the frame's first action: the per-column
-    * coercion-loss counts (A3) and the NULL-key drop count (F3) are
-    * observed on the aligned string frame, below the filter, so the
-    * sink's write parses the CSV once and computes them on the way.
-    * Only successful task attempts reach them. Read the two audit
-    * thunks after that action; they block until it has ended. */
+    * The audit rides the frame's write: a [[graft.io.Tally]]
+    * pass-through below the run/key filter counts, per typed column,
+    * the rows whose non-NULL raw value coerced to NULL (A3), and the
+    * in-run rows dropped for a NULL key (F3), so the sink's write parses
+    * the CSV once, coerces each value once and counts on the way. Only
+    * successful task attempts reach the counts. Read the two audit
+    * thunks once the frame's one action has run (a second action adds
+    * its rows again); before it they read 0. */
   def readAndTransform(
       spark: SparkSession,
       path: String,
@@ -106,43 +108,35 @@ object CsvSeed {
       .option("escape", "\"")
       .schema(rawSchema)
       .csv(path)
-    // C1-C5: each column coerced to its declared type
-    val typedCol: Map[String, Column] = schema.fields.map(f =>
-      f.name -> coerce(col(f.name), f.dataType)).toMap
-    // the F7 day filter and the F3 key check (NULL, or NaN like
-    // `na.drop`), over named typed columns: `col` on `typed`, or the
-    // coercions themselves inside the observed audit below
-    def inRun(c: String => Column): Column =
-      runDate.fold(lit(true))(Pipeline.daySlice(c(dateCol), _))
-    def keyMissing(c: String => Column): Column = keys.map { k =>
+    // C1-C5: each column coerced to its declared type, next to the raw
+    // string of each typed column for the loss count
+    val lossCols = schema.fields.filter(_.dataType != StringType).map(_.name)
+    def rawOf(c: String) = s"raw $c"
+    val typed = Conversions.alignToSchema(raw, rawSchema).select(
+      (schema.fields.map(f => coerce(col(f.name), f.dataType).as(f.name)) ++
+        lossCols.map(c => col(c).as(rawOf(c)))).toIndexedSeq: _*)
+    // the F7 day filter and the F3 key check (NULL, or NaN like `na.drop`)
+    val inRun = runDate.fold(lit(true))(Pipeline.daySlice(col(dateCol), _))
+    val keyMissing = keys.map { k =>
       schema(k).dataType match {
-        case DoubleType | FloatType => c(k).isNull || isnan(c(k))
-        case _ => c(k).isNull
+        case DoubleType | FloatType => col(k).isNull || isnan(col(k))
+        case _ => col(k).isNull
       }
     }.foldLeft(lit(false))(_ || _)
 
-    // the rows the filter below drops for a missing key, then the loss
-    // count of every typed column, observed over the aligned strings
-    val lossCols = schema.fields.filter(_.dataType != StringType)
-    val audit = Observation()
-    val aligned = Conversions.alignToSchema(raw, rawSchema).observe(audit,
-      sum(when(inRun(typedCol) && keyMissing(typedCol), 1L)
-        .otherwise(0L)).as(DroppedKeys),
-      lossCols.map(f => Conversions.coercionLossCount(col(f.name),
-        typedCol(f.name)).as(f.name)).toIndexedSeq: _*)
-    val typed = aligned.select(
-      schema.fieldNames.map(n => typedCol(n).as(n)).toIndexedSeq: _*)
-    val kept = typed.filter(inRun(col) && !keyMissing(col))
-
-    // an input without rows observes NULL sums: they read as 0
-    def observed(name: String): Long =
-      audit.get.get(name).collect { case n: Long => n }.getOrElse(0L)
-    (kept, () => lossCols.map(f => f.name -> observed(f.name)).toMap,
-      () => observed(DroppedKeys))
+    val audit = Tally(spark, "csv seed audit")
+    val counted = Tally.counting(typed, audit,
+      when(inRun && keyMissing, DroppedKeys) +:
+        lossCols.map(c => when(col(rawOf(c)).isNotNull && col(c).isNull, c))
+        .toIndexedSeq: _*)
+    val kept = counted.filter(inRun && !keyMissing)
+      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+    (kept, () => lossCols.map(c => c -> audit(c)).toMap,
+      () => audit(DroppedKeys))
   }
 
-  /** The observed metric holding the NULL-key drop count; the CSV
-    * columns are PascalCase, so it cannot shadow a loss count. */
+  /** The tally key of the NULL-key drop count; the CSV columns are
+    * PascalCase, so it cannot shadow a loss count. */
   private val DroppedKeys = "dropped_for_null_key"
 
   /** Resolve configured key names (lowercase/underscored at the env
@@ -190,7 +184,7 @@ object CsvSeed {
       se.schema)
     val staged = MergeSink.write(batch, jdbc, d, target, staging, keys,
       se.mode, withByTarget = d == SqlDialect.SqlServer)
-    // the audit was observed by the staging load above
+    // the audit was tallied by the staging load above
     audit().toSeq.sortBy(_._1).foreach { case (c, n) =>
       if (n > 0) println(s"[csv-seed] coercion losses in $c: $n")
     }

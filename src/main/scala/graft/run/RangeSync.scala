@@ -2,9 +2,9 @@ package graft.run
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.AccumulatorV2
 
 import graft.core.{Entities, Entity, Sessions}
+import graft.io.Tally
 
 /** Entry point 2 (O3, SURVEY §3.2): historical/backfill range sync of
   * one entity.
@@ -86,36 +86,15 @@ object RangeSync {
   }
 
   /** Run `write` over `slice` and return the rows it handed to the sink
-    * per date of `tsCol`. A pass-through filter on top of `slice` adds
-    * each row's date to a keyed accumulator as the sink pulls it, in the
-    * write's one result stage, so the per-date counts cost no action of
-    * their own; like the rows a sink returns ([[graft.io.JdbcWrite.run]]),
-    * only successful task attempts are merged. Dates without rows are
-    * absent from the map. */
+    * per ISO date of `tsCol` (`to_date` in the session time zone),
+    * counted by a [[graft.io.Tally]] pass-through in the write's one
+    * result stage; like the rows a sink returns
+    * ([[graft.io.JdbcWrite.run]]), only successful task attempts are
+    * merged. Dates without rows are absent from the map. */
   private[run] def writeCountingByDate(slice: DataFrame, tsCol: String)(
       write: DataFrame => Long): Map[String, Long] = {
-    val days = new DayCounts
-    slice.sparkSession.sparkContext.register(days, "rows per date")
-    val tally = udf { (day: java.lang.Integer) =>
-      if (day != null) days.add(day)
-      true
-    }.asNondeterministic()
-    write(slice.filter(tally(unix_date(to_date(col(tsCol))))))
-    days.value.map { case (day, n) =>
-      java.time.LocalDate.ofEpochDay(day.toLong).toString -> n }
+    val days = Tally(slice.sparkSession, "rows per date")
+    write(Tally.counting(slice, days, to_date(col(tsCol)).cast("string")))
+    days.value
   }
-}
-
-/** Rows per day (days since the epoch), summed over the successful tasks
-  * of an action. */
-private[run] final class DayCounts extends AccumulatorV2[Int, Map[Int, Long]] {
-  private val counts = scala.collection.mutable.HashMap.empty[Int, Long]
-  def isZero: Boolean = counts.isEmpty
-  def copy(): DayCounts = { val c = new DayCounts; c.counts ++= counts; c }
-  def reset(): Unit = counts.clear()
-  def add(day: Int): Unit = counts(day) = counts.getOrElse(day, 0L) + 1L
-  def merge(other: AccumulatorV2[Int, Map[Int, Long]]): Unit =
-    other.value.foreach { case (day, n) =>
-      counts(day) = counts.getOrElse(day, 0L) + n }
-  def value: Map[Int, Long] = counts.toMap
 }

@@ -1264,10 +1264,6 @@ object Streams {
     q.awaitTermination()
   }
 
-  /** Drain every pending file and stop (Trigger.AvailableNow) into an
-    * in-memory table; returns the collected result. The streaming
-    * equivalent of one catchup run. Stream-stream joins only support
-    * Append — pass `mode` accordingly. */
   /** Stream-static dimension enrichment: every micro-batch LEFT-joins
     * the static side — the standard "attach the user/product dimension
     * to a click stream" topology. The static side should be small
@@ -1282,6 +1278,10 @@ object Streams {
       keys: Seq[String]): DataFrame =
     stream.join(broadcast(dim), keys, "left")
 
+  /** Drain every pending file and stop (Trigger.AvailableNow) into an
+    * in-memory table; returns the collected result. The streaming
+    * equivalent of one catchup run. Stream-stream joins only support
+    * Append — pass `mode` accordingly. */
   def runAvailableNow(
       df: DataFrame,
       queryName: String,

@@ -21,7 +21,7 @@ class CsvSeedSpec extends SparkSpecBase {
       CsvSeed.readAndTransform(spark, fixture, Seq("OrderID"))
     val total = kept.count()
     assert(total == 1000L)
-    // the audit was observed by the count above
+    // the audit was tallied by the count above
     assert(dropped() == 0L)
     assert(audit().values.forall(_ == 0L),
       s"unexpected coercion losses: ${audit().filter(_._2 > 0)}")

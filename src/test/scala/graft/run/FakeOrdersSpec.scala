@@ -47,7 +47,7 @@ class FakeOrdersSpec extends SparkSpecBase {
     val (kept, audit, dropped) =
       CsvSeed.readAndTransform(spark, dir, Seq("OrderID"))
     assert(kept.count() == 400L)
-    // the audit was observed by the count above
+    // the audit was tallied by the count above
     assert(dropped() == 0L)
     assert(audit().values.forall(_ == 0L),
       s"coercion losses: ${audit().filter(_._2 > 0)}")

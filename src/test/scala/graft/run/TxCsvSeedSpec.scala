@@ -84,7 +84,7 @@ class TxCsvSeedSpec extends SparkSpecBase {
     val (kept, audit, dropped) = CsvSeed.readAndTransform(
       spark, path, keys, None, se.schema, se.dateCol)
     assert(kept.count() == 3L)
-    // the audit was observed by the count above
+    // the audit was tallied by the count above
     assert(dropped() == 1L)
     assert(audit()("WalletId") == 1L,
       s"expected 1 WalletId coercion loss: ${audit().filter(_._2 > 0)}")

@@ -19,7 +19,7 @@ import graft.io.{JdbcConfig, JdbcWrite, MergeSink, SqlDialect}
 import graft.operators.Upsert
 
 /** The counts that ride a sync write: the side-table refresh a catch-up
-  * runs once, the CSV seed's audit observed by its staging load, and
+  * runs once, the CSV seed's audit tallied by its staging load, and
   * the backfill's per-date tally. Each must equal what a fault-free,
   * separately counted run reports — also when a task's first attempt
   * dies mid-partition and `local[N,2]` retries it. */
@@ -113,7 +113,7 @@ class WriteCountsSpec extends SparkSpecBase {
     "fault-free values") {
     val dir = Files.createTempDirectory("graft_retry_csv")
     // the NULL-key row and both coercion losses come first, so the
-    // failed attempt has observed them before it dies at OrderID 3
+    // failed attempt has tallied them before it dies at OrderID 3
     val csv = Files.writeString(dir.resolve("orders.csv"), Seq(
       Schemas.orders.fieldNames.mkString(","),
       ",1001,4/20/2025 4:11,4/20/2025 4:30,10.5,Laptop,True",

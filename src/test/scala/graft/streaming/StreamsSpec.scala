@@ -34,6 +34,21 @@ class StreamsSpec extends SparkSpecBase {
     assert(s == b)
   }
 
+  test("a second drain of q_stream_windows compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // each drain runs on a cloned session; the codegen cache must still
+    // serve the code the first drain compiled
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      graft.Queries.queries("q_stream_windows")(spark, dir).collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles()
+    val second = compiles()
+    assert(second == 0L,
+      s"second drain compiled $second classes (first: $first)")
+  }
+
   test("observed-metrics contracts on a STREAM: per-micro-batch " +
       "violation counts sum to the batch validator's totals") {
     import graft.operators.Expectations
