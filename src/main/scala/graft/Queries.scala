@@ -144,10 +144,6 @@ object Queries {
     * already released. */
   private val pairMemo = new graft.core.SessionMemo[DataFrame]()
 
-  /** Unique memory-sink name per streaming-query run (a session forbids
-    * two active queries with one name). */
-  private val streamRun = new java.util.concurrent.atomic.AtomicInteger
-
   /** The revenue twins' shared feeder (q_stream_ewma … q_stream_hurst):
     * per-day purchase revenue of the events stream accumulates in keyed
     * state as exact 4-dp scaled-integer sums (three longs per day —
@@ -165,8 +161,7 @@ object Queries {
       graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.dailySumState(purchases,
           col("d"), col("value")),
-        s"${query}_${streamRun.incrementAndGet()}",
-        shufflePartitions = Some(8)),
+        query),
       "d")
   }
   private def lshPairs(s: SparkSession, dir: String): DataFrame =
@@ -810,13 +805,11 @@ object Queries {
       // the batch q_funnel stages (same oracle, gated verbatim) —
       // a user's funnel position is live while the day's events
       // land, not at the nightly rollup.
-      val name = s"q_stream_funnel_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.funnelStageState(
           graft.streaming.Streams.eventsStream(s, dir),
           Seq("view", "click", "purchase")).toDF(),
-        name, shufflePartitions = Some(8))
+        "q_stream_funnel")
       val latest = graft.streaming.Streams.latest(drained, "user_id")
         .select(col("t1"), col("t2"), col("t3"))
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1372,8 +1365,6 @@ object Queries {
       // calibration-family twins: isotonic, PH, Spiegelhalter,
       // Hosmer–Lemeshow all have ingest forms; ECE/Brier remain the
       // documented batch-only scores.
-      val name = s"q_stream_hosmer_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val d = graft.streaming.Streams.docsStream(s, dir)
         .filter(col("n_chars").isNotNull)
         .select(Stats.binExpr("n_chars", 0.0, 600.0, 10).as("bin"),
@@ -1386,7 +1377,7 @@ object Queries {
           coalesce(sum(col("__y")), lit(0L)).as("__k"),
           coalesce(sum(col("__c")), lit(0L)).as("__cs"))
       val drained = graft.streaming.Streams.runAvailableNow(
-        agg, name, shufflePartitions = Some(8))
+        agg, "q_stream_hosmer")
       hosmerTail(drained.groupBy(col("bin"))
         .agg(max(struct(col("n"), col("__k"), col("__cs"))).as("__x"))
         .select(col("bin"), col("__x.n").as("n"),
@@ -1402,8 +1393,6 @@ object Queries {
       // the file-to-batch split cannot change the drained state; the
       // state is bounded by |langs| x |distinct lengths| (quantized
       // by contract upstream at corpus scale).
-      val name = s"q_stream_theil_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val d = graft.streaming.Streams.docsStream(s, dir)
         .filter(col("n_chars").isNotNull && col("n_chars") > 0 &&
           col("lang").isNotNull)
@@ -1412,7 +1401,7 @@ object Queries {
       val agg = d.groupBy(col("__g"), col("__v"))
         .agg(count(lit(1)).as("__c"))
       val drained = graft.streaming.Streams.runAvailableNow(
-        agg, name, shufflePartitions = Some(8))
+        agg, "q_stream_theil")
       // localCheckpoint: theilFromCounts self-joins its input (byG /
       // tot derive from the same frame) and a memory-sink VIEW on
       // both sides trips resolver reference-dedup (INTERNAL_ERROR);
@@ -3614,34 +3603,30 @@ object Queries {
       // aggregation and read the memory sink back. One pending file ⇒
       // one micro-batch ⇒ the watermark drops nothing, so streaming
       // output must equal the batch aggregation value-for-value.
-      val name = s"q_stream_windows_${streamRun.incrementAndGet()}"
       graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.windowedCounts(
-          graft.streaming.Streams.eventsStream(s, dir)), name,
-        shufflePartitions = Some(8))
+          graft.streaming.Streams.eventsStream(s, dir)),
+        "q_stream_windows")
     }),
     "q_stream_sliding" -> ((s, dir) => {
       // SLIDING windows at ingest: every event lands in TWO
       // overlapping 10-minute windows (5-minute slide) — the smoothed
       // rolling view the tumbling q_stream_windows staircases. The
       // oracle replays each event into both covering window starts.
-      val name = s"q_stream_sliding_${streamRun.incrementAndGet()}"
       graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.slidingWindowCounts(
-          graft.streaming.Streams.eventsStream(s, dir)), name,
-        shufflePartitions = Some(8))
+          graft.streaming.Streams.eventsStream(s, dir)),
+        "q_stream_sliding")
     }),
     "q_stream_transitions" -> ((s, dir) => {
       // Streaming Markov counting: per-user last-event state links
       // transitions across micro-batches; the drained increment sums
       // must equal the batch transition matrix — same output shape,
       // same oracle SQL, gated value-for-value.
-      val name = s"q_stream_transitions_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.transitionCountsState(
-          graft.streaming.Streams.eventsStream(s, dir)).toDF(), name,
-        shufflePartitions = Some(8))
+          graft.streaming.Streams.eventsStream(s, dir)).toDF(),
+        "q_stream_transitions")
         .groupBy(col("from_state"), col("to_state"))
         .agg(sum(col("n_inc")).as("n_trans"))
         .withColumn("__tot", sum(col("n_trans")).over(
@@ -3655,12 +3640,10 @@ object Queries {
       // items, so the drained sums rebuild q_assoc_rules' census
       // independent of how events split into batches. Same metric
       // closed form, same oracle, gated value-for-value.
-      val name = s"q_stream_assoc_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val raw = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.assocSetState(
-          graft.streaming.Streams.eventsStream(s, dir)).toDF(), name,
-        shufflePartitions = Some(8))
+          graft.streaming.Streams.eventsStream(s, dir)).toDF(),
+        "q_stream_assoc")
         .persist(StorageLevel.MEMORY_AND_DISK)
       val users = raw.filter(col("kind") === "user")
         .agg(sum(col("n_inc")).as("__n"))
@@ -3691,12 +3674,10 @@ object Queries {
       // increment sums re-derive shares and the top-20 cut, equal to
       // the batch q_event_paths — same oracle SQL, gated
       // value-for-value.
-      val name = s"q_stream_paths_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val sums = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.pathCountsState(
-          graft.streaming.Streams.eventsStream(s, dir)).toDF(), name,
-        shufflePartitions = Some(8))
+          graft.streaming.Streams.eventsStream(s, dir)).toDF(),
+        "q_stream_paths")
         .groupBy(col("path"))
         .agg(sum(col("n_inc")).as("n"))
       val tot = sums.agg(sum(col("n")).as("__tot"))
@@ -3713,12 +3694,10 @@ object Queries {
       // micro-batch ⇒ every session reaches its final extent, so the
       // drain must equal the batch session assignment — same
       // aggregate, same oracle as q_session_window.
-      val name = s"q_stream_sessions_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.sessionCountsState(
-          graft.streaming.Streams.eventsStream(s, dir)).toDF(), name,
-        shufflePartitions = Some(8))
+          graft.streaming.Streams.eventsStream(s, dir)).toDF(),
+        "q_stream_sessions")
         // update-mode drain: a session extended across micro-batches is
         // re-emitted under its (user, start) key — latest extent = max
         .groupBy(col("user_id"), col("session_start_us"))
@@ -3735,17 +3714,11 @@ object Queries {
       // join, so the streamed result must equal the batch interval
       // join the oracle runs. The time-range predicate bounds the
       // join state at scale (see Streams.clickPurchaseJoin).
-      val name = s"q_stream_join_${streamRun.incrementAndGet()}"
       graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.clickPurchaseJoin(
-          graft.streaming.Streams.eventsStream(s, dir)), name,
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        shufflePartitions = Some(8),
-        // opt-in (see runAvailableNow): an INNER stream-stream join
-        // emits on match during the data batch; the trailing no-data
-        // batch would only advance watermarks to evict state this
-        // bounded drain is about to discard (~1 s/run measured)
-        dropNoDataBatch = true)
+          graft.streaming.Streams.eventsStream(s, dir)),
+        "q_stream_join",
+        org.apache.spark.sql.streaming.OutputMode.Append())
         .groupBy((col("user_id") % 25).as("user_mod"))
         .agg(count(lit(1)).as("n_pairs"),
           countDistinct(col("click_id")).as("n_clicks"),
@@ -3758,12 +3731,10 @@ object Queries {
       // (user_id, event_type) pairs — aggregated on key-functional
       // columns only (which duplicate survives is order-dependent),
       // the result must equal the batch DISTINCT the oracle runs.
-      val name = s"q_stream_dedup_${streamRun.incrementAndGet()}"
       graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.dedupWithinWatermark(
           graft.streaming.Streams.eventsStream(s, dir),
-          Seq("user_id", "event_type")), name,
-        shufflePartitions = Some(8))
+          Seq("user_id", "event_type")), "q_stream_dedup")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_keys"),
           countDistinct(col("user_id")).as("n_users"))
@@ -3778,12 +3749,11 @@ object Queries {
       // form of the drift gate: a bad crawl drop (truncation,
       // boilerplate bloat) flags while landing, not at the nightly
       // audit.
-      val name = s"q_stream_drift_${streamRun.incrementAndGet()}"
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.histogramCountsState(
           graft.streaming.Streams.docsStream(s, dir),
           "n_chars", "source", lo = 0.0, hi = 600.0, nBins = 10),
-        name, shufflePartitions = Some(8))
+        "q_stream_drift")
       val latest = graft.streaming.Streams.latest(drained, "g", "bin")
         .select(col("g").as("__g"), col("bin").as("__bin"),
           col("n").as("__c"))
@@ -3801,12 +3771,11 @@ object Queries {
       // pattern). The ingest-time form of the "what changed in this
       // crawl" monitor: a template flood or source blackout flags
       // while landing, not at the nightly audit.
-      val name = s"q_stream_trending_${streamRun.incrementAndGet()}"
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.tokenCountsState(
           graft.streaming.Streams.docsStream(s, dir),
           col("doc_id") % 8 >= 4, col("text")),
-        name, shufflePartitions = Some(8))
+        "q_stream_trending")
       val counts = graft.streaming.Streams.latest(drained, "late", "w")
         .groupBy(col("w"))
         .agg(sum(when(col("late"), 0L).otherwise(col("n")))
@@ -3824,12 +3793,11 @@ object Queries {
       // gate reuses that oracle verbatim — the q_stream_drift
       // pattern): integer count folds are associative, the
       // file-to-batch split cannot change the model.
-      val name = s"q_stream_dsir_${streamRun.incrementAndGet()}"
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.dsirBucketCountsState(
           graft.streaming.Streams.docsStream(s, dir),
           col("lang") === "en", col("text")),
-        name, shufflePartitions = Some(8))
+        "q_stream_dsir")
       val counts = graft.streaming.Streams.latest(drained, "b")
         .select(col("b").as("__b"), col("cr").as("__cr"),
           col("ct").as("__ct"))
@@ -3852,14 +3820,13 @@ object Queries {
       // Frequency surveillance at ingest: a token flooding in
       // mid-crawl shows up in kilobytes of state, no vocab table.
       val depth = 4; val width = 16
-      val name = s"q_stream_hh_${streamRun.incrementAndGet()}"
       val tokenStream = graft.streaming.Streams.docsStream(s, dir)
         .select(explode(TextAnalysis.tokens(lower(col("text"))))
           .as("token"))
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.cmsCellsState(tokenStream,
           col("token"), depth, width),
-        name, shufflePartitions = Some(8))
+        "q_stream_hh")
       val sketch = graft.streaming.Streams.latest(drained, "depth", "bucket")
         .select(col("depth"), col("bucket"), col("n").as("cnt"))
       // identical tail to q_sketch_heavy_hitters, fed by the drain
@@ -3883,7 +3850,6 @@ object Queries {
       // must reproduce q_sprt_monitor's decision trajectory row for
       // row (batch oracle verbatim). "Stop the experiment" flags
       // while the day's data lands, not at the nightly audit.
-      val name = s"q_stream_sprt_${streamRun.incrementAndGet()}"
       val purchases = graft.streaming.Streams.eventsStream(s, dir)
         .filter(col("event_type") === "purchase")
         .select(date_format(col("ts"), "yyyy-MM-dd").as("d"),
@@ -3891,7 +3857,7 @@ object Queries {
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.cumulativeState(purchases, Seq(col("d")),
           Seq(lit(1L).as("n"), col("ok").as("s"))),
-        name, shufflePartitions = Some(8))
+        "q_stream_sprt")
       val daily = graft.streaming.Streams.latest(drained, "d")
         .select(col("d"), col("n"), col("s"))
       Stats.sprtBernoulli(daily, "d", col("n"), col("s"),
@@ -3905,8 +3871,6 @@ object Queries {
       // so the q_sketch_distinct oracle gates this twin verbatim.
       // The exact reference column reads the static table (it exists
       // to show the estimate's error, not to stream).
-      val name = s"q_stream_distinct_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val k = 64
       val hashed = graft.streaming.Streams.docsStream(s, dir)
         .select(col("source"), graft.functions.KmvSketch.uniformize(
@@ -3914,7 +3878,7 @@ object Queries {
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.kmvCellsState(hashed, col("source"),
           col("h"), k).toDF(),
-        name, shufflePartitions = Some(8))
+        "q_stream_distinct")
       val latest = graft.streaming.Streams.latest(drained, "src")
         .select(col("src").as("source"),
           struct(col("n"), col("kth")).as("kmv"))
@@ -3991,8 +3955,6 @@ object Queries {
       // the non-dominated candidates current as the crawl lands"
       // topology; state is one 4-long cell per distinct length,
       // keyed by length (no global-front bottleneck).
-      val name = s"q_stream_pareto_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val docs = graft.streaming.Streams.docsStream(s, dir)
         .filter(col("n_chars").isNotNull)
         .select(col("doc_id"), col("n_chars"),
@@ -4004,7 +3966,7 @@ object Queries {
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.frontMaxState(docs, col("n_chars"),
           col("__b"), col("doc_id")).toDF(),
-        name, shufflePartitions = Some(8))
+        "q_stream_pareto")
       val ga = graft.streaming.Streams.latest(drained, "a")
         .select(col("a"), col("b").as("mb"), col("n").as("n_docs"),
           col("min_id").as("min_doc"))
@@ -4026,9 +3988,6 @@ object Queries {
       // between batches; sums are associative integers, so the
       // drained state equals the batch aggregate and gates on the
       // IDENTICAL oracle.
-      val name =
-        s"q_stream_spiegelhalter_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val d = graft.streaming.Streams.docsStream(s, dir)
         .filter(col("n_chars").isNotNull)
         .select(least(col("n_chars").cast(LongType), lit(600L))
@@ -4045,7 +4004,7 @@ object Queries {
         coalesce(sum(col("__num")), lit(0L)).as("sum_num"),
         coalesce(sum(col("__den")), lit(0L)).as("sum_den"))
       val drained = graft.streaming.Streams.runAvailableNow(
-        agg, name, shufflePartitions = Some(8))
+        agg, "q_stream_spiegelhalter")
       drained
         .agg(max(struct(col("n"), col("sum_num"), col("sum_den")))
           .as("__x"))
@@ -4126,7 +4085,6 @@ object Queries {
       // calibration lookup table exists as the docs land and the
       // replayed trajectory gates on the SAME oracle as the batch
       // query. State is two longs per occupied bin (≤ 10 keys).
-      val name = s"q_stream_isotonic_${streamRun.incrementAndGet()}"
       val binned = graft.streaming.Streams.docsStream(s, dir)
         .select(Stats.binExpr("n_chars", 0.0, 600.0, 10).as("bin"),
           when(TextAnalysis.tokenCount(col("text")) >= 70, 1.0)
@@ -4135,7 +4093,7 @@ object Queries {
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.dailySumState(binned,
           col("bin"), col("y")),
-        name, shufflePartitions = Some(8))
+        "q_stream_isotonic")
       // latest state per bin: n = rows, k = positives (y folds ×10⁴
       // through the state's scaled-long sum — exact integers back out)
       val cells = graft.streaming.Streams.latest(drained, "d")
@@ -4152,13 +4110,11 @@ object Queries {
       // so the admitted set is a deterministic doc_id-order prefix
       // the oracle replays with a window cumsum). Cross-batch state
       // carry is pinned by StreamsSpec's two-file drain.
-      val name = s"q_stream_budget_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.tokenBudgetAdmission(
           graft.streaming.Streams.docsStream(s, dir),
           TextAnalysis.tokenCount(col("text")), "source",
-          budget = 1000L).toDF(), name, shufflePartitions = Some(8))
+          budget = 1000L).toDF(), "q_stream_budget")
       drained.groupBy(col("g"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("admitted"), 1L).otherwise(0L)).as("n_admitted"),
@@ -4176,12 +4132,11 @@ object Queries {
       // length AT INGEST must equal the batch histogram quantiles row
       // for row. One more consumer of one keyed-state histogram: the
       // drift verdict and the percentile watch ride the same state.
-      val name = s"q_stream_quantile_${streamRun.incrementAndGet()}"
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.histogramCountsState(
           graft.streaming.Streams.docsStream(s, dir),
           "n_chars", "source", lo = 0.0, hi = 600.0, nBins = 10),
-        name, shufflePartitions = Some(8))
+        "q_stream_quantile")
       val latest = graft.streaming.Streams.latest(drained, "g", "bin")
         .select(col("g").as("source"), col("bin").as("__bin"),
           col("n").as("__c"))
@@ -4199,8 +4154,6 @@ object Queries {
       // for row — both gate on the one hllOracle def (the f2Oracle
       // pattern).
       import graft.functions.{GraftFunctions, HllSketch, KmvSketch}
-      val name = s"q_stream_hll_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val src = graft.streaming.Streams.eventsStream(s, dir)
         .filter(col("user_id").isNotNull)
       val h = KmvSketch.uniformize(
@@ -4208,7 +4161,7 @@ object Queries {
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.hllRegistersState(
           src, col("event_type"), h).toDF(),
-        name, shufflePartitions = Some(8))
+        "q_stream_hll")
       val regs = graft.streaming.Streams.latest(drained, "g", "j")
         .select(col("g"), col("j"), col("m"))
         .localCheckpoint(true)  // ≤ 5·256 rows; two consumers below
@@ -4232,11 +4185,10 @@ object Queries {
       // sums equal the batch sketch's bit for bit because signed-sum
       // folds are associative integers, so the rebuilt estimate gates
       // on the SAME oracle as q_sketch_f2.
-      val name = s"q_stream_f2_${streamRun.incrementAndGet()}"
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.amsSumsState(
           graft.streaming.Streams.eventsStream(s, dir),
-          col("event_type")), name, shufflePartitions = Some(8))
+          col("event_type")), "q_stream_f2")
       val latest = graft.streaming.Streams.latest(drained, "j")
         .select(col("n").as("__n"),
           (col("s") * col("s")).cast(DecimalType(38, 0)).as("__e"))
@@ -4271,12 +4223,10 @@ object Queries {
       // drop lands. Signed sums are associative integer folds, so
       // the drained estimate gates on the IDENTICAL oracle as
       // q_sketch_joinsize.
-      val name = s"q_stream_joinsize_${streamRun.incrementAndGet()}"
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.amsSumsState(
           graft.streaming.Streams.eventsStream(s, dir),
-          col("user_id").cast(StringType)), name,
-        shufflePartitions = Some(8))
+          col("user_id").cast(StringType)), "q_stream_joinsize")
       val latestA = graft.streaming.Streams.latest(drained, "j")
         .select(col("j"), col("n").as("__na"), col("s").as("__sa"))
       val keyB = col("o_custkey").cast(StringType)
@@ -4327,7 +4277,6 @@ object Queries {
       // shared oracle gates both). Bounds come from a control-plane
       // pre-scan (the sketch's documented two-pass layout) broadcast
       // into the stream; state is ≤ 256 longs per group.
-      val name = s"q_stream_qsk_${streamRun.incrementAndGet()}"
       def e4(df: DataFrame): DataFrame = df
         .select(col("event_type").as("__g"),
           (col("value").cast(DecimalType(18, 4)) * 10000)
@@ -4347,7 +4296,7 @@ object Queries {
           Seq(col("__g").as("g"), col("__min").as("mn"),
             col("__w").as("w"), col("__idx").as("idx")),
           Seq(lit(1L).as("n"))),
-        name, shufflePartitions = Some(8))
+        "q_stream_qsk")
       val latest = graft.streaming.Streams
         .latest(drained, "g", "mn", "w", "idx")
         .select(col("g").as("event_type"), col("mn").as("__min"),
@@ -4366,13 +4315,10 @@ object Queries {
       // sharing a quadrant with Hamming ≤ 3) the oracle replays.
       // Cross-batch state is exercised by StreamsSpec's two-file
       // drain, same discipline as q_stream_sessions.
-      val name = s"q_stream_neardedup_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.nearDupFlags(
           graft.streaming.Streams.docsStream(s, dir),
-          maxHamming = 3).toDF(), name,
-        shufflePartitions = Some(8))
+          maxHamming = 3).toDF(), "q_stream_neardedup")
         .groupBy(col("doc_id"))
         .agg(max(when(col("dup"), 1).otherwise(0)).as("__d"))
         .select(col("doc_id"), (col("__d") === 1).as("is_neardup"))
@@ -4400,14 +4346,13 @@ object Queries {
       val clicks = graft.streaming.Streams.eventsStream(s, dir)
         .filter(col("event_type") === "click")
         .select(col("user_id"), col("value"))
-      val name = s"q_stream_enrich_${streamRun.incrementAndGet()}"
       graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams
           .enrichWithDimension(clicks, dim, Seq("user_id"))
           .groupBy(coalesce(col("tier"), lit("<none>")).as("tier"))
           .agg(count(lit(1)).as("n_clicks"),
             sum(col("value").cast(DecimalType(18, 4))).as("__vs")),
-        name)
+        "q_stream_enrich")
         .select(col("tier"), col("n_clicks"),
           round(col("__vs").cast(DoubleType), 4).as("click_sum"))
     }),
@@ -4419,12 +4364,10 @@ object Queries {
       // — the merge is a pure function of the candidate multiset, so
       // batch boundaries cannot reorder it. Cross-batch state carry
       // pinned by StreamsSpec's two-file drain.
-      val name = s"q_stream_topk_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.topKPerKeyState(
           graft.streaming.Streams.eventsStream(s, dir), k = 3).toDF(),
-        name, shufflePartitions = Some(8))
+        "q_stream_topk")
       // latest emission per key via a window (a self-join of the
       // memory-sink view trips conflicting-attribute resolution)
       val wl = Window.partitionBy(col("g"))
@@ -4442,16 +4385,12 @@ object Queries {
       // the batch split (a Welford double recurrence would drift).
       // Mean/variance reassemble from the drained integers in the
       // same literal double order as the oracle.
-      implicit val sp: SparkSession = s
-      val name = s"q_stream_profile_${streamRun.incrementAndGet()}"
-      val drained = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.runningMomentsState(
-          graft.streaming.Streams.eventsStream(s, dir)).toDF(),
-        name, shufflePartitions = Some(8))
-      val wl = Window.partitionBy(col("g"))
-      val latest = drained
-        .withColumn("__mx", max(col("updates")).over(wl))
-        .filter(col("updates") === col("__mx"))
+      val latest = graft.streaming.Streams.latest(
+        graft.streaming.Streams.runAvailableNow(
+          graft.streaming.Streams.runningMomentsState(
+            graft.streaming.Streams.eventsStream(s, dir)),
+          "q_stream_profile"),
+        "g")
       val nD = col("n").cast(DoubleType)
       val sD = col("s").cast(DoubleType)
       val ssD = (col("hi").cast(DoubleType) * 1000000000.0 +
@@ -4475,16 +4414,14 @@ object Queries {
       // associative max, so the file-to-batch split cannot change the
       // result; a LATE tombstone losing to a newer upsert is pinned
       // in StreamsSpec.
-      implicit val sp: SparkSession = s
       val changes = graft.streaming.Streams.eventsStream(s, dir)
         .withColumn("op",
           when(col("event_type") === "error", "D").otherwise("U"))
         .select(col("user_id"), col("ts_ns"), col("event_id"),
           col("op"), col("value"))
-      val name = s"q_stream_cdc_${streamRun.incrementAndGet()}"
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.cdcLatestState(changes).toDF(),
-        name, shufflePartitions = Some(8))
+        "q_stream_cdc")
       val wl = Window.partitionBy(col("user_id"))
       drained
         .withColumn("__mx", max(col("updates")).over(wl))
@@ -4513,14 +4450,13 @@ object Queries {
         .filter(col("event_type") === "click")
         .select(col("user_id"), col("ts").as("click_ts"),
           col("value").as("click_value"))
-      val name = s"q_stream_asof_${streamRun.incrementAndGet()}"
       val base = java.nio.file.Files
         .createTempDirectory("graft_sasof").toString
       graft.streaming.Streams.asofEnrichAvailableNow(
           clicks, purchases, Seq("user_id"), "click_ts", "purchase_ts",
           toleranceUs = Some(30L * 60 * 1000 * 1000),
           outDir = s"$base/out", checkpoint = s"$base/ckpt",
-          queryName = name)
+          label = "q_stream_asof")
         .groupBy((col("user_id") % 50).as("user_mod"))
         .agg(count(lit(1)).as("n_clicks"),
           count(col("purchase_ts")).as("n_matched"),
@@ -5751,8 +5687,6 @@ object Queries {
       // sentinel is sound only when no real label can render as a
       // NUL string, so string-typed label columns are rejected loudly
       // instead of risking a silent NULL-group merge.
-      val name = s"q_stream_mmd_${streamRun.incrementAndGet()}"
-      implicit val sp: SparkSession = s
       val labelType =
         Tables.embeddings(s, dir).schema("label").dataType
       require(!labelType.isInstanceOf[StringType],
@@ -5764,10 +5698,7 @@ object Queries {
         graft.streaming.Streams.mmdCellState(emb,
           coalesce(col("label").cast(StringType), lit("\u0000")),
           col("embedding"), MmdDim).toDF(),
-        // 8 state partitions like the rest of the stream family (10
-        // label keys — the commit overhead argument of r14 holds a
-        // fortiori at one row per label)
-        name, shufflePartitions = Some(8))
+        "q_stream_mmd")
       val cells = graft.streaming.Streams.latest(drained, "g")
         .select(
           when(col("g") === lit("\u0000"), lit(null))

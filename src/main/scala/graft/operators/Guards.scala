@@ -51,7 +51,11 @@ object Guards {
     // their leaves' partitioning through narrow operators, so the
     // count is the sum over leaves — file-scan splits come from the
     // lazily-built scan RDD (no job, listing memoized in the
-    // relation), other leaves (cache scans) from their own RDD.
+    // relation). Only three other leaves are probed, each through an
+    // RDD whose construction touches no source: local rows, a cache
+    // scan and an existing RDD (a checkpoint or createDataFrame). Any
+    // other leaf (a JDBC or V2 scan, which may contact its source to
+    // plan partitions) returns None: the frame is left unchanged.
     require(!df.isStreaming,
       "Guards.parallelized: batch frames only (streaming plans have " +
         "no partition count to probe)")
@@ -76,7 +80,9 @@ object Guards {
         if (cs.forall(_.isDefined)) Some(cs.flatten.sum) else None
       case pr: ProjectExec => partsOf(pr.child)
       case fl: FilterExec => partsOf(fl.child)
-      case leaf: LeafExecNode => Some(leaf.execute().getNumPartitions)
+      case leaf @ (_: LocalTableScanExec | _: RDDScanExec |
+          _: columnar.InMemoryTableScanExec) =>
+        Some(leaf.execute().getNumPartitions)
       case _ => None
     }
     partsOf(df.queryExecution.sparkPlan) match {

@@ -6123,6 +6123,16 @@ object Stats {
     * EMITTED slope (the gate-replays-emitted-precision rule) and
     * rank-medians P rows.
     *
+    * NaN contract: the series must be NaN-free. A NaN value makes its
+    * pairwise slopes NaN, and the median selection skips NaN while
+    * its ranks come from the full pair count, so one NaN would shift
+    * the median silently; instead the operator counts NaN slopes in
+    * the same scan as the pair count and fails with an
+    * IllegalArgumentException naming that count ([[theilSenSampled]]
+    * does the same). Filter or impute NaN values before the call. No
+    * catalog caller can pass one: each feeds a per-day decimal
+    * revenue sum.
+    *
     * Returns one row: (n_periods, n_pairs, slope, intercept). */
   def theilSenTrend(
       series: DataFrame,
@@ -6330,6 +6340,16 @@ object Stats {
     * (value, index) orders with exact two-middle averaging, and the
     * intercept reuses the 6-dp EMITTED slope (the
     * gate-replays-emitted-precision rule).
+    *
+    * NaN contract: the series must be NaN-free, but unlike
+    * [[theilSenTrend]] this operator does not check. Spark orders NaN
+    * above every double, so a NaN slope ranks as +∞ in both median
+    * layers: a NaN-bearing series may get a slope biased upward, gets
+    * NaN once NaN reaches the middle rank, and raises no error (one
+    * NaN among nine points of a line leaves the slope exact; six
+    * make it NaN). Filter or impute NaN values before the call. No
+    * catalog caller can pass one: the one caller feeds a per-day
+    * decimal revenue sum.
     *
     * Returns one row: (n_periods, slope, intercept). */
   def siegelTrend(

@@ -14,7 +14,9 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSes
   *  - the file source replays a directory of parquet drops — the
   *    streaming twin of the reference's daily extract; with
   *    `Trigger.AvailableNow` a run drains everything pending and stops,
-  *    which IS the reference's catchup loop (O1) without the scheduler;
+  *    which IS the reference's catchup loop (O1) without the scheduler.
+  *    [[runAvailableNow]] is the one drain: it names its own memory
+  *    sink and runs every drain on one fixed conf (see its doc);
   *  - watermarked windowed aggregation gives the per-window counts the
   *    reference computes per-day (A1/A2), incrementally;
   *  - `flatMapGroupsWithState` carries per-key state across batches —
@@ -22,7 +24,10 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSes
   *    Every state runs `GroupStateTimeout.NoTimeout`: the twins are
   *    bounded AvailableNow drains, so no key is held long enough to
   *    need an eviction policy, and a state's drain counter is the
-  *    plain per-key sequence 1, 2, 3, ….
+  *    plain per-key sequence 1, 2, 3, …. Keyed counts and sums
+  *    (moments included) are all [[cumulativeState]] instances; the
+  *    other states keep their own folds. Each operator takes its
+  *    session from its input frame.
   *
   * At 100 TB the same topology holds: state is hash-partitioned by key
   * across executors (RocksDB state store in production), and the file
@@ -156,42 +161,6 @@ object Streams {
         col("event_type"), col("n"),
         round(col("value_sum").cast(DoubleType), 4).as("value_sum"))
 
-  /** Per-user running state carried across micro-batches. */
-  final case class UserState(nEvents: Long, lastTsNs: Long, lastType: String)
-  final case class UserUpdate(
-      user_id: Long, n_events: Long, last_ts_ns: Long, last_type: String)
-
-  /** Streaming upsert-target semantics: one state row per key, updated
-    * as events arrive — `flatMapGroupsWithState` is the custom-state
-    * path the brief calls for (the reference's nightly MERGE becomes a
-    * continuously-maintained keyed state). Emits the refreshed state of
-    * every key touched in the micro-batch. */
-  def runningUserState(events: DataFrame)(
-      implicit spark: SparkSession): Dataset[UserUpdate] = {
-    import spark.implicits._
-    events
-      .select(col("user_id").as[Long],
-        struct(col("ts_ns"), col("event_type")).as("e"))
-      .as[(Long, (Long, String))]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[(Long, (Long, String))],
-         state: GroupState[UserState]) =>
-          val prev = state.getOption
-            .getOrElse(UserState(0L, Long.MinValue, ""))
-          val next = rows.foldLeft(prev) { case (acc, (_, (tsNs, tpe))) =>
-            // last-write-wins on the event timestamp (S7 semantics)
-            if (tsNs >= acc.lastTsNs)
-              UserState(acc.nEvents + 1, tsNs, tpe)
-            else acc.copy(nEvents = acc.nEvents + 1)
-          }
-          state.update(next)
-          Iterator(UserUpdate(user, next.nEvents, next.lastTsNs,
-            next.lastType))
-      }
-  }
-
   final case class TopKState(updates: Long, top: Seq[(Double, Long)])
   final case class TopKOut(
       g: String, updates: Long, rank: Int, value: Double, event_id: Long)
@@ -209,8 +178,8 @@ object Streams {
     * window top-k, whatever the file-to-batch split. */
   def topKPerKeyState(
       events: DataFrame,
-      k: Int = 3)(
-      implicit spark: SparkSession): Dataset[TopKOut] = {
+      k: Int = 3): Dataset[TopKOut] = {
+    val spark = events.sparkSession
     import spark.implicits._
     require(k >= 1 && k <= 100, s"k out of range: $k")
     events
@@ -234,55 +203,36 @@ object Streams {
       }
   }
 
-  final case class MomState(
-      updates: Long, n: Long, s: Long, hi: Long, lo: Long)
-  final case class MomOut(
-      g: String, updates: Long, n: Long, s: Long, hi: Long, lo: Long)
-
   /** Streaming per-key running moments (count / Σv / Σv²) — the
     * incremental column profile: after any prefix of the stream, each
     * key's mean and variance are available without rescanning
-    * history. State is EXACT integer arithmetic so the fold is
+    * history. A [[cumulativeState]] instance keyed by `g` =
+    * `event_type`, so the sums are EXACT integers and the fold is
     * associative and commutative — the file-to-batch split cannot
     * move a bit, and the drained state equals the batch aggregate
     * exactly (a Welford-style double recurrence would be
     * order-dependent and drift across batch boundaries):
     *
     *  - values quantize to 4-dp scaled longs BEFORE the state fold
-    *    (`floor(v·10⁴ + 0.5)` — the corrMatrix quantization);
-    *  - Σv accumulates as one long (≤ 10¹³ at 2M rows of ≤ 500);
-    *  - Σv² accumulates in TWO LONG LIMBS base 10⁹ (per-row squares
-    *    reach 2.5·10¹³; their sum overflows a single long at corpus
-    *    scale — the corrMatrix two-limb discipline in state form).
+    *    (`t = floor(v·10⁴ + 0.5)` — the corrMatrix quantization);
+    *  - `s` = Σt accumulates as one long (≤ 10¹³ at 2M rows of ≤ 500);
+    *  - Σt² accumulates in TWO LONG LIMBS base 10⁹, `hi` = Σ(t² div
+    *    10⁹) and `lo` = Σ(t² % 10⁹) (per-row squares reach 2.5·10¹³;
+    *    their sum overflows a single long at corpus scale — the
+    *    corrMatrix two-limb discipline in state form).
     *
-    * Emits each touched key's full state per micro-batch tagged with
-    * a monotone `updates` counter (latest-wins drain); consumers
-    * reassemble mean/variance from the exact integers. O(1) state
-    * per key. */
-  def runningMomentsState(events: DataFrame)(
-      implicit spark: SparkSession): Dataset[MomOut] = {
-    import spark.implicits._
-    val L = 1000000000L
-    events
-      .select(col("event_type").as[String],
-        floor(col("value") * 10000 + lit(0.5)).cast("long").as[Long])
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (g: String, rows: Iterator[(String, Long)],
-         state: GroupState[MomState]) =>
-          var st = state.getOption.getOrElse(MomState(0L, 0L, 0L, 0L, 0L))
-          rows.foreach { case (_, t) =>
-            val sq = t * t
-            st = st.copy(n = st.n + 1, s = st.s + t,
-              hi = st.hi + sq / L, lo = st.lo + sq % L)
-          }
-          st = st.copy(updates = st.updates + 1L)
-          state.update(st)
-          Iterator(MomOut(g, st.updates, st.n, st.s, st.hi, st.lo))
-      }
-  }
+    * Output (g, updates, n, s, hi, lo); consumers keep the latest row
+    * per key ([[latest]]) and reassemble mean/variance from the exact
+    * integers. A NULL value counts in `n` and adds 0 to the sums —
+    * SQL's `count(*)` and `sum`. O(1) state per key. */
+  def runningMomentsState(events: DataFrame): DataFrame =
+    cumulativeState(
+      events.withColumn("__t",
+        floor(col("value") * 10000 + lit(0.5)).cast(LongType)),
+      Seq(col("event_type").as("g")),
+      Seq(lit(1L).as("n"), col("__t").as("s"),
+        expr("(__t * __t) div 1000000000").as("hi"),
+        expr("(__t * __t) % 1000000000").as("lo")))
 
   final case class CdcState(
       updates: Long, tsNs: Long, id: Long, op: String, value: Double)
@@ -312,8 +262,8 @@ object Streams {
     * At 100 TB: the stream shuffles once on the key per micro-batch,
     * state is one row per live key, and the drained table IS the
     * target — no staging table, no per-batch MERGE round-trip. */
-  def cdcLatestState(changes: DataFrame)(
-      implicit spark: SparkSession): Dataset[CdcOut] = {
+  def cdcLatestState(changes: DataFrame): Dataset[CdcOut] = {
+    val spark = changes.sparkSession
     import spark.implicits._
     changes
       .select(col("user_id").as[Long],
@@ -369,8 +319,8 @@ object Streams {
     * executors. */
   def sessionCountsState(
       events: DataFrame,
-      gapMs: Long = 10 * 60 * 1000L)(
-      implicit spark: SparkSession): Dataset[SessionOut] = {
+      gapMs: Long = 10 * 60 * 1000L): Dataset[SessionOut] = {
+    val spark = events.sparkSession
     import spark.implicits._
     val gapUs = gapMs * 1000L
     events
@@ -425,8 +375,8 @@ object Streams {
     * than retroactively splicing into history. Per-user batch events
     * sort in memory — bounded by one user's events per micro-batch,
     * hash-partitioned by user across executors. */
-  def transitionCountsState(events: DataFrame)(
-      implicit spark: SparkSession): Dataset[TransitionInc] = {
+  def transitionCountsState(events: DataFrame): Dataset[TransitionInc] = {
+    val spark = events.sparkSession
     import spark.implicits._
     events
       .select(col("user_id").as[Long],
@@ -475,8 +425,8 @@ object Streams {
     * are time-ordered across files, a late event appends after the
     * carried state. State is TWO strings per user — smaller than the
     * session or top-k monitors — hash-partitioned by user. */
-  def pathCountsState(events: DataFrame)(
-      implicit spark: SparkSession): Dataset[PathInc] = {
+  def pathCountsState(events: DataFrame): Dataset[PathInc] = {
+    val spark = events.sparkSession
     import spark.implicits._
     events
       .select(col("user_id").as[Long],
@@ -529,10 +479,10 @@ object Streams {
     * processing order. */
   def funnelStageState(
       events: DataFrame,
-      steps: Seq[String])(
-      implicit spark: SparkSession): Dataset[FunnelStage] = {
+      steps: Seq[String]): Dataset[FunnelStage] = {
     require(steps.size == 3 && steps.distinct.size == 3,
       s"funnelStageState needs 3 distinct steps, got $steps")
+    val spark = events.sparkSession
     import spark.implicits._
     events
       .select(col("user_id").as[Long],
@@ -584,8 +534,8 @@ object Streams {
     * State per user is its distinct item vector — bounded by the
     * item vocabulary (event types, provenance labels), NOT by event
     * volume; hash-partitioned by user across executors. */
-  def assocSetState(events: DataFrame)(
-      implicit spark: SparkSession): Dataset[AssocInc] = {
+  def assocSetState(events: DataFrame): Dataset[AssocInc] = {
+    val spark = events.sparkSession
     import spark.implicits._
     events
       .filter(col("user_id").isNotNull && col("event_type").isNotNull)
@@ -657,7 +607,7 @@ object Streams {
 
   /** Cumulative keyed state — the one operator behind the keyed COUNT
     * and SUM monitors (histogram, vocab, DSIR, CMS, quantile-sketch,
-    * AMS, SPRT and daily-sum cells): per distinct key, every `sums`
+    * AMS, SPRT, daily-sum and moments cells): per distinct key, every `sums`
     * column accumulates as a running Long across micro-batches and
     * each touched key re-emits its totals (update mode).
     *
@@ -716,10 +666,10 @@ object Streams {
 
   /** The max-counter drain: per key, the row with the greatest
     * `updates` — the current truth of every state that tags its
-    * emissions with the drain counter ([[cumulativeState]] and the
-    * top-k, moments, CDC, funnel, KMV, HLL, front-max and MMD
-    * states). One row per key: the keys, then `updates`, then the
-    * remaining drained columns in their order. */
+    * emissions with the drain counter ([[cumulativeState]] with its
+    * instances, moments included, and the top-k, CDC, funnel, KMV,
+    * HLL, front-max and MMD states). One row per key: the keys, then
+    * `updates`, then the remaining drained columns in their order. */
   def latest(drained: DataFrame, keys: String*): DataFrame = {
     val rest = drained.columns.toSeq
       .filterNot(c => c == "updates" || keys.contains(c))
@@ -887,8 +837,8 @@ object Streams {
       rows: DataFrame,
       keyCol: Column,
       hashCol: Column,
-      k: Int)(
-      implicit spark: SparkSession): Dataset[KmvCell] = {
+      k: Int): Dataset[KmvCell] = {
+    val spark = rows.sparkSession
     import spark.implicits._
     val agg = new graft.functions.KmvSketch.KmvAggregator(k)
     rows
@@ -937,8 +887,8 @@ object Streams {
   def hllRegistersState(
       rows: DataFrame,
       groupCol: Column,
-      hashCol: Column)(
-      implicit spark: SparkSession): Dataset[HllReg] = {
+      hashCol: Column): Dataset[HllReg] = {
+    val spark = rows.sparkSession
     import spark.implicits._
     import graft.functions.HllSketch
     rows
@@ -992,8 +942,8 @@ object Streams {
       rows: DataFrame,
       key: Column,
       emb: Column,
-      dim: Int)(
-      implicit spark: SparkSession): Dataset[SplitSumVec] = {
+      dim: Int): Dataset[SplitSumVec] = {
+    val spark = rows.sparkSession
     import spark.implicits._
     val cells = dim * (dim + 1) / 2
     rows
@@ -1043,8 +993,8 @@ object Streams {
       rows: DataFrame,
       aCol: Column,
       bCol: Column,
-      idCol: Column)(
-      implicit spark: SparkSession): Dataset[FrontMax] = {
+      idCol: Column): Dataset[FrontMax] = {
+    val spark = rows.sparkSession
     import spark.implicits._
     rows
       .select(aCol.cast(LongType).as("__a"),
@@ -1105,8 +1055,8 @@ object Streams {
     * the same way. */
   def nearDupFlags(
       docs: DataFrame,
-      maxHamming: Int = 3)(
-      implicit spark: SparkSession): Dataset[BandFlag] = {
+      maxHamming: Int = 3): Dataset[BandFlag] = {
+    val spark = docs.sparkSession
     import spark.implicits._
     require(maxHamming < 16, "quadrant blocking needs maxHamming < 16")
     val sh = graft.operators.Dedup.simhash(docs, "doc_id", col("text"))
@@ -1169,8 +1119,8 @@ object Streams {
       docs: DataFrame,
       costCol: Column,
       groupCol: String,
-      budget: Long)(
-      implicit spark: SparkSession): Dataset[AdmitFlag] = {
+      budget: Long): Dataset[AdmitFlag] = {
+    val spark = docs.sparkSession
     import spark.implicits._
     require(budget >= 0, s"budget must be non-negative: $budget")
     docs
@@ -1223,47 +1173,6 @@ object Streams {
       .drop("__pu")
   }
 
-  /** Continuous JDBC upsert via foreachBatch: each micro-batch MERGEs
-    * into the target with the daily pipeline's upsert semantics — the
-    * streaming form of the reference's nightly MERGE (the same sync,
-    * continuously instead of on a schedule). foreachBatch hands the
-    * engine's BATCH sink an ordinary DataFrame, so the whole sink
-    * stack — staging table, per-partition transactions, LWW/insert-only
-    * clause generation — is reused unchanged.
-    *
-    * Delivery: the checkpoint makes each micro-batch at-least-once,
-    * and the keyed MERGE is idempotent per key, so a replayed batch
-    * (crash between sink commit and checkpoint write) converges to
-    * the same target state — effective exactly-once, the same
-    * invariant the reference's daily re-runs rely on (O5).
-    *
-    * Blocks until the AvailableNow drain finishes. */
-  def upsertStreamAvailableNow(
-      updates: DataFrame,
-      cfg: graft.io.JdbcConfig,
-      dialect: graft.io.SqlDialect,
-      target: String,
-      staging: String,
-      keys: Seq[String],
-      mode: graft.operators.Upsert.Mode,
-      checkpoint: String,
-      queryName: String): Unit = {
-    val q = updates.writeStream
-      .queryName(queryName)
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.io.MergeSink.write(
-          batch, cfg, dialect, target, staging, keys, mode,
-          // `NOT MATCHED BY TARGET` is T-SQL-only spelling
-          withByTarget = dialect == graft.io.SqlDialect.SqlServer)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
-
   /** Stream-static dimension enrichment: every micro-batch LEFT-joins
     * the static side — the standard "attach the user/product dimension
     * to a click stream" topology. The static side should be small
@@ -1278,90 +1187,62 @@ object Streams {
       keys: Seq[String]): DataFrame =
     stream.join(broadcast(dim), keys, "left")
 
-  /** Drain every pending file and stop (Trigger.AvailableNow) into an
-    * in-memory table; returns the collected result. The streaming
-    * equivalent of one catchup run. Stream-stream joins only support
+  /** Per-JVM drain counter: memory-sink names are `<label>_<n>`, so
+    * two drains never share a sink (a session forbids two active
+    * queries with one name, and a finished drain's table must not be
+    * overwritten by the next). */
+  private val drains = new java.util.concurrent.atomic.AtomicLong
+
+  /** The conf every drain runs on, set for the drain and restored
+    * after it (also when the stream throws):
+    *  - 8 shuffle partitions. A streaming query's STATE STORE count is
+    *    pinned to the shuffle partition number at first checkpoint,
+    *    and every micro-batch pays a commit per instance regardless of
+    *    data volume; a drain starts a fresh checkpoint each run, so the
+    *    count is sized to the drained volume, not the session's batch
+    *    default. A production stream sizes it to its key volume.
+    *  - no checkpoint file checksums: the checkpoint is a throwaway
+    *    temp dir that is never restored from, so the checksum
+    *    companion writes (Spark 4.x) are pure fixed overhead.
+    *  - no trailing no-data micro-batch: that batch only fires
+    *    watermark-driven work (Append-mode aggregate flushes, state
+    *    timeouts); here it would re-plan the whole incremental plan to
+    *    emit nothing. */
+  private val drainConf = Seq(
+    "spark.sql.shuffle.partitions" -> "8",
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+
+  /** The one AvailableNow drain — the streaming equivalent of one
+    * catch-up run (O1): every pending file is processed, then the
+    * query stops, and the drained rows are returned as the in-memory
+    * sink's table, named `<label>_<n>` by a counter kept here.
+    *
+    * The drain runs on [[drainConf]] whatever the caller's session
+    * says, and puts the session's values back afterwards. Because no
+    * trailing no-data batch runs, a plan that needs a watermark-driven
+    * flush cannot be drained here: an Append-mode windowed aggregate
+    * would lose its last windows, and an event-time timeout would
+    * never fire. Update-mode plans emit on every data batch, and an
+    * inner stream-stream join (the one Append caller) emits on match,
+    * so both drain completely. Stream-stream joins support only
     * Append — pass `mode` accordingly. */
   def runAvailableNow(
       df: DataFrame,
-      queryName: String,
-      mode: OutputMode = OutputMode.Update(),
-      shufflePartitions: Option[Int] = None,
-      dropNoDataBatch: Boolean = false): DataFrame = {
+      label: String,
+      mode: OutputMode = OutputMode.Update()): DataFrame = {
     val spark = df.sparkSession
-    // A streaming query's STATE STORE count is pinned to the shuffle
-    // partition number at first checkpoint — for a stateful operator
-    // every micro-batch then pays per-instance commit overhead
-    // regardless of data volume. Production streaming jobs size this
-    // to the stream's actual key volume (UP at 100 TB, down for small
-    // topics); these bounded drains create a fresh checkpoint each
-    // run, so the conf is set for the drain and restored after.
-    val prev = shufflePartitions.map { n =>
-      val p = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", n)
-      p
+    val name = s"${label}_${drains.incrementAndGet()}"
+    val prev = drainConf.map { case (k, _) => k -> spark.conf.getOption(k) }
+    drainConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try
+      df.writeStream.format("memory").queryName(name).outputMode(mode)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    // These drains checkpoint into a throwaway temp dir that is never
-    // restored from, so the per-file checksum companion writes (Spark
-    // 4.x checkpoint integrity protection) are pure fixed overhead
-    // here — disabled for the drain and restored after. A durable
-    // production checkpoint (e.g. upsertStreamAvailableNow's caller-
-    // provided location) keeps the default.
-    val ckKey = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-    val prevCk = spark.conf.getOption(ckKey)
-    spark.conf.set(ckKey, "false")
-    // Skip the trailing NO-DATA micro-batch: its purpose is firing
-    // watermark-driven work — append-mode aggregate flushes and state
-    // TIMEOUT callbacks. Every gated twin drains in UPDATE mode (or
-    // Append only for the inner stream-stream join, which emits on
-    // match during the data batch) and every state here is
-    // NoTimeout, so the extra batch re-plans and re-executes the full
-    // incremental plan to emit nothing. Set/restored around the drain like the other
-    // two; the DuckDB oracle gates that every drained value is
-    // unchanged.
-    // GATED on mode == Update (ADVICE r16): this helper is generic,
-    // and a future Append-mode WATERMARKED aggregation drained
-    // through it would silently lose its final watermark-driven flush
-    // with the no-data batch disabled. Update-mode drains emit on
-    // every data batch, so for them the trailing batch only re-plans
-    // to emit nothing. The one
-    // current Append-mode caller (the inner stream-stream join, which
-    // emits on match during the data batch) keeps the default — one
-    // trailing batch of fixed cost buys the mode-safety invariant.
-    // Non-Update drains keep the trailing batch UNLESS the caller
-    // opts in with `dropNoDataBatch` — the explicit contract that its
-    // Append plan emits during the data batch (an inner stream-stream
-    // join) and runs no watermark-flushed aggregate or event-time
-    // timeout. A future watermarked-Append caller gets the safe
-    // default instead of silently losing its final flush.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNd =
-      if (mode == OutputMode.Update() || dropNoDataBatch) {
-        val p = spark.conf.getOption(ndKey)
-        spark.conf.set(ndKey, "false")
-        Some(p)
-      } else None
-    try {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(queryName)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      prev.foreach(p =>
-        spark.conf.set("spark.sql.shuffle.partitions", p))
-      prevCk match {
-        case Some(v) => spark.conf.set(ckKey, v)
-        case None => spark.conf.unset(ckKey)
-      }
-      prevNd.foreach {
-        case Some(v) => spark.conf.set(ndKey, v)
-        case None => spark.conf.unset(ndKey)
-      }
-    }
-    spark.table(queryName)
+    spark.table(name)
   }
 
   /** Stream-static AS-OF enrichment, drained with AvailableNow: every
@@ -1391,7 +1272,8 @@ object Streams {
     * as the batch operator, paid per micro-batch.
     *
     * Blocks until the drain finishes; returns the enriched rows read
-    * back from `outDir`. */
+    * back from `outDir`. The query is named `<label>_<n>`, the
+    * [[runAvailableNow]] counter. */
   def asofEnrichAvailableNow(
       stream: DataFrame,
       dim: DataFrame,
@@ -1401,10 +1283,10 @@ object Streams {
       toleranceUs: Option[Long],
       outDir: String,
       checkpoint: String,
-      queryName: String): DataFrame = {
+      label: String): DataFrame = {
     val spark = stream.sparkSession
     val q = stream.writeStream
-      .queryName(queryName)
+      .queryName(s"${label}_${drains.incrementAndGet()}")
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())

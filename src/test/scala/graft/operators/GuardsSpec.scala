@@ -45,6 +45,14 @@ class GuardsSpec extends SparkSpecBase {
     // build an executed plan that would run the upstream stages)
     val agg = narrow.groupBy(col("i")).agg(sum(col("v")).as("s"))
     assert(Guards.parallelized(agg) eq agg)
+    // a leaf outside the probed set (a one-partition JDBC scan, whose
+    // RDD may contact its source) -> returned unchanged, not widened
+    val url = "jdbc:derby:memory:guards_probe;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    try conn.createStatement().execute("CREATE TABLE t (i BIGINT)")
+    finally conn.close()
+    val jdbc = spark.read.jdbc(url, "t", new java.util.Properties)
+    assert(Guards.parallelized(jdbc) eq jdbc)
     // streaming frames have no partition count to probe -> loud
     val stream = spark.readStream.format("rate").load()
     val e = intercept[IllegalArgumentException] {

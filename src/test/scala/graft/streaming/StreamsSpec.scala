@@ -96,7 +96,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("state-based streaming sessionization equals the batch " +
     "session_window assignment") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val streamed = Streams.runAvailableNow(
       Streams.sessionCountsState(Streams.eventsStream(spark, dir)).toDF,
       "sess_drain")
@@ -147,7 +146,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("a session spanning two micro-batches is ONE session " +
     "(carried OpenSession state merges across the batch boundary)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("sess_mb").toFile
     // batch 1: events at 0min, 1min — open session carried in state;
@@ -174,61 +172,8 @@ class StreamsSpec extends SparkSpecBase {
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("foreachBatch streaming upsert into Derby: micro-batches MERGE " +
-    "into the target; checkpoint replay is a no-op (O5)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
-    import graft.io._
-    val dialect = SqlDialect.Derby
-    val cfg = JdbcConfig("jdbc:derby:memory:graftstream;create=true",
-      batchSize = 2)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_events",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("last_ts_ns",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("last_type",
-        org.apache.spark.sql.types.StringType)))
-    val target = dialect.table("APP", "user_state")
-    val staging = dialect.table("APP", "user_state_stg")
-    JdbcWrite.execute(cfg, SqlGen.createTable(dialect, target, schema))
-    JdbcWrite.execute(cfg, SqlGen.createTable(dialect, staging, schema))
-
-    val tmp = java.nio.file.Files.createTempDirectory("stream_up").toFile
-    val ckpt = java.nio.file.Files.createTempDirectory("stream_up_ck")
-      .toString
-    val t0 = System.currentTimeMillis()
-    // batch 1: user 7 twice; batch 2: user 7 again (row must UPDATE
-    // to n=3) + new user 8 (must INSERT)
-    writeEventsFile(tmp, "a.parquet",
-      Seq((1L * min, 7L), (2L * min, 7L)), t0 - 60000)
-    writeEventsFile(tmp, "b.parquet",
-      Seq((3L * min, 7L), (1L * min, 8L)), t0)
-
-    def drain(): Unit = Streams.upsertStreamAvailableNow(
-      Streams.runningUserState(Streams.eventsStream(
-        spark, tmp.getPath, glob = "*.parquet", maxFilesPerTrigger = 1))
-        .toDF(),
-      cfg, dialect, target, staging, Seq("user_id"),
-      graft.operators.Upsert.Unconditional, ckpt, "stream_upsert")
-    drain()
-    def readBack() = spark.read.jdbc(cfg.url, target, cfg.properties)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    val got = readBack()
-    assert(got == Map(7L -> (3L, 3L * min), 8L -> (1L, 1L * min)),
-      s"got $got")
-    // replay with the same checkpoint: no pending files ⇒ no batch ⇒
-    // target unchanged — the daily re-run invariant on streams
-    drain()
-    assert(readBack() == got)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
-  }
-
   test("topKPerKeyState: the leaderboard merges across micro-batches " +
       "— a batch-2 value displaces a batch-1 entry, ties break on id") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val t0 = System.currentTimeMillis()
     // one key ("click"); batch 1: values 5,3,1; batch 2: 4 displaces
@@ -280,7 +225,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("runningMomentsState: exact integer state makes a two-file " +
       "drain equal the batch moments bit-for-bit") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val t0 = System.currentTimeMillis()
     val dir2 = java.nio.file.Files.createTempDirectory("mom_mb").toFile
@@ -307,7 +251,7 @@ class StreamsSpec extends SparkSpecBase {
     val drained = Streams.runAvailableNow(
       Streams.runningMomentsState(Streams.eventsStream(
         spark, dir2.getPath, glob = "*.parquet",
-        maxFilesPerTrigger = 1)).toDF(), "mom_multibatch")
+        maxFilesPerTrigger = 1)), "mom_multibatch")
     assert(drained.select("updates").distinct().count() >= 2,
       "drain must have split into >= 2 batches")
     val last = drained.orderBy(col("updates").desc).collect()(0)
@@ -322,9 +266,78 @@ class StreamsSpec extends SparkSpecBase {
     org.apache.commons.io.FileUtils.deleteDirectory(dir2)
   }
 
+  test("runningMomentsState: a NULL value counts in n and adds 0 to " +
+      "the sums") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("mom_null").toFile
+    Seq(("a", Some(12.3456)), ("a", None), ("b", None))
+      .toDF("event_type", "value").coalesce(1).write
+      .parquet(tmp.getAbsolutePath + "/f1")
+    val src = spark.readStream.schema("event_type STRING, value DOUBLE")
+      .parquet(tmp.getAbsolutePath + "/f1")
+    val got = Streams.latest(Streams.runAvailableNow(
+        Streams.runningMomentsState(src), "mom_null"), "g")
+      .collect().map(r => r.getAs[String]("g") ->
+        ((r.getAs[Long]("n"), r.getAs[Long]("s"), r.getAs[Long]("hi"),
+          r.getAs[Long]("lo")))).toMap
+    // t = 123456, t² = 15241383936 = 15·10⁹ + 241383936
+    assert(got == Map("a" -> ((2L, 123456L, 15L, 241383936L)),
+      "b" -> ((1L, 0L, 0L, 0L))), s"got $got")
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
+  test("runAvailableNow puts the session conf back after a drain, also " +
+      "when the stream throws") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    def conf() = keys.map(k => k -> spark.conf.getOption(k))
+    val saved = conf()
+    try {
+      // values no drain runs on, so a leak of the drain conf shows
+      spark.conf.set("spark.sql.shuffle.partitions", "3")
+      keys.tail.foreach(spark.conf.set(_, "true"))
+      val before = conf()
+      assert(Streams.runAvailableNow(
+        Streams.eventsStream(spark, dir).select(col("event_id")),
+        "conf_ok").count() > 0)
+      assert(conf() == before)
+      val e = intercept[Exception] {
+        Streams.runAvailableNow(
+          Streams.eventsStream(spark, dir).select(
+            when(col("event_id").isNotNull, raise_error(lit("drain boom")))
+              .otherwise(lit(0L)).as("x")),
+          "conf_boom")
+      }
+      assert(e.getMessage.contains("drain boom"), e.getMessage)
+      assert(conf() == before)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("runAvailableNow: two drains under one label each return only " +
+      "their own rows") {
+    val t0 = System.currentTimeMillis()
+    val (a, b) = (java.nio.file.Files.createTempDirectory("drain_a").toFile,
+      java.nio.file.Files.createTempDirectory("drain_b").toFile)
+    writeDocsFile(a, "a.parquet", Seq((1L, "one")), t0)
+    writeDocsFile(b, "b.parquet", Seq((2L, "two"), (3L, "three")), t0)
+    def drain(d: java.io.File) = Streams.runAvailableNow(
+      Streams.docsStream(spark, d.getPath, glob = "*.parquet")
+        .select(col("doc_id")), "same_label")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getLong(0)).toSet
+    val first = drain(a)
+    val second = drain(b)
+    assert(ids(first) == Set(1L))
+    assert(ids(second) == Set(2L, 3L))
+    Seq(a, b).foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+  }
+
   test("cdcLatestState: LWW with tombstones across micro-batches — a " +
       "LATE delete loses to the newer upsert, a newer delete wins") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val t0 = System.currentTimeMillis()
     val dir2 = java.nio.file.Files.createTempDirectory("cdc_mb").toFile
@@ -383,7 +396,6 @@ class StreamsSpec extends SparkSpecBase {
   test("asofEnrichAvailableNow: a two-file drain equals the batch " +
       "as-of join of the union — batch boundaries don't matter for a " +
       "stream-static as-of (VERDICT r8 stretch 7)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("asof_mb").toFile
     val t0 = System.currentTimeMillis()
@@ -406,7 +418,7 @@ class StreamsSpec extends SparkSpecBase {
     val streamed = Streams.asofEnrichAvailableNow(
       clicks, dim, Seq("user_id"), "click_ts", "purchase_ts", tol,
       outDir = s"$base/out", checkpoint = s"$base/ckpt",
-      queryName = "asof_mb")
+      label = "asof_mb")
       .select(col("user_id"), col("click_ts"), col("purchase_value"))
     val got = streamed.collect()
       .map(r => (r.getLong(0), r.getTimestamp(1).getTime / 60000,
@@ -457,7 +469,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("a transition spanning two micro-batches counts exactly once " +
       "(carried LastEvent state links the batch boundary)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("trans_mb").toFile
     // batch 1: user 1 a->b (and a lone user-2 event: no transition);
     // batch 2: user 1 c — the b->c link exists ONLY via carried state
@@ -480,7 +491,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("a length-3 path straddling the batch boundary counts exactly " +
       "once (carried LastTwo state spans two micro-batches)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("paths_mb").toFile
     // batch 1: user 1 sees a, b — no length-3 path yet;
     // batch 2: user 1 sees c, d — a>b>c exists ONLY via the carried
@@ -504,7 +514,6 @@ class StreamsSpec extends SparkSpecBase {
   test("basket set-state census: an item re-seen in a later batch " +
       "adds nothing; a cross-batch new item pairs against carried " +
       "items exactly once") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("assoc_mb").toFile
     // batch 1: user 1 {a, b}, user 2 {a}; batch 2: user 1 sees b
     // AGAIN (no-op) then c — c must pair with carried {a, b} only
@@ -556,7 +565,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("near-dup flag against a PREVIOUS micro-batch's band state " +
     "(single-batch would give the opposite verdict)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("neardup_mb").toFile
     val t0 = System.currentTimeMillis()
     val base = "the quick brown fox jumps over the lazy dog again and again"
@@ -588,7 +596,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("cumulative histogram state accumulates ACROSS micro-batches " +
     "(cell re-emitted with a growing monotone total)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("hist_mb").toFile
     val t0 = System.currentTimeMillis()
     // n_chars = text.length here; bin width 60 over [0, 600):
@@ -618,7 +625,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("tokenCountsState carries per-(half, token) counts ACROSS " +
     "micro-batches (the trending monitor's state backbone)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("trend_mb").toFile
     val t0 = System.currentTimeMillis()
     // late = doc_id >= 8. batch 1: early doc says "apple apple";
@@ -649,7 +655,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("dailySuccessState carries per-period (n, s) ACROSS " +
     "micro-batches (the streaming SPRT backbone)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("sprt_mb").toFile
     val t0 = System.currentTimeMillis()
     // one period key: batch 1 lands (n=2, s=1); batch 2 adds one
@@ -672,7 +677,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("dailySumState carries per-period scaled-integer sums ACROSS " +
     "micro-batches (the streaming EWMA feeder)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("dsum_mb").toFile
     val t0 = System.currentTimeMillis()
     // one period key: batch 1 lands lengths 9+2 (s4=110000, n=2);
@@ -697,7 +701,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("funnelStageState links the chain ACROSS micro-batches and " +
     "ignores out-of-order pre-anchor steps") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("funnel_mb").toFile
     val t0 = System.currentTimeMillis()
@@ -745,7 +748,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("funnelStageState: a user idle for batches keeps the carried " +
     "anchor, so a returning click advances the chain") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("funnel_idle").toFile
     val t0 = System.currentTimeMillis()
@@ -803,7 +805,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("amsSumsState: signed sums accumulate ACROSS micro-batches " +
     "and the drained state equals the batch AMS sketch sums") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("ams_mb").toFile
     val t0 = System.currentTimeMillis()
@@ -852,7 +853,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("quantileSketchCellsState: cell counts accumulate ACROSS " +
     "micro-batches and the drained histogram equals the batch sketch") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("qsk_mb").toFile
     val t0 = System.currentTimeMillis()
@@ -916,7 +916,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("kmvCellsState carries k-minima ACROSS micro-batches and the " +
     "drained sketch equals the batch aggregator's") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("kmv_mb").toFile
     val t0 = System.currentTimeMillis()
     writeDocsFile(tmp, "a.parquet",
@@ -951,7 +950,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("cmsCellsState carries cell counts ACROSS micro-batches (the " +
     "streaming count-min backbone)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("cms_mb").toFile
     val t0 = System.currentTimeMillis()
     // one token: its 4 cells (one per depth row) each emit 2 after
@@ -979,7 +977,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("budget admission carries spent quota ACROSS micro-batches " +
     "(a merged batch could not distinguish the carry)") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("budget_mb").toFile
     val t0 = System.currentTimeMillis()
     // budget 10 tokens: batch 1's doc 1 spends 6; batch 2's doc 2
@@ -1007,7 +1004,6 @@ class StreamsSpec extends SparkSpecBase {
   }
 
   test("streaming transition drain equals the batch transition matrix") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val streamed = Streams.runAvailableNow(
       Streams.transitionCountsState(Streams.eventsStream(spark, dir))
         .toDF(), "trans_drain")
@@ -1024,7 +1020,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("histogramCountsState: a cell idle for batches keeps its count " +
     "and resumes cumulatively") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("hist_idle").toFile
     val t0 = System.currentTimeMillis()
@@ -1069,7 +1064,6 @@ class StreamsSpec extends SparkSpecBase {
   test("dsirBucketCountsState: (raw, target) bucket counters " +
     "accumulate ACROSS micro-batches and the drained state equals " +
     "the batch gram counts") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("dsir_mb").toFile
     val t0 = System.currentTimeMillis()
@@ -1119,7 +1113,6 @@ class StreamsSpec extends SparkSpecBase {
 
   test("hllRegistersState: drained per-register maxes equal the batch " +
     "register frame whatever the file-to-batch split") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
     val tmp = java.nio.file.Files.createTempDirectory("hll_mb").toFile
     val t0 = System.currentTimeMillis()
     writeDocsFile(tmp, "a.parquet",
@@ -1152,29 +1145,8 @@ class StreamsSpec extends SparkSpecBase {
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
   }
 
-  test("flatMapGroupsWithState carries per-user LWW state") {
-    implicit val s = spark
-    val out = Streams.runAvailableNow(
-      Streams.runningUserState(Streams.eventsStream(spark, dir)).toDF(),
-      "user_state")
-    // one state row per user, counts sum to the total event count,
-    // last_ts matches the batch max per user
-    val batch = Tables.events(spark, dir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), max(col("ts_ns")).as("mx"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    val got = out.collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(got.keySet == batch.keySet)
-    assert(got.view.mapValues(_._1).toMap
-      == batch.view.mapValues(_._1).toMap, "event counts per user")
-    assert(got.view.mapValues(_._2).toMap
-      == batch.view.mapValues(_._2).toMap, "LWW timestamp per user")
-  }
-
-  test("runningUserState, topKPerKeyState and runningMomentsState " +
-    "carry an idle key's state to its return") {
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
+  test("topKPerKeyState and runningMomentsState carry an idle key's " +
+    "state to its return") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("idle_keys").toFile
     val t0 = System.currentTimeMillis()
@@ -1206,12 +1178,6 @@ class StreamsSpec extends SparkSpecBase {
     write("d.parquet", Seq((5L, 4 * h + 2 * s1, 1L, "alpha", 9.0)), t0)
     def src = Streams.eventsStream(spark, tmp.getPath,
       glob = "*.parquet", maxFilesPerTrigger = 1)
-    // runningUserState: user 1's return counts on from the carried 1
-    val plainUsers = Streams.runAvailableNow(
-      Streams.runningUserState(src).toDF(), "idle_user")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(plainUsers.filter(_._1 == 1L).map(_._2).max == 2L,
-      "the carried state must keep counting")
     // topKPerKeyState: alpha's board after the return holds both events
     val topk = Streams.runAvailableNow(
       Streams.topKPerKeyState(src, k = 2).toDF(), "idle_topk").collect()
@@ -1224,7 +1190,7 @@ class StreamsSpec extends SparkSpecBase {
       s"board must carry the first event: $aBoard")
     // runningMomentsState: alpha's second state sums both values
     val mom = Streams.runAvailableNow(
-      Streams.runningMomentsState(src).toDF(), "idle_mom").collect()
+      Streams.runningMomentsState(src), "idle_mom").collect()
       .map(r => (r.getAs[String]("g"), r.getAs[Long]("updates"),
         r.getAs[Long]("n"), r.getAs[Long]("s")))
     val mRow = mom.filter(m => m._1 == "alpha").maxBy(_._2)
@@ -1299,6 +1265,10 @@ class StreamsSpec extends SparkSpecBase {
       "dailySumState" -> (Streams.dailySumState(events,
         date_format(col("ts"), "yyyy-MM-dd"), col("value")),
         Seq("d" -> StringType) ++ counted :+ ("s4" -> LongType)),
+      // q_stream_profile reads (g, updates, n, s, hi, lo)
+      "runningMomentsState" -> (Streams.runningMomentsState(events),
+        Seq("g" -> StringType) ++ counted ++
+          Seq("s", "hi", "lo").map(_ -> LongType)),
       // q_stream_sprt's direct call: the old per-period (n, s) shape,
       // now with the drain counter
       "per-period successes" -> (Streams.cumulativeState(events,
