@@ -27,8 +27,8 @@ object Queries {
   /** Order-independent, cross-engine-deterministic sum of a double
     * column: route through DECIMAL(18,4) (exact integer arithmetic),
     * back to double, round. */
-  private def dsum(c: Column, scale: Int = 4): Column =
-    round(sum(c.cast(DecimalType(18, scale))).cast(DoubleType), scale)
+  private def dsum(c: Column): Column =
+    round(sum(c.cast(DecimalType(18, 4))).cast(DoubleType), 4)
 
   private def tsFmt(c: Column): Column =
     date_format(c, "yyyy-MM-dd HH:mm:ss")
@@ -43,6 +43,10 @@ object Queries {
   /** q_stream_ph threshold — the daily PURCHASE-value spine runs ~3
     * orders of magnitude under the order-revenue spine. */
   private val PhStreamLambdaPpm = 500000000L
+
+  /** Page–Hinkley drift allowance δ (ppm) of q_trend_ph and
+    * q_stream_ph, shared by the Spark query and [[phOracle]]. */
+  private val PhDeltaPpm = 0L
 
   /** q_trend_hurst replica: the identical block decomposition per
     * window size — exact-integer range (P₄ₜ·w − t·S₄ longs) over a
@@ -111,12 +115,9 @@ object Queries {
     * both truncate toward zero on BIGINTs), integer cumulative
     * sum/min, doubles only at the emit divisions. Every window sum
     * CAST to BIGINT (no HUGEINT). `spineSql` must emit (d VARCHAR,
-    * rev DECIMAL(18,4)). `deltaPpm` subtracts AFTER the truncating
-    * `// i` division, exactly where Stats.pageHinkley subtracts it
-    * (ADVICE r13: both gated uses pass 0, but a future delta > 0 must
-    * carry into the replica instead of silently hash-diverging). */
-  private def phOracle(
-      spineSql: String, lambdaPpm: Long, deltaPpm: Long = 0L): String =
+    * rev DECIMAL(18,4)). [[PhDeltaPpm]] subtracts AFTER the truncating
+    * `// i` division, exactly where Stats.pageHinkley subtracts it. */
+  private def phOracle(spineSql: String, lambdaPpm: Long): String =
     s"""WITH daily AS (
        | $spineSql),
        |idx AS (SELECT d,
@@ -124,7 +125,7 @@ object Queries {
        |  row_number() OVER (ORDER BY d ASC) AS i FROM daily),
        |c AS (SELECT *, CAST(sum(x4) OVER (ORDER BY d ASC
        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS s4 FROM idx),
-       |t AS (SELECT *, (((x4 * i - s4) * 100) // i) - $deltaPpm
+       |t AS (SELECT *, (((x4 * i - s4) * 100) // i) - $PhDeltaPpm
        |  AS t6 FROM c),
        |m AS (SELECT *, CAST(sum(t6) OVER (ORDER BY d ASC
        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS m6 FROM t),
@@ -684,13 +685,16 @@ object Queries {
         .cast(DecimalType(8, 4))
       val discPrice = (e * d1).cast(DecimalType(20, 8))
       val charge = (discPrice * t1).cast(DecimalType(28, 12))
+      // the 8- and 12-dp sums round in DECIMAL, then cast: a double
+      // sitting on a 4-dp tie rounds differently in Spark (shortest
+      // decimal string, HALF_UP) and DuckDB (the binary value)
       li.groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
           round(sum(col("l_quantity").cast(DecimalType(18, 4)))
             .cast(DoubleType), 4).as("sum_qty"),
           round(sum(e).cast(DoubleType), 4).as("sum_base_price"),
-          round(sum(discPrice).cast(DoubleType), 4).as("sum_disc_price"),
-          round(sum(charge).cast(DoubleType), 4).as("sum_charge"),
+          round(sum(discPrice), 4).cast(DoubleType).as("sum_disc_price"),
+          round(sum(charge), 4).cast(DoubleType).as("sum_charge"),
           round(sum(col("l_quantity").cast(DecimalType(18, 4)))
             .cast(DoubleType) / count(lit(1)), 6).as("avg_qty"),
           round(sum(col("l_discount").cast(DecimalType(18, 6)))
@@ -720,9 +724,11 @@ object Queries {
       val plan = j.queryExecution.executedPlan.toString
       require("BroadcastHashJoin".r.findAllIn(plan).size >= 2,
         s"star dims must broadcast-join:\n$plan")
+      // the 8-dp sum rounds in DECIMAL, then casts (see q_agg_pricing)
       j.groupBy(col("r_name"), col("n_name"))
-        .agg(round(sum((e * d1).cast(DecimalType(20, 8)))
-          .cast(DoubleType), 4).as("revenue"),
+        .agg(round(sum((e * d1).cast(DecimalType(20, 8))), 4)
+          .cast(DoubleType).as("revenue"),
+
           count(lit(1)).as("n_items"))
     }),
     "q_window_topn" -> ((s, dir) => {
@@ -2363,7 +2369,7 @@ object Queries {
         .groupBy(dateFmt(col("o_orderdate")).as("d"))
         .agg(dsum(col("o_totalprice")).as("rev"))
       Stats.pageHinkley(daily, "d", "rev",
-        deltaPpm = 0L, lambdaPpm = PhLambdaPpm)
+        deltaPpm = PhDeltaPpm, lambdaPpm = PhLambdaPpm)
     }),
     "q_anomaly_seasonal" -> ((s, dir) => {
       // Weekday-adjusted robust anomaly fence: each ISO weekday gets
@@ -3802,8 +3808,10 @@ object Queries {
         .select(col("b").as("__b"), col("cr").as("__cr"),
           col("ct").as("__ct"))
       val grams = TextAnalysis.dsirGrams(Tables.documents(s, dir),
-        "doc_id", col("text"), col("lang") === "en", 4096)
-      TextAnalysis.dsirScore(grams, counts, "doc_id", 4096)
+        "doc_id", col("text"), col("lang") === "en",
+        TextAnalysis.DsirBuckets)
+      TextAnalysis.dsirScore(grams, counts, "doc_id",
+        TextAnalysis.DsirBuckets)
         .orderBy(col("score").desc, col("doc_id").asc)
         .limit(20)
     }),
@@ -4060,7 +4068,7 @@ object Queries {
           (col("s4").cast(DecimalType(18, 0)) *
             lit(new java.math.BigDecimal("0.0001"))).as("rev"))
       Stats.pageHinkley(latest, "d", "rev",
-        deltaPpm = 0L, lambdaPpm = PhStreamLambdaPpm)
+        deltaPpm = PhDeltaPpm, lambdaPpm = PhStreamLambdaPpm)
     }),
     "q_stream_hurst" -> ((s, dir) => {
       // Hurst exponent AT INGEST: the same drained daily-purchase
@@ -4363,17 +4371,14 @@ object Queries {
       // (max updates counter) and must equal the batch window top-k
       // — the merge is a pure function of the candidate multiset, so
       // batch boundaries cannot reorder it. Cross-batch state carry
-      // pinned by StreamsSpec's two-file drain.
+      // pinned by StreamsSpec's two-file drain. A key's state only
+      // grows, so its latest emission holds every rank: keying the
+      // max-counter drain by (g, rank) keeps exactly that emission.
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.topKPerKeyState(
           graft.streaming.Streams.eventsStream(s, dir), k = 3).toDF(),
         "q_stream_topk")
-      // latest emission per key via a window (a self-join of the
-      // memory-sink view trips conflicting-attribute resolution)
-      val wl = Window.partitionBy(col("g"))
-      drained
-        .withColumn("__mx", max(col("updates")).over(wl))
-        .filter(col("updates") === col("__mx"))
+      graft.streaming.Streams.latest(drained, "g", "rank")
         .select(col("g").as("event_type"), col("rank"), col("value"),
           col("event_id"))
     }),
@@ -4422,10 +4427,7 @@ object Queries {
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.cdcLatestState(changes).toDF(),
         "q_stream_cdc")
-      val wl = Window.partitionBy(col("user_id"))
-      drained
-        .withColumn("__mx", max(col("updates")).over(wl))
-        .filter(col("updates") === col("__mx"))
+      graft.streaming.Streams.latest(drained, "user_id")
         .groupBy(col("op"))
         .agg(count(lit(1)).as("n_keys"),
           sum(col("event_id")).as("id_sum"),
@@ -4573,7 +4575,7 @@ object Queries {
       // pin every code value.
       val z = graft.io.Lakehouse.morton2(
         col("o_custkey").bitwiseAND(0xFFFFL),
-        col("o_orderkey").bitwiseAND(0xFFFFL))
+        col("o_orderkey").bitwiseAND(0xFFFFL), ZOrderBits)
       Tables.orders(s, dir)
         .select(z.as("z"))
         .groupBy((col("z") % 64).as("bucket"))
@@ -5111,9 +5113,9 @@ object Queries {
           .as("hamming"))
     }),
     "q_dedup_ngram" -> ((s, dir) => {
-      // dfCap = 0: exact mode — prefix filtering alone bounds the
-      // candidate set, and the result provably equals the brute-force
-      // Jaccard join the oracle runs. At t=0.8 each doc indexes only
+      // Exact: prefix filtering alone bounds the candidate set, and
+      // the result provably equals the brute-force Jaccard join the
+      // oracle runs. At t=0.8 each doc indexes only
       // ~20% of its shingles (the exact-pair path's intended regime:
       // t ≥ 0.5; lower thresholds belong to the LSH family).
       Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id",
@@ -7351,9 +7353,13 @@ object Queries {
         | CAST(sum(n * n) AS BIGINT) AS sum_sq
         |FROM g GROUP BY 1""".stripMargin
 
+  /** Bits per dimension of q_zorder's Morton code, shared by the Spark
+    * query and [[mortonSql]]. */
+  private val ZOrderBits = 16
+
   /** DuckDB replica of Lakehouse.morton2's bit interleave. */
-  private def mortonSql(a: String, b: String, bits: Int = 16): String =
-    (0 until bits).map(i =>
+  private def mortonSql(a: String, b: String): String =
+    (0 until ZOrderBits).map(i =>
       s"((($a >> $i) & 1) << ${2 * i}) | ((($b >> $i) & 1) << ${2 * i + 1})")
       .mkString("(", " | ", ")")
 
@@ -7528,13 +7534,13 @@ object Queries {
         |   AS sum_qty,
         | round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,4))) AS DOUBLE), 4)
         |   AS sum_base_price,
-        | round(CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(12,4)) *
+        | CAST(round(sum(CAST(CAST(l_extendedprice AS DECIMAL(12,4)) *
         |   CAST(1 - CAST(l_discount AS DECIMAL(8,4)) AS DECIMAL(8,4))
-        |   AS DECIMAL(20,8))) AS DOUBLE), 4) AS sum_disc_price,
-        | round(CAST(sum(CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,4)) *
+        |   AS DECIMAL(20,8))), 4) AS DOUBLE) AS sum_disc_price,
+        | CAST(round(sum(CAST(CAST(CAST(l_extendedprice AS DECIMAL(12,4)) *
         |   CAST(1 - CAST(l_discount AS DECIMAL(8,4)) AS DECIMAL(8,4))
         |   AS DECIMAL(20,8)) * CAST(1 + CAST(l_tax AS DECIMAL(8,4))
-        |   AS DECIMAL(8,4)) AS DECIMAL(28,12))) AS DOUBLE), 4) AS sum_charge,
+        |   AS DECIMAL(8,4)) AS DECIMAL(28,12))), 4) AS DOUBLE) AS sum_charge,
         | round(CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE)
         |   / count(*), 6) AS avg_qty,
         | round(CAST(sum(CAST(l_discount AS DECIMAL(18,6))) AS DOUBLE)
@@ -7545,9 +7551,9 @@ object Queries {
         |GROUP BY l_returnflag, l_linestatus""".stripMargin,
     "q_join_star" ->
       """SELECT r_name, n_name,
-        | round(CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(12,4)) *
+        | CAST(round(sum(CAST(CAST(l_extendedprice AS DECIMAL(12,4)) *
         |   CAST(1 - CAST(l_discount AS DECIMAL(8,4)) AS DECIMAL(8,4))
-        |   AS DECIMAL(20,8))) AS DOUBLE), 4) AS revenue,
+        |   AS DECIMAL(20,8))), 4) AS DOUBLE) AS revenue,
         | count(*) AS n_items
         |FROM lineitem
         |JOIN orders   ON l_orderkey = o_orderkey
@@ -8157,7 +8163,8 @@ object Queries {
     // draws (ia + 1 + bucket mod (p − ia)), DISTINCT pair collapse,
     // and two-middle rank medians
     "q_trend_theilsen_sampled" -> {
-      val bucket = s"(${affineSql(31, s"((ia * 64 + r) % $M)")} % " +
+      val bucket = s"(${affineSql(Stats.TrendSampleSeed,
+        s"((ia * 64 + r) % $M)")} % " +
         s"${Sampling.Buckets})"
       s"""WITH daily AS (SELECT strftime(o_orderdate, '%Y-%m-%d') AS d,
          |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
@@ -8246,7 +8253,8 @@ object Queries {
     // variable-count inner medians, outer median + intercept in the
     // exact two-middle arithmetic
     "q_trend_siegel_sampled" -> {
-      val bucket = s"(${affineSql(31, s"((ia * 64 + r) % $M)")} % " +
+      val bucket = s"(${affineSql(Stats.TrendSampleSeed,
+        s"((ia * 64 + r) % $M)")} % " +
         s"${Sampling.Buckets})"
       s"""WITH daily AS (SELECT strftime(o_orderdate, '%Y-%m-%d') AS d,
          |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4)))
@@ -11946,8 +11954,9 @@ object Queries {
     // half, the same integer conformal rank over (residual, id)
     // order, raw-q comparisons on the held-out half
     "q_conformal" -> {
-      val bucket = s"(${affineSql(37, s"(id % $M)")} % " +
+      val bucket = s"(${affineSql(Stats.ConformalSeed, s"(id % $M)")} % " +
         s"${Sampling.Buckets})"
+      val keep = 1000 - Stats.ConformalAlphaPermille
       s"""WITH d AS (SELECT
          |  (l_orderkey * 10 + l_linenumber) AS id,
          |  CAST(l_extendedprice AS DECIMAL(18,4)) AS y,
@@ -11997,7 +12006,7 @@ object Queries {
          |  row_number() OVER (ORDER BY r ASC, id ASC) AS rnk,
          |  count(*) OVER () AS nc FROM cr),
          |q AS (SELECT min(CASE WHEN rnk = least(nc, greatest(1,
-         |    ((nc + 1) * 900 + 999) // 1000)) THEN r END) AS qv,
+         |    ((nc + 1) * $keep + 999) // 1000)) THEN r END) AS qv,
          |  CAST(min(nc) AS BIGINT) AS nc FROM rk),
          |t AS (SELECT * FROM s WHERE NOT calib)
          |SELECT q.nc AS n_calib, CAST(count(*) AS BIGINT) AS n_test,
@@ -12173,8 +12182,9 @@ object Queries {
     // jackknife replica: same unit-hash buckets, exact decimal
     // leave-one-out differences, 12-dp round-then-DECIMAL folds
     "q_jackknife_ratio" -> {
-      val bucket = s"((${affineSql(41, s"(l_orderkey % $M)")} % " +
-        s"${Sampling.Buckets}) % 100)"
+      val bucket =
+        s"((${affineSql(Stats.JackknifeSeed, s"(l_orderkey % $M)")} % " +
+          s"${Sampling.Buckets}) % ${Stats.JackknifeBuckets})"
       s"""WITH d AS (SELECT $bucket AS b,
          |  CAST(l_extendedprice AS DECIMAL(18,4)) AS n,
          |  CAST(l_quantity AS DECIMAL(18,4)) AS q
@@ -12239,15 +12249,17 @@ object Queries {
     // partitioned by lang — same draws, same integer ceil ranks per
     // group
     "q_bootstrap_by_lang" -> {
-      val bkt = s"(${affineSql(29, s"((id * 200 + i) % $M)")} % " +
-        s"${Sampling.Buckets})"
+      val b = Stats.BootstrapReplicates
+      val bkt =
+        s"(${affineSql(Stats.BootstrapSeed, s"((id * $b + i) % $M)")} % " +
+          s"${Sampling.Buckets})"
       s"""WITH base AS (SELECT lang AS g, doc_id AS id,
          |  CAST(n_chars AS DECIMAL(18,4)) AS y
          | FROM documents
          | WHERE lang IS NOT NULL AND doc_id IS NOT NULL
          |   AND n_chars IS NOT NULL),
          |reps AS (SELECT g, id, y, i
-         |         FROM base CROSS JOIN range(200) t(i)),
+         |         FROM base CROSS JOIN range($b) t(i)),
          |bk AS (SELECT g, i, y, $bkt AS bkt FROM reps),
          |wts AS (SELECT g, i, y,
          |  CASE WHEN bkt < 367879 THEN 0 WHEN bkt < 735758 THEN 1
@@ -12278,13 +12290,15 @@ object Queries {
     // (floor(cdf·10^6) literal thresholds), exact DECIMAL weighted
     // sums, identical (mu, i) rank order and integer ceil ranks
     "q_bootstrap_ci" -> {
-      val bkt = s"(${affineSql(29, s"((id * 200 + i) % $M)")} % " +
-        s"${Sampling.Buckets})"
+      val b = Stats.BootstrapReplicates
+      val bkt =
+        s"(${affineSql(Stats.BootstrapSeed, s"((id * $b + i) % $M)")} % " +
+          s"${Sampling.Buckets})"
       s"""WITH base AS (SELECT doc_id AS id,
          |  CAST(n_chars AS DECIMAL(18,4)) AS y
          | FROM documents
          | WHERE doc_id IS NOT NULL AND n_chars IS NOT NULL),
-         |reps AS (SELECT id, y, i FROM base CROSS JOIN range(200) t(i)),
+         |reps AS (SELECT id, y, i FROM base CROSS JOIN range($b) t(i)),
          |bk AS (SELECT i, y, $bkt AS bkt FROM reps),
          |wts AS (SELECT i, y,
          |  CASE WHEN bkt < 367879 THEN 0 WHEN bkt < 735758 THEN 1
@@ -13487,7 +13501,7 @@ object Queries {
     * selection oracle (top-20) and the resampling oracle (priority
     * draw over exp-tempered weights). */
   private def dsirScoredSql: String = {
-    val b = 4096
+    val b = TextAnalysis.DsirBuckets
     s"""WITH tk AS (SELECT doc_id, lang, $toksSql AS toks
        |  FROM documents),
        |g AS (SELECT doc_id, (lang = 'en') AS t,
@@ -13604,7 +13618,7 @@ object Queries {
     * round-tripping form, so DuckDB parses bit-identical values);
     * expression shape and operator order mirror bm25TopK exactly. */
   private def bm25Oracle: String = {
-    val k1 = 1.2; val b = 0.75
+    val k1 = TextAnalysis.Bm25K1; val b = TextAnalysis.Bm25B
     s"""WITH t AS (SELECT doc_id, unnest($toksSql) AS term FROM documents),
        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
        | FROM t GROUP BY 1, 2),
@@ -13636,7 +13650,7 @@ object Queries {
     * ends at relation `r` carrying (qid, doc_id, n_terms, score, rk)
     * for every candidate — callers filter `rk <= k`. */
   private def bm25Ctes: String = {
-    val k1 = 1.2; val b = 0.75
+    val k1 = TextAnalysis.Bm25K1; val b = TextAnalysis.Bm25B
     s"""q(qid, qtext) AS (VALUES
        |  (CAST(1 AS BIGINT), 'hash join table'),
        |  (CAST(2 AS BIGINT), 'window agg spark'),
@@ -14732,7 +14746,9 @@ object Queries {
     * 64-hash signatures, and the theory powers as the identical
     * literal multiplication chains. */
   private def scurveOracle: String = {
-    val numHashes = 64; val bands = 16; val width = 4; val nBins = 20
+    val numHashes = Dedup.ScurveHashes; val bands = Dedup.ScurveBands
+    val width = numHashes / bands; val nBins = Dedup.ScurveBins
+    val pairNum = Dedup.ScurvePairNum; val pairDen = Dedup.ScurvePairDen
     val sigCols = (0 until numHashes)
       .map(i => s"min(${affineSql(i, "h")}) AS s$i").mkString(",\n ")
     val bandOr = (0 until bands)
@@ -14755,7 +14771,7 @@ object Queries {
        |tp AS (SELECT a, b,
        |  CAST(least((inter * $nBins) // uni, ${nBins - 1}) AS INTEGER)
        |    AS bin
-       | FROM p WHERE inter * 5 >= uni * 2),
+       | FROM p WHERE inter * $pairDen >= uni * $pairNum),
        |det AS (SELECT tp.bin,
        |  CASE WHEN $bandOr THEN 1 ELSE 0 END AS hit
        | FROM tp JOIN sig x ON x.doc_id = tp.a

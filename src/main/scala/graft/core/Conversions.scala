@@ -51,16 +51,16 @@ object Conversions {
   def tryToDecimal(c: Column, precision: Int = 18, scale: Int = 4): Column =
     c.try_cast(DecimalType(precision, scale))
 
+  /** The formats [[parseTimestampMulti]] tries, in order. */
+  private val TimestampFormats = Seq("M/d/yyyy H:mm", "yyyy-MM-dd HH:mm:ss")
+
   /** C4: multi-format timestamp parse with ordered fallback — try each
-    * format in order, then a plain cast; all failures → NULL
-    * (csv_to_mssqldb.py:273-297: strict `%m/%d/%Y %H:%M`, then pandas
-    * auto-inference, then all-NaT). */
-  def parseTimestampMulti(
-      c: Column,
-      formats: Seq[String] =
-        Seq("M/d/yyyy H:mm", "yyyy-MM-dd HH:mm:ss")): Column =
+    * of [[TimestampFormats]] in order, then a plain cast; all failures →
+    * NULL (csv_to_mssqldb.py:273-297: strict `%m/%d/%Y %H:%M`, then
+    * pandas auto-inference, then all-NaT). */
+  def parseTimestampMulti(c: Column): Column =
     coalesce(
-      (formats.map(f => try_to_timestamp(c, lit(f))) :+
+      (TimestampFormats.map(f => try_to_timestamp(c, lit(f))) :+
         c.try_cast(TimestampType)): _*)
 
   private val TrueTokens  = Seq("TRUE", "1", "YES", "T", "Y")

@@ -301,6 +301,13 @@ object Lakehouse {
     readVersion(spark, path, vs.last)
   }
 
+  /** How long a `__stage_*` directory must sit idle before
+    * [[expireVersions]] sweeps it (one hour). The age guard keeps the
+    * sweep from racing an IN-FLIGHT commit — a live attempt's stage dir
+    * is seconds old; deleting it mid-rename could promote a partial
+    * snapshot. */
+  private val StaleStageMs = 3600L * 1000
+
   /** Snapshot retention: delete every complete version except the
     * last `keepLast` — the lifecycle chore that bounds snapshot
     * storage (each snapshot is a full parquet table, so retention IS
@@ -310,13 +317,10 @@ object Lakehouse {
     *
     * Also sweeps ORPHANED commit attempts: `__stage_*` directories
     * (hard-killed [[commitVersion]] writers) idle longer than
-    * `staleStageMs` are deleted. The age guard keeps the sweep from
-    * racing an IN-FLIGHT commit — a live attempt's stage dir is
-    * seconds old; deleting it mid-rename could promote a partial
-    * snapshot. Returns the versions dropped, ascending. */
+    * [[StaleStageMs]] are deleted. Returns the versions dropped,
+    * ascending. */
   def expireVersions(
-      spark: SparkSession, path: String, keepLast: Int,
-      staleStageMs: Long = 3600L * 1000): Seq[Int] = {
+      spark: SparkSession, path: String, keepLast: Int): Seq[Int] = {
     require(keepLast >= 1, s"keepLast must be >= 1: $keepLast")
     val vs = versions(spark, path)
     val drop = vs.dropRight(keepLast)
@@ -326,7 +330,7 @@ object Lakehouse {
       fs.delete(new org.apache.hadoop.fs.Path(path, s"v=$v"), true)
     }
     if (fs.exists(hp)) {
-      val cutoff = System.currentTimeMillis() - staleStageMs
+      val cutoff = System.currentTimeMillis() - StaleStageMs
       fs.listStatus(hp).toSeq
         .filter(st => st.isDirectory &&
           st.getPath.getName.startsWith("__stage_") &&

@@ -346,6 +346,9 @@ object Dedup {
         transform(col("__sh"), s => polyHash(s)), numHashes)
         .as("signature"))
 
+  /** The largest LSH bucket [[lshCandidatePairs]] pairs up. */
+  private val LshMaxBucket = 1000
+
   /** LSH candidate pairs from MinHash signatures: split each signature
     * into `bands` bands of `numHashes / bands` rows, bucket docs by
     * band value, and pair up docs sharing a bucket.
@@ -354,17 +357,17 @@ object Dedup {
     * math — a fractional band width would silently overlap bands).
     *
     * Skew guard: bucket sizes come from a count-only aggregation
-    * (map-side combined longs), and only buckets with 2..maxBucket
-    * members survive into the pair-generating self-join — a degenerate
-    * bucket (B docs → B² pairs) is dropped before anything per-member
-    * is materialized. Output: (a, b) with a < b, distinct.
+    * (map-side combined longs), and only buckets with
+    * 2..[[LshMaxBucket]] members survive into the pair-generating
+    * self-join — a degenerate bucket (B docs → B² pairs) is dropped
+    * before anything per-member is materialized. Output: (a, b) with
+    * a < b, distinct.
     */
   def lshCandidatePairs(
       signatures: DataFrame,
       idCol: String,
       numHashes: Int,
-      bands: Int,
-      maxBucket: Int = 1000): DataFrame = {
+      bands: Int): DataFrame = {
     require(bands > 0, "bands must be positive")
     require(numHashes % bands == 0,
       s"numHashes ($numHashes) must be a multiple of bands ($bands)")
@@ -382,7 +385,7 @@ object Dedup {
     val keepBuckets = banded
       .groupBy("band", "bucket")
       .agg(count(lit(1)).as("__bc"))
-      .filter(col("__bc").between(2, maxBucket))
+      .filter(col("__bc").between(2, LshMaxBucket))
       .select("band", "bucket")
     val kept = banded.join(keepBuckets, Seq("band", "bucket"))
     kept.select(col("band"), col("bucket"), col(idCol).as("a"))
@@ -393,6 +396,10 @@ object Dedup {
       .select("a", "b")
       .distinct()
   }
+
+  /** The most propagation rounds [[connectedComponents]] runs before
+    * it fails as not converged. */
+  private val CcMaxIter = 20
 
   /** Connected components over an undirected pair set — the CORRECT
     * cluster semantics for transitive near-duplicates: pairs (1,5) and
@@ -411,7 +418,6 @@ object Dedup {
     */
   def connectedComponents(
       pairs: DataFrame,
-      maxIter: Int = 20,
       numPartitions: Int = 0,
       localThreshold: Long = 1L << 20): DataFrame = {
     // Near-dup pair sets are usually TINY relative to the corpus (the
@@ -441,7 +447,7 @@ object Dedup {
       .localCheckpoint(true)
     var iter = 0
     var converged = false
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < CcMaxIter) {
       iter += 1
       val fromNeighbors = labels
         .join(edges, col("id") === col("src"))
@@ -461,7 +467,8 @@ object Dedup {
       converged = changed == 0
     }
     edges.unpersist(false)
-    require(converged, s"label propagation did not converge in $maxIter rounds")
+    require(converged,
+      s"label propagation did not converge in $CcMaxIter rounds")
     labels
   }
 
@@ -584,25 +591,26 @@ object Dedup {
     when(union > 0, inter / union).otherwise(lit(0.0))
   }
 
+  /** Shingle width of the MinHash operators and [[lshSCurveAudit]]. */
+  private val MinhashShingle = 3
+
   /** End-to-end MinHash-LSH near-dup pairs: signature → banded LSH →
     * candidate pairs → exact n-gram-Jaccard verification ≥ threshold.
     * Returns (a, b, jaccard), small, persisted and forced — the
     * corpus-sized shingle cache is released before returning (the
     * caller owns only the result; `unpersist()` it when done).
-    * `bands ≤ 0` derives the banding from the threshold via
-    * [[lshBanding]]. */
+    * The banding derives from the threshold via [[lshBanding]];
+    * shingles are [[MinhashShingle]] characters wide. */
   def minhashNearDupPairs(
       docs: DataFrame,
       idCol: String,
       text: Column,
       threshold: Double = 0.8,
-      numHashes: Int = 64,
-      bands: Int = 0,
-      shingleSize: Int = 3): DataFrame = {
-    val b = if (bands > 0) bands else lshBanding(numHashes, threshold)
-    val sh = shingleFrame(docs, idCol, text, shingleSize)
+      numHashes: Int = 64): DataFrame = {
+    val sh = shingleFrame(docs, idCol, text, MinhashShingle)
     val sigs = signaturesOfShingles(sh, idCol, numHashes)
-    val cand = lshCandidatePairs(sigs, idCol, numHashes, b)
+    val cand = lshCandidatePairs(sigs, idCol, numHashes,
+      lshBanding(numHashes, threshold))
     val pairs = cand
       .join(sh.select(col("__id").as("a"), col("__sh").as("sh_a")), Seq("a"))
       .join(sh.select(col("__id").as("b"), col("__sh").as("sh_b")), Seq("b"))
@@ -629,19 +637,17 @@ object Dedup {
     * the estimate is an exact /`numHashes` binary fraction and the
     * exact Jaccard rounds to 6 dp; both fix as DECIMAL(18,6) before
     * the error sums (exact, order-independent), one rounded division
-    * at the edge. */
+    * at the edge. Banding and shingles as in [[minhashNearDupPairs]]. */
   def minhashEstimatorAudit(
       docs: DataFrame,
       idCol: String,
       text: Column,
       threshold: Double = 0.8,
-      numHashes: Int = 64,
-      bands: Int = 0,
-      shingleSize: Int = 3): DataFrame = {
-    val b = if (bands > 0) bands else lshBanding(numHashes, threshold)
-    val sh = shingleFrame(docs, idCol, text, shingleSize)
+      numHashes: Int = 64): DataFrame = {
+    val sh = shingleFrame(docs, idCol, text, MinhashShingle)
     val sigs = signaturesOfShingles(sh, idCol, numHashes)
-    val cand = lshCandidatePairs(sigs, idCol, numHashes, b)
+    val cand = lshCandidatePairs(sigs, idCol, numHashes,
+      lshBanding(numHashes, threshold))
     val est = round(minhashJaccard(col("sig_a"), col("sig_b")), 6)
       .cast(DecimalType(18, 6))
     val exact = round(jaccard(col("sh_a"), col("sh_b")), 6)
@@ -663,6 +669,15 @@ object Dedup {
       max(abs(col("__e") - col("__x"))).cast(DoubleType).as("max_ae"))
     ownResult(out, sh)
   }
+
+  /** The [[lshSCurveAudit]] geometry, read by its oracle: signature
+    * width, band count, the true-pair Jaccard floor
+    * ScurvePairNum/ScurvePairDen, and the number of Jaccard bins. */
+  private[graft] val ScurveHashes = 64
+  private[graft] val ScurveBands = 16
+  private[graft] val ScurvePairNum = 2
+  private[graft] val ScurvePairDen = 5
+  private[graft] val ScurveBins = 20
 
   /** LSH S-curve tuning audit: per true-Jaccard bin, the EMPIRICAL
     * probability that the (numHashes, bands) banding detects a pair
@@ -692,19 +707,14 @@ object Dedup {
   def lshSCurveAudit(
       docs: DataFrame,
       idCol: String,
-      text: Column,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      pairNum: Int = 2,
-      pairDen: Int = 5,
-      shingleSize: Int = 3,
-      nBins: Int = 20): DataFrame = {
-    require(numHashes % bands == 0,
-      s"numHashes ($numHashes) must be a multiple of bands ($bands)")
-    require(pairNum > 0 && pairDen > 0 && pairNum < pairDen,
-      s"true-pair floor must be a proper fraction: $pairNum/$pairDen")
+      text: Column): DataFrame = {
+    val numHashes = ScurveHashes
+    val bands = ScurveBands
+    val pairNum = ScurvePairNum
+    val pairDen = ScurvePairDen
+    val nBins = ScurveBins
     val width = numHashes / bands
-    val sh = shingleFrame(docs, idCol, text, shingleSize)
+    val sh = shingleFrame(docs, idCol, text, MinhashShingle)
     val sigs = signaturesOfShingles(sh, idCol, numHashes)
     // AllPairs prefix filter at the integer threshold pairNum/pairDen:
     // a doc needs only its n − ceil(n·p/q) + 1 RAREST shingles indexed
@@ -862,12 +872,7 @@ object Dedup {
     *     verification step loses nothing;
     *  3. a length filter (t·|a| ≤ |b| ∧ t·|b| ≤ |a|) prunes candidates
     *     before the verify join. Threshold arithmetic runs in DECIMAL
-    *     so prefix lengths can't be off-by-one from FP rounding;
-    *  4. optional `dfCap > 0` drops shingles with document frequency
-    *     above the cap from the index — the stop-shingle guard for
-    *     boilerplate-heavy corpora. It bounds the worst-case Σdf² pair
-    *     blowup but makes recall approximate (pairs sharing ONLY
-    *     stop-shingles are missed); leave 0 for exact results.
+    *     so prefix lengths can't be off-by-one from FP rounding.
     *
     * Returns (a, b, jaccard) with a < b and jaccard ≥ threshold —
     * small, persisted and forced; the corpus-sized hashed-shingle
@@ -878,8 +883,7 @@ object Dedup {
       idCol: String,
       text: Column,
       threshold: Double = 0.5,
-      shingleSize: Int = 3,
-      dfCap: Int = 0): DataFrame = {
+      shingleSize: Int = 3): DataFrame = {
     require(threshold > 0 && threshold <= 1, "threshold must be in (0, 1]")
     val thr = lit(new java.math.BigDecimal(threshold.toString))
     val sh = hashedShingleFrame(docs, idCol, text, shingleSize)
@@ -887,10 +891,8 @@ object Dedup {
       .select(col("__id"), size(col("__sh")).as("__n"),
         explode(col("__sh")).as("__h"))
     val docFreq = inv.groupBy("__h").agg(count(lit(1)).as("__df"))
-    val indexable =
-      if (dfCap > 0) docFreq.filter(col("__df") <= dfCap) else docFreq
     val prefix = inv
-      .join(indexable, Seq("__h"))
+      .join(docFreq, Seq("__h"))
       .withColumn("__rk", row_number().over(
         Window.partitionBy("__id").orderBy(col("__df").asc, col("__h").asc)))
       .filter(col("__rk") <= col("__n") - ceil(thr * col("__n")) + lit(1))

@@ -37,27 +37,8 @@ object Graph {
     * 1 for every node. Nodes = distinct endpoints; dangling nodes
     * (no out-edges) leak their rank mass — the simple formulation,
     * replicated exactly by the oracle. Returns (node, rank) with rank
-    * DECIMAL(18,6).
-    *
-    * `tolerance`: when set, the loop exits EARLY once the max
-    * per-node |Δrank| between consecutive iterations is ≤ tolerance —
-    * at 100× scale a fixed iteration count either over-iterates (each
-    * extra round is a full edge join) or under-converges; the delta
-    * check costs one node-partitioned join + a 1-row max aggregate
-    * over two already-materialized generations. None (the default)
-    * preserves the fixed-count oracle-replicated behavior. */
-  def pageRank(
-      edges: DataFrame,
-      iters: Int,
-      tolerance: Option[Double] = None): DataFrame =
-    pageRankConverged(edges, iters, tolerance)._1
-
-  /** [[pageRank]] that also reports how many iterations actually ran
-    * (== `iters` unless `tolerance` triggered the early exit). */
-  def pageRankConverged(
-      edges: DataFrame,
-      iters: Int,
-      tolerance: Option[Double] = None): (DataFrame, Int) = {
+    * DECIMAL(18,6). */
+  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
     // e is persisted HASH-PARTITIONED ON src: the per-iteration join
     // requires clustering on src, so a pre-partitioned cache satisfies
@@ -87,10 +68,7 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     ranks.count()
 
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      it += 1
+    for (_ <- 1 to iters) {
       val contrib = e
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"),
@@ -112,23 +90,11 @@ object Graph {
             coalesce(col("__in"), lit(0).cast(DecimalType(18, 6))))
             .cast(DecimalType(18, 6)).as("rank"))
         .localCheckpoint()
-      tolerance.foreach { tol =>
-        // both generations are materialized — the delta is one
-        // node-keyed join + a 1-row aggregate (control-plane cost)
-        val delta = next
-          .join(ranks.withColumnRenamed("rank", "__prev"), Seq("node"))
-          .agg(max(abs(col("rank").cast(DoubleType) -
-            col("__prev").cast(DoubleType))).as("d"))
-          .collect()(0)
-        val maxDelta =
-          if (delta.isNullAt(0)) 0.0 else delta.getDouble(0)
-        if (maxDelta <= tol) converged = true
-      }
       ranks.unpersist(false)
       ranks = next
     }
     e.unpersist(false); nodes.unpersist(false)
-    (ranks, it)
+    ranks
   }
 
   /** PERSONALIZED PageRank: teleport mass lands only on `seeds`
@@ -151,20 +117,9 @@ object Graph {
   def personalizedPageRank(
       edges: DataFrame,
       seeds: DataFrame,
-      iters: Int,
-      tolerance: Option[Double] = None): DataFrame =
-    personalizedPageRankConverged(edges, seeds, iters, tolerance)._1
-
-  /** [[personalizedPageRank]] that also reports how many iterations
-    * actually ran (== `iters` unless `tolerance` triggered the early
-    * exit — the same max-|Δrank| check as [[pageRankConverged]]). */
-  def personalizedPageRankConverged(
-      edges: DataFrame,
-      seeds: DataFrame,
-      iters: Int,
-      tolerance: Option[Double] = None): (DataFrame, Int) = {
+      iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters out of range: $iters")
-    // same setup as [[pageRankConverged]]: the out-degree rides on the
+    // same setup as [[pageRank]]: the out-degree rides on the
     // cached edge rows, so each round is one join + one aggregate
     val eRaw = edges.select(col("src"), col("dst"))
       .distinct()
@@ -192,10 +147,7 @@ object Graph {
       .select(col("node"), col("rank"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     ranks.count()
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      it += 1
+    for (_ <- 1 to iters) {
       val contrib = e
         .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"),
@@ -209,21 +161,11 @@ object Graph {
           (base + coalesce(col("__in"), lit(0).cast(dec)))
             .cast(dec).as("rank"))
         .localCheckpoint()
-      tolerance.foreach { tol =>
-        val delta = next
-          .join(ranks.withColumnRenamed("rank", "__prev"), Seq("node"))
-          .agg(max(abs(col("rank").cast(DoubleType) -
-            col("__prev").cast(DoubleType))).as("d"))
-          .collect()(0)
-        val maxDelta =
-          if (delta.isNullAt(0)) 0.0 else delta.getDouble(0)
-        if (maxDelta <= tol) converged = true
-      }
       ranks.unpersist(false)
       ranks = next
     }
     e.unpersist(false); nodes.unpersist(false)
-    (ranks, it)
+    ranks
   }
 
   /** Triangle census + global clustering coefficient of an undirected
@@ -726,13 +668,17 @@ object Graph {
     kCoreByDegrees(edges, k, rounds)
   }
 
+  /** The most peel rounds [[kCore]] runs before it stops short of
+    * the fixpoint. */
+  private val KCoreMaxRounds = 50
+
   /** Run the peel to FIXPOINT (early exit when a round removes
-    * nothing — one 1-row count per round, the [[pageRankConverged]]
-    * pattern). Equals [[kCorePeel]] for any `rounds` ≥ the fixpoint
+    * nothing — one 1-row count per round), at most [[KCoreMaxRounds]]
+    * rounds. Equals [[kCorePeel]] for any `rounds` ≥ the fixpoint
     * depth. */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
-    require(k >= 1 && maxRounds >= 1)
-    kCoreByDegrees(edges, k, maxRounds)
+  def kCore(edges: DataFrame, k: Int): DataFrame = {
+    require(k >= 1)
+    kCoreByDegrees(edges, k, KCoreMaxRounds)
   }
 
   /** Incremental-degree peel shared by [[kCorePeel]] and [[kCore]].
@@ -857,26 +803,8 @@ object Graph {
     * division + 6-dp round per node against the exact decimal L1
     * total (L2 would need a √ inside the per-round arithmetic).
     *
-    * Returns (node, hub, auth) as DECIMAL(18,6) for every node.
-    *
-    * `tolerance`: when set, the loop exits EARLY once the max |Δ| of
-    * BOTH normalized vectors between consecutive rounds is ≤ tolerance
-    * — the [[pageRankConverged]] escape hatch, so 100×-scale callers
-    * don't pay full edge joins for rounds that no longer move any
-    * score. None (the default) preserves the fixed-count
-    * oracle-replicated behavior. */
-  def hits(
-      edges: DataFrame,
-      iters: Int,
-      tolerance: Option[Double] = None): DataFrame =
-    hitsConverged(edges, iters, tolerance)._1
-
-  /** [[hits]] that also reports how many rounds actually ran
-    * (== `iters` unless `tolerance` triggered the early exit). */
-  def hitsConverged(
-      edges: DataFrame,
-      iters: Int,
-      tolerance: Option[Double] = None): (DataFrame, Int) = {
+    * Returns (node, hub, auth) as DECIMAL(18,6) for every node. */
+  def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters out of range: $iters")
     val dec = DecimalType(18, 6)
     val zero = lit("0.000000").cast(dec)
@@ -904,7 +832,7 @@ object Graph {
     // build + consumer job per half-round; the collected total is the
     // identical exact-decimal-sum-cast-to-double the broadcast
     // carried, now a literal in the normalize projection
-    // (control-plane 1-row collect, the tolerance-check precedent).
+    // (a control-plane 1-row collect).
     def normalized(raw0: DataFrame, outCol: String): DataFrame = {
       val raw = raw0.localCheckpoint(false) // |nodes| rows
       val totRow = raw
@@ -925,10 +853,7 @@ object Graph {
       .persist(StorageLevel.MEMORY_AND_DISK)
     hub.count()
     var auth: DataFrame = null
-    var it = 0
-    var converged = false
-    while (it < iters && !converged) {
-      it += 1
+    for (_ <- 1 to iters) {
       val authRaw = eSrc
         .join(hub.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst").as("node"))
@@ -941,26 +866,6 @@ object Graph {
         .groupBy(col("src").as("node"))
         .agg(sum(col("a")).cast(dec).as("__raw"))
       val nextHub = normalized(hubRaw, "h").localCheckpoint()
-      tolerance.foreach { tol =>
-        // both generations are materialized localCheckpoints — the
-        // two per-vector deltas UNION into ONE aggregate job and one
-        // 1-row collect (VERDICT r9 item 6: the per-iteration check
-        // previously paid two joins + two collects)
-        if (prevAuth != null) {
-          val dA = nextAuth
-            .join(prevAuth.withColumnRenamed("a", "__pa"), Seq("node"))
-            .select(abs(col("a").cast(DoubleType) -
-              col("__pa").cast(DoubleType)).as("__d"))
-          val dH = nextHub
-            .join(hub.withColumnRenamed("h", "__ph"), Seq("node"))
-            .select(abs(col("h").cast(DoubleType) -
-              col("__ph").cast(DoubleType)).as("__d"))
-          val row = dA.unionAll(dH)
-            .agg(max(col("__d")).as("d")).collect()(0)
-          val m = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-          if (m <= tol) converged = true
-        }
-      }
       if (prevAuth != null) prevAuth.unpersist(false)
       hub.unpersist(false)
       hub = nextHub
@@ -968,7 +873,7 @@ object Graph {
     val out = hub.join(auth, Seq("node"))
       .select(col("node"), col("h").as("hub"), col("a").as("auth"))
     eSrc.unpersist(false); eDst.unpersist(false); nodes.unpersist(false)
-    (out, it)
+    out
   }
 
   /** Degree assortativity (Newman 2002, Phys. Rev. Lett. 89.208701):

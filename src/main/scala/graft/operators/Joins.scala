@@ -121,7 +121,7 @@ object Joins {
       leftTs: String,
       rightTs: String,
       forward: Boolean,
-      toleranceUs: Option[Long] = None): DataFrame = {
+      toleranceUs: Option[Long]): DataFrame = {
     require(toleranceUs.forall(_ >= 0),
       s"tolerance must be non-negative: $toleranceUs")
     val (unioned, leftOnly, rightOnly) =

@@ -151,7 +151,7 @@ object Sampling {
     * estimator is max(w_i, τ) with τ the weight equivalent of the
     * (k+1)-th smallest priority, and Σ max(w_i, τ) is unbiased for
     * Σ w. This operator runs [[prioritySample]]'s exact priority
-    * arithmetic, rebuilds the estimate, and emits it NEXT TO the
+    * arithmetic at seed 0, rebuilds the estimate, and emits it NEXT TO the
     * exact total — the audit that says how much the k-row sample's
     * totals can be trusted before anyone aggregates on it. When the
     * population fits in k the estimate IS the exact total.
@@ -168,14 +168,13 @@ object Sampling {
       df: DataFrame,
       idCol: Column,
       weight: Column,
-      k: Int,
-      seed: Int = 0): DataFrame = {
+      k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
     val staged = df
       .withColumn("__w",
         weight.cast(org.apache.spark.sql.types.LongType))
       .filter(col("__w") > 0L)
-      .withColumn("__u", idBucket(idCol, seed))
+      .withColumn("__u", idBucket(idCol))
       .withColumn("__pri", expr(s"(${PriorityScale}L * __u) div __w"))
       .withColumn("__id", idCol.cast(org.apache.spark.sql.types.LongType))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -139,6 +139,16 @@ object Similarity {
     (caug, qaug)
   }
 
+  /** The expected bucket cohort of the banded SRP indexes (the width
+    * rule of [[lshTopKPerQuery]]). */
+  private val TargetCohort = 16
+
+  /** The requested SRP geometry of [[lshTopKPerQuery]],
+    * [[twoNNDimension]] and [[knnGraph]]: `LshBits` plane bits in
+    * `LshBands` bands. */
+  private val LshBits = 32
+  private val LshBands = 4
+
   /** The banded-SRP MIPS index's DISTINCT candidate pair set
     * (query_id, corpus_id) — the frame whose size IS the index's
     * candidate work ([[mipsLshTopKPerQuery]] ranks exactly these). */
@@ -149,11 +159,10 @@ object Similarity {
       embCol: String,
       bits: Int = 32,
       bands: Int = 4,
-      targetCohort: Int = 16,
       probes: Int = 0): DataFrame = {
     val (caug, qaug) = mipsAugmented(corpus, queries, idCol, embCol)
     lshScoredCandidates(caug, qaug, idCol, embCol,
-      bits, bands, excludeSelf = true, targetCohort,
+      bits, bands, excludeSelf = true, TargetCohort,
       probes = probes)
       .select(col("query_id"), col("corpus_id"))
   }
@@ -187,12 +196,11 @@ object Similarity {
       k: Int,
       bits: Int = 32,
       bands: Int = 4,
-      targetCohort: Int = 16,
       probes: Int = 0): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     val (caug, qaug) = mipsAugmented(corpus, queries, idCol, embCol)
     val scored = lshScoredCandidates(caug, qaug, idCol, embCol,
-      bits, bands, excludeSelf = true, targetCohort,
+      bits, bands, excludeSelf = true, TargetCohort,
       probes = probes)
       .select(col("query_id"), col("corpus_id"),
         dot(col("corpus_emb"), col("query_emb")).as("__ip"))
@@ -352,7 +360,8 @@ object Similarity {
   }
 
   /** Approximate NN via SRP-LSH with multi-probe over band keys: both
-    * sides bucket on `bands` sub-signatures; candidates sharing any
+    * sides bucket on the `bands` = [[LshBands]] sub-signatures of a
+    * `bits` = [[LshBits]] signature; candidates sharing any
     * band get exact cosine verification, then top-k per query.
     * The corpus shuffles once on (band, key) — at 100 TB this replaces
     * the full cross join with |bucket|-local joins.
@@ -377,12 +386,10 @@ object Similarity {
       idCol: String,
       embCol: String,
       k: Int,
-      bits: Int = 32,
-      bands: Int = 4,
       excludeSelf: Boolean = false,
-      targetCohort: Int = 16): DataFrame = {
+      targetCohort: Int = TargetCohort): DataFrame = {
     val scored = lshScoredCandidates(corpus, queries, idCol, embCol,
-      bits, bands, excludeSelf, targetCohort)
+      LshBits, LshBands, excludeSelf, targetCohort)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("corpus_id").asc)
     scored.select(col("query_id"), col("corpus_id"), col("cos"))
@@ -509,7 +516,7 @@ object Similarity {
     // the multiplicity rides the band join (key-functional on the
     // rep id) — zero corpus-sized joins back
     val scored = lshScoredCandidates(reps, corpus, idCol, embCol,
-      bits = 32, bands = 4, excludeSelf = false, targetCohort = 16,
+      LshBits, LshBands, excludeSelf = false, TargetCohort,
       corpusExtra = Seq("__m"))
     val cand = scored
       .withColumn("__cap",
@@ -559,7 +566,7 @@ object Similarity {
     * every downstream graph pass (triangles, BFS, components) stays
     * near-linear in corpus size. WIDTH RULE: the band width is not
     * fixed — [[lshTopKPerQuery]] derives it from the corpus count so
-    * the expected bucket cohort stays ≤ `targetCohort` and candidate
+    * the expected bucket cohort stays ≤ [[TargetCohort]] and candidate
     * verification stays ~linear in n (a constant-width bucketing
     * would be quietly quadratic: cohorts grow with n). Returned edges
     * are persisted and materialized (multi-consumer frame; tiny:
@@ -568,13 +575,9 @@ object Similarity {
       corpus: DataFrame,
       idCol: String,
       embCol: String,
-      k: Int,
-      bits: Int = 32,
-      bands: Int = 4,
-      targetCohort: Int = 16): DataFrame = {
+      k: Int): DataFrame = {
     val nn = lshTopKPerQuery(corpus, corpus, idCol, embCol, k,
-      bits = bits, bands = bands, excludeSelf = true,
-      targetCohort = targetCohort)
+      excludeSelf = true)
     val e = nn.select(
         least(col("query_id"), col("corpus_id")).as("a"),
         greatest(col("query_id"), col("corpus_id")).as("b"))
@@ -1082,60 +1085,42 @@ object Similarity {
       .drop("__rn")
   }
 
-  /** Product-quantization ANN top-k via asymmetric distance (Jégou et
-    * al. 2011, public method): split each vector into `m` subspaces of
-    * `subDim` dims, encode every corpus vector as its nearest codeword
-    * per subspace (codebook = the first `cellsPerSub` corpus vectors'
-    * slices — the deterministic seeding [[ivfTopKPerQuery]] uses), and
-    * score query→corpus as the SUM of per-subspace query-to-codeword
-    * L2² distances (the ADC lookup-table trick: the query computes
-    * `m · cellsPerSub` distances ONCE, then every corpus vector is
-    * scored from its m one-byte codes with table lookups).
-    *
-    * This is the memory lever past int8: the served index is
-    * `m` bytes per vector (64 dims → 8 bytes, 32× under float32), the
-    * shape that decides whether a 100 TB vector corpus fits an index
-    * at all. Scale: codes are ONE narrow frame (id, sub, code); the
-    * distance table is control-plane-sized and broadcast; ranking
-    * shuffles only (query, corpus, decimal) rows.
-    *
-    * Determinism (the oracle replays all of it): codeword argmin uses
-    * the raw double L2² (same `dot`-expansion arithmetic in DuckDB);
-    * the ADC sum rounds each per-subspace distance to 9 dp and sums as
-    * DECIMAL — exact, order-independent — and ranks on that exact
-    * decimal (ties by corpus id). Returns (query_id, corpus_id, adc)
-    * with adc rounded to 6 dp at the edge. */
+  /** The product-quantizer geometry of [[pqTopKPerQuery]] and
+    * [[ivfPqTopKPerQuery]]: `PqM` subspaces of `PqSubDim` coordinates,
+    * `PqCellsPerSub` codewords each. */
+  private val PqM = 8
+  private val PqSubDim = 8
+  private val PqCellsPerSub = 16
+
   private def pqSubbed(
-      df: DataFrame, idCol: String, embCol: String, side: String,
-      m: Int, subDim: Int): DataFrame =
+      df: DataFrame, idCol: String, embCol: String, side: String): DataFrame =
     df.select(col(idCol).as(s"${side}_id"),
-      posexplode(array((0 until m).map(s0 =>
-        slice(col(embCol), s0 * subDim + 1, subDim)): _*))
+      posexplode(array((0 until PqM).map(s0 =>
+        slice(col(embCol), s0 * PqSubDim + 1, PqSubDim)): _*))
         .as(Seq("sub", s"${side}_sv")))
 
   /** L2² via the dot expansion — identical arithmetic in the oracle. */
   private def pqD2(a: Column, b: Column): Column =
     dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
 
-  /** Per-subspace codebook: slices of the first `cellsPerSub` corpus
-    * vectors (deterministic seeding, as the IVF coarse centroids). */
+  /** Per-subspace codebook: slices of the first [[PqCellsPerSub]]
+    * corpus vectors (deterministic seeding, as the IVF coarse
+    * centroids). */
   private def pqCodebook(
-      corpus: DataFrame, idCol: String, embCol: String,
-      m: Int, subDim: Int, cellsPerSub: Int): DataFrame =
+      corpus: DataFrame, idCol: String, embCol: String): DataFrame =
     corpus.select(col(idCol).as("cbid"), col(embCol).as("__v"))
-      .orderBy(col("cbid").asc).limit(cellsPerSub)
-      .select(col("cbid"), posexplode(array((0 until m).map(s0 =>
-        slice(col("__v"), s0 * subDim + 1, subDim)): _*))
+      .orderBy(col("cbid").asc).limit(PqCellsPerSub)
+      .select(col("cbid"), posexplode(array((0 until PqM).map(s0 =>
+        slice(col("__v"), s0 * PqSubDim + 1, PqSubDim)): _*))
         .as(Seq("sub", "cv")))
 
   /** The PQ index: (corpus_id, sub, cbid) — nearest codeword per
     * subspace by raw-double L2² (cbid tiebreak). */
-  private def pqCodes(
-      corpus: DataFrame, idCol: String, embCol: String, cb: DataFrame,
-      m: Int, subDim: Int): DataFrame = {
+  private def pqCodes(corpus: DataFrame, idCol: String, embCol: String,
+      cb: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("corpus_id"), col("sub"))
       .orderBy(col("__d").asc, col("cbid").asc)
-    pqSubbed(corpus, idCol, embCol, "corpus", m, subDim)
+    pqSubbed(corpus, idCol, embCol, "corpus")
       .join(broadcast(cb), Seq("sub"))
       .select(col("corpus_id"), col("sub"), col("cbid"),
         pqD2(col("corpus_sv"), col("cv")).as("__d"))
@@ -1145,11 +1130,11 @@ object Similarity {
   }
 
   /** The ADC distance table: (query_id, sub, cbid, exact-decimal
-    * 9-dp distance) — m·cellsPerSub rows per query, broadcastable. */
-  private def pqDistanceTable(
-      queries: DataFrame, idCol: String, embCol: String, cb: DataFrame,
-      m: Int, subDim: Int): DataFrame =
-    pqSubbed(queries, idCol, embCol, "query", m, subDim)
+    * 9-dp distance) — PqM·PqCellsPerSub rows per query,
+    * broadcastable. */
+  private def pqDistanceTable(queries: DataFrame, idCol: String,
+      embCol: String, cb: DataFrame): DataFrame =
+    pqSubbed(queries, idCol, embCol, "query")
       .join(broadcast(cb), Seq("sub"))
       .select(col("query_id"), col("sub"), col("cbid"),
         Guards.fastRoundDec(pqD2(col("query_sv"), col("cv")), 9,
@@ -1170,29 +1155,53 @@ object Similarity {
         round(col("__adc").cast(DoubleType), 6).as("adc"))
   }
 
+  /** Product-quantization ANN top-k via asymmetric distance (Jégou et
+    * al. 2011, public method): split each vector into [[PqM]] subspaces of
+    * [[PqSubDim]] dims, encode every corpus vector as its nearest codeword
+    * per subspace (codebook = the first [[PqCellsPerSub]] corpus vectors'
+    * slices — the deterministic seeding [[ivfTopKPerQuery]] uses), and
+    * score query→corpus as the SUM of per-subspace query-to-codeword
+    * L2² distances (the ADC lookup-table trick: the query computes
+    * PqM · PqCellsPerSub distances ONCE, then every corpus vector is
+    * scored from its PqM one-byte codes with table lookups).
+    *
+    * This is the memory lever past int8: the served index is
+    * PqM bytes per vector (64 dims → 8 bytes, 32× under float32), the
+    * shape that decides whether a 100 TB vector corpus fits an index
+    * at all. Scale: codes are ONE narrow frame (id, sub, code); the
+    * distance table is control-plane-sized and broadcast; ranking
+    * shuffles only (query, corpus, decimal) rows.
+    *
+    * Determinism (the oracle replays all of it): codeword argmin uses
+    * the raw double L2² (same `dot`-expansion arithmetic in DuckDB);
+    * the ADC sum rounds each per-subspace distance to 9 dp and sums as
+    * DECIMAL — exact, order-independent — and ranks on that exact
+    * decimal (ties by corpus id). Returns (query_id, corpus_id, adc)
+    * with adc rounded to 6 dp at the edge. */
   def pqTopKPerQuery(
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
       embCol: String,
-      k: Int,
-      m: Int = 8,
-      subDim: Int = 8,
-      cellsPerSub: Int = 16): DataFrame = {
-    require(m > 0 && subDim > 0 && cellsPerSub > 0)
-    val cb = pqCodebook(corpus, idCol, embCol, m, subDim, cellsPerSub)
-    val codes = pqCodes(corpus, idCol, embCol, cb, m, subDim)
-    val dt = pqDistanceTable(queries, idCol, embCol, cb, m, subDim)
+      k: Int): DataFrame = {
+    val cb = pqCodebook(corpus, idCol, embCol)
+    val codes = pqCodes(corpus, idCol, embCol, cb)
+    val dt = pqDistanceTable(queries, idCol, embCol, cb)
     pqRank(codes, dt, k)
   }
 
+  /** The IVF coarse quantizer of [[ivfPqTopKPerQuery]]: a query probes
+    * `IvfPqProbe` of `IvfPqCells` cells. */
+  private val IvfPqCells = 16
+  private val IvfPqProbe = 4
+
   /** IVF-PQ — the production composition: the IVF coarse quantizer
-    * generates candidates (probe `nProbe` of `nCells` cells), and the
-    * PQ codes rank them by asymmetric distance. The serving shape at
-    * 100 TB: the index holds one cell id + `m` code bytes per vector;
-    * a query touches only its probed cells' posting lists and scores
-    * them from an `m`·`cellsPerSub`-entry lookup table — no float
-    * vector is read at query time at all.
+    * generates candidates (probe [[IvfPqProbe]] of [[IvfPqCells]]
+    * cells), and the PQ codes rank them by asymmetric distance. The
+    * serving shape at 100 TB: the index holds one cell id + [[PqM]]
+    * code bytes per vector; a query touches only its probed cells'
+    * posting lists and scores them from a PqM·PqCellsPerSub-entry
+    * lookup table — no float vector is read at query time at all.
     *
     * Both stages are the individually-gated operators
     * ([[ivfTopKPerQuery]]'s cells, [[pqTopKPerQuery]]'s codes/ADC);
@@ -1202,24 +1211,20 @@ object Similarity {
       queries: DataFrame,
       idCol: String,
       embCol: String,
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 4,
-      m: Int = 8,
-      subDim: Int = 8,
-      cellsPerSub: Int = 16): DataFrame = {
-    val cent = seedCentroids(corpus, idCol, embCol, nCells)
+      k: Int): DataFrame = {
+    val cent = seedCentroids(corpus, idCol, embCol, IvfPqCells)
     val assigned = coarseCells(corpus, idCol, embCol, cent, "corpus", 1)
       .select(col("corpus_id"), col("cid"))
-    val probed = coarseCells(queries, idCol, embCol, cent, "query", nProbe)
+    val probed =
+      coarseCells(queries, idCol, embCol, cent, "query", IvfPqProbe)
       .select(col("query_id"), col("cid"))
     // candidate pairs: corpus vectors in a probed cell (each corpus
     // vector lives in exactly one cell — no distinct needed)
     val cand = probed.join(assigned, Seq("cid"))
       .select(col("query_id"), col("corpus_id"))
-    val cb = pqCodebook(corpus, idCol, embCol, m, subDim, cellsPerSub)
-    val codes = pqCodes(corpus, idCol, embCol, cb, m, subDim)
-    val dt = pqDistanceTable(queries, idCol, embCol, cb, m, subDim)
+    val cb = pqCodebook(corpus, idCol, embCol)
+    val codes = pqCodes(corpus, idCol, embCol, cb)
+    val dt = pqDistanceTable(queries, idCol, embCol, cb)
     // restrict the ADC rank to candidates: pair-wise code rows tagged
     // with their query
     val pairsCodes = cand.join(codes, Seq("corpus_id"))

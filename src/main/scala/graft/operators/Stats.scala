@@ -19,6 +19,22 @@ import org.apache.spark.sql.{Column, DataFrame}
   */
 object Stats {
 
+  /** Value ranges of the histogram-refined global rank
+    * ([[globalRankByValue]], [[kthValue]]) and the rank tests on it. */
+  private val RankRanges = 256
+
+  /** Largest candidate bin [[kthValue]] finishes on the driver. */
+  private val KthMaxLocal = 1 << 20
+
+  /** The period cap of the all-pairs trend and rank-correlation
+    * operators: p periods make p(p−1)/2 pairs, so a longer series must
+    * aggregate to coarser periods first. */
+  private val MaxPeriods = 10000L
+
+  /** The quantiles, in permille, of [[quantileTreatmentEffect]] and
+    * [[quantileSketchByGroup]]: p10, the median and p90. */
+  private val QuantilePermilles = Seq(100, 500, 900)
+
   /** Quantile estimates from a fixed-domain equal-width histogram.
     *
     * Values are clamped into `nBins` bins over [lo, hi); the q-th
@@ -684,23 +700,22 @@ object Stats {
       value: Column,
       idCol: Column,
       variantA: String,
-      variantB: String,
-      permilles: Seq[Int] = Seq(100, 500, 900)): DataFrame = {
+      variantB: String): DataFrame = {
     val staged = df
       .select(variantCol.cast(StringType).as("__variant"),
         value.as("__val"), idCol.as("__qid"))
       .filter(col("__variant").isin(variantA, variantB))
     val q = quantilesByGroup(staged, Seq("__variant"), col("__val"),
-      col("__qid"), permilles)
+      col("__qid"), QuantilePermilles)
       .localCheckpoint(true) // 2 rows; two consumers below
     val a = q.filter(col("__variant") === variantA)
       .select(col("n").as("n_a") +:
-        permilles.map(p => col(s"p_$p").as(s"__a$p")): _*)
+        QuantilePermilles.map(p => col(s"p_$p").as(s"__a$p")): _*)
     val b = q.filter(col("__variant") === variantB)
       .select(col("n").as("n_b") +:
-        permilles.map(p => col(s"p_$p").as(s"__b$p")): _*)
+        QuantilePermilles.map(p => col(s"p_$p").as(s"__b$p")): _*)
     val one = a.crossJoin(broadcast(b)) // 1×1 control plane
-    val stacked = permilles.map { p =>
+    val stacked = QuantilePermilles.map { p =>
       struct(lit(p).as("permille"), col("n_a"), col("n_b"),
         col(s"__a$p").as("q_a"), col(s"__b$p").as("q_b"),
         round(col(s"__b$p") - col(s"__a$p"), 6).as("qte"))
@@ -809,6 +824,9 @@ object Stats {
       (col("__w").cast(DoubleType) / lit(10000.0)).as("max_err"): _*)
   }
 
+  /** Histogram bins per group of [[quantileSketchByGroup]]. */
+  private val SketchBins = 256
+
   /** Mergeable grouped-quantile sketch, end to end: the at-scale
     * escape hatch for [[quantilesByGroup]] (VERDICT r9 item 3 — the
     * `profileApprox`-for-quantiles). Two corpus passes (bounds, then
@@ -819,12 +837,10 @@ object Stats {
   def quantileSketchByGroup(
       df: DataFrame,
       groupCols: Seq[String],
-      value: Column,
-      bins: Int = 256,
-      permilles: Seq[Int] = Seq(100, 500, 900)): DataFrame =
+      value: Column): DataFrame =
     quantilesFromSketch(
-      quantileSketchState(df, groupCols, value, bins),
-      groupCols, permilles)
+      quantileSketchState(df, groupCols, value, SketchBins),
+      groupCols, QuantilePermilles)
 
   /** Nelson–Aalen cumulative-hazard estimator over per-key activity
     * spans — survival analysis for churn ("how fast do users go
@@ -1077,6 +1093,10 @@ object Stats {
           .otherwise(lit(null).cast(StringType)))
   }
 
+  /** Type I (α) and type II (β) error rates of [[sprtBernoulli]]. */
+  private val SprtAlpha = 0.05
+  private val SprtBeta = 0.05
+
   /** Wald's Sequential Probability Ratio Test over an
     * ALREADY-AGGREGATED daily (n, successes) series — the
     * group-sequential "stop the experiment early" monitor (Wald
@@ -1105,17 +1125,13 @@ object Stats {
       nCol: Column,
       sCol: Column,
       p0: Double,
-      p1: Double,
-      alpha: Double = 0.05,
-      beta: Double = 0.05): DataFrame = {
+      p1: Double): DataFrame = {
     require(p0 > 0 && p0 < 1 && p1 > 0 && p1 < 1 && p0 != p1,
       s"need distinct p0/p1 in (0,1): $p0, $p1")
-    require(alpha > 0 && alpha < 0.5 && beta > 0 && beta < 0.5,
-      s"alpha/beta out of range: $alpha, $beta")
     val w1 = math.log(p1 / p0)
     val w0 = math.log((1.0 - p1) / (1.0 - p0))
-    val hi = math.log((1.0 - beta) / alpha)
-    val lo = math.log(beta / (1.0 - alpha))
+    val hi = math.log((1.0 - SprtBeta) / SprtAlpha)
+    val lo = math.log(SprtBeta / (1.0 - SprtAlpha))
     val wAsc = Guards.seriesWindow(col(orderCol).asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val lt = LongType
@@ -1140,14 +1156,13 @@ object Stats {
     * oracle so BOTH engines compare the identical doubles:
     * (w1, w0, hi, lo) as round-trip-exact strings. */
   def sprtConstants(
-      p0: Double, p1: Double,
-      alpha: Double = 0.05, beta: Double = 0.05):
+      p0: Double, p1: Double):
       (String, String, String, String) = {
     def f(v: Double): String =
       java.lang.Double.toString(v) // shortest round-trip-exact form
     (f(math.log(p1 / p0)), f(math.log((1.0 - p1) / (1.0 - p0))),
-      f(math.log((1.0 - beta) / alpha)),
-      f(math.log(beta / (1.0 - alpha))))
+      f(math.log((1.0 - SprtBeta) / SprtAlpha)),
+      f(math.log(SprtBeta / (1.0 - SprtAlpha))))
   }
 
   /** CUPED variance reduction (Deng, Xu, Kohavi & Walker, WSDM
@@ -1331,6 +1346,10 @@ object Stats {
     out
   }
 
+  /** χ² critical value of [[srmCheck]]: 1 degree of freedom (two
+    * variants) at α = 0.05. */
+  private val SrmCritical = 3.841
+
   /** Sample-ratio-mismatch check — the experiment guardrail every
     * platform runs FIRST: a χ² goodness-of-fit of observed per-variant
     * UNIT counts against the equal-split design. A significant
@@ -1338,21 +1357,19 @@ object Stats {
     * every downstream readout (including a CUPED-polished one) is
     * garbage; the classic silent killer is a crash that drops one
     * variant's events. No p-value machinery: the statistic compares
-    * against the literal critical value for k−1 degrees of freedom
-    * supplied by the caller (3.841 for 2 variants at α = 0.05), so
-    * the gate stays transcendental-free.
+    * against the literal critical value [[SrmCritical]] (one degree
+    * of freedom: two variants), so the gate stays
+    * transcendental-free.
     *
     * Scale shape: one distinct-unit aggregate (map-side combined) to
     * k variant counts, then closed-form doubles over exact longs.
     *
     * Returns one row per variant: (variant, n_units, expected, chi2,
-    * srm — true when the TOTAL χ² crosses `critical`). */
+    * srm — true when the TOTAL χ² crosses [[SrmCritical]]). */
   def srmCheck(
       df: DataFrame,
       unitCol: Column,
-      variantCol: Column,
-      critical: Double = 3.841): DataFrame = {
-    require(critical > 0, s"critical must be positive: $critical")
+      variantCol: Column): DataFrame = {
     val per = df.select(variantCol.as("variant"), unitCol.as("__u"))
       .filter(col("__u").isNotNull)
       .groupBy(col("variant"))
@@ -1373,7 +1390,7 @@ object Stats {
     cells.crossJoin(broadcast(chi2))
       .select(col("variant"), col("n_units"), col("expected"),
         round(col("__chi2"), 6).as("chi2"),
-        (round(col("__chi2"), 6) > critical).as("srm"))
+        (round(col("__chi2"), 6) > SrmCritical).as("srm"))
   }
 
   /** Difference-in-differences over a pre/post × treat/control
@@ -1761,6 +1778,10 @@ object Stats {
     out
   }
 
+  /** z quantiles of [[powerMde]]: two-sided α = 0.05 and 80% power. */
+  private val MdeZAlpha = 1.96
+  private val MdeZBeta = 0.8416
+
   /** Minimum-detectable-effect readout — the experiment-DESIGN
     * companion of [[welchT]]/[[cupedAdjust]]: given the unit counts
     * and metric variances the experiment actually has, what absolute
@@ -1791,9 +1812,7 @@ object Stats {
       variantCol: Column,
       yCol: Column,
       variantA: String,
-      variantB: String,
-      zAlpha: Double = 1.96,
-      zBeta: Double = 0.8416): DataFrame = {
+      variantB: String): DataFrame = {
     val dec = DecimalType(18, 4)
     def fix2(c: Column) = round(c, 2).cast(DecimalType(28, 2))
     val per = df
@@ -1820,7 +1839,7 @@ object Stats {
       varOf("__sb", "__ssb", "__nb") / safe(d(col("__nb")))
     val meanA = d(col("__sa")) / safe(d(col("__na")))
     val ok = col("__na") > 1 && col("__nb") > 1 && se2 > 0
-    val mde = (lit(zAlpha) + lit(zBeta)) * sqrt(se2)
+    val mde = (lit(MdeZAlpha) + lit(MdeZBeta)) * sqrt(se2)
     one.select(col("__na").as("n_a"), col("__nb").as("n_b"),
       when(col("__na") > 0, round(meanA, 6)).as("mean_a"),
       when(ok, round(sqrt(se2), 6))
@@ -1872,6 +1891,9 @@ object Stats {
       .drop("__tot")
   }
 
+  /** Rows [[pathMining]] keeps. */
+  private val PathTopK = 20
+
   /** Top-k event PATHS of length `pathLen` — the higher-order
     * complement of [[transitionMatrix]]: the matrix assumes the next
     * state depends only on the current one; the path census shows
@@ -1889,19 +1911,17 @@ object Stats {
     * order (n desc, path asc) is total, so the cut replays on any
     * engine.
     *
-    * Returns ≤ `topK` rows: (path — states joined with '>', n,
-    * share_ppm of ALL length-`pathLen` paths). */
+    * Returns ≤ [[PathTopK]] rows: (path — states joined with '>',
+    * n, share_ppm of ALL length-`pathLen` paths). */
   def pathMining(
       df: DataFrame,
       keyCol: Column,
       orderBy: Column,
       tiebreak: Column,
       state: Column,
-      pathLen: Int = 3,
-      topK: Int = 20): DataFrame = {
+      pathLen: Int = 3): DataFrame = {
     require(pathLen >= 2 && pathLen <= 5,
       s"pathLen must be in [2, 5]: $pathLen")
-    require(topK > 0, s"topK must be positive: $topK")
     val w = Window.partitionBy(col("__k"))
       .orderBy(col("__o").asc, col("__t").asc)
     val lagCols = (pathLen - 1 to 0 by -1).map { i =>
@@ -1924,11 +1944,14 @@ object Stats {
       .withColumn("share_ppm", expr("n * 1000000 div __tot"))
       .drop("__tot")
       .orderBy(col("n").desc, col("path").asc)
-      .limit(topK)
-      .localCheckpoint(true) // ≤ topK rows; free paths afterwards
+      .limit(PathTopK)
+      .localCheckpoint(true) // ≤ PathTopK rows; free paths afterwards
     paths.unpersist(false)
     out
   }
+
+  /** Power-iteration rounds of [[markovSteadyState]]. */
+  private val MarkovIters = 20
 
   /** Stationary distribution of the [[transitionMatrix]] chain by
     * power iteration: where does the process SPEND ITS TIME in the
@@ -1949,12 +1972,10 @@ object Stats {
     * ppm / 10⁶; each term replays Spark's round(·, 9) +
     * cast(DECIMAL(18,9)) bit-for-bit and sums exactly.
     *
-    * Returns one row per state: (state, pi), π after `iters` rounds
-    * from the uniform start, 6-dp. */
+    * Returns one row per state: (state, pi), π after [[MarkovIters]]
+    * rounds from the uniform start, 6-dp. */
   def markovSteadyState(
-      transitions: DataFrame,
-      iters: Int = 20): DataFrame = {
-    require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
+      transitions: DataFrame): DataFrame = {
     // DRIVER power iteration over the COLLECTED matrix — the
     // [[graft.operators.Similarity]] powerIterate precedent: the
     // input is ≤ |states|² control-plane rows by this operator's own
@@ -1996,7 +2017,7 @@ object Stats {
     val ti = to.map(idx)
     val rm = java.math.RoundingMode.HALF_UP
     var pi = Array.fill(states.length)(1.0 / states.length)
-    for (_ <- 1 to iters) {
+    for (_ <- 1 to MarkovIters) {
       val acc = Array.fill[java.math.BigDecimal](states.length)(null)
       var r = 0
       while (r < rows.length) {
@@ -2136,8 +2157,7 @@ object Stats {
       items: DataFrame,
       item: Column,
       depth: Int = 4,
-      width: Int = 1 << 20,
-      weight: Column = lit(1L)): DataFrame = {
+      width: Int = 1 << 20): DataFrame = {
     require(depth > 0 && width > 0)
     val cells = array((0 until depth).map { j =>
       pmod(col("__h") * Dedup.affineA(j) + Dedup.affineB(j),
@@ -2145,7 +2165,7 @@ object Stats {
     }: _*)
     items
       .select(Dedup.polyHash(item).as("__h"),
-        weight.cast(LongType).as("__w"))
+        lit(1L).cast(LongType).as("__w"))
       .select(posexplode(cells).as(Seq("depth", "bucket")), col("__w"))
       .groupBy(col("depth"), col("bucket"))
       .agg(sum(col("__w")).as("cnt"))
@@ -2200,20 +2220,19 @@ object Stats {
   def spearman(
       df: DataFrame,
       xCol: String,
-      yCol: String,
-      nRanges: Int = 256): DataFrame = {
+      yCol: String): DataFrame = {
     val staged = df
       .filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).cast(DoubleType).as("__x"),
         col(yCol).cast(DoubleType).as("__y"))
       .withColumn("__t", lit(0))
-    val (rx, _) = globalRankByValue(staged, "__x", "__t", nRanges)
+    val (rx, _) = globalRankByValue(staged, "__x", "__t", RankRanges)
     val wx = Window.partitionBy(col("__x"))
     val withRx = rx
       .withColumn("__rx", min(col("__rank")).over(wx) +
         max(col("__rank")).over(wx))
       .drop("__rank")
-    val (ry, _) = globalRankByValue(withRx, "__y", "__t", nRanges)
+    val (ry, _) = globalRankByValue(withRx, "__y", "__t", RankRanges)
     val wy = Window.partitionBy(col("__y"))
     val ranked = ry
       .withColumn("__ry", min(col("__rank")).over(wy) +
@@ -2240,6 +2259,9 @@ object Stats {
   /** The limb width of [[corrMatrix]]'s two-long exact sums. */
   private val CorrLimb = 1L << 23
 
+  /** Decimal places each [[corrMatrix]] product is fixed at. */
+  private val CorrScale = 4
+
   /** Pairwise Pearson correlation matrix over `cols` in ONE scan and
     * ONE 1-row aggregate: the sufficient statistics (Σx, Σx², Σxy for
     * every pair) accumulate together with map-side combine, so the
@@ -2248,7 +2270,7 @@ object Stats {
     * before fitting anything.
     *
     * Determinism without the decimal tax: each product rounds
-    * half-away to `scale` dp as a LONG (|term| must stay < 2⁴⁶ —
+    * half-away to [[CorrScale]] dp as a LONG (|term| must stay < 2⁴⁶ —
     * bound your scale to the data's magnitude), which splits into two
     * limbs (⌊t/2²³⌋, t mod 2²³) summed as plain codegen'd longs —
     * ~18× faster than DECIMAL-buffered sums at sf0.1 (measured) and
@@ -2261,11 +2283,10 @@ object Stats {
     * Returns one row per pair: (x, y, n, corr). */
   def corrMatrix(
       df: DataFrame,
-      cols: Seq[String],
-      scale: Int = 4): DataFrame = {
+      cols: Seq[String]): DataFrame = {
     require(cols.size >= 2, s"need at least 2 columns: $cols")
     require(cols.distinct.size == cols.size, s"duplicate columns: $cols")
-    val mult = math.pow(10, scale)
+    val mult = math.pow(10, CorrScale)
     def scaledLong(c: Column): Column =
       when(c >= 0, floor(c * mult + lit(0.5)))
         .otherwise(-floor(-c * mult + lit(0.5))).cast(LongType)
@@ -2293,7 +2314,8 @@ object Stats {
         limbSums(col(a) * col(b), s"sp_${a}__$b") }
     val one = d.agg(count(lit(1)).as("__n"), moments: _*)
     // limb reassembly is 1-row decimal arithmetic — exact, then one
-    // cast to double and the /10^scale in the same order as the oracle
+    // cast to double and the /10^CorrScale in the same order as the
+    // oracle
     def dbl(m: String) =
       (col(s"__h_$m").cast(DecimalType(38, 0)) * CorrLimb +
         col(s"__l_$m").cast(DecimalType(38, 0)))
@@ -2441,7 +2463,7 @@ object Stats {
       df: DataFrame,
       valueCol: String,
       tieCol: String,
-      nRanges: Int = 256): (DataFrame, Long) = {
+      nRanges: Int = RankRanges): (DataFrame, Long) = {
     require(nRanges > 0)
     val v = col(valueCol).cast(DoubleType)
     val b = df.agg(min(v).as("lo"), max(v).as("hi"),
@@ -2491,7 +2513,7 @@ object Stats {
     * per-range sort) — use this when exactly one quantile/threshold
     * is consumed downstream ([[splitConformal]]'s q̂). */
   def kthValue(df: DataFrame, valueCol: String, k: Long,
-      nRanges: Int = 256, maxLocal: Int = 1 << 20): Double =
+      nRanges: Int = RankRanges, maxLocal: Int = KthMaxLocal): Double =
     kthValueBy(df, valueCol, _ => k, nRanges, maxLocal)
 
   /** [[kthValue]] with k derived FROM the row count — `kOf(n)` is
@@ -2501,7 +2523,7 @@ object Stats {
     * NULL and NaN values are excluded before counting (NaN has no
     * place in a total order; callers needing them must pre-map). */
   def kthValueBy(df: DataFrame, valueCol: String, kOf: Long => Long,
-      nRanges: Int = 256, maxLocal: Int = 1 << 20): Double = {
+      nRanges: Int = RankRanges, maxLocal: Int = KthMaxLocal): Double = {
     val cur = df.select(col(valueCol).cast(DoubleType).as("__kv"))
       .filter(col("__kv").isNotNull && !isnan(col("__kv")))
     val b = cur.agg(min(col("__kv")).as("lo"),
@@ -2526,8 +2548,8 @@ object Stats {
     * terminates the loop for free. NULL/NaN excluded as in
     * [[kthValue]]. */
   private[operators] def kthValuePair(
-      df: DataFrame, valueCol: String, kLo: Long, kHi: Long,
-      nRanges: Int = 256, maxLocal: Int = 1 << 20): (Double, Double) = {
+      df: DataFrame, valueCol: String, kLo: Long,
+      kHi: Long): (Double, Double) = {
     require(kHi == kLo || kHi == kLo + 1,
       s"kthValuePair serves adjacent ranks only, got ($kLo, $kHi)")
     val cur = df.select(col(valueCol).cast(DoubleType).as("__kv"))
@@ -2538,7 +2560,7 @@ object Stats {
     require(kLo >= 1 && kHi <= n,
       s"kthValuePair: ranks ($kLo, $kHi) out of range for $n rows")
     kthPairLoop(cur, b.getDouble(0), b.getDouble(1), n, kLo, kHi,
-      nRanges, maxLocal, rounds = 0)
+      RankRanges, KthMaxLocal, rounds = 0)
   }
 
   /** One refinement round = ONE scan: per-bin (count, min, max) in a
@@ -2648,7 +2670,7 @@ object Stats {
       valueCol: String,
       tieCol: String,
       nBins: Int,
-      nRanges: Int = 256): DataFrame = {
+      nRanges: Int = RankRanges): DataFrame = {
     require(nBins > 0 && nRanges > 0)
     val v = col(valueCol).cast(DoubleType)
     val (ranked, n) = globalRankByValue(df, valueCol, tieCol, nRanges)
@@ -2950,18 +2972,20 @@ object Stats {
       Sampling.Buckets < Sampling.Buckets / 2, 1L).otherwise(-1L)
   }
 
+  /** Independent ±1 sketches of [[amsF2]] and [[amsJoinSize]]; the
+    * estimate is their median. */
+  private val AmsDepth = 9
+
   def amsF2(
       df: DataFrame,
-      key: Column,
-      depth: Int = 9): DataFrame = {
-    require(depth >= 1 && depth <= 64, s"depth out of range: $depth")
+      key: Column): DataFrame = {
     val base = df.filter(key.isNotNull) // a NULL key is no key
     def sigma(j: Int): Column = amsSigma(key, j)
     val sums = base.agg(
       count(lit(1)).as("__n"),
-      (0 until depth).map(j => sum(sigma(j)).as(s"__s$j")): _*)
+      (0 until AmsDepth).map(j => sum(sigma(j)).as(s"__s$j")): _*)
     val ests = sums.select(col("__n"),
-      explode(array((0 until depth).map(j =>
+      explode(array((0 until AmsDepth).map(j =>
         (col(s"__s$j") * col(s"__s$j")).cast(DecimalType(38, 0))): _*))
         .as("__e"))
     // depth-row frame: the sanctioned bounded single-partition rank
@@ -2969,7 +2993,7 @@ object Stats {
       .withColumn("__rk", row_number().over(
         Guards.seriesWindow(col("__e").asc)))
     val med = ranked.agg(max(col("__n")).as("n"),
-      min(when(col("__rk") === (depth + 1) / 2, col("__e")))
+      min(when(col("__rk") === (AmsDepth + 1) / 2, col("__e")))
         .as("f2_est"))
     val exact = base.groupBy(key.as("__k")).agg(count(lit(1)).as("__f"))
       .agg(count(lit(1)).as("n_keys"),
@@ -2994,7 +3018,7 @@ object Stats {
     * inner product Σ_k f_A(k)·f_B(k) IS |A ⋈ B| on the key, and with
     * BOTH sides sketched by the SAME ±1 hash family,
     * E[S_A,j · S_B,j] equals it — the classic AMS inner-product
-    * estimator. Each side's state is `depth` mergeable longs built in
+    * estimator. Each side's state is [[AmsDepth]] mergeable longs built in
     * one pass; the planner question "how big is this join" gets an
     * answer without shuffling either table. Exact join size emitted
     * beside the estimate as the audit.
@@ -3010,19 +3034,17 @@ object Stats {
       dfA: DataFrame,
       keyA: Column,
       dfB: DataFrame,
-      keyB: Column,
-      depth: Int = 9): DataFrame = {
-    require(depth >= 1 && depth <= 64, s"depth out of range: $depth")
+      keyB: Column): DataFrame = {
     def sums(df: DataFrame, key: Column, tag: String): DataFrame =
       df.filter(key.isNotNull)
         .agg(count(lit(1)).as(s"__n$tag"),
-          (0 until depth).map(j =>
+          (0 until AmsDepth).map(j =>
             coalesce(sum(amsSigma(key, j)), lit(0L)).as(s"__$tag$j")): _*)
     val sa = sums(dfA, keyA, "a")
     val sb = sums(dfB, keyB, "b")
     val both = sa.crossJoin(broadcast(sb)) // 1×1 control plane
     val ests = both.select(col("__na"), col("__nb"),
-      explode(array((0 until depth).map(j =>
+      explode(array((0 until AmsDepth).map(j =>
         (col(s"__a$j") * col(s"__b$j")).cast(DecimalType(38, 0))): _*))
         .as("__e"))
     val ranked = Guards.boundedSeries(ests, "amsJoinSize depth estimates")
@@ -3030,7 +3052,7 @@ object Stats {
         Guards.seriesWindow(col("__e").asc)))
     val med = ranked.agg(
       max(col("__na")).as("n_a"), max(col("__nb")).as("n_b"),
-      min(when(col("__rk") === (depth + 1) / 2, col("__e")))
+      min(when(col("__rk") === (AmsDepth + 1) / 2, col("__e")))
         .as("join_est"))
     val fa = dfA.filter(keyA.isNotNull)
       .groupBy(keyA.as("__k")).agg(count(lit(1)).as("__fa"))
@@ -3324,8 +3346,7 @@ object Stats {
       series: DataFrame,
       orderCol: String,
       xCol: String,
-      yCol: String,
-      maxPeriods: Long = 10000L): DataFrame = {
+      yCol: String): DataFrame = {
     val w = Guards.seriesWindow(col(orderCol).asc)
     val idx = Guards.boundedSeries(series, "kendallTau series")
       .select(col(xCol).cast(DoubleType).as("__x"),
@@ -3333,12 +3354,12 @@ object Stats {
         row_number().over(w).as("__i"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val p = idx.count()
-    if (p < 2 || p > maxPeriods) {
+    if (p < 2 || p > MaxPeriods) {
       idx.unpersist(false)
       require(p >= 2, s"kendallTau needs >= 2 periods, got $p")
-      require(p <= maxPeriods,
+      require(p <= MaxPeriods,
         s"kendallTau: $p periods -> ${p * (p - 1) / 2} pairs exceeds " +
-          s"the maxPeriods=$maxPeriods cap; aggregate to coarser " +
+          s"the maxPeriods=$MaxPeriods cap; aggregate to coarser " +
           "periods first")
     }
     val a = idx.select(col("__i").as("__ia"), col("__x").as("__xa"),
@@ -3494,15 +3515,14 @@ object Stats {
       valueCol: String,
       groupCol: String,
       groupA: String,
-      groupB: String,
-      nRanges: Int = 256): DataFrame = {
+      groupB: String): DataFrame = {
     val v = df
       .filter(col(groupCol).isin(groupA, groupB) &&
         col(valueCol).isNotNull)
       .select(col(groupCol).cast(StringType).as("__g"),
         col(valueCol).cast(DoubleType).as("__x"))
       .withColumn("__t", lit(0))
-    val (ranked, _) = globalRankByValue(v, "__x", "__t", nRanges)
+    val (ranked, _) = globalRankByValue(v, "__x", "__t", RankRanges)
     val dec = DecimalType(38, 0)
     val perVal = ranked.groupBy(col("__x"))
       .agg(min(col("__rank")).as("__lo"), max(col("__rank")).as("__hi"),
@@ -3654,14 +3674,13 @@ object Stats {
   def kruskalWallis(
       df: DataFrame,
       valueCol: String,
-      groupCol: String,
-      nRanges: Int = 256): DataFrame = {
+      groupCol: String): DataFrame = {
     val v = df
       .filter(col(groupCol).isNotNull && col(valueCol).isNotNull)
       .select(col(groupCol).cast(StringType).as("__g"),
         col(valueCol).cast(DoubleType).as("__x"))
       .withColumn("__t", lit(0))
-    val (ranked, n) = globalRankByValue(v, "__x", "__t", nRanges)
+    val (ranked, n) = globalRankByValue(v, "__x", "__t", RankRanges)
     val dec = DecimalType(38, 0)
     val gv = ranked.groupBy(col("__g"), col("__x"))
       .agg(count(lit(1)).as("__c"), min(col("__rank")).as("__l"),
@@ -3730,15 +3749,14 @@ object Stats {
   def rocAuc(
       df: DataFrame,
       scoreCol: Column,
-      labelPred: Column,
-      nRanges: Int = 256): DataFrame = {
+      labelPred: Column): DataFrame = {
     val v = df
       .select(scoreCol.cast(DoubleType).as("__x"),
         when(coalesce(labelPred, lit(false)), 1L).otherwise(0L)
           .as("__y"))
       .filter(col("__x").isNotNull)
       .withColumn("__t", lit(0))
-    val (ranked, _) = globalRankByValue(v, "__x", "__t", nRanges)
+    val (ranked, _) = globalRankByValue(v, "__x", "__t", RankRanges)
     val dec = DecimalType(38, 0)
     val perVal = ranked.groupBy(col("__x"))
       .agg(min(col("__rank")).as("__lo"), max(col("__rank")).as("__hi"),
@@ -3762,6 +3780,9 @@ object Stats {
         .otherwise(lit(null).cast(DoubleType)).as("gini"))
   }
 
+  /** Forecast bins of [[brierDecomposition]]. */
+  private val BrierBins = 10
+
   /** Brier score with the Murphy reliability/resolution/uncertainty
     * decomposition — the CALIBRATION companion of [[rocAuc]] (AUC
     * says whether the score RANKS well; Brier says whether its
@@ -3775,8 +3796,8 @@ object Stats {
     * The forecast arrives as an exact PERMILLE integer (0..1000,
     * require-checked by a one-row pre-scan), so the Brier sum is
     * pure integer arithmetic: Σ(m − 1000y)² / (10⁶·n). Bins are
-    * integer (m·nBins) div 1000; per-bin aggregates are exact
-    * DECIMAL sums; the ≤ nBins-row decomposition fold fixes each
+    * integer (m·[[BrierBins]]) div 1000; per-bin aggregates are exact
+    * DECIMAL sums; the ≤ BrierBins-row decomposition fold fixes each
     * double term at 9 dp as DECIMAL(28,9) (the [[anovaF]] fold) so
     * bin order cannot move a bit.
     *
@@ -3785,10 +3806,7 @@ object Stats {
   def brierDecomposition(
       df: DataFrame,
       forecastPermille: Column,
-      labelPred: Column,
-      nBins: Int = 10): DataFrame = {
-    require(nBins >= 1 && nBins <= 1000,
-      s"nBins out of range: $nBins")
+      labelPred: Column): DataFrame = {
     val v = df
       .select(forecastPermille.cast(LongType).as("__m"),
         when(coalesce(labelPred, lit(false)), 1L).otherwise(0L)
@@ -3802,8 +3820,8 @@ object Stats {
     val dec = DecimalType(38, 0)
     val err = col("__m") - lit(1000L) * col("__y")
     val bins = v
-      .withColumn("__b", least(expr(s"(__m * $nBins) div 1000"),
-        lit(nBins.toLong - 1L)))
+      .withColumn("__b", least(expr(s"(__m * $BrierBins) div 1000"),
+        lit(BrierBins.toLong - 1L)))
       .groupBy(col("__b"))
       .agg(count(lit(1)).as("__nk"),
         coalesce(sum(col("__m").cast(dec)), lit(0).cast(dec))
@@ -3811,7 +3829,7 @@ object Stats {
         coalesce(sum(col("__y")), lit(0L)).as("__sy"),
         coalesce(sum((err * err).cast(dec)), lit(0).cast(dec))
           .as("__sq"))
-    // ≤ nBins rows: global totals ride a full-frame window on the
+    // ≤ BrierBins rows: global totals ride a full-frame window on the
     // same pass (the autocorrelation idiom — no second corpus scan)
     val wAll = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -3930,15 +3948,14 @@ object Stats {
       valueCol: String,
       groupCol: String,
       groupA: String,
-      groupB: String,
-      nRanges: Int = 256): DataFrame = {
+      groupB: String): DataFrame = {
     val v = df
       .filter(col(groupCol).isin(groupA, groupB) &&
         col(valueCol).isNotNull)
       .select(col(groupCol).cast(StringType).as("__g"),
         col(valueCol).cast(DoubleType).as("__x"))
       .withColumn("__t", lit(0))
-    val (ranked, _) = globalRankByValue(v, "__x", "__t", nRanges)
+    val (ranked, _) = globalRankByValue(v, "__x", "__t", RankRanges)
     val dec = DecimalType(38, 0)
     val perVal = ranked.groupBy(col("__x"))
       .agg(min(col("__rank")).as("__lo"), max(col("__rank")).as("__hi"),
@@ -4789,6 +4806,14 @@ object Stats {
         .otherwise(lit(null).cast(StringType)).as("verdict"))
   }
 
+  /** Miscoverage α of [[splitConformal]], in permille (90% intervals),
+    * read by its oracle. */
+  private[graft] val ConformalAlphaPermille = 100
+
+  /** [[Sampling.idBucket]] seed of [[splitConformal]]'s calibration
+    * split, read by its oracle. */
+  private[graft] val ConformalSeed = 37
+
   /** Split-conformal prediction interval around an [[ols2]] plane
     * fit (Vovk et al.; the Lei et al. 2018 split-conformal recipe):
     * fit on a deterministic hash-half of the rows, take the
@@ -4817,11 +4842,7 @@ object Stats {
       idCol: Column,
       y: Column,
       x1: Column,
-      x2: Column,
-      alphaPermille: Int = 100,
-      seed: Int = 37): DataFrame = {
-    require(alphaPermille > 0 && alphaPermille < 1000,
-      s"alphaPermille out of range: $alphaPermille")
+      x2: Column): DataFrame = {
     val dec = DecimalType(18, 4)
     // parallelized BEFORE the persist: a one-split scan would leave
     // the cache single-partition, making every downstream pass (fit
@@ -4834,7 +4855,8 @@ object Stats {
         x2.cast(dec).as("__x2"))
         .na.drop("any", Seq("__id", "__y", "__x1", "__x2"))
         .withColumn("__calib",
-          Sampling.idBucket(col("__id"), seed) < Sampling.Buckets / 2))
+          Sampling.idBucket(col("__id"), ConformalSeed) <
+            Sampling.Buckets / 2))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val calib = base.filter(col("__calib"))
     // the fit is a 1-row scalar consumed by every later pass — collect
@@ -4856,7 +4878,7 @@ object Stats {
     // selection is tie-insensitive — no tie column needed
     val cres = calib.select(resid.as("__res"))
     // ⌈(n_c+1)(1−α)⌉ in pure integer arithmetic, clamped into 1..n_c
-    val keep = 1000L - alphaPermille
+    val keep = 1000L - ConformalAlphaPermille
     val k = math.min(nc, math.max(1L, ((nc + 1) * keep + 999L) / 1000L))
     // one order statistic, not a full rank: histogram-refined select
     val qv = kthValue(cres, "__res", k)
@@ -5057,6 +5079,13 @@ object Stats {
         .otherwise(lit(null).cast(DoubleType)).as("z"))
   }
 
+  /** Delete-one buckets of [[jackknifeRatio]], read by its oracle. */
+  private[graft] val JackknifeBuckets = 100
+
+  /** [[Sampling.idBucket]] seed of [[jackknifeRatio]]'s unit
+    * bucketing, read by its oracle. */
+  private[graft] val JackknifeSeed = 41
+
   /** Delete-one-bucket jackknife for a RATIO metric Σnum/Σden — the
     * experimentation-stack standard error: a ratio of sums is not a
     * mean of anything, so the bootstrap-of-rows and the CLT-of-rows
@@ -5082,20 +5111,17 @@ object Stats {
       df: DataFrame,
       unitCol: Column,
       numCol: Column,
-      denCol: Column,
-      nBuckets: Int = 100,
-      seed: Int = 41): DataFrame = {
-    require(nBuckets >= 10 && nBuckets <= 10000,
-      s"nBuckets out of range: $nBuckets")
+      denCol: Column): DataFrame = {
     val dec = DecimalType(18, 4)
     val per = df.select(
-        (Sampling.idBucket(unitCol, seed) % nBuckets).as("__b"),
+        (Sampling.idBucket(unitCol, JackknifeSeed) % JackknifeBuckets)
+          .as("__b"),
         numCol.cast(dec).as("__n"), denCol.cast(dec).as("__d"))
       .filter(col("__b").isNotNull && col("__n").isNotNull &&
         col("__d").isNotNull)
       .groupBy(col("__b"))
       .agg(sum(col("__n")).as("__bn"), sum(col("__d")).as("__bd"))
-      .localCheckpoint(true) // ≤ nBuckets rows; one corpus pass total
+      .localCheckpoint(true) // ≤ JackknifeBuckets rows; one corpus pass
     // "__cnt", not "__B": column resolution is case-insensitive and
     // "__B" would collide with per's bucket column "__b"
     val tot = per.agg(sum(col("__bn")).as("__N"),
@@ -5107,8 +5133,8 @@ object Stats {
     // unseen (ADVICE r9). Exclude such buckets from the θ frame AND
     // NULL-gate se/ci when any exist, so a degenerate denominator
     // split fails visibly instead of skewing the interval.
-    // materialized (≤ nBuckets rows): two consumers below, and a
-    // lazy th would make the tbar agg + deviation agg a self-join of
+    // materialized (≤ JackknifeBuckets rows): two consumers below, and
+    // a lazy th would make the tbar agg + deviation agg a self-join of
     // the same lineage (conflicting-attribute resolution)
     val th = per.crossJoin(broadcast(tot))
       .filter((col("__D") - col("__bd")) =!= 0)
@@ -5116,7 +5142,8 @@ object Stats {
         ((col("__N") - col("__bn")).cast(DoubleType) /
           safe((col("__D") - col("__bd")).cast(DoubleType))).as("__t"))
       .localCheckpoint(true)
-    // control-plane: count of degenerate buckets (≤ nBuckets rows)
+    // control-plane: count of degenerate buckets (≤ JackknifeBuckets
+    // rows)
     val nBad = per.crossJoin(broadcast(tot))
       .filter((col("__D") - col("__bd")) === 0).count()
     if (nBad > 0) {
@@ -5270,6 +5297,14 @@ object Stats {
         .otherwise(lit(null).cast(DoubleType)).as("r2"))
   }
 
+  /** Replicates of [[poissonBootstrapByGroup]] and the default of
+    * [[poissonBootstrap]], read by the bootstrap oracles. */
+  private[graft] val BootstrapReplicates = 200
+
+  /** [[Sampling.idBucket]] seed of the Poisson(1) replicate weights,
+    * read by the bootstrap oracles. */
+  private[graft] val BootstrapSeed = 29
+
   /** Poisson-bootstrap 95% confidence interval for a mean — the
     * resampling scheme that works at 100 TB: a true bootstrap draws n
     * rows WITH replacement (a global shuffle per replicate, n·B rows
@@ -5300,8 +5335,7 @@ object Stats {
       df: DataFrame,
       idCol: Column,
       valueCol: Column,
-      b: Int = 200,
-      seed: Int = 29): DataFrame = {
+      b: Int = BootstrapReplicates): DataFrame = {
     require(b >= 40, s"need >= 40 replicates for a 95% CI, got $b")
     require(b <= 10000, s"replicate fan-out is per-row: b=$b too large")
     val dec = DecimalType(18, 4)
@@ -5310,7 +5344,8 @@ object Stats {
       .filter(col("__id").isNotNull && col("__y").isNotNull)
     val reps = base.select(col("__id"), col("__y"),
       explode(sequence(lit(0), lit(b - 1))).as("__i"))
-    val bucket = Sampling.idBucket(col("__id") * b + col("__i"), seed)
+    val bucket =
+      Sampling.idBucket(col("__id") * b + col("__i"), BootstrapSeed)
     // Poisson(1) inverse CDF over the integer bucket; thresholds are
     // floor(cdf(k)·10^6) literals shared verbatim with the oracle
     val w = when(bucket < 367879L, 0L)
@@ -5369,19 +5404,16 @@ object Stats {
       df: DataFrame,
       groupCol: String,
       idCol: Column,
-      valueCol: Column,
-      b: Int = 200,
-      seed: Int = 29): DataFrame = {
-    require(b >= 40, s"need >= 40 replicates for a 95% CI, got $b")
-    require(b <= 10000, s"replicate fan-out is per-row: b=$b too large")
+      valueCol: Column): DataFrame = {
     val dec = DecimalType(18, 4)
     val base = df.select(col(groupCol).cast(StringType).as("__g"),
         idCol.cast(LongType).as("__id"), valueCol.cast(dec).as("__y"))
       .filter(col("__g").isNotNull && col("__id").isNotNull &&
         col("__y").isNotNull)
     val reps = base.select(col("__g"), col("__id"), col("__y"),
-      explode(sequence(lit(0), lit(b - 1))).as("__i"))
-    val bucket = Sampling.idBucket(col("__id") * b + col("__i"), seed)
+      explode(sequence(lit(0), lit(BootstrapReplicates - 1))).as("__i"))
+    val bucket = Sampling.idBucket(
+      col("__id") * BootstrapReplicates + col("__i"), BootstrapSeed)
     val w = when(bucket < 367879L, 0L)
       .when(bucket < 735758L, 1L)
       .when(bucket < 919698L, 2L)
@@ -6138,7 +6170,7 @@ object Stats {
       series: DataFrame,
       orderCol: String,
       valueCol: String,
-      maxPeriods: Long = 10000L): DataFrame = {
+      maxPeriods: Long = MaxPeriods): DataFrame = {
     val w = Guards.seriesWindow(col(orderCol).asc)
     // Eager localCheckpoint, not persist-then-unpersist: the old
     // build-time unpersist released the cache BEFORE the caller's
@@ -6228,6 +6260,11 @@ object Stats {
         col("slope"), col("intercept"))
   }
 
+  /** [[Sampling.idBucket]] seed of the sampled partners of
+    * [[theilSenSampled]] and [[siegelTrendSampled]], read by their
+    * oracles. */
+  private[graft] val TrendSampleSeed = 31
+
   /** SAMPLED Theil–Sen trend — the long-series escape hatch the
     * [[theilSenTrend]] maxPeriods guard points at: instead of all
     * P²/2 pairwise slopes, each point draws `pairsPerPoint`
@@ -6250,8 +6287,7 @@ object Stats {
       series: DataFrame,
       orderCol: String,
       valueCol: String,
-      pairsPerPoint: Int = 64,
-      seed: Int = 31): DataFrame = {
+      pairsPerPoint: Int = 64): DataFrame = {
     require(pairsPerPoint >= 1 && pairsPerPoint <= 1024,
       s"pairsPerPoint out of range: $pairsPerPoint")
     val w = Guards.seriesWindow(col(orderCol).asc)
@@ -6269,7 +6305,7 @@ object Stats {
       .select(col("__i").cast(LongType).as("__ia"), col("__y").as("__ya"),
         explode(sequence(lit(1), lit(k))).as("__r"))
       .withColumn("__j", col("__ia") + 1 +
-        Sampling.idBucket(col("__ia") * k + col("__r"), seed) %
+        Sampling.idBucket(col("__ia") * k + col("__r"), TrendSampleSeed) %
           (lit(p) - col("__ia")))
       .select(col("__ia"), col("__ya"), col("__j"))
       .distinct()
@@ -6341,22 +6377,21 @@ object Stats {
     * intercept reuses the 6-dp EMITTED slope (the
     * gate-replays-emitted-precision rule).
     *
-    * NaN contract: the series must be NaN-free, but unlike
-    * [[theilSenTrend]] this operator does not check. Spark orders NaN
-    * above every double, so a NaN slope ranks as +∞ in both median
-    * layers: a NaN-bearing series may get a slope biased upward, gets
-    * NaN once NaN reaches the middle rank, and raises no error (one
-    * NaN among nine points of a line leaves the slope exact; six
-    * make it NaN). Filter or impute NaN values before the call. No
-    * catalog caller can pass one: the one caller feeds a per-day
-    * decimal revenue sum.
+    * NaN contract: the series must be NaN-free. Spark orders NaN above
+    * every double, so a NaN slope would rank as +∞ in both median
+    * layers and bias the slope upward (or make it NaN) silently;
+    * instead the operator counts NaN values in the same scan as the
+    * period count and fails with an IllegalArgumentException naming
+    * that count ([[siegelTrendSampled]] does the same). Filter or
+    * impute NaN values before the call. No catalog caller can pass
+    * one: the one caller feeds a per-day decimal revenue sum.
     *
     * Returns one row: (n_periods, slope, intercept). */
   def siegelTrend(
       series: DataFrame,
       orderCol: String,
       valueCol: String,
-      maxPeriods: Long = 10000L): DataFrame = {
+      maxPeriods: Long = MaxPeriods): DataFrame = {
     val w = Guards.seriesWindow(col(orderCol).asc)
     // Eager localCheckpoint + streamed-side repartition + eager inner
     // medians (see [[theilSenTrend]]): the exact repeated-median was
@@ -6368,7 +6403,7 @@ object Stats {
       .select(col(valueCol).cast(DoubleType).as("__y"),
         row_number().over(w).as("__i"))
       .localCheckpoint(true)
-    val p = idx.count()
+    val p = nanFreeCount(idx, "siegelTrend")
     require(p >= 2, s"siegelTrend needs >= 2 periods, got $p")
     require(p <= maxPeriods,
       s"siegelTrend: $p periods -> ${p * (p - 1)} pair slopes " +
@@ -6419,6 +6454,19 @@ object Stats {
       .select(lit(p).as("n_periods"), col("slope"), col("intercept"))
   }
 
+  /** Row count of a checkpointed (`__y`, `__i`) trend spine, with a
+    * NaN census in the same scan: a NaN value fails loudly, naming
+    * the count, instead of ranking as +∞ in the median layers. */
+  private def nanFreeCount(idx: DataFrame, op: String): Long = {
+    val r = idx.agg(count(lit(1)),
+      coalesce(sum(when(isnan(col("__y")), 1L).otherwise(0L)), lit(0L)))
+      .collect()(0)
+    require(r.getLong(1) == 0L,
+      s"$op: ${r.getLong(1)} NaN values in the series; clean or filter " +
+        "them first")
+    r.getLong(0)
+  }
+
   /** SAMPLED Siegel repeated-median trend — the long-series escape
     * hatch [[siegelTrend]]'s maxPeriods guard points at (the exact
     * form is the catalog's costliest trend; this one is O(P·k) BY
@@ -6433,14 +6481,14 @@ object Stats {
     * [[globalRankByValue]]'s two-phase rank. Same portable
     * [[Sampling.idBucket]] draws, DISTINCT-collapsed duplicates,
     * exact two-middle medians, and the 6-dp-emitted-slope intercept.
+    * NaN contract as in [[siegelTrend]].
     *
     * Returns one row: (n_periods, n_pairs, slope, intercept). */
   def siegelTrendSampled(
       series: DataFrame,
       orderCol: String,
       valueCol: String,
-      partnersPerPoint: Int = 64,
-      seed: Int = 31): DataFrame = {
+      partnersPerPoint: Int = 64): DataFrame = {
     require(partnersPerPoint >= 1 && partnersPerPoint <= 1024,
       s"partnersPerPoint out of range: $partnersPerPoint")
     val w = Guards.seriesWindow(col(orderCol).asc)
@@ -6450,7 +6498,7 @@ object Stats {
       .select(col(valueCol).cast(DoubleType).as("__y"),
         row_number().over(w).as("__i"))
       .localCheckpoint(true)
-    val p = idx.count()
+    val p = nanFreeCount(idx, "siegelTrendSampled")
     require(p >= 2, s"siegelTrendSampled needs >= 2 periods, got $p")
     val k = partnersPerPoint
     val par = series.sparkSession.sparkContext.defaultParallelism
@@ -6460,8 +6508,8 @@ object Stats {
         explode(sequence(lit(1), lit(k))).as("__r"))
       .withColumn("__j",
         (col("__ia") - 1 + 1 +
-          Sampling.idBucket(col("__ia") * k + col("__r"), seed) %
-            lit(p - 1)) % lit(p) + 1)
+          Sampling.idBucket(col("__ia") * k + col("__r"),
+            TrendSampleSeed) % lit(p - 1)) % lit(p) + 1)
       .select(col("__ia"), col("__ya"), col("__j"))
       .distinct()
     val slopes = pairs
@@ -6536,19 +6584,18 @@ object Stats {
   def mannKendall(
       series: DataFrame,
       orderCol: String,
-      valueCol: String,
-      maxPeriods: Long = 10000L): DataFrame = {
+      valueCol: String): DataFrame = {
     val w = Guards.seriesWindow(col(orderCol).asc)
     val idx = Guards.boundedSeries(series, "mannKendall series")
       .select(col(valueCol).cast(DecimalType(18, 4)).as("__y"),
         row_number().over(w).as("__i"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val p = idx.count()
-    if (p < 2 || p > maxPeriods) {
+    if (p < 2 || p > MaxPeriods) {
       idx.unpersist(false)
       require(p >= 2, s"mannKendall needs >= 2 periods, got $p")
-      require(p <= maxPeriods,
-        s"mannKendall: $p periods exceeds maxPeriods=$maxPeriods; " +
+      require(p <= MaxPeriods,
+        s"mannKendall: $p periods exceeds maxPeriods=$MaxPeriods; " +
           "aggregate to coarser periods")
     }
     // streamed-side repartition: spread the single-partition spine's
@@ -6647,7 +6694,7 @@ object Stats {
     * a group-keyed self-join, so groups rank and pair in parallel.
     *
     * Guard: the LARGEST group's period count is capped at
-    * `maxPeriods` (one control-plane collect); a single-period group
+    * [[MaxPeriods]] (one control-plane collect); a single-period group
     * has no pairs and is absent from the output.
     *
     * Returns one row per group with ≥ 2 periods: (groupCols...,
@@ -6656,8 +6703,7 @@ object Stats {
       series: DataFrame,
       groupCols: Seq[String],
       orderCol: String,
-      valueCol: String,
-      maxPeriods: Long = 10000L): DataFrame = {
+      valueCol: String): DataFrame = {
     val grp = groupCols.map(col)
     val wIdx = Window.partitionBy(grp: _*).orderBy(col(orderCol).asc)
     val idx = series
@@ -6666,12 +6712,12 @@ object Stats {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pmax = idx.groupBy(grp: _*).agg(count(lit(1)).as("__p"))
       .agg(coalesce(max(col("__p")), lit(0L))).collect()(0).getLong(0)
-    if (pmax > maxPeriods) {
+    if (pmax > MaxPeriods) {
       idx.unpersist(false)
-      require(pmax <= maxPeriods,
+      require(pmax <= MaxPeriods,
         s"mannKendallByGroup: largest group has $pmax periods -> " +
           s"${pmax * (pmax - 1) / 2} pairs exceeds the " +
-          s"maxPeriods=$maxPeriods cap; aggregate to coarser periods")
+          s"maxPeriods=$MaxPeriods cap; aggregate to coarser periods")
     }
     val a = idx.select(grp ++ Seq(col("__i").as("__ia"),
       col("__y").as("__ya")): _*)
@@ -6725,7 +6771,7 @@ object Stats {
     * group-keyed self-join, not a global crossJoin.
     *
     * Guard: the LARGEST group's period count is capped at
-    * `maxPeriods` (one control-plane collect over the per-group
+    * [[MaxPeriods]] (one control-plane collect over the per-group
     * counts); longer series need the sampled variant, not a bigger
     * cap. A group with a single period has no pairs and is absent
     * from the output.
@@ -6741,8 +6787,7 @@ object Stats {
       series: DataFrame,
       groupCols: Seq[String],
       orderCol: String,
-      valueCol: String,
-      maxPeriods: Long = 10000L): DataFrame = {
+      valueCol: String): DataFrame = {
     val grp = groupCols.map(col)
     val wIdx = Window.partitionBy(grp: _*).orderBy(col(orderCol).asc)
     // eager localCheckpoint, not persist-then-unpersist: the old
@@ -6756,10 +6801,10 @@ object Stats {
       .localCheckpoint(true)
     val pmax = idx.groupBy(grp: _*).agg(count(lit(1)).as("__p"))
       .agg(max(col("__p"))).collect()(0).getLong(0)
-    require(pmax <= maxPeriods,
+    require(pmax <= MaxPeriods,
       s"theilSenByGroup: largest group has $pmax periods -> " +
         s"${pmax * (pmax - 1) / 2} pair slopes exceeds the " +
-        s"maxPeriods=$maxPeriods cap; aggregate to coarser periods")
+        s"maxPeriods=$MaxPeriods cap; aggregate to coarser periods")
     val a = idx.select(grp ++ Seq(col("__i").as("__ia"),
       col("__y").as("__ya")): _*)
     val b = idx.select(grp ++ Seq(col("__i").as("__ib"),

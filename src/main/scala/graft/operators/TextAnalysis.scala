@@ -176,6 +176,10 @@ object TextAnalysis {
     round((lenOk + mtlOk + punctOk) / 3.0, 6)
   }
 
+  /** The token-count window of [[gopherRules]]' `r_wordcount` rule. */
+  private val GopherMinWords = 10
+  private val GopherMaxWords = 1000
+
   /** Gopher-style HARD rule gate (Rae et al. 2021, "Scaling Language
     * Models: Methods, Analysis & Insights from Training Gopher",
     * App. A quality filters) — the reject/keep verdict that runs ahead
@@ -183,7 +187,8 @@ object TextAnalysis {
     * Four rules over a pre-staged token array (the staging contract of
     * [[langIdFromTokens]]):
     *
-    *  - `r_wordcount`: token count in [minWords, maxWords];
+    *  - `r_wordcount`: token count in [10, 1000]
+    *    ([[GopherMinWords]], [[GopherMaxWords]]);
     *  - `r_wordlen`: mean token length in [3, 10] chars — evaluated in
     *    INTEGER form (3·n ≤ Σlen ≤ 10·n), no division;
     *  - `r_alpha`: ≥ 80% of tokens contain an ASCII letter
@@ -196,17 +201,14 @@ object TextAnalysis {
     * the verdicts replay bit-identically in any SQL engine. Returns a
     * struct column (r_wordcount, r_wordlen, r_alpha, r_stopword,
     * pass); per-row, shuffle-free, codegen'd. */
-  def gopherRules(
-      toks: Column,
-      minWords: Int = 10,
-      maxWords: Int = 1000): Column = {
+  def gopherRules(toks: Column): Column = {
     val n = size(toks).cast(LongType)
     val totLen = aggregate(toks, lit(0L), (acc, t) => acc + length(t))
     val nAlpha = size(filter(toks, t => t.rlike("[A-Za-z]")))
       .cast(LongType)
     val stopHits = size(filter(toks, t =>
       lower(t).isin(StopwordsByLang.head._2.map(lit(_)): _*)))
-    val r1 = n >= minWords && n <= maxWords
+    val r1 = n >= GopherMinWords && n <= GopherMaxWords
     val r2 = n > 0 && lit(3L) * n <= totLen && totLen <= lit(10L) * n
     val r3 = n > 0 && lit(5L) * nAlpha >= lit(4L) * n
     val r4 = stopHits >= 2
@@ -290,6 +292,8 @@ object TextAnalysis {
           .as("mean_surprisal"))
   }
 
+  private val HeldOutSeed = 41
+
   /** Held-out cross-entropy of an add-one-smoothed unigram LM: train
     * on one deterministic hash-half of the corpus, score mean
     * −ln p̂(tok) on the other — the VALIDATION-LOSS twin of
@@ -306,7 +310,7 @@ object TextAnalysis {
     * frame, never the token stream. Determinism: per-token ln terms
     * round at 6 dp and weight by exact integer eval counts as
     * DECIMAL(19,0)×(18,6) products; the split is the portable
-    * [[Sampling.idBucket]].
+    * [[Sampling.idBucket]] at seed [[HeldOutSeed]].
     *
     * Returns one row: (n_train_tok, vocab, n_eval_tok,
     * cross_entropy) in nats/token; NULL when either half is
@@ -314,13 +318,12 @@ object TextAnalysis {
   def heldOutCrossEntropy(
       docs: DataFrame,
       idCol: Column,
-      text: Column,
-      seed: Int = 41): DataFrame = {
+      text: Column): DataFrame = {
     val toks = docs
       .select(idCol.cast(LongType).as("__id"),
         explode(tokens(lower(text))).as("__tok"))
       .filter(col("__id").isNotNull)
-    val isTrain = Sampling.idBucket(col("__id"), seed) <
+    val isTrain = Sampling.idBucket(col("__id"), HeldOutSeed) <
       Sampling.Buckets / 2
     val trainC = toks.filter(isTrain).groupBy(col("__tok"))
       .agg(count(lit(1)).as("__c"))
@@ -680,11 +683,18 @@ object TextAnalysis {
     out
   }
 
+  /** BM25 term-frequency saturation k1 of [[bm25TopK]] and
+    * [[bm25Retrieve]] (the Okapi default), read by their oracles. */
+  private[graft] val Bm25K1 = 1.2
+
+  /** BM25 document-length normalization b (the Okapi default). */
+  private[graft] val Bm25B = 0.75
+
   /** BM25 relevance scoring of every (doc, term) pair — the standard
     * retrieval score TF-IDF lacks: term-frequency SATURATION (k1) and
     * document-length normalization (b), so long documents and
     * keyword-stuffed repetition stop dominating. Okapi form with
-    * k1 = 1.2, b = 0.75:
+    * k1 = [[Bm25K1]], b = [[Bm25B]]:
     *   idf = ln((N − df + 0.5)/(df + 0.5) + 1)   [never negative]
     *   score = idf · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
     *
@@ -703,10 +713,10 @@ object TextAnalysis {
       docs: DataFrame,
       idCol: String,
       text: Column,
-      k: Int,
-      k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
+      k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
+    val k1 = Bm25K1
+    val b = Bm25B
     val tf = docs
       .select(col(idCol), explode(tokens(lower(text))).as("term"))
       .groupBy(col(idCol), col("term"))
@@ -774,10 +784,10 @@ object TextAnalysis {
       queries: DataFrame,
       qidCol: String,
       qtext: Column,
-      k: Int,
-      k1: Double = 1.2,
-      b: Double = 0.75): DataFrame = {
+      k: Int): DataFrame = {
     require(k > 0, s"k must be positive: $k")
+    val k1 = Bm25K1
+    val b = Bm25B
     val tf = docs
       .select(col(idCol), explode(tokens(lower(text))).as("term"))
       .groupBy(col(idCol), col("term"))
@@ -819,11 +829,14 @@ object TextAnalysis {
     out
   }
 
+  private val RrfC = 60
+
   /** Reciprocal-rank fusion of ranked retrieval lists — the standard
     * hybrid-search combiner (Cormack et al.'s RRF): each list
     * contributes 1/(c + rank) per (query, doc) and the fused order is
     * the score sum, so lists with incomparable score scales (BM25 vs
-    * cosine) fuse on RANK alone. `c = 60` is the published default.
+    * cosine) fuse on RANK alone. [[RrfC]] = 60 is the published
+    * default.
     *
     * Input frames each carry (qidCol, idCol, rankCol); ranks are
     * small integers, so 1/(c+rank) rounds to 9 dp and fixes as
@@ -840,17 +853,16 @@ object TextAnalysis {
       qidCol: String,
       idCol: String,
       rankCol: String,
-      k: Int,
-      c: Int = 60): DataFrame = {
+      k: Int): DataFrame = {
     require(lists.nonEmpty, "need at least one ranked list")
-    require(k > 0 && c >= 0)
+    require(k > 0)
     val u = lists
       .map(_.select(col(qidCol), col(idCol),
         col(rankCol).cast(LongType).as("__rk0")))
       .reduce(_ unionAll _)
     val agg = u
       .withColumn("__sc",
-        round(lit(1.0) / (lit(c.toDouble) + col("__rk0")), 9)
+        round(lit(1.0) / (lit(RrfC.toDouble) + col("__rk0")), 9)
           .cast(DecimalType(18, 9)))
       .groupBy(col(qidCol), col(idCol))
       .agg(count(lit(1)).as("n_lists"), sum(col("__sc")).as("__s"))
@@ -1019,23 +1031,27 @@ object TextAnalysis {
         i => array_join(slice(toks, i + 1, lit(n)), " ")))
       .otherwise(array().cast(ArrayType(StringType)))
 
+  /** Hash cells of the DSIR bigram model (B below), shared by the
+    * streaming twin and the oracles. */
+  private[graft] val DsirBuckets = 4096
+
   /** DSIR-style importance log-weights over hashed bigrams (Xie,
     * Santurkar, Ma, Liang — "Data Selection for Language Models via
     * Importance Resampling", NeurIPS 2023): every document scores
     * Σ_g [ln p̂_target(b(g)) − ln p̂_raw(b(g))] over its bigram bag,
-    * where b hashes a bigram into one of `buckets` cells with the
+    * where b hashes a bigram into one of [[DsirBuckets]] cells with the
     * portable polynomial hash and both distributions are Laplace-
-    * smoothed bucket frequencies ((c+1)/(N+buckets)) — p̂_target from
+    * smoothed bucket frequencies ((c+1)/(N+B)) — p̂_target from
     * the `isTarget` rows (the corpus slice that LOOKS like what you
     * want more of), p̂_raw from the whole frame. High scores mark raw
     * documents that resemble the target distribution: rank by score
     * and keep the head (or Gumbel-resample) — the standard
     * quality-data selection step between dedup and mixing.
     *
-    * Scale shape: one corpus pass to the ≤`buckets`-row hashed count
+    * Scale shape: one corpus pass to the ≤B-row hashed count
     * frame (map-side combined — the bucket model is WHY DSIR scales:
     * the vocabulary never materializes), the log-ratio table is a
-    * ≤`buckets`-row broadcast, and scoring is one more pass + a
+    * ≤B-row broadcast, and scoring is one more pass + a
     * per-doc aggregate. Nothing grows with corpus size except the
     * two linear scans.
     *
@@ -1050,16 +1066,14 @@ object TextAnalysis {
       docs: DataFrame,
       idCol: String,
       text: Column,
-      isTarget: Column,
-      buckets: Int = 4096): DataFrame = {
-    require(buckets > 1, s"buckets out of range: $buckets")
-    val grams = dsirGrams(docs, idCol, text, isTarget, buckets)
+      isTarget: Column): DataFrame = {
+    val grams = dsirGrams(docs, idCol, text, isTarget, DsirBuckets)
     val counts = grams
       .groupBy(col("__b"))
       .agg(count(lit(1)).as("__cr"),
         sum(when(col("__t"), 1L).otherwise(0L)).as("__ct"))
       .localCheckpoint(true)
-    dsirScore(grams, counts, idCol, buckets)
+    dsirScore(grams, counts, idCol, DsirBuckets)
   }
 
   /** The hashed-bigram bag of [[dsirLogWeights]]: one row per gram
@@ -1361,6 +1375,8 @@ object TextAnalysis {
           .as("chao1")): _*)
   }
 
+  private val BurstinessTopK = 20
+
   /** Token burstiness — the Fano factor (variance-to-mean ratio) of
     * each token's PER-DOCUMENT count, absent documents counting as
     * zero: function words spread evenly (Fano ≈ 1, Poisson-like)
@@ -1383,14 +1399,13 @@ object TextAnalysis {
     * rare-token noise floor (a 1-doc token is maximally bursty and
     * meaningless).
     *
-    * Returns ≤ `topK` rows: (token, n_docs, n_occurrences, fano). */
+    * Returns ≤ [[BurstinessTopK]] rows: (token, n_docs,
+    * n_occurrences, fano). */
   def tokenBurstiness(
       docs: DataFrame,
       idCol: Column,
       textCol: Column,
-      minDocs: Long = 10L,
-      topK: Int = 20): DataFrame = {
-    require(topK > 0, s"topK must be positive: $topK")
+      minDocs: Long = 10L): DataFrame = {
     val nDocs = docs.agg(count(lit(1)).as("__nd"))
     val perDoc = docs
       .select(idCol.as("__id"),
@@ -1413,7 +1428,7 @@ object TextAnalysis {
         when(col("__nd") > 1, round(varZ / safe(mean), 6))
           .otherwise(lit(null).cast(DoubleType)).as("fano"))
       .orderBy(col("fano").desc, col("token").asc)
-      .limit(topK)
+      .limit(BurstinessTopK)
   }
 
   def zipfFit(

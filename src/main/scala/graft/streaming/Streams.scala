@@ -122,14 +122,16 @@ object Streams {
       "value", "props", "ts")
   }
 
+  /** How late an event may arrive behind the newest one and still
+    * count in [[windowedCounts]] and [[slidingWindowCounts]]. */
+  private val WindowWatermark = "10 minutes"
+
   /** Watermarked 5-minute windowed aggregation per event type — the
     * incremental form of the engine's q_event_windows batch query.
-    * Late data beyond `watermark` is dropped deterministically. */
-  def windowedCounts(
-      events: DataFrame,
-      watermark: String = "10 minutes"): DataFrame =
+    * Late data beyond [[WindowWatermark]] is dropped deterministically. */
+  def windowedCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", WindowWatermark)
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 4))).as("value_sum"))
@@ -139,20 +141,20 @@ object Streams {
         col("event_type"), col("n"),
         round(col("value_sum").cast(DoubleType), 4).as("value_sum"))
 
+  private val SlidingWindowSize = "10 minutes"
+  private val SlidingWindowSlide = "5 minutes"
+
   /** SLIDING watermarked windows — [[windowedCounts]]'s overlapping
     * sibling: every event lands in size/slide windows (10 min / 5 min
     * ⇒ two), giving the smoothed rolling view a tumbling bucket
     * staircases. Same deterministic late-drop, same emit shape; the
     * batch oracle replays each event into its ⌈size/slide⌉ covering
     * window starts. */
-  def slidingWindowCounts(
-      events: DataFrame,
-      size: String = "10 minutes",
-      slide: String = "5 minutes",
-      watermark: String = "10 minutes"): DataFrame =
+  def slidingWindowCounts(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), size, slide), col("event_type"))
+      .withWatermark("ts", WindowWatermark)
+      .groupBy(window(col("ts"), SlidingWindowSize, SlidingWindowSlide),
+        col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 4))).as("value_sum"))
       .select(
@@ -295,6 +297,10 @@ object Streams {
   /** The open trailing session carried across micro-batches. */
   final case class OpenSession(startUs: Long, lastUs: Long, n: Long)
 
+  /** The inactivity gap that closes a [[sessionCountsState]] session:
+    * 10 minutes, in microseconds. */
+  private val SessionGapUs = 10 * 60 * 1000L * 1000L
+
   /** Gap-based streaming sessionization via flatMapGroupsWithState —
     * the custom-state path. Spark's built-in `session_window` only
     * streams in APPEND mode, which emits a session only after the
@@ -309,20 +315,17 @@ object Streams {
     * just written).
     *
     * Break rule matches the batch `session_window` exactly: a gap ≥
-    * `gapMs` starts a new session, compared at MICROsecond precision
-    * (the grain of the batch query's `ts`). Batches are assumed
+    * [[SessionGapUs]] starts a new session, compared at MICROsecond
+    * precision (the grain of the batch query's `ts`). Batches are assumed
     * time-ordered across files (the daily-extract replay shape); a
     * late event older than the carried continuation point joins the
     * open session rather than retroactively splitting closed ones.
     * Per-user batch events are sorted in memory — bounded by one
     * user's events per micro-batch, hash-partitioned across
     * executors. */
-  def sessionCountsState(
-      events: DataFrame,
-      gapMs: Long = 10 * 60 * 1000L): Dataset[SessionOut] = {
+  def sessionCountsState(events: DataFrame): Dataset[SessionOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val gapUs = gapMs * 1000L
     events
       // integer division: ts_ns exceeds 2^53, a double round-trip
       // would corrupt the microsecond value
@@ -338,7 +341,7 @@ object Streams {
           var cur: OpenSession = state.getOption.orNull
           ts.foreach { t =>
             if (cur == null) cur = OpenSession(t, t, 1L)
-            else if (t - cur.lastUs >= gapUs) {
+            else if (t - cur.lastUs >= SessionGapUs) {
               out += SessionOut(user, cur.startUs, cur.n) // closed final
               cur = OpenSession(t, t, 1L)
             } else cur = OpenSession(cur.startUs,
@@ -565,6 +568,8 @@ object Streams {
       }
   }
 
+  private val DedupWatermark = "1 hour"
+
   /** Streaming exact deduplication: first arrival per key survives,
     * later duplicates are suppressed, and — the part a plain streaming
     * `dropDuplicates` gets wrong at scale — state for a key is RELEASED
@@ -574,13 +579,11 @@ object Streams {
     * 100 TB the state is hash-partitioned by key across executors.
     * Emits one deterministic row per distinct key per horizon (WHICH
     * duplicate survives is arrival-order-dependent — downstream
-    * consumers should aggregate key-functional columns only). */
-  def dedupWithinWatermark(
-      events: DataFrame,
-      keys: Seq[String],
-      watermark: String = "1 hour"): DataFrame =
+    * consumers should aggregate key-functional columns only). The
+    * horizon is [[DedupWatermark]]. */
+  def dedupWithinWatermark(events: DataFrame, keys: Seq[String]): DataFrame =
     events
-      .withWatermark("ts", watermark)
+      .withWatermark("ts", DedupWatermark)
       .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
 
   /** Streaming read of a documents directory (the driver testdata file
@@ -595,15 +598,13 @@ object Streams {
     fileStream(spark, dir, glob, maxFilesPerTrigger,
       probe(spark, dir, glob, "doc_id", "text"))
 
+  private val EmbeddingsGlob = "embeddings.parquet"
+
   /** File stream over the embeddings table (the [[docsStream]]
     * shape): schema probed from a batch read, glob-pinned. */
-  def embeddingsStream(
-      spark: SparkSession,
-      dir: String,
-      glob: String = "embeddings.parquet",
-      maxFilesPerTrigger: Int = 0): DataFrame =
-    fileStream(spark, dir, glob, maxFilesPerTrigger,
-      probe(spark, dir, glob, "vec_id", "embedding", "label"))
+  def embeddingsStream(spark: SparkSession, dir: String): DataFrame =
+    fileStream(spark, dir, EmbeddingsGlob, 0,
+      probe(spark, dir, EmbeddingsGlob, "vec_id", "embedding", "label"))
 
   /** Cumulative keyed state — the one operator behind the keyed COUNT
     * and SUM monitors (histogram, vocab, DSIR, CMS, quantile-sketch,
@@ -742,7 +743,7 @@ object Streams {
       docs: DataFrame,
       isTarget: Column,
       text: Column,
-      buckets: Int = 4096): DataFrame =
+      buckets: Int = graft.operators.TextAnalysis.DsirBuckets): DataFrame =
     // the doc id rides along only because dsirGrams carries one
     cumulativeState(
       graft.operators.TextAnalysis.dsirGrams(docs, "doc_id", text,
@@ -1144,32 +1145,34 @@ object Streams {
       }
   }
 
+  private val ClickPurchaseWithinMinutes = 30
+  private val ClickPurchaseWatermark = "1 hour"
+
   /** Watermarked stream-stream self-join: every click joined to the
-    * same user's purchases within `withinMinutes` AFTER it — the
-    * attribution join, streaming against streaming (neither side is a
-    * static table). The time-range predicate between the two event
-    * times is what lets Spark BOUND the join state: each side keeps
-    * only `watermark + within` of history per key, evicting as the
-    * watermark advances — without it, stream-stream join state grows
-    * forever. Inner joins emit on match (append mode); at 100 TB the
-    * state is hash-partitioned on user_id across executors. */
-  def clickPurchaseJoin(
-      events: DataFrame,
-      withinMinutes: Int = 30,
-      watermark: String = "1 hour"): DataFrame = {
+    * same user's purchases within [[ClickPurchaseWithinMinutes]] AFTER
+    * it — the attribution join, streaming against streaming (neither
+    * side is a static table). The time-range predicate between the two
+    * event times is what lets Spark BOUND the join state: each side
+    * keeps only [[ClickPurchaseWatermark]] + within of history per key,
+    * evicting as the watermark advances — without it, stream-stream
+    * join state grows forever. Inner joins emit on match (append
+    * mode); at 100 TB the state is hash-partitioned on user_id across
+    * executors. */
+  def clickPurchaseJoin(events: DataFrame): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
-      .withWatermark("click_ts", watermark)
+      .withWatermark("click_ts", ClickPurchaseWatermark)
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("user_id").as("__pu"), col("ts").as("purchase_ts"),
         col("value").as("purchase_value"))
-      .withWatermark("purchase_ts", watermark)
+      .withWatermark("purchase_ts", ClickPurchaseWatermark)
     clicks.join(purchases,
       col("user_id") === col("__pu") &&
         col("purchase_ts") >= col("click_ts") &&
         col("purchase_ts") <=
-          col("click_ts") + expr(s"INTERVAL $withinMinutes MINUTES"))
+          col("click_ts") +
+            expr(s"INTERVAL $ClickPurchaseWithinMinutes MINUTES"))
       .drop("__pu")
   }
 

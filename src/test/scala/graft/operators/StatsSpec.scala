@@ -892,6 +892,12 @@ class StatsSpec extends SparkSpecBase {
     val ok = Stats.theilSenTrend(mk(Seq(1.0, 3.0, 5.0, 7.0)), "d", "v",
       maxPeriods = 4).collect()(0)
     assert(ok.getAs[Double]("slope") == 2.0)
+    // NaN census: one NaN in a 9-point line y = 2i fails loudly
+    val withNaN = (1 to 9).map(i => if (i == 5) Double.NaN else 2.0 * i)
+    val e3 = intercept[IllegalArgumentException] {
+      Stats.theilSenTrend(mk(withNaN), "d", "v")
+    }
+    assert(e3.getMessage.contains("8 NaN pairwise slopes"), e3.getMessage)
   }
 
   test("theilSenSampled: exact line recovered from any pair sample; " +
@@ -942,6 +948,13 @@ class StatsSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] {
       Stats.siegelTrend(mk(Seq(1.0, 2.0, 3.0)), "d", "v", maxPeriods = 2)
     }
+    // NaN census: one NaN in a 9-point line y = 2i fails loudly (it
+    // would rank as +∞ and leave the slope at 2.0 without a word)
+    val withNaN = (1 to 9).map(i => if (i == 5) Double.NaN else 2.0 * i)
+    val e = intercept[IllegalArgumentException] {
+      Stats.siegelTrend(mk(withNaN), "d", "v").collect()
+    }
+    assert(e.getMessage.contains("siegelTrend: 1 NaN values"), e.getMessage)
   }
 
   test("siegelTrendSampled: exact line recovered from any partner " +
@@ -975,6 +988,13 @@ class StatsSpec extends SparkSpecBase {
     intercept[IllegalArgumentException] {
       Stats.siegelTrendSampled(mk(Seq(1.0)), "d", "v")
     }
+    // the NaN census of siegelTrend: one NaN in a 9-point line y = 2i
+    val withNaN = (1 to 9).map(i => if (i == 5) Double.NaN else 2.0 * i)
+    val e = intercept[IllegalArgumentException] {
+      Stats.siegelTrendSampled(mk(withNaN), "d", "v").collect()
+    }
+    assert(e.getMessage.contains("siegelTrendSampled: 1 NaN values"),
+      e.getMessage)
   }
 
   test("siegelTrend property: equals the plain-Scala repeated-median " +
