@@ -1673,10 +1673,11 @@ object Queries {
       // previously two full corpus scans. tokenCount(text) ≡
       // size(tokens(text)) by definition, so staging the token array
       // once serves both aggregates bit-identically. The fused result
-      // is |sources| rows, checkpointed so its two downstream selects
-      // (kept apart to preserve the artifact's column order) don't
-      // re-run the scan.
-      val statsQual = docs
+      // is |sources| rows, collected back as a local frame so its two
+      // downstream selects (kept apart to preserve the artifact's
+      // column order) don't re-run the scan; unlike a checkpoint, a
+      // local frame pins no blocks for the life of the session.
+      val fused = docs
         .select(col("source"), col("text"),
           TextAnalysis.tokens(col("text")).as("__tk"))
         .select(col("source"), size(col("__tk")).as("__tc"),
@@ -1687,7 +1688,8 @@ object Queries {
           sum(col("__tc").cast(LongType)).as("ws_tokens"),
           round(sum(col("__q").cast(DecimalType(12, 6)))
             .cast(DoubleType) / count(lit(1)), 6).as("avg_quality"))
-        .localCheckpoint(true)
+      val statsQual = s.createDataFrame(
+        java.util.Arrays.asList(fused.collect(): _*), fused.schema)
       val stats = statsQual.select(col("source"), col("n_docs"),
         col("ws_tokens"))
       val ent = Stats.entropyByGroup(docs, "source", "lang")

@@ -2776,18 +2776,19 @@ object Stats {
         col("__cum").cast(DoubleType) / col("__n").cast(DoubleType))
     val ref = ecdf.filter(col("__g") === refGroup)
       .select(col("__x"), col("__f").as("__fr"))
-    // ≤ |groups| rows: materialize, then release the persisted counts
-    // so repeated catalog invocations don't accumulate cached
-    // partitions for the session lifetime (ADVICE r8)
+    // ≤ |groups| rows: collect them into a local frame, then release
+    // the persisted counts, so repeated catalog invocations don't
+    // accumulate cached partitions for the session lifetime (ADVICE r8)
     val out = ecdf.filter(col("__g") =!= refGroup)
       .join(ref, Seq("__x"))
       .groupBy(col("__g"))
       .agg(max(col("__n")).as("n"),
         round(max(abs(col("__f") - col("__fr"))), 6).as("ks"))
       .withColumnRenamed("__g", groupCol)
-      .localCheckpoint(true)
+    val rows = out.collect()
     counts.unpersist(false)
-    out
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*),
+      out.schema)
   }
 
   /** Earth-mover (Wasserstein-1) distance of every group against

@@ -5,10 +5,10 @@ import org.apache.spark.sql.SparkSession
 import graft.core.{Entities, Entity, Sessions}
 
 /** Entry point 1 (O1/O2, SURVEY §3.1): sync one logical day, or a
-  * catch-up, of one entity — extract the day slice, upsert it, count
-  * back and reconcile; for an entity that routes NULLs (orders), also
-  * fully refresh the side table of rows with a NULL incremental
-  * timestamp.
+  * catch-up, of one entity — extract the window's rows, upsert them,
+  * count back and reconcile per day; for an entity that routes NULLs
+  * (orders), also fully refresh the side table of rows with a NULL
+  * incremental timestamp.
   *
   * Usage:
   *   sbt "runMain graft.run.DailySync --run-date 1996-03-15 \
@@ -24,91 +24,88 @@ import graft.core.{Entities, Entity, Sessions}
   * one, orders read the parquet stand-in under `--sf-dir` and any other
   * entity fails, as it has no stand-in.
   *
-  * `--catchup-from` replays each day from that date up to --run-date in
-  * order — the reference's `catchup=True` + `depends_on_past` driver
-  * loop (orders_daily.py:129-135). Idempotent upsert makes replays
-  * safe (O5).
+  * `--catchup-from` covers each day from that date up to --run-date —
+  * the reference's `catchup=True` + `depends_on_past` replay
+  * (orders_daily.py:129-135), one DagRun per logical date. Here the
+  * days are one window: [[RangeSync.window]], the backfill's body, runs
+  * one extract and one upsert over [catchup-from, run-date] and
+  * reconciles each day from the counts the write took per date and one
+  * grouped count-back (SURVEY §3.2). A single-day run is a 1-day
+  * window. Each day still gets its `[validate] complete <date>` line
+  * (`<entity> <date>` for an entity without a side table) and its
+  * mismatch alert.
   *
-  * Each day is one Spark pass, its upsert. The side table is refreshed
-  * once per invocation, after the last day and labelled with
-  * --run-date: its `IS NULL` extract does not depend on the logical
-  * date, so a catch-up would only overwrite the earlier days'
-  * refreshes. A failing day aborts the invocation before the refresh;
-  * the resumed run refreshes. The reference's extract ≫ load ≫
+  * Failure and resume. A failure anywhere in the window fails the whole
+  * catch-up write: no day of it is reported reconciled, and the side
+  * table is not refreshed.
+  *  - On the stage+MERGE path (Derby, SQL Server) the window is staged,
+  *    then applied by one MERGE statement, so the target gets the whole
+  *    window or none of it.
+  *  - On PG's row-streamed `ON CONFLICT` path each partition commits on
+  *    its own, so a failed window can leave part of it written.
+  * A resume re-runs the window; the upsert is idempotent (O5), so the
+  * re-run lands the same target as one clean pass. Precondition, as for
+  * any range: the source holds one row per conflict key in the window,
+  * because the MERGE does not dedup staging rows ([[graft.io.SqlGen]]).
+  *
+  * The side table is refreshed once per invocation, after the window's
+  * write and labelled with --run-date: its `IS NULL` extract does not
+  * depend on the logical date. The reference's extract ≫ load ≫
   * validate task DAG with CSV/XCom handoffs collapses into lazy
   * DataFrame branches (SURVEY §2.1 S5 — the handoff layer is
   * unnecessary in Spark's lazy DAG). Each branch's `extracted` count
   * comes from the write that lands it, so no branch is scanned twice;
   * `loaded` is a pushed COUNT on the target over a driver-side
-  * connection, not a Spark job.
+  * connection, not a Spark job. A run is two Spark jobs, the window's
+  * upsert and the side refresh, for any number of days.
   */
 object DailySync {
 
   def main(args: Array[String]): Unit = {
     val opts = Args.parse(args)
     val runDate = opts.required("run-date")
+    val from = opts.get("catchup-from").getOrElse(runDate)
+    Args.dateRange(from, runDate) // fails on from > run-date before a session
     val e = Entities.named(opts.get("entity").getOrElse("orders"))
-    val dates = opts.get("catchup-from") match {
-      case Some(from) => Args.dateRange(from, runDate)
-      case None       => Seq(runDate)
-    }
-    Sessions.withLocal("graft-daily-sync")(sync(_, e, opts, dates))
+    Sessions.withLocal("graft-daily-sync")(sync(_, e, opts, from, runDate))
   }
 
-  /** Sync `dates` in order, then refresh the side table once if `e`
-    * routes NULLs. An entity that routes NULLs labels its day lines by
-    * branch (`complete <date>`, beside `incomplete (full refresh)`); any
-    * other entity has one branch and labels them with its name. */
+  /** Sync [from, runDate] as one window, then refresh the side table if
+    * `e` routes NULLs. An entity that routes NULLs labels its day lines
+    * by branch (`complete <date>`, beside `incomplete (full refresh)`);
+    * any other entity has one branch and labels them with its name. */
   private[run] def sync(
       spark: SparkSession,
       e: Entity,
       opts: Args,
-      dates: Seq[String]): Unit = {
-    val cfg = Pipeline.entityConfig(opts.config, e.name)
-    val hook = Alerts.fromEnv(opts.alertEnv)
-    val branch = if (e.routesNulls) "complete" else e.name
-    Alerts.onFailure(hook, e.name, dates.head, "ensure-tables") {
-      Pipeline.ensureTargetTables(cfg, e)
-    }
-    var allOk = true
-    for (date <- dates) {
-      println(s"[daily-sync] === ${e.name} logical date $date ===")
-      Alerts.onFailure(hook, e.name, date, "daily-sync") {
-        // the day's rows, a one-day range → upsert (S1/S3+F1+F2, S6/S7)
-        val day =
-          Pipeline.extractForRange(spark, cfg, opts.sfDir, date, date, e)
-        val extracted = Pipeline.upsertBatch(cfg, day, e.mode)
-        val loaded = Pipeline.countLoadedForDay(cfg, date, e)
-        // Validation is log-only, like the reference (:580-584) — but
-        // an armed alert hook hears about a mismatch
-        val ok = Pipeline.reconcile(s"$branch $date", extracted, loaded)
-        if (!ok) Alerts.onMismatch(hook, e.name, date, extracted, loaded)
+      from: String,
+      runDate: String): Unit = {
+    var allOk = RangeSync.window(spark, e, opts, from, runDate,
+      if (e.routesNulls) "complete" else e.name)
+
+    // NULL-timestamp rows (full-table IS NULL scan) → full refresh of
+    // the side table (S2+F2, S8)
+    if (e.routesNulls) {
+      val cfg = Pipeline.entityConfig(opts.config, e.name)
+      val hook = Alerts.fromEnv(opts.alertEnv)
+      Alerts.onFailure(hook, e.name, runDate, "refresh") {
+        val (_, nulls) =
+          Pipeline.extractForDay(spark, cfg, opts.sfDir, runDate, e)
+        val side = cfg.targetDialect.table(cfg.targetSchemaName,
+          cfg.targetIncompleteTable)
+        val extracted = graft.io.RefreshSink.write(nulls,
+          cfg.targetJdbc, cfg.targetDialect, side)
+        val loaded =
+          graft.io.JdbcSources.countWhere(cfg.targetJdbc, side, "1=1")
+        val ok = Pipeline.reconcile("incomplete (full refresh)", extracted,
+          loaded)
+        if (!ok) Alerts.onMismatch(hook, s"incomplete_${e.name}", runDate,
+          extracted, loaded)
         allOk &= ok
       }
     }
-
-    // NULL-timestamp rows (full-table IS NULL scan) → full refresh of
-    // the side table (S2+F2, S8), once: the extract does not depend on
-    // the logical date, so a per-day refresh would only be overwritten
-    // by the next day's
-    val runDate = dates.last
-    if (e.routesNulls) Alerts.onFailure(hook, e.name, runDate, "daily-sync") {
-      val (_, nulls) =
-        Pipeline.extractForDay(spark, cfg, opts.sfDir, runDate, e)
-      val side = cfg.targetDialect.table(cfg.targetSchemaName,
-        cfg.targetIncompleteTable)
-      val extracted = graft.io.RefreshSink.write(nulls,
-        cfg.targetJdbc, cfg.targetDialect, side)
-      val loaded =
-        graft.io.JdbcSources.countWhere(cfg.targetJdbc, side, "1=1")
-      val ok = Pipeline.reconcile("incomplete (full refresh)", extracted,
-        loaded)
-      if (!ok) Alerts.onMismatch(hook, s"incomplete_${e.name}", runDate,
-        extracted, loaded)
-      allOk &= ok
-    }
-    println(s"[daily-sync] done: ${dates.size} day(s), " +
-      (if (allOk) "all counts reconciled" else "MISMATCHES logged above"))
+    println(s"[daily-sync] done: $from..$runDate, " +
+      RangeSync.verdict(allOk))
   }
 }
 

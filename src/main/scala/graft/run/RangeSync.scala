@@ -23,7 +23,8 @@ import graft.io.Tally
   * write ([[writeCountingByDate]]), and the target's by one grouped
   * COUNT pushed over a driver-side connection
   * ([[graft.io.JdbcSources.countByDate]]). The backfill runs one Spark
-  * job, with no shuffle and no cache.
+  * job, with no shuffle and no cache. [[window]] is that body, and a
+  * [[DailySync]] catch-up runs it too.
   *
   * Every entity runs the same stages as [[DailySync]], with the same
   * `--entity` and source rules; `--entity transactions` is the
@@ -36,54 +37,68 @@ object RangeSync {
     val opts = Args.parse(args)
     val start = opts.required("start-date")
     val end = opts.required("end-date")
-    val dates = Args.dateRange(start, end) // validates start <= end
+    Args.dateRange(start, end) // fails on start > end before a session
     val e = Entities.named(opts.get("entity").getOrElse("orders"))
-    Sessions.withLocal("graft-range-sync")(
-      range(_, e, opts, start, end, dates))
+    Sessions.withLocal("graft-range-sync")(range(_, e, opts, start, end))
   }
 
-  /** Backfill [start, end]: one pushed range scan, one upsert, per-date
-    * validation from a count on each side. An entity that routes NULLs
-    * labels its lines `range <date>`; any other entity leads them with
-    * its name, as [[DailySync.sync]] does. */
+  /** Backfill [start, end]. An entity that routes NULLs labels its lines
+    * `range <date>`; any other entity leads them with its name. */
   private[run] def range(
       spark: SparkSession,
       e: Entity,
       opts: Args,
       start: String,
+      end: String): Unit = {
+    val ok = window(spark, e, opts, start, end,
+      if (e.routesNulls) "range" else s"${e.name} range")
+    println(s"[range-sync] done: $start..$end, " + verdict(ok))
+  }
+
+  /** The one sync body of both entry points: upsert the entity's rows
+    * dated [start, end] (inclusive dates) and reconcile them per date.
+    * One pushed range extract, one write that counts its rows per date
+    * (A2), one grouped count-back on the target (S11/A1), then one
+    * `[validate] <label> <date>` line per date, with a mismatch alert
+    * for each date that does not reconcile. The write fails or lands as
+    * a whole window (see [[DailySync]] for what that means per sink).
+    * Returns whether every date reconciled. */
+  private[run] def window(
+      spark: SparkSession,
+      e: Entity,
+      opts: Args,
+      start: String,
       end: String,
-      dates: Seq[String]): Unit = {
+      label: String): Boolean = {
+    val dates = Args.dateRange(start, end)
     val cfg = Pipeline.entityConfig(opts.config, e.name)
     val hook = Alerts.fromEnv(opts.alertEnv)
-    val branch = if (e.routesNulls) "range" else s"${e.name} range"
-    Alerts.onFailure(hook, e.name, dates.head, "ensure-tables") {
+    val runDate = if (start == end) start else s"$start..$end"
+    Alerts.onFailure(hook, e.name, runDate, "ensure-tables") {
       Pipeline.ensureTargetTables(cfg, e)
     }
-    // one write carries the per-date extracted counts (A2)
-    val extracted = Alerts.onFailure(hook, e.name, s"$start..$end",
-      "range-load") {
+    val extracted = Alerts.onFailure(hook, e.name, runDate, "load") {
       val slice =
         Pipeline.extractForRange(spark, cfg, opts.sfDir, start, end, e)
       writeCountingByDate(slice, e.targetIncrementalColumn)(
         Pipeline.upsertBatch(cfg, _, e.mode))
     }
-
-    // per-date loaded counts from the target, one pushed COUNT (S11/A1)
-    val loaded = Alerts.onFailure(hook, e.name, s"$start..$end",
-      "range-validate") {
+    val loaded = Alerts.onFailure(hook, e.name, runDate, "count-back") {
       Pipeline.countLoadedByDate(cfg, e.targetIncrementalColumn, start, end)
     }
-
-    var allOk = true
-    for (d <- dates) {
+    dates.map { d =>
       val (x, l) = (extracted.getOrElse(d, 0L), loaded.getOrElse(d, 0L))
-      val ok = Pipeline.reconcile(s"$branch $d", x, l)
+      // log-only, like the reference (:580-584), but an armed alert
+      // hook hears about a mismatch
+      val ok = Pipeline.reconcile(s"$label $d", x, l)
       if (!ok) Alerts.onMismatch(hook, e.name, d, x, l)
-      allOk &= ok
-    }
-    println(s"[range-sync] done: ${dates.size} day(s), " +
-      (if (allOk) "all counts reconciled" else "MISMATCHES logged above"))
+      ok
+    }.forall(identity)
   }
+
+  /** The closing line's verdict. */
+  private[run] def verdict(ok: Boolean): String =
+    if (ok) "all counts reconciled" else "MISMATCHES logged above"
 
   /** Run `write` over `slice` and return the rows it handed to the sink
     * per ISO date of `tsCol` (`to_date` in the session time zone),

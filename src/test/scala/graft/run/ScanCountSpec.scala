@@ -92,22 +92,22 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     "sf-dir" -> sfDir))
 
   test("DailySync: one source scan per sink write, no other action") {
-    val dates = Seq("1996-03-01", "1996-03-02")
     val opts = target("scan_guard_daily")
     val out = new java.io.ByteArrayOutputStream
     val actions = actionsOf {
       Console.withOut(out)(DailySync.sync(spark, Entities.orders, opts,
-        dates))
+        "1996-03-01", "1996-03-03"))
     }
-    // one complete-branch upsert per day, then one side-table refresh
-    assert(actions.map(_.name) ==
-      Seq.fill(dates.size + 1)("foreachPartition"), s"actions: $actions")
+    // one upsert for the whole 3-day window, then one side-table refresh
+    assert(actions.map(_.name) == Seq.fill(2)("foreachPartition"),
+      s"actions: $actions")
     assert(actions.forall(_.scans == 1), s"scans per write: $actions")
     assert(!actions.exists(_.shuffleOrCache), s"shuffle or cache: $actions")
     // and the counts taken from those writes still reconcile
     val log = out.toString("UTF-8")
-    assert(log.contains(
-      "[validate] complete 1996-03-01: extracted=2 loaded=2 OK"), log)
+    for ((d, n) <- Seq("1996-03-01" -> 2, "1996-03-03" -> 0))
+      assert(log.contains(
+        s"[validate] complete $d: extracted=$n loaded=$n OK"), log)
     assert(log.contains(
       "[validate] incomplete (full refresh): extracted=2 loaded=2 OK"), log)
   }
@@ -136,8 +136,7 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val out = new java.io.ByteArrayOutputStream
     val actions = actionsOf {
       Console.withOut(out)(RangeSync.range(spark, Entities.orders, opts,
-        "1996-03-01", "1996-03-03", Args.dateRange("1996-03-01",
-          "1996-03-03")))
+        "1996-03-01", "1996-03-03"))
     }
     // the per-date extract counts ride the write; no JDBC read-back of
     // the target
@@ -172,7 +171,7 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
 
   test("DailySync from a Derby source: one JDBC scan per sink write, " +
     "targets equal the parquet path's") {
-    val dates = Seq("1996-03-01", "1996-03-02")
+    val (from, to) = ("1996-03-01", "1996-03-02")
     val fromDb = Args(target("scan_guard_db").kv +
       ("source-url" -> derbySource))
     val fromParquet = target("scan_guard_pq")
@@ -180,12 +179,12 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val out = new java.io.ByteArrayOutputStream
     val actions = actionsOf {
       Console.withOut(out)(DailySync.sync(spark, Entities.orders, fromDb,
-        dates))
+        from, to))
     }
-    // one upsert per day, then one side-table refresh, each reading the
-    // source through exactly one JDBC scan
-    assert(actions.map(_.name) ==
-      Seq.fill(dates.size + 1)("foreachPartition"), s"actions: $actions")
+    // one upsert for the window, then one side-table refresh, each
+    // reading the source through exactly one JDBC scan
+    assert(actions.map(_.name) == Seq.fill(2)("foreachPartition"),
+      s"actions: $actions")
     assert(actions.forall(a => a.scans == 1 && a.jdbc == 1),
       s"scans per write: $actions")
     assert(!actions.exists(_.shuffleOrCache), s"shuffle or cache: $actions")
@@ -196,7 +195,7 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       "[validate] incomplete (full refresh): extracted=2 loaded=2 OK"), log)
 
     Console.withOut(new java.io.ByteArrayOutputStream)(
-      DailySync.sync(spark, Entities.orders, fromParquet, dates))
+      DailySync.sync(spark, Entities.orders, fromParquet, from, to))
     // 4 complete orders upserted, 2 incomplete in the side table
     for ((table, n) <- Seq[(Config => String, Int)](
         (_.targetTable, 4), (_.targetIncompleteTable, 2))) {
@@ -218,7 +217,7 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
     val out = new java.io.ByteArrayOutputStream
     val actions = actionsOf {
       Console.withOut(out)(RangeSync.range(spark, Entities.orders, fromDb,
-        start, end, Args.dateRange(start, end)))
+        start, end))
     }
     assert(actions.map(a => (a.name, a.scans, a.jdbc)) ==
       Seq(("foreachPartition", 1, 1)), s"actions: $actions")
@@ -230,8 +229,7 @@ class ScanCountSpec extends SparkSpecBase with AdaptiveSparkPlanHelper {
       "[validate] range 1996-03-01: extracted=2 loaded=2 OK"), log)
 
     Console.withOut(new java.io.ByteArrayOutputStream)(
-      RangeSync.range(spark, Entities.orders, fromParquet, start, end,
-        Args.dateRange(start, end)))
+      RangeSync.range(spark, Entities.orders, fromParquet, start, end))
     val viaDb = rows(fromDb, _.targetTable)
     assert(viaDb.size == 2, viaDb)
     assert(viaDb == rows(fromParquet, _.targetTable))

@@ -3,11 +3,16 @@ package graft.run
 import java.io.ByteArrayOutputStream
 import java.sql.Timestamp
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpecBase
 import graft.core.{Entities, Schemas}
 import graft.io.{JdbcSources, JdbcWrite, RefreshSink, SqlDialect, SqlGen}
+import graft.operators.Upsert
 
 /** End-to-end transactions sync against embedded Derby, source AND
   * target (the DB-to-DB topology of
@@ -21,7 +26,8 @@ import graft.io.{JdbcSources, JdbcWrite, RefreshSink, SqlDialect, SqlGen}
   * rename — both edges of the reference's casing contract are live in
   * one test. The syncs run through the shipped CLI bodies,
   * `DailySync.sync` and `RangeSync.range`, and read their counts from
-  * the `[validate]` lines those print.
+  * the `[validate]` lines those print; a two-day catch-up is one write
+  * whose target equals the day-by-day runs and the `Upsert.apply` fold.
   */
 class TxSyncSpec extends SparkSpecBase {
 
@@ -94,7 +100,7 @@ class TxSyncSpec extends SparkSpecBase {
   /** One `DailySync` run for `date`: its (extracted, loaded). */
   private def syncDay(date: String): (Long, Long) = {
     val out = new ByteArrayOutputStream
-    Console.withOut(out)(DailySync.sync(spark, e, opts, Seq(date)))
+    Console.withOut(out)(DailySync.sync(spark, e, opts, date, date))
     validated(out.toString("UTF-8"), "transactions ")(date)
   }
 
@@ -176,7 +182,7 @@ class TxSyncSpec extends SparkSpecBase {
     def runRange(): Map[String, Long] = {
       val out = new ByteArrayOutputStream
       Console.withOut(out)(RangeSync.range(spark, e, opts2, "2025-03-01",
-        "2025-03-03", Args.dateRange("2025-03-01", "2025-03-03")))
+        "2025-03-03"))
       validated(out.toString("UTF-8"), "transactions range ")
         .map { case (d, (x, _)) => d -> x }
     }
@@ -203,6 +209,64 @@ class TxSyncSpec extends SparkSpecBase {
     assert(after.size == 4)
   }
 
+  test("two-day catch-up: one write, equal to the day-by-day runs and " +
+    "the Upsert.apply fold") {
+    val src3 = graft.io.JdbcConfig(
+      "jdbc:derby:memory:txsrc_catchup;create=true", batchSize = 7)
+    JdbcWrite.execute(src3,
+      SqlGen.createTable(SqlDialect.Derby, srcTable, Schemas.transactions))
+    // days 1-2 as in the other cases, plus a day-3 row outside the window
+    RefreshSink.write(txDf(seedRows :+ txRow("D", 3, "2025-03-03 11:00:00",
+      "2025-03-03 11:00:00", "40.0", """{"ch":"web","score":1}"""): _*),
+      src3, SqlDialect.Derby, srcTable)
+    def target(db: String) = Args(Map("source-url" -> src3.url,
+      "target-url" -> s"jdbc:derby:memory:$db;create=true"))
+    def rows(o: Args): DataFrame = {
+      val c = Pipeline.entityConfig(o.config, e.name)
+      JdbcSources.readTable(spark, c.targetJdbc,
+        c.targetDialect.table(c.targetSchemaName, c.targetTable))
+    }
+    def sorted(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val days = Seq("2025-03-01", "2025-03-02")
+
+    val catchUp = target("txdst_catchup")
+    val out = new ByteArrayOutputStream
+    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        actions.incrementAndGet()
+      override def onFailure(fn: String, qe: QueryExecution,
+          ex: Exception): Unit = actions.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      Console.withOut(out)(DailySync.sync(spark, e, catchUp, days.head,
+        days.last))
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(actions.get == 1, "a catch-up is one write for any number of days")
+    assert(validated(out.toString("UTF-8"), "transactions ") ==
+      Map(days.head -> ((2L, 2L)), days.last -> ((1L, 1L))))
+
+    val byDay = target("txdst_by_day")
+    for (d <- days)
+      Console.withOut(new ByteArrayOutputStream)(
+        DailySync.sync(spark, e, byDay, d, d))
+    val c = Pipeline.entityConfig(catchUp.config, e.name)
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      e.targetSchema)
+    val folded = days.foldLeft(empty) { (t, d) =>
+      Upsert(t, Pipeline.extractForRange(spark, c, "", d, d, e),
+        c.uniqueKeyColumns, e.mode)
+    }
+    val got = rows(catchUp)
+    assert(sorted(got).size == 3)
+    assert(sorted(got) == sorted(rows(byDay)))
+    assert(sorted(got) == sorted(folded.select(
+      got.schema.map(f => col(f.name).cast(f.dataType)): _*)))
+  }
+
   test("target edge is fully lowercased, all 57 columns present (F5/F6)") {
     ensureSource()
     Pipeline.ensureTargetTables(cfg, e)
@@ -225,12 +289,12 @@ class TxSyncSpec extends SparkSpecBase {
     val out = new ByteArrayOutputStream
     val daily = intercept[IllegalArgumentException] {
       Console.withOut(out)(DailySync.sync(spark, e, noSource,
-        Seq("2025-03-01")))
+        "2025-03-01", "2025-03-01"))
     }
     assert(daily.getMessage.contains(msg), daily.getMessage)
     val range = intercept[IllegalArgumentException] {
       Console.withOut(out)(RangeSync.range(spark, e, noSource, "2025-03-01",
-        "2025-03-02", Args.dateRange("2025-03-01", "2025-03-02")))
+        "2025-03-02"))
     }
     assert(range.getMessage.contains(msg), range.getMessage)
   }

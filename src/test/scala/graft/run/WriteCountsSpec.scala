@@ -7,6 +7,7 @@ import java.sql.{Date, Timestamp}
 import scala.concurrent.duration._
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.functions.{col, udf}
@@ -18,11 +19,13 @@ import graft.core.{Entities, Schemas}
 import graft.io.{JdbcConfig, JdbcWrite, MergeSink, SqlDialect}
 import graft.operators.Upsert
 
-/** The counts that ride a sync write: the side-table refresh a catch-up
-  * runs once, the CSV seed's audit tallied by its staging load, and
-  * the backfill's per-date tally. Each must equal what a fault-free,
-  * separately counted run reports — also when a task's first attempt
-  * dies mid-partition and `local[N,2]` retries it. */
+/** The counts that ride a sync write: a catch-up's one window (equal
+  * to day-by-day runs and the `Upsert.apply` oracle, with the side table
+  * refreshed once, and landing nothing when its write fails), the CSV
+  * seed's audit tallied by its staging load, and the backfill's
+  * per-date tally. Each must equal what a fault-free, separately
+  * counted run reports — also when a task's first attempt dies
+  * mid-partition and `local[N,2]` retries it. */
 class WriteCountsSpec extends SparkSpecBase {
   import WriteCountsSpec._
 
@@ -54,31 +57,109 @@ class WriteCountsSpec extends SparkSpecBase {
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  private val orders = Entities.orders
+
+  /** Entry-point options for a fresh in-memory Derby target `db`. */
+  private def target(db: String, extra: (String, String)*) = Args(Map(
+    "target-url" -> s"jdbc:derby:memory:$db;create=true",
+    "sf-dir" -> sfDir) ++ extra)
+
+  /** One `DailySync.sync` over [from, to]: its log. */
+  private def sync(opts: Args, from: String, to: String): String = {
+    val out = new ByteArrayOutputStream
+    Console.withOut(out)(DailySync.sync(spark, orders, opts, from, to))
+    out.toString("UTF-8")
+  }
+
+  /** `df` cast to the column types of `like`, as sorted row strings. */
+  private def sortedAs(df: DataFrame, like: DataFrame): Seq[String] =
+    sorted(df.select(like.schema.map(f => col(f.name).cast(f.dataType)): _*))
+
+  /** The (target, side table) rows `opts`' target holds. */
+  private def tables(opts: Args): (DataFrame, DataFrame) = {
+    val cfg = opts.config
+    (Pipeline.readTarget(spark, cfg, cfg.targetTable),
+      Pipeline.readTarget(spark, cfg, cfg.targetIncompleteTable))
+  }
+
+  // the catch-up's target and side table also equal 3 single-day runs
+  // (the last of them a single-day run of the last date) and the
+  // Upsert.apply fold over the days
   test("a 3-day catch-up refreshes the side table once, to the rows a " +
     "single-day run of the last date leaves") {
     val dates = Seq("1996-03-01", "1996-03-02", "1996-03-03")
-    def run(db: String, days: Seq[String]): (String, Seq[String]) = {
-      val opts = Args(Map(
-        "target-url" -> s"jdbc:derby:memory:$db;create=true",
-        "sf-dir" -> sfDir))
-      val out = new ByteArrayOutputStream
-      Console.withOut(out)(DailySync.sync(spark, Entities.orders, opts, days))
-      val cfg = opts.config
-      (out.toString("UTF-8"),
-        sorted(Pipeline.readTarget(spark, cfg, cfg.targetIncompleteTable)))
+    val catchUp = target("write_counts_catchup")
+    val log = sync(catchUp, dates.head, dates.last)
+    val byDay = target("write_counts_by_day")
+    for (d <- dates) sync(byDay, d, d)
+
+    // the oracle: each day's extract folded onto an empty target, and
+    // the side table's full refresh of the NULL-timestamp rows
+    val cfg = catchUp.config
+    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+      orders.targetSchema)
+    val folded = dates.foldLeft(empty) { (t, d) =>
+      Upsert(t, Pipeline.extractForRange(spark, cfg, sfDir, d, d),
+        cfg.uniqueKeyColumns, orders.mode)
     }
-    val (log, catchUp) = run("write_counts_catchup", dates)
-    val (_, single) = run("write_counts_single", dates.takeRight(1))
-    assert(catchUp.size == 3, catchUp)
-    assert(catchUp == single)
+    val nulls = Pipeline.extractForDay(spark, cfg, sfDir, dates.last)._2
+
+    val (tgt, side) = tables(catchUp)
+    val (tgtByDay, sideByDay) = tables(byDay)
+    assert(sorted(tgt).size == 4 && sorted(side).size == 3)
+    assert(sorted(tgt) == sorted(tgtByDay))
+    assert(sorted(tgt) == sortedAs(folded, tgt))
+    assert(sorted(side) == sorted(sideByDay))
+    assert(sorted(side) == sortedAs(nulls, side))
     assert(log.linesIterator.count(
       _.contains("incomplete (full refresh)")) == 1, log)
     assert(log.contains(
       "[validate] incomplete (full refresh): extracted=3 loaded=3 OK"), log)
-    // every day still upserts and reconciles its complete branch
+    // every day still reconciles its complete branch
     for ((d, n) <- dates.zip(Seq(1, 2, 1)))
       assert(log.contains(
         s"[validate] complete $d: extracted=$n loaded=$n OK"), log)
+  }
+
+  test("a catch-up whose MERGE fails on a day-2 row lands none of the " +
+    "window; the resume reconciles every day and equals a clean run") {
+    val (from, to) = ("1996-03-01", "1996-03-02")
+    val spool = Files.createTempDirectory("graft_failed_window")
+      .resolve("alerts.jsonl")
+    val opts = target("write_counts_failed_window",
+      "alert-recipients" -> "ops@example.com",
+      "alert-sink" -> spool.toString)
+    val cfg = opts.config
+    val table = cfg.targetDialect.table(cfg.targetSchemaName,
+      cfg.targetTable)
+    // order 3 (1996-03-02) breaks a constraint on the target
+    Pipeline.ensureTargetTables(cfg, orders)
+    JdbcWrite.execute(cfg.targetJdbc, s"ALTER TABLE $table ADD CONSTRAINT " +
+      "no_order_3 CHECK (\"order_id\" <> 3)")
+
+    intercept[java.sql.SQLException](sync(opts, from, to))
+    val alerts = Files.readAllLines(spool).asScala
+    assert(alerts.size == 1, alerts)
+    assert(alerts.head.contains("\"stage\":\"load\""), alerts)
+    val (tgt, side) = tables(opts)
+    assert(tgt.count() == 0L, "a failed window must land none of its days")
+    assert(side.count() == 0L, "a failed window must not refresh the side")
+
+    JdbcWrite.execute(cfg.targetJdbc,
+      s"ALTER TABLE $table DROP CONSTRAINT no_order_3")
+    val log = sync(opts, from, to)
+    for ((d, n) <- Seq(from -> 1, to -> 2))
+      assert(log.contains(
+        s"[validate] complete $d: extracted=$n loaded=$n OK"), log)
+    assert(log.contains(
+      "[validate] incomplete (full refresh): extracted=3 loaded=3 OK"), log)
+
+    val clean = target("write_counts_clean_window")
+    sync(clean, from, to)
+    val (resumed, cleanRun) = (tables(opts), tables(clean))
+    assert(sorted(resumed._1).size == 3)
+    assert(sorted(resumed._1) == sorted(cleanRun._1))
+    assert(sorted(resumed._2) == sorted(cleanRun._2))
   }
 
   test("an empty CSV seeds nothing and audits zero, without blocking") {
