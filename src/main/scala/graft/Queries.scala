@@ -816,9 +816,12 @@ object Queries {
           graft.streaming.Streams.eventsStream(s, dir),
           Seq("view", "click", "purchase")).toDF(),
         "q_stream_funnel")
-      val latest = graft.streaming.Streams.latest(drained, "user_id")
+      // ≤ |users| rows, read by three stages: collected into a local
+      // frame, which pins nothing in the session
+      val chains = graft.streaming.Streams.latest(drained, "user_id")
         .select(col("t1"), col("t2"), col("t3"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val latest = s.createDataFrame(
+        java.util.Arrays.asList(chains.collect(): _*), chains.schema)
       def stage(nm: String, tc: String) = latest
         .filter(col(tc) >= 0)
         .agg(count(lit(1)).as("n_users"),
@@ -3627,15 +3630,18 @@ object Queries {
         "q_stream_sliding")
     }),
     "q_stream_transitions" -> ((s, dir) => {
-      // Streaming Markov counting: per-user last-event state links
+      // Streaming Markov counting: the order-2 n-gram census links
       // transitions across micro-batches; the drained increment sums
       // must equal the batch transition matrix — same output shape,
-      // same oracle SQL, gated value-for-value.
+      // same oracle SQL, gated value-for-value. Like the batch lag, a
+      // NULL from-type is no transition; a NULL to-type counts.
       graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.transitionCountsState(
-          graft.streaming.Streams.eventsStream(s, dir)).toDF(),
+        graft.streaming.Streams.ngramCountsState(
+          graft.streaming.Streams.eventsStream(s, dir), 2).toDF(),
         "q_stream_transitions")
-        .groupBy(col("from_state"), col("to_state"))
+        .filter(col("gram")(0).isNotNull)
+        .groupBy(col("gram")(0).as("from_state"),
+          col("gram")(1).as("to_state"))
         .agg(sum(col("n_inc")).as("n_trans"))
         .withColumn("__tot", sum(col("n_trans")).over(
           Window.partitionBy(col("from_state"))))
@@ -3677,16 +3683,18 @@ object Queries {
       out
     }),
     "q_stream_paths" -> ((s, dir) => {
-      // Streaming path census: per-user last-TWO-event state links
+      // Streaming path census: the order-3 n-gram census links
       // length-3 paths across micro-batch boundaries; the drained
       // increment sums re-derive shares and the top-20 cut, equal to
       // the batch q_event_paths — same oracle SQL, gated
-      // value-for-value.
+      // value-for-value. Like the batch census, a window holding a
+      // NULL type is no path.
       val sums = graft.streaming.Streams.runAvailableNow(
-        graft.streaming.Streams.pathCountsState(
-          graft.streaming.Streams.eventsStream(s, dir)).toDF(),
+        graft.streaming.Streams.ngramCountsState(
+          graft.streaming.Streams.eventsStream(s, dir), 3).toDF(),
         "q_stream_paths")
-        .groupBy(col("path"))
+        .filter(!exists(col("gram"), _.isNull))
+        .groupBy(array_join(col("gram"), ">").as("path"))
         .agg(sum(col("n_inc")).as("n"))
       val tot = sums.agg(sum(col("n")).as("__tot"))
       sums.crossJoin(broadcast(tot))
@@ -4170,11 +4178,14 @@ object Queries {
         GraftFunctions.polyHash(col("user_id").cast(StringType)))
       val drained = graft.streaming.Streams.runAvailableNow(
         graft.streaming.Streams.hllRegistersState(
-          src, col("event_type"), h).toDF(),
+          src, col("event_type"), h),
         "q_stream_hll")
-      val regs = graft.streaming.Streams.latest(drained, "g", "j")
+      // ≤ 5·256 rows, two consumers below: collected into a local
+      // frame, which pins nothing in the session
+      val latest = graft.streaming.Streams.latest(drained, "g", "j")
         .select(col("g"), col("j"), col("m"))
-        .localCheckpoint(true)  // ≤ 5·256 rows; two consumers below
+      val regs = s.createDataFrame(
+        java.util.Arrays.asList(latest.collect(): _*), latest.schema)
       val global = regs.groupBy(col("j")).agg(max(col("m")).as("m"))
         .select(lit("__all__").as("g"), col("j"), col("m"))
       val est = HllSketch.estimate(regs.unionByName(global))

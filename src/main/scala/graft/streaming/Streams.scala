@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 
 /** Structured Streaming surface of the engine: the daily-batch
   * semantics of the reference re-expressed as streams, plus the
@@ -24,10 +24,13 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSes
   *    Every state runs `GroupStateTimeout.NoTimeout`: the twins are
   *    bounded AvailableNow drains, so no key is held long enough to
   *    need an eviction policy, and a state's drain counter is the
-  *    plain per-key sequence 1, 2, 3, …. Keyed counts and sums
-  *    (moments included) are all [[cumulativeState]] instances; the
-  *    other states keep their own folds. Each operator takes its
-  *    session from its input frame.
+  *    plain per-key sequence 1, 2, 3, …. Keyed counts, sums and
+  *    maxes (moments and HLL registers included) are all
+  *    [[cumulativeState]] instances; every order-dependent fold
+  *    (sessions, n-grams, funnel, budget, near-dup bands) is a step
+  *    of the one [[orderedReplay]]. The top-k, CDC, basket, KMV,
+  *    MMD and front-max states keep their own folds. Each operator
+  *    takes its session from its input frame.
   *
   * At 100 TB the same topology holds: state is hash-partitioned by key
   * across executors (RocksDB state store in production), and the file
@@ -292,171 +295,128 @@ object Streams {
       }
   }
 
+  /** The one ordered per-key replay behind every state whose fold
+    * depends on event ORDER (sessions, n-gram census, funnel, budget
+    * admission, near-dup bands): `rows` group by `key`; each touched
+    * key's micro-batch rows sort in memory by `sortKey` (a total
+    * order), and `step` folds them over the key's carried state
+    * (`init` for a key never seen), returning the next state and the
+    * rows to emit. Update mode, `NoTimeout`.
+    *
+    * Replay discipline: batches are assumed `sortKey`-ordered across
+    * files (the daily-extract and ingest-sequence shapes), so a fold
+    * that links the last row of one micro-batch to the first of the
+    * next through the carried state sees the same sequence the batch
+    * operator sees, and the drained result equals the batch replay
+    * whatever the file-to-batch split. A late row older than the
+    * carried state appends after it rather than retroactively
+    * splicing into history.
+    *
+    * 100 TB notes: state is hash-partitioned by key across executors,
+    * and the in-memory sort is bounded by one key's rows per
+    * micro-batch. `step` must build its emissions eagerly: the state
+    * is written before they are read. */
+  private def orderedReplay[R, K: Encoder, T: Ordering, S: Encoder,
+      O: Encoder](rows: Dataset[R])(key: R => K, sortKey: R => T,
+      init: S)(step: (K, S, Seq[R]) => (S, Iterable[O])): Dataset[O] =
+    rows.groupByKey(key).flatMapGroupsWithState(
+      OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+      (k: K, it: Iterator[R], state: GroupState[S]) =>
+        val (next, out) = step(k, state.getOption.getOrElse(init),
+          it.toSeq.sortBy(sortKey))
+        state.update(next)
+        out.iterator
+    }
+
+  /** One event of a per-user replay: (user_id, ts µs, event_id,
+    * event_type). The id is optional because sessions never needed
+    * one; a NULL type stays NULL. */
+  private type UserEvent = (Long, Long, Option[Long], String)
+
+  /** [[orderedReplay]] per user, each batch in the (ts, event_id)
+    * total order of the batch operators. */
+  private def userReplay[S: Encoder, O: Encoder](events: DataFrame,
+      init: S)(step: (Long, S, Seq[UserEvent]) => (S, Iterable[O]))
+      : Dataset[O] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    // integer division: ts_ns exceeds 2^53, a double round-trip would
+    // corrupt the microsecond value
+    orderedReplay(events.select(col("user_id"), expr("ts_ns div 1000"),
+      col("event_id"), col("event_type")).as[UserEvent])(
+      _._1, e => (e._2, e._3), init)(step)
+  }
+
   final case class SessionOut(user_id: Long, session_start_us: Long, n: Long)
 
-  /** The open trailing session carried across micro-batches. */
+  /** The open trailing session carried across micro-batches; `n` = 0
+    * before a user's first event. */
   final case class OpenSession(startUs: Long, lastUs: Long, n: Long)
 
   /** The inactivity gap that closes a [[sessionCountsState]] session:
     * 10 minutes, in microseconds. */
   private val SessionGapUs = 10 * 60 * 1000L * 1000L
 
-  /** Gap-based streaming sessionization via flatMapGroupsWithState —
-    * the custom-state path. Spark's built-in `session_window` only
-    * streams in APPEND mode, which emits a session only after the
-    * watermark passes its close: in a bounded drain (AvailableNow)
-    * the final sessions can never flush. This operator instead emits
-    * every session the micro-batch touched immediately, keyed by
-    * `(user_id, session_start_us)` — update-mode semantics: a session
-    * extended by a later batch is RE-emitted under the same key with a
-    * larger `n`, so consumers take the latest (= max) `n` per key. The
-    * carried [[OpenSession]] state makes a session spanning two
-    * micro-batches ONE session (ADVICE r3: the state must be read, not
-    * just written).
+  /** Gap-based streaming sessionization, a [[userReplay]]. Spark's
+    * built-in `session_window` only streams in APPEND mode, which
+    * emits a session only after the watermark passes its close: in a
+    * bounded drain (AvailableNow) the final sessions can never flush.
+    * This operator instead emits every session the micro-batch
+    * touched immediately, keyed by `(user_id, session_start_us)` —
+    * update-mode semantics: a session extended by a later batch is
+    * RE-emitted under the same key with a larger `n`, so consumers
+    * take the latest (= max) `n` per key. The carried [[OpenSession]]
+    * makes a session spanning two micro-batches ONE session.
     *
     * Break rule matches the batch `session_window` exactly: a gap ≥
     * [[SessionGapUs]] starts a new session, compared at MICROsecond
-    * precision (the grain of the batch query's `ts`). Batches are assumed
-    * time-ordered across files (the daily-extract replay shape); a
-    * late event older than the carried continuation point joins the
-    * open session rather than retroactively splitting closed ones.
-    * Per-user batch events are sorted in memory — bounded by one
-    * user's events per micro-batch, hash-partitioned across
-    * executors. */
+    * precision (the grain of the batch query's `ts`). */
   def sessionCountsState(events: DataFrame): Dataset[SessionOut] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      // integer division: ts_ns exceeds 2^53, a double round-trip
-      // would corrupt the microsecond value
-      .select(col("user_id").as[Long], expr("ts_ns div 1000").as[Long])
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (user: Long, rows: Iterator[(Long, Long)],
-         state: GroupState[OpenSession]) =>
-          val ts = rows.map(_._2).toArray.sorted
-          val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-          var cur: OpenSession = state.getOption.orNull
-          ts.foreach { t =>
-            if (cur == null) cur = OpenSession(t, t, 1L)
-            else if (t - cur.lastUs >= SessionGapUs) {
-              out += SessionOut(user, cur.startUs, cur.n) // closed final
-              cur = OpenSession(t, t, 1L)
-            } else cur = OpenSession(cur.startUs,
-              math.max(cur.lastUs, t), cur.n + 1L)
-          }
-          if (cur != null) {
-            out += SessionOut(user, cur.startUs, cur.n) // current extent
-            state.update(cur)
-          }
-          out.iterator
+    userReplay(events, OpenSession(0L, 0L, 0L)) { (user, open, evs) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
+      val cur = evs.foldLeft(open) { case (c, (_, t, _, _)) =>
+        if (c.n > 0 && t - c.lastUs < SessionGapUs)
+          OpenSession(c.startUs, math.max(c.lastUs, t), c.n + 1L)
+        else {
+          if (c.n > 0) out += SessionOut(user, c.startUs, c.n) // closed
+          OpenSession(t, t, 1L)
+        }
       }
+      out += SessionOut(user, cur.startUs, cur.n) // current extent
+      (cur, out)
+    }
   }
 
-  final case class TransitionInc(
-      from_state: String, to_state: String, n_inc: Long)
+  /** Per-batch n-gram census increment (see [[ngramCountsState]]):
+    * the gram's event types, oldest first, NULLs kept. */
+  final case class PathInc(gram: Seq[String], n_inc: Long)
 
-  /** The last event carried per user across micro-batches. */
-  final case class LastEvent(tsUs: Long, eventId: Long, tpe: String)
-
-  /** Streaming first-order Markov transition counting — the
-    * incremental form of [[graft.operators.Stats.transitionMatrix]].
-    * Per user, the carried [[LastEvent]] state links the last event of
-    * one micro-batch to the first of the next, so a transition
-    * spanning two batches counts exactly once; within a batch events
-    * sort by the same (ts, event_id) total order as the batch
-    * operator. Emits per-batch (from, to) increments — downstream
-    * sums them, and after a bounded drain the summed counts equal the
-    * batch matrix row-for-row (the correctness gate reuses the batch
-    * oracle verbatim).
-    *
-    * Same replay discipline as [[sessionCountsState]]: batches are
-    * assumed time-ordered across files (the daily-extract shape); a
-    * late event older than the carried state appends after it rather
-    * than retroactively splicing into history. Per-user batch events
-    * sort in memory — bounded by one user's events per micro-batch,
-    * hash-partitioned by user across executors. */
-  def transitionCountsState(events: DataFrame): Dataset[TransitionInc] = {
+  /** Streaming order-`n` n-gram census of each user's event types, a
+    * [[userReplay]] — the incremental form of
+    * [[graft.operators.Stats.transitionMatrix]] (n = 2) and
+    * [[graft.operators.Stats.pathMining]]'s census (n = 3; the top-k
+    * cut and shares happen on the drained sums, where the TOTAL is
+    * known). Per user the carried last n−1 types span the batch
+    * boundary, so a gram whose events straddle micro-batches counts
+    * exactly once. Emits per-batch increments of EVERY length-n
+    * window, a NULL type kept as a NULL element; each consumer drops
+    * the windows its batch twin drops (the matrix: a NULL first
+    * type; paths: any NULL). Downstream sums the increments. */
+  def ngramCountsState(events: DataFrame, n: Int): Dataset[PathInc] = {
+    require(n >= 2, s"an n-gram needs n >= 2: $n")
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .select(col("user_id").as[Long],
-        expr("ts_ns div 1000").as[Long],
-        col("event_id").as[Long], col("event_type").as[String])
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[LastEvent]) =>
-          val evs = rows.map(r => (r._2, r._3, r._4)).toArray
-            .sortBy(e => (e._1, e._2))
-          val counts =
-            scala.collection.mutable.Map.empty[(String, String), Long]
-          var prev = state.getOption.orNull
-          evs.foreach { case (ts, id, tpe) =>
-            if (prev != null) {
-              val k = (prev.tpe, tpe)
-              counts(k) = counts.getOrElse(k, 0L) + 1L
-            }
-            prev = LastEvent(ts, id, tpe)
-          }
-          if (prev != null) state.update(prev)
-          counts.iterator.map { case ((f, t), n) =>
-            TransitionInc(f, t, n)
-          }
+    userReplay(events, Array.empty[String]) { (_, carried, evs) =>
+      val counts = scala.collection.mutable.Map.empty[Seq[String], Long]
+      val last = evs.foldLeft(carried.toVector) { case (w0, (_, _, _, tpe)) =>
+        val w = w0 :+ tpe
+        if (w.size == n) counts(w) = counts.getOrElse(w, 0L) + 1L
+        w.takeRight(n - 1)
       }
-  }
-
-  /** Per-batch path-census increment (see [[pathCountsState]]). */
-  final case class PathInc(path: String, n_inc: Long)
-
-  /** The last two event types carried per user across micro-batches
-    * (older first; either may be absent early in the stream). */
-  final case class LastTwo(a: Option[String], b: Option[String])
-
-  /** Streaming length-3 path counting — the incremental form of
-    * [[graft.operators.Stats.pathMining]]'s census (the top-k cut
-    * and shares happen on the drained sums, where the TOTAL is
-    * known). Per user the carried [[LastTwo]] state spans the batch
-    * boundary, so a path whose three events straddle two (or three)
-    * micro-batches counts exactly once; within a batch events sort
-    * by the same (ts, event_id) total order as the batch operator.
-    * Same replay discipline as [[transitionCountsState]]: batches
-    * are time-ordered across files, a late event appends after the
-    * carried state. State is TWO strings per user — smaller than the
-    * session or top-k monitors — hash-partitioned by user. */
-  def pathCountsState(events: DataFrame): Dataset[PathInc] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("user_id").as[Long],
-        expr("ts_ns div 1000").as[Long],
-        col("event_id").as[Long], col("event_type").as[String])
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[LastTwo]) =>
-          val evs = rows.map(r => (r._2, r._3, r._4)).toArray
-            .sortBy(e => (e._1, e._2))
-          val counts = scala.collection.mutable.Map.empty[String, Long]
-          var (a, b) = state.getOption
-            .map(s => (s.a.orNull, s.b.orNull)).getOrElse((null, null))
-          evs.foreach { case (_, _, tpe) =>
-            if (a != null && b != null) {
-              val p = s"$a>$b>$tpe"
-              counts(p) = counts.getOrElse(p, 0L) + 1L
-            }
-            a = b
-            b = tpe
-          }
-          state.update(LastTwo(Option(a), Option(b)))
-          counts.iterator.map { case (p, n) => PathInc(p, n) }
-      }
+      (last.toArray, counts.map { case (g, k) => PathInc(g, k) })
+    }
   }
 
   /** Latest per-user funnel chain after each touching batch: stage
@@ -465,19 +425,13 @@ object Streams {
   final case class FunnelStage(user_id: Long, updates: Long,
       t1: Long, t2: Long, t3: Long)
 
-  /** Streaming anchored-earliest funnel — conversion tracking AT
-    * INGEST: each user carries (t1, t2, t3), the completion times of
-    * the three-step chain (first step-1 event; first step-2 event
-    * STRICTLY after t1; first step-3 strictly after t2 — exactly the
-    * batch q_funnel contract), across micro-batches as three longs.
-    * A user's funnel stage is live while the day's events land
-    * instead of waiting for the nightly batch rollup.
-    *
-    * Ordering contract (the [[pathCountsState]] replay discipline):
-    * batches are event-time ordered across files and each batch
-    * sorts per user by (ts, event_id), so the anchored-earliest
-    * chain is deterministic; the strictly-later requirement means
-    * same-timestamp steps never advance the chain, matching the
+  /** Streaming anchored-earliest funnel, a [[userReplay]] — conversion
+    * tracking AT INGEST: each user carries (t1, t2, t3), the
+    * completion times of the three-step chain (first step-1 event;
+    * first step-2 event STRICTLY after t1; first step-3 strictly
+    * after t2 — exactly the batch q_funnel contract), across
+    * micro-batches as three longs. The strictly-later requirement
+    * means same-timestamp steps never advance the chain, matching the
     * batch operator's `>` comparisons whatever the within-timestamp
     * processing order. */
   def funnelStageState(
@@ -487,30 +441,18 @@ object Streams {
       s"funnelStageState needs 3 distinct steps, got $steps")
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .select(col("user_id").as[Long],
-        expr("ts_ns div 1000").as[Long],
-        col("event_id").as[Long], col("event_type").as[String])
-      .as[(Long, Long, Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (u: Long, rows: Iterator[(Long, Long, Long, String)],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          val evs = rows.toArray.sortBy(e => (e._2, e._3))
-          var (pu, t1, t2, t3) = state.getOption
-            .getOrElse((0L, -1L, -1L, -1L))
-          evs.foreach { case (_, ts, _, tpe) =>
-            if (tpe == steps(0)) { if (t1 < 0) t1 = ts }
-            else if (tpe == steps(1)) {
-              if (t1 >= 0 && ts > t1 && t2 < 0) t2 = ts
-            } else if (tpe == steps(2)) {
-              if (t2 >= 0 && ts > t2 && t3 < 0) t3 = ts
-            }
-          }
-          state.update((pu + 1L, t1, t2, t3))
-          Iterator(FunnelStage(u, pu + 1L, t1, t2, t3))
+    userReplay(events, (0L, -1L, -1L, -1L)) { (u, carried, evs) =>
+      var (pu, t1, t2, t3) = carried
+      evs.foreach { case (_, ts, _, tpe) =>
+        if (tpe == steps(0)) { if (t1 < 0) t1 = ts }
+        else if (tpe == steps(1)) {
+          if (t1 >= 0 && ts > t1 && t2 < 0) t2 = ts
+        } else if (tpe == steps(2)) {
+          if (t2 >= 0 && ts > t2 && t3 < 0) t3 = ts
+        }
       }
+      ((pu + 1L, t1, t2, t3), Seq(FunnelStage(u, pu + 1L, t1, t2, t3)))
+    }
   }
 
   /** Per-batch basket-census increment (see [[assocSetState]]):
@@ -606,55 +548,65 @@ object Streams {
     fileStream(spark, dir, EmbeddingsGlob, 0,
       probe(spark, dir, EmbeddingsGlob, "vec_id", "embedding", "label"))
 
-  /** Cumulative keyed state — the one operator behind the keyed COUNT
-    * and SUM monitors (histogram, vocab, DSIR, CMS, quantile-sketch,
-    * AMS, SPRT, daily-sum and moments cells): per distinct key, every `sums`
-    * column accumulates as a running Long across micro-batches and
+  /** Cumulative keyed state — the one operator behind the keyed COUNT,
+    * SUM and MAX monitors (histogram, vocab, DSIR, CMS, quantile-sketch,
+    * AMS, SPRT, daily-sum, moments and HLL cells): per distinct key,
+    * every `sums` column accumulates as a running Long sum and every
+    * `maxes` column as a running Long max across micro-batches, and
     * each touched key re-emits its totals (update mode).
     *
     * Output: the key columns (every column the `keys` expressions
     * produce — a generator such as `explode` or `inline` may fan one
     * input row out to several keys), then `updates`, then one Long per
-    * sum, named by its alias. A row count is just the sum
-    * `lit(1L).as("n")`. SQL semantics for NULL: a NULL key is its own
-    * group, and a NULL sum input adds 0 (the row still counts in `n`).
+    * sum and then per max, named by its alias. A row count is just the
+    * sum `lit(1L).as("n")`. SQL semantics for NULL: a NULL key is its
+    * own group, and a NULL input leaves its value unchanged (the row
+    * still counts in `n`). A sum starts at 0 and a max at 0 too, so a
+    * max column suits non-negative values (HLL ranks).
     *
     * `updates` is the drain counter: the plain per-key sequence
-    * 1, 2, 3, …, and the sums only grow, so the max-counter row is
-    * also the max-count row. Consumers keep the max-counter row per
+    * 1, 2, 3, …, and the values only grow, so the max-counter row is
+    * also the max-value row. Consumers keep the max-counter row per
     * key ([[latest]]) — the current truth on any sink, ordered or not.
     *
-    * 100 TB notes: state is 1 + |sums| longs per key, hash-partitioned
-    * by key across executors. flatMapGroupsWithState gets no map-side
-    * combine, so the stream shuffles one row per (input row, key) —
-    * at extreme rates pre-aggregate each micro-batch first. */
+    * 100 TB notes: state is 1 + |sums| + |maxes| longs per key,
+    * hash-partitioned by key across executors. flatMapGroupsWithState
+    * gets no map-side combine, so the stream shuffles one row per
+    * (input row, key) — at extreme rates pre-aggregate each
+    * micro-batch first. */
   def cumulativeState(
       rows: DataFrame,
       keys: Seq[Column],
-      sums: Seq[Column]): DataFrame = {
-    val named = rows.select(keys ++ sums: _*)
+      sums: Seq[Column],
+      maxes: Seq[Column] = Nil): DataFrame = {
+    val named = rows.select(keys ++ sums ++ maxes: _*)
     val names = named.columns.toSeq
     require(!names.contains("updates") && names.distinct == names,
       "cumulativeState needs distinct output names: " + names.mkString(","))
-    val (keyNames, sumNames) = names.splitAt(names.length - sums.size)
+    val (keyNames, valNames) =
+      names.splitAt(names.length - sums.size - maxes.size)
     val in = named.select(keyNames.map(col) ++
-      sumNames.map(n => col(n).cast(LongType).as(n)): _*)
-    val (nk, ns) = (keyNames.length, sumNames.length)
+      valNames.map(n => col(n).cast(LongType).as(n)): _*)
+    val (nk, nv, ns) = (keyNames.length, valNames.length, sums.size)
     val keySchema = StructType(in.schema.take(nk))
-    val outSchema = StructType(keySchema ++ ("updates" +: sumNames)
+    val outSchema = StructType(keySchema ++ ("updates" +: valNames)
       .map(StructField(_, LongType, nullable = false)))
     in.groupBy(keyNames.map(col): _*)
       .as(Encoders.row(keySchema), Encoders.row(in.schema))
       .flatMapGroupsWithState(
         OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        // state: (updates, sum 1, …, sum ns)
+        // state: (updates, sum 1, …, sum ns, max 1, …)
         (key: Row, it: Iterator[Row], state: GroupState[Array[Long]]) =>
-          val acc = state.getOption.getOrElse(new Array[Long](1 + ns))
+          val acc = state.getOption.getOrElse(new Array[Long](1 + nv))
           while (it.hasNext) {
             val r = it.next()
             var i = 0
-            while (i < ns) {
-              if (!r.isNullAt(nk + i)) acc(1 + i) += r.getLong(nk + i)
+            while (i < nv) {
+              if (!r.isNullAt(nk + i)) {
+                val v = r.getLong(nk + i)
+                acc(1 + i) = if (i < ns) acc(1 + i) + v
+                  else math.max(acc(1 + i), v)
+              }
               i += 1
             }
           }
@@ -668,9 +620,10 @@ object Streams {
   /** The max-counter drain: per key, the row with the greatest
     * `updates` — the current truth of every state that tags its
     * emissions with the drain counter ([[cumulativeState]] with its
-    * instances, moments included, and the top-k, CDC, funnel, KMV,
-    * HLL, front-max and MMD states). One row per key: the keys, then
-    * `updates`, then the remaining drained columns in their order. */
+    * instances, moments and HLL included, the funnel replay, and the
+    * top-k, CDC, KMV, front-max and MMD states). One row per key: the
+    * keys, then `updates`, then the remaining drained columns in their
+    * order. */
   def latest(drained: DataFrame, keys: String*): DataFrame = {
     val rest = drained.columns.toSeq
       .filterNot(c => c == "updates" || keys.contains(c))
@@ -861,15 +814,15 @@ object Streams {
       }
   }
 
-  /** Cumulative value of one HLL register. */
-  final case class HllReg(g: String, j: Long, updates: Long, m: Long)
-
   /** Streaming HyperLogLog — per-(group, register) MAX rank in keyed
-    * state: each arriving key's (j, ρ) bumps its register to
+    * state, the [[cumulativeState]] instance with keys (g, j) and the
+    * max-fold `m`: each arriving key's (j, ρ) bumps its register to
     * max(M_j, ρ) across micro-batches and the refreshed register
-    * re-emits (update mode — consumers take max per cell; the
-    * register value is monotone BY DEFINITION, max-merge is HLL's
-    * native combine). Registers derive from the SAME
+    * re-emits (update mode — consumers keep the latest row per cell;
+    * the register value is monotone BY DEFINITION, max-merge is HLL's
+    * native combine). The max fold's identity 0 is the empty
+    * register: registers start at 0 and every rank is ρ ≥ 1. Output
+    * (g, j, updates, m). Registers derive from the SAME
     * [[graft.functions.HllSketch.bucket]]/[[graft.functions.HllSketch.rho]]
     * expressions as the batch sketch, and max-folds are associative
     * and idempotent, so the drained latest registers equal the batch
@@ -888,27 +841,11 @@ object Streams {
   def hllRegistersState(
       rows: DataFrame,
       groupCol: Column,
-      hashCol: Column): Dataset[HllReg] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
+      hashCol: Column): DataFrame = {
     import graft.functions.HllSketch
-    rows
-      .select(groupCol.cast(StringType).as("__g"),
-        HllSketch.bucket(hashCol).as("__j"),
-        HllSketch.rho(hashCol).as("__r"))
-      .as[(String, Long, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (k: (String, Long), it: Iterator[(String, Long, Long)],
-         state: GroupState[(Long, Long)]) =>
-          var add = 0L
-          while (it.hasNext) add = math.max(add, it.next()._3)
-          val (pu, pm) = state.getOption.getOrElse((0L, 0L))
-          val m = math.max(pm, add)
-          state.update((pu + 1L, m))
-          Iterator(HllReg(k._1, k._2, pu + 1L, m))
-      }
+    cumulativeState(rows,
+      Seq(groupCol.cast(StringType).as("g"), HllSketch.bucket(hashCol).as("j")),
+      sums = Nil, maxes = Seq(HllSketch.rho(hashCol).as("m")))
   }
 
   /** Per-key ARRAY-packed split-long cell sums: one state row per
@@ -1023,9 +960,6 @@ object Streams {
     * Hamming budget) with an EARLIER doc in this band bucket? */
   final case class BandFlag(doc_id: Long, dup: Boolean)
 
-  /** Distinct SimHashes seen so far in one band bucket. */
-  final case class BandState(sims: List[Long])
-
   /** Streaming SimHash near-duplicate detection — the incremental form
     * of [[graft.operators.Dedup.simhashNearDupPairs]]: as documents
     * arrive, each is flagged against everything seen BEFORE it, without
@@ -1046,9 +980,8 @@ object Streams {
     * `earlier.doc_id < doc_id` exactly (the correctness gate's oracle
     * replays that definition in DuckDB).
     *
-    * Ordering contract (same replay discipline as
-    * [[sessionCountsState]]): batches are doc_id-ordered across files
-    * (the ingest-sequence shape) and each batch sorts per bucket, so
+    * An [[orderedReplay]] per bucket in doc_id order: batches are
+    * doc_id-ordered across files (the ingest-sequence shape), so
     * "earlier" = lower doc_id, deterministically. 100 TB notes: state
     * is hash-partitioned by (quadrant, qval) — 2^18 buckets spread
     * evenly by construction (SimHash bits are balanced); per-bucket
@@ -1061,37 +994,30 @@ object Streams {
     import spark.implicits._
     require(maxHamming < 16, "quadrant blocking needs maxHamming < 16")
     val sh = graft.operators.Dedup.simhash(docs, "doc_id", col("text"))
-    sh.select(col("doc_id"), col("simhash"),
+    val bands = sh.select(col("doc_id"), col("simhash"),
         posexplode(array((0 until 4).map(q =>
           shiftrightunsigned(col("simhash"), q * 16)
             .bitwiseAND(0xFFFFL)): _*)).as(Seq("quadrant", "qval")))
       .select(col("quadrant"), col("qval"), col("doc_id"), col("simhash"))
       .as[(Int, Long, Long, Long)]
-      .groupByKey(r => (r._1, r._2))
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (_: (Int, Long), rows: Iterator[(Int, Long, Long, Long)],
-         state: GroupState[BandState]) =>
-          val batch = rows.map(r => (r._3, r._4)).toArray.sortBy(_._1)
-          var seen = state.getOption.map(_.sims).getOrElse(Nil)
-          val out = batch.map { case (id, sim) =>
-            val dup = seen.exists(s =>
-              java.lang.Long.bitCount(s ^ sim) <= maxHamming)
-            if (!seen.contains(sim)) seen = sim :: seen
-            BandFlag(id, dup)
-          }
-          state.update(BandState(seen))
-          out.iterator
-      }
+    // state: the bucket's distinct SimHashes seen so far
+    orderedReplay(bands)(r => (r._1, r._2), _._3, Array.emptyLongArray) {
+      (_, carried, batch) =>
+        var seen = carried.toList
+        val out = batch.map { case (_, _, id, sim) =>
+          val dup = seen.exists(s =>
+            java.lang.Long.bitCount(s ^ sim) <= maxHamming)
+          if (!seen.contains(sim)) seen = sim :: seen
+          BandFlag(id, dup)
+        }
+        (seen.toArray, out)
+    }
   }
 
   /** One admission verdict: the doc's cost, its group's cumulative
     * cost INCLUDING it, and whether the budget still covered it. */
   final case class AdmitFlag(
       doc_id: Long, g: String, cost: Long, cum: Long, admitted: Boolean)
-
-  /** The carried cumulative cost per group. */
-  final case class CumCost(c: Long)
 
   /** Streaming token-budget admission — quota enforcement at INGEST:
     * each group (source/domain) carries its cumulative token cost in
@@ -1106,11 +1032,10 @@ object Streams {
     * files arrive, and overflow routes to quarantine in one pass —
     * instead of landing everything and budget-sampling nightly.
     *
-    * Ordering contract (the [[sessionCountsState]] replay
-    * discipline): batches arrive doc_id-ordered across files and each
-    * batch sorts per group, so the admitted prefix is deterministic
-    * and equals the batch replay (a per-group window cumsum over
-    * doc_id order) row for row — the q_stream_budget gate.
+    * An [[orderedReplay]] per group in doc_id order: batches arrive
+    * doc_id-ordered across files, so the admitted prefix is
+    * deterministic and equals the batch replay (a per-group window
+    * cumsum over doc_id order) row for row — the q_stream_budget gate.
     *
     * 100 TB notes: state is ONE long per group, hash-partitioned;
     * the stream shuffles (id, group, cost) triples only. NoTimeout
@@ -1124,25 +1049,20 @@ object Streams {
     val spark = docs.sparkSession
     import spark.implicits._
     require(budget >= 0, s"budget must be non-negative: $budget")
-    docs
+    val costs = docs
       .select(col("doc_id").cast(LongType),
         col(groupCol).cast(StringType).as("__g"),
         costCol.cast(LongType).as("__cost"))
       .as[(Long, String, Long)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState(
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (g: String, rows: Iterator[(Long, String, Long)],
-         state: GroupState[CumCost]) =>
-          val batch = rows.toArray.sortBy(_._1)
-          var cum = state.getOption.map(_.c).getOrElse(0L)
-          val out = batch.map { case (id, _, cost) =>
-            cum += cost
-            AdmitFlag(id, g, cost, cum, cum <= budget)
-          }
-          state.update(CumCost(cum))
-          out.iterator
+    // state: the group's cumulative cost
+    orderedReplay(costs)(_._2, _._1, 0L) { (g, carried, batch) =>
+      var cum = carried
+      val out = batch.map { case (id, _, cost) =>
+        cum += cost
+        AdmitFlag(id, g, cost, cum, cum <= budget)
       }
+      (cum, out)
+    }
   }
 
   private val ClickPurchaseWithinMinutes = 30

@@ -478,11 +478,11 @@ class StreamsSpec extends SparkSpecBase {
     writeTypedEventsFile(tmp, "b2.parquet",
       Seq((2 * min, 1L, "c", 4L)), modTime = 2000L)
     val raw = Streams.runAvailableNow(
-      Streams.transitionCountsState(Streams.eventsStream(
-        spark, tmp.getPath, glob = "*.parquet", maxFilesPerTrigger = 1))
+      Streams.ngramCountsState(Streams.eventsStream(
+        spark, tmp.getPath, glob = "*.parquet", maxFilesPerTrigger = 1), 2)
         .toDF(),
       "trans_multibatch")
-    val got = raw.groupBy(col("from_state"), col("to_state"))
+    val got = raw.groupBy(col("gram")(0), col("gram")(1))
       .agg(sum(col("n_inc")).as("n")).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == Map(("a", "b") -> 1L, ("b", "c") -> 1L), s"got $got")
@@ -501,14 +501,67 @@ class StreamsSpec extends SparkSpecBase {
       Seq((2 * min, 1L, "c", 3L), (3 * min, 1L, "d", 4L)),
       modTime = 2000L)
     val raw = Streams.runAvailableNow(
-      Streams.pathCountsState(Streams.eventsStream(
-        spark, tmp.getPath, glob = "*.parquet", maxFilesPerTrigger = 1))
+      Streams.ngramCountsState(Streams.eventsStream(
+        spark, tmp.getPath, glob = "*.parquet", maxFilesPerTrigger = 1), 3)
         .toDF(),
       "paths_multibatch")
-    val got = raw.groupBy(col("path")).agg(sum(col("n_inc")).as("n"))
+    val got = raw.groupBy(array_join(col("gram"), ">"))
+      .agg(sum(col("n_inc")).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("a>b>c" -> 1L, "b>c>d" -> 1L), s"got $got")
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
+  test("a NULL event_type across the batch boundary: the drained " +
+      "n-gram sums equal the batch transition matrix and path census") {
+    val tmp = java.nio.file.Files.createTempDirectory("ngram_null").toFile
+    val one = java.nio.file.Files.createTempDirectory("ngram_null1").toFile
+    // user 1: a, b | NULL, c, a, b — the NULL is the last type of a
+    // path (a>b>NULL), the first of a transition (NULL→c) and the
+    // middle of a path, each straddling the boundary; user 2: c | a, b
+    val b1 = Seq((0L, 1L, "a", 1L), (min, 1L, "b", 2L), (0L, 2L, "c", 3L))
+    val b2 = Seq((2 * min, 1L, null, 4L), (3 * min, 1L, "c", 5L),
+      (4 * min, 1L, "a", 6L), (5 * min, 1L, "b", 7L),
+      (min, 2L, "a", 8L), (2 * min, 2L, "b", 9L))
+    writeTypedEventsFile(tmp, "b1.parquet", b1, modTime = 1000L)
+    writeTypedEventsFile(tmp, "b2.parquet", b2, modTime = 2000L)
+    def drain(n: Int) = Streams.runAvailableNow(
+      Streams.ngramCountsState(Streams.eventsStream(
+        spark, tmp.getPath, glob = "*.parquet", maxFilesPerTrigger = 1), n)
+        .toDF(), s"ngram_null_$n")
+    // each consumer's NULL rule, as q_stream_transitions and
+    // q_stream_paths apply it
+    val trans = drain(2).filter(col("gram")(0).isNotNull)
+      .groupBy(col("gram")(0), col("gram")(1))
+      .agg(sum(col("n_inc"))).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val paths = drain(3).filter(!exists(col("gram"), _.isNull))
+      .groupBy(array_join(col("gram"), ">"))
+      .agg(sum(col("n_inc"))).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val batchEvents = spark.read.parquet(tmp.getPath)
+    val batchTrans = graft.operators.Stats.transitionMatrix(batchEvents,
+      col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .collect().map(r => (r.getString(0), r.getString(1)) ->
+        r.getAs[Long]("n_trans")).toMap
+    val batchPaths = graft.operators.Stats.pathMining(batchEvents,
+      col("user_id"), col("ts"), col("event_id"), col("event_type"))
+      .collect().map(r => r.getString(0) -> r.getAs[Long]("n")).toMap
+    assert(trans == batchTrans && trans.contains(("b", null)),
+      s"drained $trans vs batch $batchTrans")
+    assert(paths == batchPaths && paths == Map("c>a>b" -> 2L),
+      s"drained $paths vs batch $batchPaths")
+    // the catalog twins apply the same rules: over one file holding
+    // both batches, each streaming query equals its batch query
+    writeTypedEventsFile(one, "events.parquet", b1 ++ b2, modTime = 1000L)
+    Seq("q_stream_transitions" -> "q_event_transitions",
+        "q_stream_paths" -> "q_event_paths").foreach { case (sq, bq) =>
+      def rows(q: String) = graft.Queries.queries(q)(spark, one.getPath)
+        .collect().map(_.toSeq).toSet
+      assert(rows(sq) == rows(bq), s"$sq vs $bq")
+    }
+    org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+    org.apache.commons.io.FileUtils.deleteDirectory(one)
   }
 
   test("basket set-state census: an item re-seen in a later batch " +
@@ -1005,9 +1058,10 @@ class StreamsSpec extends SparkSpecBase {
 
   test("streaming transition drain equals the batch transition matrix") {
     val streamed = Streams.runAvailableNow(
-      Streams.transitionCountsState(Streams.eventsStream(spark, dir))
+      Streams.ngramCountsState(Streams.eventsStream(spark, dir), 2)
         .toDF(), "trans_drain")
-      .groupBy(col("from_state"), col("to_state"))
+      .filter(col("gram")(0).isNotNull)
+      .groupBy(col("gram")(0), col("gram")(1))
       .agg(sum(col("n_inc")).as("n")).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     val batch = graft.operators.Stats.transitionMatrix(
@@ -1127,7 +1181,7 @@ class StreamsSpec extends SparkSpecBase {
         Streams.docsStream(spark, tmp.getPath, glob = "*.parquet",
           maxFilesPerTrigger = 1)
           .select(lit("S").as("g0"), hashOf(col("text")).as("h")),
-        col("g0"), col("h")).toDF(), "hll_multibatch")
+        col("g0"), col("h")), "hll_multibatch")
     val latest = raw.groupBy(col("g"), col("j"))
       .agg(max(struct(col("updates"), col("m"))).as("x"))
       .select(col("j"), col("x.m"))
@@ -1284,7 +1338,27 @@ class StreamsSpec extends SparkSpecBase {
           col("__w").as("w"), col("__idx").as("idx")),
         Seq(lit(1L).as("n"))),
         Seq("g" -> StringType, "mn" -> LongType, "w" -> LongType,
-          "idx" -> LongType) ++ counted))
+          "idx" -> LongType) ++ counted),
+      // q_stream_hll reads (g, j, updates, m); m is the max fold
+      "hllRegistersState" -> (Streams.hllRegistersState(events,
+        col("event_type"), col("event_id")),
+        Seq("g" -> StringType, "j" -> LongType, "updates" -> LongType,
+          "m" -> LongType)),
+      // the ordered-replay instances
+      "sessionCountsState" -> (Streams.sessionCountsState(events).toDF(),
+        Seq("user_id" -> LongType, "session_start_us" -> LongType,
+          "n" -> LongType)),
+      "ngramCountsState" -> (Streams.ngramCountsState(events, 3).toDF(),
+        Seq("gram" -> ArrayType(StringType), "n_inc" -> LongType)),
+      "funnelStageState" -> (Streams.funnelStageState(events,
+        Seq("view", "click", "purchase")).toDF(),
+        Seq("user_id", "updates", "t1", "t2", "t3").map(_ -> LongType)),
+      "tokenBudgetAdmission" -> (Streams.tokenBudgetAdmission(docs,
+        col("n_chars"), "source", 1000L).toDF(),
+        Seq("doc_id" -> LongType, "g" -> StringType, "cost" -> LongType,
+          "cum" -> LongType, "admitted" -> BooleanType)),
+      "nearDupFlags" -> (Streams.nearDupFlags(docs).toDF(),
+        Seq("doc_id" -> LongType, "dup" -> BooleanType)))
     pins.foreach { case (what, (df, want)) =>
       assert(shape(df) == want, s"$what: ${shape(df)}")
     }
@@ -1305,7 +1379,24 @@ class StreamsSpec extends SparkSpecBase {
       .map(r => (r.getAs[Long]("updates"), r.getAs[Long]("n"),
         r.getAs[Long]("s4"))).toSeq
     assert(emissions == Seq((1L, 2L, 90000L)), s"got $emissions")
+    // a max fold across two batches: batch 2's NULL and its value
+    // below the carried max both leave the max at 5
+    val mx = java.nio.file.Files.createTempDirectory("max_null").toFile
+    val t0 = System.currentTimeMillis()
+    writeDocsFile(mx, "a.parquet", Seq((5L, "five")), t0 - 60000)
+    writeDocsFile(mx, "b.parquet", Seq((3L, "three"), (4L, "null")), t0)
+    val maxes = Streams.runAvailableNow(
+      Streams.cumulativeState(
+        Streams.docsStream(spark, mx.getPath, glob = "*.parquet",
+          maxFilesPerTrigger = 1),
+        Seq(lit("D").as("d")), Seq(lit(1L).as("n")),
+        Seq(when(col("doc_id") =!= 4L, col("doc_id")).as("m"))),
+      "max_null")
+      .collect().map(r => (r.getAs[Long]("updates"), r.getAs[Long]("n"),
+        r.getAs[Long]("m"))).sortBy(_._1).toSeq
+    assert(maxes == Seq((1L, 1L, 5L), (2L, 3L, 5L)), s"got $maxes")
     org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+    org.apache.commons.io.FileUtils.deleteDirectory(mx)
   }
 
   test("cumulativeState SQL NULLs: a NULL key is its own group " +
